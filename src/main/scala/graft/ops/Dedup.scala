@@ -881,8 +881,8 @@ object Dedup {
     *    representative-level pair — kept with component = rep; an m == 1
     *    row is in the raw output iff its representative reached the pair
     *    set — the inner-join semantics of the expansion's null filter.
-    */
-  /** @param allPairsMaxRows input-row bound (measured via a bounded
+    *
+    * @param allPairsMaxRows input-row bound (measured via a bounded
     *   limit-probe) below which the representative pair set comes from the
     *   all-pairs [[SimilarityJoin.cosineJoinLsh]] tier instead of the
     *   spanning tier: at gate scale the spanning tier's typed per-bucket

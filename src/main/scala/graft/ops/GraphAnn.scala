@@ -279,21 +279,29 @@ object GraphAnn {
         org.apache.spark.sql.types.LongType))))
 
   /** Neighbor-vector column of a VECTOR-ADJACENT materialized edge table
-    * (see [[materialize]]); probes route on its presence.
+    * (see [[materialize]]); the batch probe routes on its presence.
     */
   private[graft] val DstVecCol = "__dstv"
+
+  /** Bucket column of a [[fromMaterialized]] frame (NULL on centroid-level
+    * rows); [[pointProbeTopK]] routes on its presence.
+    */
+  private[graft] val BucketCol = "__bucket"
 
   /** Materialize the edge table as parquet (build once / probe many), with
     * a geometry marker so a reopen with different (stride, degree) fails
     * fast. Edges are stored VECTOR-ADJACENT — each (src, dst) row carries
     * dst's vector, the classic HNSW memory layout (neighbor vectors live
-    * with the links): a probe round is then ONE `src IN (frontier)` scan
-    * of the edge artifact that yields the reached neighbors AND their
-    * query distances, never touching the corpus table. Storage is
-    * degree·(n + n/stride) rows × (2 longs + one vector) — the index
-    * artifact trades `degree` copies of each vector for rounds that are
-    * point reads into a single table, exactly as an in-process HNSW
-    * trades memory for locality.
+    * with the links): a probe reads the reached neighbors AND their query
+    * distances off the edge artifact, never touching the corpus table
+    * after the entry beam. Member-level edges are partitioned by src's
+    * bucket and never leave it, so [[pointProbeTopK]] loads whole bucket
+    * partitions by partition pruning on `__bucket` — a `src IN (frontier)`
+    * predicate prunes nothing here, since a bucket's src ids are scattered
+    * over the id range of every file. Storage is degree·(n + n/stride)
+    * rows × (2 longs + one vector): the artifact trades `degree` copies of
+    * each vector for locality, exactly as an in-process HNSW trades memory
+    * for it.
     */
   def materialize(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, degree: Int, path: String, superStride: Int = 0): Unit = {
@@ -352,8 +360,11 @@ object GraphAnn {
 
   /** Open a [[materialize]]d edge table; the stored geometry is
     * authoritative and checked against the caller's expectation. Probes
-    * see one `(src, dst, __dstv)` frame — the bucket partitioning is a
-    * storage detail.
+    * see one `(src, dst, __dstv, __bucket)` frame: member-level rows carry
+    * their src's bucket (the partition key, which is also dst's bucket —
+    * member edges never leave their bucket), centroid-level rows a NULL
+    * bucket. [[pointProbeTopK]] routes on that column and expands the
+    * store bucket by bucket.
     */
   def fromMaterialized(spark: org.apache.spark.sql.SparkSession, path: String,
       stride: Int, degree: Int, superStride: Int = 0): DataFrame = {
@@ -364,7 +375,8 @@ object GraphAnn {
         s"($storedStride, $storedDegree, $storedSuper), opened expecting " +
         s"($stride, $degree, $superStride)")
     val cedges = spark.read.parquet(s"$path/cedges")
-      .select(col("src"), col("dst"), col(DstVecCol))
+      .select(col("src"), col("dst"), col(DstVecCol),
+        lit(null).cast("long").as(BucketCol))
     // a fully-DRAINED member table (every bucket single-member after a
     // takedown wave → zero bucket directories → zero parquet files) must
     // still open: schema inference over zero files throws, so serve the
@@ -376,7 +388,8 @@ object GraphAnn {
       if (IndexFiles.listSubdirs(spark, s"$path/edges", "__bucket=").isEmpty)
         cedges.where(lit(false))
       else spark.read.parquet(s"$path/edges")
-        .select(col("src"), col("dst"), col(DstVecCol))
+        .select(col("src"), col("dst"), col(DstVecCol),
+          col(BucketCol).cast("long"))
     member.unionAll(cedges)
   }
 
@@ -964,16 +977,34 @@ object GraphAnn {
     * pairs — a few hundred rows REGARDLESS of corpus size, the same
     * per-query working set an in-process HNSW library keeps — so holding
     * it driver-side is the model-artifact cost class, not a collect of
-    * data. Each round is then ONE `src IN (frontier)` scan of the edge
-    * table and ONE `id IN (reached)` scan of the corpus: both predicates
-    * push down to parquet (min-max row-group pruning → point reads over
-    * id-sorted files), where the join shape schedules a
-    * persist + anti-join + broadcast + shuffle chain per round. Distances
-    * are still computed by the engine's codegen'd expression — the driver
-    * only orders already-computed (distance, id) pairs, so the two probe
-    * shapes cannot drift. Use [[beamSearchTopK]] when probing a BATCH of
-    * queries in one pass (its per-round joins amortize across queries);
-    * use this for the single-query / low-latency path.
+    * data. Distances are still computed by the engine's codegen'd
+    * expression — the driver only orders already-computed (distance, id)
+    * pairs, so the probe shapes cannot drift. The entry beam is one
+    * top-k job over the centroids; the rounds expand by one of two paths,
+    * routed on the edge frame's columns:
+    *
+    *  - a [[fromMaterialized]] store (`__bucket` present) expands BUCKET
+    *    BY BUCKET. Member edges never leave their bucket, so a member
+    *    node's out-edges all lie in the bucket it was reached through, and
+    *    a centroid-level node (an id divisible by `stride`) is looked up in
+    *    its own-id bucket. Each round loads, in ONE job, every bucket of
+    *    its frontier not loaded yet — whole `__bucket` partitions by
+    *    partition pruning, plus those centroids' centroid-level out-edges
+    *    — with the query distance of every loaded edge's dst vector; a
+    *    round whose frontier sits in loaded buckets runs no job. A centroid
+    *    whose own bucket holds no member edge from it costs one more,
+    *    unpruned `src` scan: a duplicate or zero-vector centroid (assigned
+    *    to the lowest tied centroid, leaving its own bucket empty) or a
+    *    singleton bucket. Driver state beyond the beam is loaded buckets ×
+    *    bucket rows × degree (id, id, distance) triples — independent of
+    *    the vector dimension.
+    *  - a plain `(src, dst)` frame ([[buildEdges]]) costs two jobs per
+    *    round: the frontier's out-edges, then the corpus vectors of the
+    *    newly reached ids.
+    *
+    * Use [[beamSearchTopKBatch]] when probing a BATCH of queries in one
+    * pass (its rounds amortize across queries); use this for the
+    * single-query / low-latency path.
     */
   def pointProbeTopK(df: DataFrame, idCol: String, vecCol: String,
       edges: DataFrame, qvec: Array[Double], k: Int, stride: Int,
@@ -982,8 +1013,6 @@ object GraphAnn {
       s"invalid probe: k=$k beam=$beam rounds=$rounds")
     val spark = df.sparkSession
     val q = typedLit(qvec.toSeq)
-    val vecs = df.select(col(idCol).cast("long").as("__nid"),
-      col(vecCol).as("__nv"))
     // (distance asc NULLS LAST, id asc) — the join shape's exact sort key.
     // java.lang.Double.compare is NaN-largest like Spark's ordering, and
     // cos_dist never produces -0.0 (1 - 1 = +0.0), so exact double
@@ -991,17 +1020,30 @@ object GraphAnn {
     val sortKey: ((Long, java.lang.Double)) => (Boolean, Double, Long) = {
       case (id, d) => (d == null, if (d == null) 0d else d.doubleValue, id)
     }
-    def collectScored(frame: DataFrame): Seq[(Long, java.lang.Double)] =
-      frame.collect().iterator.map(r => (r.getLong(0),
-        if (r.isNullAt(1)) null
-        else java.lang.Double.valueOf(r.getDouble(1)))).toSeq
     val visited = scala.collection.mutable.HashMap.empty[Long, java.lang.Double]
-    collectScored(df.where(pmod(col(idCol), lit(stride)) === 0)
-        .select(col(idCol).cast("long").as("__nid"),
-          array_cosine_distance(col(vecCol), q).as("__d"))
-        .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
-        .limit(beam))
-      .foreach { case (id, d) => visited(id) = d }
+    df.where(pmod(col(idCol), lit(stride)) === 0)
+      .select(col(idCol).cast("long").as("__nid"),
+        array_cosine_distance(col(vecCol), q).as("__d"))
+      .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
+      .limit(beam)
+      .collect().foreach(r => visited(r.getLong(0)) = distAt(r, 1))
+    // tabu on scoring: a node's distance is a pure function of its id, so
+    // skipping already-visited ids is identical to the join shape's
+    // union + min-groupBy dedup
+    val expand: Seq[Long] => Unit =
+      if (edges.columns.contains(BucketCol))
+        bucketExpansion(edges, q, stride, visited)
+      else { frontier =>
+        val reached = edges.where(col("src").isin(frontier: _*))
+          .select(col("dst").cast("long"))
+          .collect().map(_.getLong(0)).distinct
+        val newIds = reached.filterNot(visited.contains)
+        if (newIds.nonEmpty)
+          df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
+            .where(col("__nid").isin(newIds.toSeq: _*))
+            .select(col("__nid"), array_cosine_distance(col("__nv"), q))
+            .collect().foreach(r => visited(r.getLong(0)) = distAt(r, 1))
+      }
     val expanded = scala.collection.mutable.HashSet.empty[Long]
     var round = 0
     var frontier = Seq.empty[Long]
@@ -1018,29 +1060,7 @@ object GraphAnn {
     while (round < rounds && !(round > 0 && convergedNow)
         && { frontier = nextFrontier(); frontier.nonEmpty }) {
       expanded ++= frontier
-      // tabu on scoring: a node's distance is a pure function of its id,
-      // so skipping already-visited ids is identical to the join shape's
-      // union + min-groupBy dedup
-      if (edges.columns.contains(DstVecCol)) {
-        // vector-adjacent artifact: ONE src-pushdown edge scan per round
-        // yields neighbors and their distances (see materialize)
-        collectScored(edges.where(col("src").isin(frontier: _*))
-            .select(col("dst").cast("long"),
-              array_cosine_distance(col(DstVecCol), q).as("__d")))
-          .foreach { case (id, d) =>
-            if (!visited.contains(id)) visited(id) = d
-          }
-      } else {
-        val reached = edges.where(col("src").isin(frontier: _*))
-          .select(col("dst").cast("long"))
-          .collect().map(_.getLong(0)).distinct
-        val newIds = reached.filterNot(visited.contains)
-        if (newIds.nonEmpty)
-          collectScored(vecs.where(col("__nid").isin(newIds.toSeq: _*))
-              .select(col("__nid"),
-                array_cosine_distance(col("__nv"), q).as("__d")))
-            .foreach { case (id, d) => visited(id) = d }
-      }
+      expand(frontier)
       round += 1
     }
     probeRounds.set(round)
@@ -1052,6 +1072,61 @@ object GraphAnn {
     spark.createDataFrame(top.asJava, StructType(Seq(
       StructField(idCol, LongType, nullable = false),
       StructField("cos_dist", DoubleType, nullable = true))))
+  }
+
+  private def distAt(r: org.apache.spark.sql.Row, i: Int): java.lang.Double =
+    if (r.isNullAt(i)) null else java.lang.Double.valueOf(r.getDouble(i))
+
+  /** [[pointProbeTopK]]'s round step over a [[fromMaterialized]] frame:
+    * scores the out-neighbors of a frontier into `visited`, loading the
+    * frontier's buckets not loaded by an earlier round of this probe.
+    */
+  private def bucketExpansion(edges: DataFrame, q: Column, stride: Int,
+      visited: scala.collection.mutable.HashMap[Long, java.lang.Double])
+      : Seq[Long] => Unit = {
+    import scala.collection.mutable
+    // src -> (dst, distance, dst's bucket — NULL on a centroid-level edge)
+    val out = mutable.HashMap.empty[Long,
+      mutable.ArrayBuffer[(Long, java.lang.Double, java.lang.Long)]]
+    val bucketOf = mutable.HashMap.empty[Long, Long] // member nodes, as reached
+    val loaded = mutable.HashSet.empty[Long]
+    val withMemberEdges = mutable.HashSet.empty[Long] // srcs held
+    def fetch(cond: Column): Unit =
+      edges.where(cond)
+        .select(col("src"), col("dst"), col(BucketCol),
+          array_cosine_distance(col(DstVecCol), q))
+        .collect().foreach { r =>
+          val src = r.getLong(0)
+          val b = if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2))
+          if (b != null) withMemberEdges += src
+          out.getOrElseUpdate(src, mutable.ArrayBuffer.empty) +=
+            ((r.getLong(1), distAt(r, 3), b))
+        }
+    def isCentroid(id: Long) = id % stride == 0
+    frontier => {
+      val need = frontier.flatMap(n =>
+          if (isCentroid(n)) Some(n) else bucketOf.get(n))
+        .distinct.filterNot(loaded)
+      if (need.nonEmpty) {
+        // an array literal, not an IN list: codegen passes it by reference,
+        // so rounds with different bucket sets reuse one compiled stage
+        val ids = typedLit(need)
+        fetch(array_contains(ids, col(BucketCol)) ||
+          (col(BucketCol).isNull && array_contains(ids, col("src"))))
+        loaded ++= need
+      }
+      // member edges of a centroid outside its own bucket (or of a node
+      // reached some other way): one unpruned src scan. A node expands once
+      // per probe, so no src is scanned twice.
+      val missing = frontier.filter(n => !withMemberEdges(n) &&
+        (isCentroid(n) || !bucketOf.contains(n)))
+      if (missing.nonEmpty)
+        fetch(col(BucketCol).isNotNull && col("src").isin(missing: _*))
+      for (n <- frontier; (dst, d, b) <- out.getOrElse(n, Nil)) {
+        if (!visited.contains(dst)) visited(dst) = d
+        if (b != null) bucketOf(dst) = b
+      }
+    }
   }
 
   /** Multi-query point probe — [[pointProbeTopK]]'s driver-loop shape

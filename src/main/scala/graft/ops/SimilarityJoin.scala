@@ -559,8 +559,9 @@ final class AnnIndex private (
   /** IVF probe: top-k among the `nprobe` buckets nearest to the query.
     * Fully lazy — the nprobe nearest centroids are a ranked k-row frame
     * broadcast into a semi-join against the assignment, not a driver
-    * `.collect()` (one Spark job instead of two, and no driver round-trip
-    * on the query path at scale).
+    * `.collect()` (no driver round-trip of centroid ids on the query path).
+    * Executing a probe still runs TWO Spark jobs: the broadcast of the
+    * centroid ranking is its own job, then the bucket-pruned top-k scan.
     */
   def probeTopK(qvec: Array[Double], k: Int, nprobe: Int = 4): DataFrame =
     probedRows(qvec, nprobe)

@@ -1,8 +1,10 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{array_cosine_distance, doc_prefix}
@@ -14,17 +16,20 @@ import graft.functions.{array_cosine_distance, doc_prefix}
   *
   *   corpus --(prefix "文章: ", mapPartitions embed)--> vector index [cached]
   *   query  --(prefix "クエリ: ", embed driver-side)--> literal vector
-  *   index  --(cosine distance, TakeOrderedAndProject top-k)--> hits
-  *   hits   --(broadcast join corpus, rank window)--> (rank, <corpus cols>, score)
+  *   index  --(cosine distance, root sort+limit collect)--> k hits [driver]
+  *   hits   --(rank on driver, ONE id-filtered corpus read)-->
+  *             (rank, <corpus cols>, score) [driver-local frame]
   *
   * Scale design: the vector index keeps ONLY (id, embedding) — the text
   * columns live in the corpus table, so the brute-force scan reads a narrow
   * projection (column pruning; the reference keeps the same split at
-  * vector.py:134 vs :87). Top-k uses sort+limit, which Catalyst plans as
-  * TakeOrderedAndProject: per-partition bounded heap + k-row driver merge —
-  * no global sort, no full shuffle, the exact distributed analogue of
-  * DuckDB's Top-N optimization. The k-row result is broadcast for the
-  * back-join, so corpus rows never shuffle.
+  * vector.py:134 vs :87). Top-k uses sort+limit at the plan root, which
+  * Catalyst plans as TakeOrderedAndProject: per-partition bounded heap +
+  * k-row driver merge in ONE job — no global sort, no shuffle, the exact
+  * distributed analogue of DuckDB's Top-N optimization. The k hits are
+  * already on the driver, so ranking happens there and the back-join is
+  * one corpus read filtered to the hit ids: corpus rows never shuffle and
+  * a query costs two Spark jobs.
   *
   * Ordering parity: DuckDB's `ORDER BY distance` puts NULLs LAST (verified on
   * the 1.0 oracle); Spark's default asc is NULLS FIRST — every ordering here
@@ -49,40 +54,55 @@ final class VectorSearchClient private (
 
   /** Batched vector search: one output DataFrame keyed by `query_id` (the
     * reference returns List[DataFrame], one per query — vector.py:140,170-188
-    * — batched here by design, SURVEY §7.0).
+    * — batched here by design, SURVEY §7.0). Query ids must be distinct.
+    *
+    * EXECUTION CONTRACT: this call is EAGER, not a lazy plan builder. It
+    * runs Q + 1 Spark jobs at call time — per query one top-k collect
+    * (per-partition bounded heaps merged on the driver), then ONE corpus
+    * read filtered to every hit id — ranks and back-joins on the driver,
+    * and returns a materialized (driver-local) frame, ordered by
+    * (query_id, rank). Callers composing the result into a larger plan get
+    * a scan of that materialized state, not a deferred search; the
+    * (Q × n)-row output makes that the intended cost model at any corpus
+    * size. Back-join semantics are an inner equi-join on the id: hits
+    * whose id is missing from the corpus drop out, duplicate corpus ids
+    * fan out under one rank, and the output id column takes the index's
+    * id type (integral ids compare by value across widths).
     */
   def searchByVectors(qvecs: Seq[(Long, Array[Double])], n: Int = 10): DataFrame = {
     require(qvecs.nonEmpty, "search needs at least one query vector")
-    // Per-query top-k scans, unioned: each plans as TakeOrderedAndProject
-    // (per-partition bounded heap, k-row driver merge). For large query
-    // batches prefer one scan + per-query heap aggregation; at the
-    // reference's Q (interactive, Q=1) per-query scans are optimal.
-    val perQuery = qvecs.map { case (qid, qv) =>
-      index
+    require(qvecs.map(_._1).distinct.size == qvecs.size,
+      "search query ids must be distinct")
+    // per query ONE job: a root sort+limit collects as TakeOrderedAndProject,
+    // arriving ranked by (distance asc NULLS LAST, id asc) — the rank is
+    // the row position
+    val hits = qvecs.sortBy(_._1).map { case (qid, qv) =>
+      qid -> index
         .select(
           col(idCol),
           array_cosine_distance(col("embedding"), typedLit(qv.toSeq)).as(ScoreCol))
         .orderBy(col(ScoreCol).asc_nulls_last, col(idCol).asc)
         .limit(n)
-        .withColumn(QueryIdCol, lit(qid))
+        .collect()
     }
-    val hits = perQuery.reduce(_ unionAll _)
-    // Rank before the back-join: Spark joins do not preserve order (the
-    // reference relies on pandas iloc order, vector.py:183-186 — SURVEY §7.3).
-    val ranked = hits.withColumn(
-      RankCol,
-      row_number().over(
-        Window.partitionBy(col(QueryIdCol))
-          .orderBy(col(ScoreCol).asc_nulls_last, col(idCol).asc)).cast("long"))
-    // Order on the internal (collision-proof) columns BEFORE the renaming
-    // projection: a corpus that already has rank/score columns would make a
-    // post-rename orderBy ambiguous. Projection preserves sort order.
-    broadcast(ranked)
-      .join(corpus, idCol)
-      .orderBy(col(QueryIdCol), col(RankCol))
-      .select(
-        (col(QueryIdCol).as("query_id") +: col(RankCol).as("rank") +:
-          corpus.columns.map(col) :+ col(ScoreCol).as("score")): _*)
+    // ONE corpus read for every query's hits, joined on the driver
+    val idPos = corpus.schema.fieldIndex(idCol)
+    val hitIds = hits.flatMap(_._2.iterator.map(_.get(0))).filter(_ != null).distinct
+    val byId = if (hitIds.isEmpty) Map.empty[Any, Seq[Row]]
+      else corpus.where(col(idCol).isin(hitIds: _*)).collect().toSeq
+        .groupBy(r => joinKey(r.get(idPos)))
+    val rows = for {
+      (qid, top) <- hits
+      (h, i) <- top.toSeq.zipWithIndex
+      c <- byId.getOrElse(joinKey(h.get(0)), Nil)
+    } yield Row.fromSeq((qid +: (i + 1L) +: c.toSeq.updated(idPos, h.get(0))) :+ h.get(1))
+    val schema = StructType(
+      StructField("query_id", LongType, nullable = false) +:
+        StructField("rank", LongType, nullable = false) +:
+        corpus.schema.fields.toSeq.updated(idPos,
+          index.schema(idCol).copy(name = corpus.schema(idPos).name)) :+
+        StructField("score", DoubleType))
+    corpus.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
   /** Batched search with ONE index scan for the whole query batch: the
@@ -170,6 +190,16 @@ object VectorSearchClient {
   private val ScoreCol = "__graft_score"
   private val RankCol = "__graft_rank"
   private val QueryIdCol = "__graft_query_id"
+
+  /** Back-join key: integral ids compare by value across widths, as the
+    * engine's equi-join does after widening an int id to a long one.
+    */
+  private def joinKey(v: Any): Any = v match {
+    case x: Byte => x.toLong
+    case x: Short => x.toLong
+    case x: Int => x.toLong
+    case other => other
+  }
 
   /** Build from a corpus with precomputed embeddings (CI path — offline).
     * E2: the index dimension is validated against the embedder up front —

@@ -1110,6 +1110,167 @@ class GraphAnnSpec extends SparkTestBase {
       superStride = 128)
     assert(edgeSet(half) == edgeSet(redT))
   }
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A store probe (bucket-granular expansion) equals, row for row and in
+    * executed rounds, the plain point probe over the `built` edge frame on
+    * every query, and the join shape on the first. The join shape runs at
+    * two rounds: its plan string, built at every action, grows
+    * exponentially with the round count.
+    */
+  private def assertStoreProbes(what: String, df: org.apache.spark.sql.DataFrame,
+      idCol: String, vecCol: String, store: org.apache.spark.sql.DataFrame,
+      built: org.apache.spark.sql.DataFrame, queries: Seq[Array[Double]],
+      stride: Int, k: Int = 10, beam: Int = GraphAnn.DefaultBeam,
+      rounds: Int = GraphAnn.DefaultRounds): Unit = {
+    def probe(edges: org.apache.spark.sql.DataFrame, q: Array[Double],
+        rounds: Int) = {
+      val rows = GraphAnn.pointProbeTopK(df, idCol, vecCol, edges, q, k,
+        stride, beam, rounds).collect().toSeq
+      (rows, GraphAnn.lastProbeRounds)
+    }
+    queries.zipWithIndex.foreach { case (q, i) =>
+      val (got, gotRounds) = probe(store, q, rounds)
+      assert(got.nonEmpty, s"$what q$i: empty probe")
+      assert((got, gotRounds) == probe(built, q, rounds),
+        s"$what q$i: store probe diverged from the plain point probe")
+    }
+    val got = probe(store, queries.head, 2)._1
+    assert(got == GraphAnn.beamSearchTopK(df, idCol, vecCol, built,
+        queries.head, k, stride, beam, 2).collect().toSeq,
+      s"$what: store probe diverged from the join shape")
+  }
+
+  test("store probe equals both in-memory shapes on flat and tiered stores") {
+    val qs = Seq(1L, 7L, 42L).map(qvec)
+    for (stride <- Seq(16, 64)) {
+      val p = tmpDir("graph_probe_flat")
+      GraphAnn.materialize(emb, "vec_id", "embedding", stride,
+        GraphAnn.DefaultDegree, p)
+      val store = GraphAnn.fromMaterialized(spark, p, stride, GraphAnn.DefaultDegree)
+      assert(store.columns.toSeq == Seq("src", "dst", GraphAnn.DstVecCol, "__bucket"))
+      // centroid-level rows carry a NULL bucket, member rows their src's
+      assert(store.where(col("__bucket").isNull)
+        .where(pmod(col("src"), lit(stride)) =!= 0).isEmpty)
+      val built = GraphAnn.buildEdges(emb, "vec_id", "embedding", stride)
+      assertStoreProbes(s"flat/$stride", emb, "vec_id", "embedding", store,
+        built, qs, stride)
+      assertStoreProbes(s"flat/$stride narrow", emb, "vec_id", "embedding",
+        store, built, qs.take(2), stride, k = 5, beam = 4)
+    }
+    val t = tmpDir("graph_probe_tiered")
+    GraphAnn.materialize(emb, "vec_id", "embedding", 16,
+      GraphAnn.DefaultDegree, t, superStride = 64)
+    assertStoreProbes("tiered", emb, "vec_id", "embedding",
+      GraphAnn.fromMaterialized(spark, t, 16, GraphAnn.DefaultDegree,
+        superStride = 64),
+      GraphAnn.buildEdges(emb, "vec_id", "embedding", 16,
+        superStride = 64), qs, 16)
+  }
+
+  test("store probe equals both in-memory shapes after append, delete and a full drain") {
+    val qs = Seq(1L, 7L, 42L).map(qvec)
+    val appended = tmpDir("graph_probe_append")
+    GraphAnn.materialize(emb.where(pmod(col("vec_id"), lit(2)) === 0),
+      "vec_id", "embedding", 64, GraphAnn.DefaultDegree, appended)
+    GraphAnn.appendToMaterialized(emb.where(pmod(col("vec_id"), lit(2)) === 1),
+      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, appended)
+    assertStoreProbes("appended", emb, "vec_id", "embedding",
+      GraphAnn.fromMaterialized(spark, appended, 64, GraphAnn.DefaultDegree),
+      GraphAnn.buildEdges(emb, "vec_id", "embedding", 64), qs, 64)
+
+    val deleted = tmpDir("graph_probe_delete")
+    GraphAnn.materialize(emb, "vec_id", "embedding", 64,
+      GraphAnn.DefaultDegree, deleted)
+    GraphAnn.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(4)) === 3),
+      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, deleted)
+    val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
+    assertStoreProbes("deleted", reduced, "vec_id", "embedding",
+      GraphAnn.fromMaterialized(spark, deleted, 64, GraphAnn.DefaultDegree),
+      GraphAnn.buildEdges(reduced, "vec_id", "embedding", 64), qs, 64)
+
+    // every member deleted: no bucket directory is left, every centroid's
+    // own bucket is empty and its member edges come from the src scan
+    val drained = tmpDir("graph_probe_drain")
+    val centroids = emb.where(pmod(col("vec_id"), lit(64)) === 0)
+    GraphAnn.materialize(emb, "vec_id", "embedding", 64,
+      GraphAnn.DefaultDegree, drained)
+    GraphAnn.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(64)) =!= 0),
+      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, drained)
+    assert(graft.ops.IndexFiles.listSubdirs(spark, s"$drained/edges",
+      "__bucket=").isEmpty)
+    assertStoreProbes("drained", centroids, "vec_id", "embedding",
+      GraphAnn.fromMaterialized(spark, drained, 64, GraphAnn.DefaultDegree),
+      GraphAnn.buildEdges(centroids, "vec_id", "embedding", 64), qs, 64)
+  }
+
+  test("store probe is exact on duplicate, zero-vector and singleton-bucket centroids") {
+    val sp = spark
+    import sp.implicits._
+    // stride 8 over ids 0..47: centroids 0, 8, 40 head clusters A, B, C;
+    // centroid 16 duplicates 8's vector and centroid 24 is the zero vector
+    // (both assigned to the lowest tied centroid, so their own buckets stay
+    // empty); centroid 32 points along an axis no member uses (a
+    // singleton bucket)
+    def u(x: Long): Double =
+      graft.util.Hashing.splitmix64(x).toDouble / Long.MaxValue.toDouble
+    def axis(a: Int): Array[Double] = Array.tabulate(8)(i => if (i == a) 1.0 else 0.0)
+    val vecs = (0L until 48L).map {
+      case 0L => axis(0)
+      case 8L | 16L => axis(1)
+      case 24L => Array.fill(8)(0.0)
+      case 32L => axis(7)
+      case 40L => axis(2)
+      case i => Array.tabulate(8)(d =>
+        (if (d == (i % 3).toInt) 1.0 else 0.0) + (if (d < 6) 0.4 * u(i * 31 + d) else 0.0))
+    }
+    val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+    val p = tmpDir("graph_probe_degenerate")
+    GraphAnn.materialize(df, "id", "v", 8, 4, p)
+    for (b <- Seq(16, 24, 32)) assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$p/edges", s"__bucket=$b")), s"bucket $b not empty")
+    // the entry beam holds all six centroids, so round 1 expands each one
+    assertStoreProbes("degenerate", df, "id", "v",
+      GraphAnn.fromMaterialized(spark, p, 8, 4),
+      GraphAnn.buildEdges(df, "id", "v", 8, 4),
+      Seq(axis(1), axis(7), vecs(5), vecs(13)), 8, k = 20, beam = 6)
+  }
+
+  test("store probe runs at most one job per round plus the entry job") {
+    // opened once: opening a parquet frame infers its schema in a job
+    val emb = this.emb
+    val p = tmpDir("graph_probe_jobs")
+    GraphAnn.materialize(emb, "vec_id", "embedding", 16,
+      GraphAnn.DefaultDegree, p)
+    val store = GraphAnn.fromMaterialized(spark, p, 16, GraphAnn.DefaultDegree)
+    for (id <- Seq(1L, 7L, 42L)) {
+      val q = qvec(id)
+      val (_, jobs) = JobCount(spark.sparkContext) {
+        GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", store, q,
+          k = 10, stride = 16, beam = 4).collect()
+      }
+      val rounds = GraphAnn.lastProbeRounds
+      assert(rounds >= 1 && jobs <= 1 + rounds, s"q$id: $jobs jobs in $rounds rounds")
+    }
+    // stride 64: the entry beam holds every centroid, so round 1 loads
+    // every bucket and the later rounds run no job
+    val all = tmpDir("graph_probe_jobs_all")
+    GraphAnn.materialize(emb, "vec_id", "embedding", 64,
+      GraphAnn.DefaultDegree, all)
+    val allStore = GraphAnn.fromMaterialized(spark, all, 64, GraphAnn.DefaultDegree)
+    for (id <- Seq(1L, 7L)) {
+      val q = qvec(id)
+      val (_, jobs) = JobCount(spark.sparkContext) {
+        GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", allStore, q,
+          k = 10, stride = 64).collect()
+      }
+      val rounds = GraphAnn.lastProbeRounds
+      assert(rounds >= 2, s"q$id: expected a multi-round probe, got $rounds")
+      assert(jobs == 2, s"q$id: $jobs jobs in $rounds rounds")
+    }
+  }
 }
 
 /** sim_join_lsh's documented check (it has no SQL oracle: the hyperplane

@@ -28,14 +28,36 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("Exchange rangepartitioning"), plan)
   }
 
-  test("search back-join broadcasts the k-row side (no corpus shuffle)") {
+  test("search back-join reads the corpus once through an id filter (no corpus shuffle)") {
     val client = VectorSearchClient.fromEmbedded(
       docs.select("doc_id", "text"),
       emb.withColumnRenamed("vec_id", "doc_id"),
       "doc_id", HashingEmbedder(64))
-    val plan = client.searchByVector(qvec, 10).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"), plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
+    // the search is eager: record the plans of the actions it runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      client.searchByVector(qvec, 10)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    val corpusReads = all.filter(_.contains("documents.parquet"))
+    assert(corpusReads.size == 1, all.mkString("\n----\n"))
+    assert(corpusReads.head.contains("doc_id") &&
+      corpusReads.head.contains("PushedFilters: [In(doc_id"), corpusReads.head)
+    all.foreach { plan =>
+      assert(!plan.contains("Exchange"), plan)
+      assert(!plan.contains("SortMergeJoin"), plan)
+    }
   }
 
   test("distance expression runs inside WholeStageCodegen over a parquet scan") {

@@ -87,6 +87,75 @@ class SearchClientSpec extends SparkTestBase {
       rows(client.searchByVectors(qvecs, 7)))
   }
 
+  test("eager search equals the batched path on back-join edge cases, in two jobs") {
+    val base = VectorSearchClient.fromEmbedded(docs, emb, "doc_id", HashingEmbedder(64))
+    def qv(id: Long) = emb.where(col("doc_id") === id).select("embedding").head()
+      .getSeq[Float](0).map(_.toDouble).toArray
+    val q1 = Seq(0L -> qv(7))
+    val q3 = Seq(2L -> qv(0), 0L -> qv(1), 1L -> qv(2))
+    // every column, order-insensitive only among rows sharing (query, rank)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(_.toSeq.map(v => if (v == null) "null" else v.toString)).toSeq
+      .sortBy(r => (r(0).toLong, r(1).toLong, r.mkString("|")))
+    def check(what: String, c: VectorSearchClient, n: Int): Unit =
+      for (qs <- Seq(q1, q3)) {
+        val eager = c.searchByVectors(qs, n)
+        val batched = c.searchByVectorsBatched(qs, n)
+        assert(eager.columns.toSeq == batched.columns.toSeq, what)
+        assert(eager.schema.map(_.dataType) == batched.schema.map(_.dataType), what)
+        assert(rows(eager) == rows(batched), s"$what: Q=${qs.size} diverged")
+        val ranked = eager.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(ranked == ranked.sorted, s"$what: rows not in (query_id, rank) order")
+      }
+    check("plain", base, 7)
+    // duplicate corpus ids fan out under one rank
+    val hitIds = base.searchByVectors(q3, 7).select("doc_id").collect()
+      .map(_.getLong(0)).toSeq
+    val picked = hitIds.distinct.take(4)
+    val pickedHits = hitIds.count(picked.contains)
+    val dups = docs.unionAll(docs.where(col("doc_id").isin(picked: _*))
+      .withColumn("text", concat(lit("dup "), col("text"))))
+    val dupClient = VectorSearchClient.fromEmbedded(dups, emb, "doc_id", HashingEmbedder(64))
+    check("duplicate ids", dupClient, 7)
+    assert(dupClient.searchByVectors(q3, 7).count() == 21 + pickedHits)
+    // index ids missing from the corpus drop out
+    val holes = docs.where(!col("doc_id").isin(picked: _*))
+    val withHoles = VectorSearchClient.fromEmbedded(holes, emb, "doc_id", HashingEmbedder(64))
+    check("missing ids", withHoles, 7)
+    assert(withHoles.searchByVectors(q3, 7).count() == 21 - pickedHits)
+    // corpus rank/score columns ride along under their names
+    check("rank/score columns", VectorSearchClient.fromEmbedded(
+      docs.withColumn("score", lit("corpus-score")).withColumn("rank", lit(99)),
+      emb, "doc_id", HashingEmbedder(64)), 7)
+    // an int corpus id back-joins a long index id and keeps the long type
+    val intIds = VectorSearchClient.fromEmbedded(
+      docs.select(col("doc_id").cast("int").as("doc_id"), col("text")),
+      emb, "doc_id", HashingEmbedder(64))
+    check("int corpus id", intIds, 7)
+    assert(intIds.searchByVector(qv(7), 3).schema("doc_id").dataType ==
+      org.apache.spark.sql.types.LongType)
+    // NULL embeddings rank last: equal to the batched path while the
+    // non-null rows fill the top n, behind every scored row past that
+    val nulled = emb.withColumn("embedding",
+      when(pmod(col("doc_id"), lit(5)) === 0, lit(null)).otherwise(col("embedding")))
+    val nullClient = VectorSearchClient.fromEmbedded(docs, nulled, "doc_id",
+      HashingEmbedder(64))
+    check("null embeddings", nullClient, 7)
+    val small = VectorSearchClient.fromEmbedded(docs,
+      nulled.where(col("doc_id") < 10), "doc_id", HashingEmbedder(64))
+    val tail = small.searchByVector(qv(7), 10).collect()
+    assert(tail.map(_.getAs[Long]("rank")).toSeq == (1L to 10L))
+    assert(tail.map(r => r.isNullAt(r.fieldIndex("score"))).toSeq ==
+      Seq.fill(8)(false) ++ Seq(true, true))
+    assert(tail.takeRight(2).map(_.getAs[Long]("doc_id")).toSeq == Seq(0L, 5L))
+    // one top-k job and one corpus read per query
+    base.index.count()
+    val (_, jobs) = JobCount(spark.sparkContext)(base.searchByVectors(q1, 7))
+    assert(jobs == 2, s"Q=1 search ran $jobs jobs")
+    // query ids must be distinct
+    intercept[IllegalArgumentException](base.searchByVectors(q1 ++ q1, 7))
+  }
+
   test("searchDemo reproduces the demo app's renamed shape") {
     val sp = spark
     import sp.implicits._
