@@ -279,12 +279,12 @@ object GraphAnn {
         org.apache.spark.sql.types.LongType))))
 
   /** Neighbor-vector column of a VECTOR-ADJACENT materialized edge table
-    * (see [[materialize]]); the batch probe routes on its presence.
+    * (see [[materialize]]); [[bucketExpansion]] scores it per query.
     */
   private[graft] val DstVecCol = "__dstv"
 
   /** Bucket column of a [[fromMaterialized]] frame (NULL on centroid-level
-    * rows); [[pointProbeTopK]] routes on its presence.
+    * rows); the driver probe loop ([[probeLoop]]) routes on its presence.
     */
   private[graft] val BucketCol = "__bucket"
 
@@ -363,7 +363,8 @@ object GraphAnn {
     * see one `(src, dst, __dstv, __bucket)` frame: member-level rows carry
     * their src's bucket (the partition key, which is also dst's bucket —
     * member edges never leave their bucket), centroid-level rows a NULL
-    * bucket. [[pointProbeTopK]] routes on that column and expands the
+    * bucket. The driver probe loop ([[pointProbeTopK]], gate-sized
+    * [[beamSearchTopKBatch]] calls) routes on that column and expands the
     * store bucket by bucket.
     */
   def fromMaterialized(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -686,10 +687,8 @@ object GraphAnn {
     * at [[converged]]; `rounds` is the cap.
     *
     * Per-round work is O(beam·degree) rows; the vector lookup for reached
-    * ids is a BROADCAST semi-join into the corpus scan — with the corpus
-    * id-sorted at rest (`Layout.zorderBy` / compaction), parquet min-max
-    * row-group pruning turns that scan into point reads, which is the
-    * production shape for iterated id lookups.
+    * ids is a BROADCAST semi-join of those ≤ beam·degree ids into a scan
+    * of the corpus.
     *
     * Preconditions: numeric ids, non-null vectors, `edges` built over the
     * same corpus/stride (centroids must exist in `df`).
@@ -767,33 +766,42 @@ object GraphAnn {
       .limit(k)
   }
 
-  /** Batched beam search: ONE pass of the round loop serves a whole
-    * query-vector table — every query advances together, so each round is
-    * one edge-table join and one corpus scan REGARDLESS of query count
-    * (the per-round joins amortize exactly as [[beamSearchTopK]]'s doc
-    * promises, but across queries instead of within one). Row-identical
-    * per query to [[beamSearchTopK]] / [[pointProbeTopK]] (spec-asserted):
-    * same entry beam, same best-first tabu frontier, same min-dedup, and
-    * the same per-query HNSW [[converged]] rule — a query that converges
-    * simply stops contributing frontier rows while the rest keep walking.
+  /** Batched beam search: every query of a query-vector table walks the
+    * same rounds. Row-identical per query to [[beamSearchTopK]] /
+    * [[pointProbeTopK]] (spec-asserted): same entry beam, same best-first
+    * tabu frontier, same min-dedup, and the same per-query HNSW
+    * [[converged]] rule — a query that converges simply stops contributing
+    * frontier rows while the rest keep walking. Two routes serve it:
     *
-    * All per-round state is (queries × beam)-bounded frames keyed by
-    * `(__qid, __nid)` — nothing corpus-sized and NO driver-side beam
-    * state; the driver only sees one tiny `count()` per round (active
-    * queries). The query table is broadcast twice per round (frontier
-    * semi-join and distance lookup), so it must be broadcast-sized —
-    * shard and union beyond ~10^5 queries, as with
-    * [[AnnIndex.probeTopKBatch]].
+    *  - a gate-sized table (≤ `beam` rows, double vectors, no NULL id or
+    *    vector) runs [[probeLoop]], the driver loop behind
+    *    [[pointProbeTopK]], with all Q queries at once. Jobs per call: Q
+    *    entry jobs, then per round ≤ 1 job on a [[fromMaterialized]] store
+    *    (plus one unpruned scan in a round that expands a degenerate
+    *    centroid) or 2 jobs on a plain `(src, dst)` frame, REGARDLESS of Q.
+    *    Driver state: Q maps of ≤ beam + beam·degree·rounds (id, distance)
+    *    pairs, plus, on a store, the loaded buckets' edges with Q distances
+    *    each.
+    *  - a larger table runs [[beamSearchTopKBatchJoin]]: each round is one
+    *    edge-table join and one corpus scan regardless of query count, all
+    *    per-round state in (queries × beam)-bounded frames keyed by
+    *    `(__qid, __nid)` — nothing corpus-sized and no driver-side beam
+    *    state; the driver only sees one tiny emptiness check per round. The
+    *    query table is broadcast twice per round (frontier semi-join and
+    *    distance lookup), so it must be broadcast-sized — shard and union
+    *    beyond ~10^5 queries, as with [[AnnIndex.probeTopKBatch]].
     *
     * Output: `(qidCol, rank, idCol, cos_dist)`, rank 1-based per query by
     * (dist asc NULLS LAST, id asc) — the [[AnnIndex.probeTopKBatch]] shape.
     * Preconditions: numeric query ids, `edges` built over the same
-    * corpus/stride.
+    * corpus/stride. Query ids must be distinct: the driver route rejects
+    * duplicates with an `IllegalArgumentException`; the join route does not
+    * check, and would merge the duplicates' visited sets.
     *
     * EXECUTION CONTRACT: this call is EAGER, not a lazy plan builder. Both
-    * routes run Spark jobs at call time — the gate-sized double-vector
-    * route collects the query table head and drives the whole probe loop
-    * (inside a [[withSessionConfs]] override window), and the join route
+    * routes run Spark jobs at call time — the driver route collects the
+    * query table head and drives the whole probe loop (inside a
+    * [[withSessionConfs]] override window), and the join route
     * localCheckpoints every round — and both return a materialized
     * (checkpointed or driver-local) frame. Callers composing the result
     * into a larger plan get a scan of that materialized state, not a
@@ -807,36 +815,39 @@ object GraphAnn {
     require(k > 0 && beam > 0 && rounds >= 0,
       s"invalid probe: k=$k beam=$beam rounds=$rounds")
     // Route GATE-SIZED batches (≤ beam queries, double vectors) through the
-    // multi-query point-probe: the join shape's per-round wall at tiny
-    // batch sizes is FIXED driver scheduling (checkpoint + window + dedup
-    // jobs per round), not data — measured 2.24 s for 3 queries where the
-    // driver loop's 2 single-stage jobs per round land well under 1 s. The
-    // two shapes are row-identical (spec-asserted); beyond `beam` queries
-    // the join shape's amortization wins and driver maps stop being the
-    // model-artifact cost class.
-    if (queries.schema(queries.schema.fieldIndex(qvecCol)).dataType ==
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, true) ||
-        queries.schema(queries.schema.fieldIndex(qvecCol)).dataType ==
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, false)) {
-      val head = queries
-        .select(col(qidCol).cast("long"), col(qvecCol)).limit(beam + 1).collect()
-      // NULL ids/vectors stay on the join shape: getLong would silently
-      // read a NULL id as 0 and alias it with a real query 0
-      if (head.length <= beam && head.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-        return pointProbeTopKBatch(df, idCol, vecCol, edges,
-          head.map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq)).toSeq,
-          qidCol, k, stride, beam, rounds)
+    // driver loop: the join shape's per-round wall at tiny batch sizes is
+    // FIXED driver scheduling (checkpoint + window + dedup jobs per round),
+    // not data — measured 2.24 s for 3 queries, where the driver loop lands
+    // well under 1 s. The two shapes are row-identical (spec-asserted);
+    // beyond `beam` queries the join shape's amortization wins and driver
+    // maps stop being the model-artifact cost class.
+    queries.schema(qvecCol).dataType match {
+      case org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.DoubleType, _) =>
+        val head = queries
+          .select(col(qidCol).cast("long"), col(qvecCol)).limit(beam + 1).collect()
+        // NULL ids/vectors stay on the join shape: getLong would silently
+        // read a NULL id as 0 and alias it with a real query 0
+        if (head.length <= beam && head.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+          // Whole-stage codegen + AQE OFF for the loop's micro-jobs: an IN
+          // list is inlined into generated code and differs every round,
+          // so each frontier-sized collect would pay a fresh janino
+          // compilation (measured ~100 ms/job), and AQE adds query-stage
+          // jobs. Interpreted eval of the SAME expressions is bit-identical
+          // and instant on frontier-sized inputs.
+          return withSessionConfs(df.sparkSession,
+              "spark.sql.codegen.wholeStage" -> "false",
+              "spark.sql.adaptive.enabled" -> "false") {
+            probeLoop(df, idCol, vecCol, edges,
+              head.map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq)).toSeq,
+              qidCol, k, stride, beam, rounds)
+          }
+      case _ =>
     }
     beamSearchTopKBatchJoin(df, idCol, vecCol, edges, queries, qidCol,
       qvecCol, k, stride, beam, rounds)
   }
 
-  /** The join-shape batch probe — all per-round state in (queries × beam)-
-    * bounded engine frames; the scale path for large query tables (see
-    * [[beamSearchTopKBatch]], which routes here beyond `beam` queries).
-    */
   /** Serializes every graft conf-override window on a session (probe loops
     * clamp shuffle partitions / disable AQE+codegen for their driver-sized
     * micro-jobs). The monitor makes overlapping graft callers impossible —
@@ -857,6 +868,10 @@ object GraphAnn {
     finally prev.foreach { case (key, v) => spark.conf.set(key, v) }
   }
 
+  /** The join-shape batch probe — all per-round state in (queries × beam)-
+    * bounded engine frames; the scale path for large query tables (see
+    * [[beamSearchTopKBatch]], which routes here beyond `beam` queries).
+    */
   private[graft] def beamSearchTopKBatchJoin(df: DataFrame, idCol: String,
       vecCol: String, edges: DataFrame, queries: DataFrame, qidCol: String,
       qvecCol: String, k: Int, stride: Int, beam: Int = DefaultBeam,
@@ -972,35 +987,21 @@ object GraphAnn {
   }
 
   /** Single-query point probe — row-identical to [[beamSearchTopK]]
-    * (spec-asserted), with the beam state held on the driver. The state is
-    * bounded by construction at ≤ beam + beam·degree·rounds (id, distance)
-    * pairs — a few hundred rows REGARDLESS of corpus size, the same
-    * per-query working set an in-process HNSW library keeps — so holding
-    * it driver-side is the model-artifact cost class, not a collect of
-    * data. Distances are still computed by the engine's codegen'd
-    * expression — the driver only orders already-computed (distance, id)
-    * pairs, so the probe shapes cannot drift. The entry beam is one
-    * top-k job over the centroids; the rounds expand by one of two paths,
-    * routed on the edge frame's columns:
-    *
-    *  - a [[fromMaterialized]] store (`__bucket` present) expands BUCKET
-    *    BY BUCKET. Member edges never leave their bucket, so a member
-    *    node's out-edges all lie in the bucket it was reached through, and
-    *    a centroid-level node (an id divisible by `stride`) is looked up in
-    *    its own-id bucket. Each round loads, in ONE job, every bucket of
-    *    its frontier not loaded yet — whole `__bucket` partitions by
-    *    partition pruning, plus those centroids' centroid-level out-edges
-    *    — with the query distance of every loaded edge's dst vector; a
-    *    round whose frontier sits in loaded buckets runs no job. A centroid
-    *    whose own bucket holds no member edge from it costs one more,
-    *    unpruned `src` scan: a duplicate or zero-vector centroid (assigned
-    *    to the lowest tied centroid, leaving its own bucket empty) or a
-    *    singleton bucket. Driver state beyond the beam is loaded buckets ×
-    *    bucket rows × degree (id, id, distance) triples — independent of
-    *    the vector dimension.
-    *  - a plain `(src, dst)` frame ([[buildEdges]]) costs two jobs per
-    *    round: the frontier's out-edges, then the corpus vectors of the
-    *    newly reached ids.
+    * (spec-asserted): [[probeLoop]], the driver loop behind gate-sized
+    * [[beamSearchTopKBatch]] calls, run with one query. The beam state is
+    * held on the driver, bounded by construction at
+    * ≤ beam + beam·degree·rounds (id, distance) pairs — a few hundred rows
+    * REGARDLESS of corpus size, the same per-query working set an
+    * in-process HNSW library keeps — so holding it driver-side is the
+    * model-artifact cost class, not a collect of data. On a store the
+    * driver also holds the loaded buckets' edges (see [[bucketExpansion]]).
+    * Distances are still computed by the engine's codegen'd expression —
+    * the driver only orders already-computed (distance, id) pairs, so the
+    * probe shapes cannot drift. Jobs per call: one entry job (top-`beam`
+    * over the centroids), then per round ≤ 1 job on a [[fromMaterialized]]
+    * store (plus one unpruned scan in a round that expands a degenerate
+    * centroid) or 2 jobs on a plain `(src, dst)` frame ([[buildEdges]]).
+    * No session conf is touched.
     *
     * Use [[beamSearchTopKBatch]] when probing a BATCH of queries in one
     * pass (its rounds amortize across queries); use this for the
@@ -1011,99 +1012,147 @@ object GraphAnn {
       beam: Int = DefaultBeam, rounds: Int = DefaultRounds): DataFrame = {
     require(k > 0 && beam > 0 && rounds >= 0,
       s"invalid probe: k=$k beam=$beam rounds=$rounds")
-    val spark = df.sparkSession
-    val q = typedLit(qvec.toSeq)
-    // (distance asc NULLS LAST, id asc) — the join shape's exact sort key.
-    // java.lang.Double.compare is NaN-largest like Spark's ordering, and
-    // cos_dist never produces -0.0 (1 - 1 = +0.0), so exact double
-    // comparison of engine-computed values is drift-free.
-    val sortKey: ((Long, java.lang.Double)) => (Boolean, Double, Long) = {
-      case (id, d) => (d == null, if (d == null) 0d else d.doubleValue, id)
-    }
-    val visited = scala.collection.mutable.HashMap.empty[Long, java.lang.Double]
-    df.where(pmod(col(idCol), lit(stride)) === 0)
-      .select(col(idCol).cast("long").as("__nid"),
-        array_cosine_distance(col(vecCol), q).as("__d"))
-      .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
-      .limit(beam)
-      .collect().foreach(r => visited(r.getLong(0)) = distAt(r, 1))
-    // tabu on scoring: a node's distance is a pure function of its id, so
-    // skipping already-visited ids is identical to the join shape's
-    // union + min-groupBy dedup
-    val expand: Seq[Long] => Unit =
-      if (edges.columns.contains(BucketCol))
-        bucketExpansion(edges, q, stride, visited)
-      else { frontier =>
-        val reached = edges.where(col("src").isin(frontier: _*))
-          .select(col("dst").cast("long"))
-          .collect().map(_.getLong(0)).distinct
-        val newIds = reached.filterNot(visited.contains)
-        if (newIds.nonEmpty)
-          df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
-            .where(col("__nid").isin(newIds.toSeq: _*))
-            .select(col("__nid"), array_cosine_distance(col("__nv"), q))
-            .collect().foreach(r => visited(r.getLong(0)) = distAt(r, 1))
-      }
-    val expanded = scala.collection.mutable.HashSet.empty[Long]
-    var round = 0
-    var frontier = Seq.empty[Long]
-    def nextFrontier(): Seq[Long] = visited.iterator
-      .filterNot(kv => expanded(kv._1)).map { case (id, d) => (id, d) }
-      .toSeq.sortBy(sortKey).take(beam).map(_._1)
-    // HNSW convergence (shared [[converged]] rule — identical to the join
-    // shape and the oracle's frontier guard): stop once every node of the
-    // current top-k has been expanded
-    def convergedNow: Boolean = converged(
-      visited.iterator.map { case (id, d) => (id, d) }.toSeq
-        .sortBy(sortKey).take(k).map(_._1),
-      expanded)
-    while (round < rounds && !(round > 0 && convergedNow)
-        && { frontier = nextFrontier(); frontier.nonEmpty }) {
-      expanded ++= frontier
-      expand(frontier)
-      round += 1
-    }
-    probeRounds.set(round)
-    val top = visited.iterator.map { case (id, d) => (id, d) }
-      .toSeq.sortBy(sortKey).take(k)
-      .map { case (id, d) => org.apache.spark.sql.Row(id, d) }
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(top.asJava, StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
-      StructField("cos_dist", DoubleType, nullable = true))))
+    // renamed by position: idCol may equal any fixed column name
+    probeLoop(df, idCol, vecCol, edges, Seq(0L -> qvec.toSeq), "__qid", k,
+        stride, beam, rounds)
+      .toDF("__qid", "__rank", "__nid", "__d")
+      .select(col("__nid").as(idCol), col("__d").as("cos_dist"))
   }
 
   private def distAt(r: org.apache.spark.sql.Row, i: Int): java.lang.Double =
     if (r.isNullAt(i)) null else java.lang.Double.valueOf(r.getDouble(i))
 
-  /** [[pointProbeTopK]]'s round step over a [[fromMaterialized]] frame:
-    * scores the out-neighbors of a frontier into `visited`, loading the
-    * frontier's buckets not loaded by an earlier round of this probe.
+  /** The driver-loop probe over Q ≥ 1 queries (distinct ids), with each
+    * query's beam state in a driver map. Entry: per query, one top-`beam`
+    * job over the centroids. Each round takes every query's frontier — its
+    * best `beam` visited-but-unexpanded nodes, or none once the query has
+    * [[converged]] — and expands their union in one step, routed on the
+    * edge frame's columns: [[bucketExpansion]] for a [[fromMaterialized]]
+    * store (`__bucket` present); for a plain `(src, dst)` frame, one edge
+    * read of the union frontier, then one corpus read of the newly reached
+    * ids with one distance column per query that reached any. Returns a
+    * driver-local `(qidCol, rank, idCol, cos_dist)` frame, rank 1-based per
+    * query by (dist asc NULLS LAST, id asc).
     */
-  private def bucketExpansion(edges: DataFrame, q: Column, stride: Int,
-      visited: scala.collection.mutable.HashMap[Long, java.lang.Double])
-      : Seq[Long] => Unit = {
+  private def probeLoop(df: DataFrame, idCol: String, vecCol: String,
+      edges: DataFrame, queries: Seq[(Long, Seq[Double])], qidCol: String,
+      k: Int, stride: Int, beam: Int, rounds: Int): DataFrame = {
     import scala.collection.mutable
-    // src -> (dst, distance, dst's bucket — NULL on a centroid-level edge)
+    require(queries.map(_._1).distinct.size == queries.size,
+      "graph probe query ids must be distinct")
+    val qs = queries.map { case (_, v) => typedLit(v) }
+    val visited = queries.map(_ => mutable.HashMap.empty[Long, java.lang.Double])
+      .toIndexedSeq
+    val expanded = queries.map(_ => mutable.HashSet.empty[Long]).toIndexedSeq
+    // (distance asc NULLS LAST, id asc) — the join shape's exact sort key.
+    // java.lang.Double.compare is NaN-largest like Spark's ordering, and
+    // cos_dist never produces -0.0 (1 - 1 = +0.0), so exact double
+    // comparison of engine-computed values is drift-free.
+    def ranked(i: Int): Seq[(Long, java.lang.Double)] = visited(i).toSeq
+      .sortBy { case (id, d) => (d == null, if (d == null) 0d else d.doubleValue, id) }
+    for ((q, i) <- qs.zipWithIndex)
+      df.where(pmod(col(idCol), lit(stride)) === 0)
+        .select(col(idCol).cast("long").as("__nid"),
+          array_cosine_distance(col(vecCol), q).as("__d"))
+        .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
+        .limit(beam)
+        .collect().foreach(r => visited(i)(r.getLong(0)) = distAt(r, 1))
+    // tabu on scoring: a node's distance is a pure function of (query, id),
+    // so skipping already-visited ids is identical to the join shape's
+    // union + min-groupBy dedup
+    val expand: IndexedSeq[Seq[Long]] => Unit =
+      if (edges.columns.contains(BucketCol))
+        bucketExpansion(edges, qs, stride, visited)
+      else { fs =>
+        val out = edges.where(col("src").isin(fs.flatten.distinct: _*))
+          .select(col("src").cast("long"), col("dst").cast("long"))
+          .collect().groupMap(_.getLong(0))(_.getLong(1))
+        val reached = fs.indices.map(i => fs(i)
+          .flatMap(out.getOrElse(_, Array.emptyLongArray))
+          .filterNot(visited(i).contains(_)).toSet)
+        val active = reached.indices.filter(reached(_).nonEmpty)
+        if (active.nonEmpty)
+          df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
+            .where(col("__nid").isin(active.flatMap(reached(_)).distinct: _*))
+            .select(col("__nid") +: active.map(i =>
+              array_cosine_distance(col("__nv"), qs(i))): _*)
+            .collect().foreach { r =>
+              val nid = r.getLong(0)
+              for ((i, c) <- active.zipWithIndex if reached(i)(nid))
+                visited(i)(nid) = distAt(r, c + 1)
+            }
+      }
+    // HNSW convergence (shared [[converged]] rule — identical to the join
+    // shape and the oracle's frontier guard): a query stops once every node
+    // of its current top-k has been expanded; the rest keep walking
+    def frontiers(round: Int): IndexedSeq[Seq[Long]] = visited.indices.map { i =>
+      val ids = ranked(i).map(_._1)
+      if (round > 0 && converged(ids.take(k), expanded(i))) Nil
+      else ids.filterNot(expanded(i)).take(beam)
+    }
+    var round = 0
+    var fs = IndexedSeq.empty[Seq[Long]]
+    while (round < rounds && { fs = frontiers(round); fs.exists(_.nonEmpty) }) {
+      for (i <- fs.indices) expanded(i) ++= fs(i)
+      expand(fs)
+      round += 1
+    }
+    probeRounds.set(round)
+    val top = visited.indices.flatMap(i => ranked(i).take(k).zipWithIndex.map {
+      case ((id, d), r) => org.apache.spark.sql.Row(queries(i)._1, r + 1L, id, d)
+    })
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    df.sparkSession.createDataFrame(top.asJava, StructType(Seq(
+      StructField(qidCol, LongType, nullable = false),
+      StructField("rank", LongType, nullable = false),
+      StructField(idCol, LongType, nullable = false),
+      StructField("cos_dist", DoubleType, nullable = true))))
+  }
+
+  /** [[probeLoop]]'s round step over a [[fromMaterialized]] frame: scores
+    * the out-neighbors of each query's frontier into its `visited` map.
+    * Member edges never leave their bucket, so a member node's out-edges
+    * all lie in the bucket it was reached through, and a centroid-level
+    * node (an id divisible by `stride`) is looked up in its own-id bucket.
+    * Each round loads, in ONE job, every bucket of the frontier union not
+    * loaded yet — whole `__bucket` partitions by partition pruning, plus
+    * those centroids' centroid-level out-edges — with one engine-computed
+    * distance column per query of the probe on every loaded row; a round
+    * whose frontiers sit in loaded buckets runs no job. Every query vector
+    * and the bucket set are array literals, so the probe keeps one compiled
+    * stage shape. A centroid whose own bucket holds no member edge from it
+    * costs one more, unpruned `src` scan: a duplicate or zero-vector
+    * centroid (assigned to the lowest tied centroid, leaving its own bucket
+    * empty) or a singleton bucket. Driver state beyond the beams is loaded
+    * buckets × bucket rows × degree edges, each two ids and Q distances —
+    * independent of the vector dimension.
+    */
+  private def bucketExpansion(edges: DataFrame, qs: Seq[Column], stride: Int,
+      visited: IndexedSeq[scala.collection.mutable.HashMap[Long, java.lang.Double]])
+      : IndexedSeq[Seq[Long]] => Unit = {
+    import scala.collection.mutable
+    // src -> (dst, per-query distances, dst's bucket — NULL on a
+    // centroid-level edge)
     val out = mutable.HashMap.empty[Long,
-      mutable.ArrayBuffer[(Long, java.lang.Double, java.lang.Long)]]
+      mutable.ArrayBuffer[(Long, Array[java.lang.Double], java.lang.Long)]]
     val bucketOf = mutable.HashMap.empty[Long, Long] // member nodes, as reached
     val loaded = mutable.HashSet.empty[Long]
-    val withMemberEdges = mutable.HashSet.empty[Long] // srcs held
+    val held = mutable.HashSet.empty[Long] // srcs whose member edges are in `out`
     def fetch(cond: Column): Unit =
       edges.where(cond)
-        .select(col("src"), col("dst"), col(BucketCol),
-          array_cosine_distance(col(DstVecCol), q))
+        .select(Seq(col("src"), col("dst"), col(BucketCol)) ++
+          qs.map(array_cosine_distance(col(DstVecCol), _)): _*)
         .collect().foreach { r =>
           val src = r.getLong(0)
           val b = if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2))
-          if (b != null) withMemberEdges += src
+          if (b != null) held += src
           out.getOrElseUpdate(src, mutable.ArrayBuffer.empty) +=
-            ((r.getLong(1), distAt(r, 3), b))
+            ((r.getLong(1), Array.tabulate(qs.size)(i => distAt(r, 3 + i)), b))
         }
     def isCentroid(id: Long) = id % stride == 0
-    frontier => {
+    fs => {
+      val frontier = fs.flatten.distinct
       val need = frontier.flatMap(n =>
           if (isCentroid(n)) Some(n) else bucketOf.get(n))
         .distinct.filterNot(loaded)
@@ -1116,189 +1165,18 @@ object GraphAnn {
         loaded ++= need
       }
       // member edges of a centroid outside its own bucket (or of a node
-      // reached some other way): one unpruned src scan. A node expands once
-      // per probe, so no src is scanned twice.
-      val missing = frontier.filter(n => !withMemberEdges(n) &&
+      // reached some other way): one unpruned src scan, once per src even
+      // when several queries expand it
+      val missing = frontier.filter(n => !held(n) &&
         (isCentroid(n) || !bucketOf.contains(n)))
-      if (missing.nonEmpty)
+      if (missing.nonEmpty) {
         fetch(col(BucketCol).isNotNull && col("src").isin(missing: _*))
-      for (n <- frontier; (dst, d, b) <- out.getOrElse(n, Nil)) {
-        if (!visited.contains(dst)) visited(dst) = d
+        held ++= missing
+      }
+      for (i <- fs.indices; n <- fs(i); (dst, ds, b) <- out.getOrElse(n, Nil)) {
+        if (!visited(i).contains(dst)) visited(i)(dst) = ds(i)
         if (b != null) bucketOf(dst) = b
       }
     }
-  }
-
-  /** Multi-query point probe — [[pointProbeTopK]]'s driver-loop shape
-    * amortized across a SMALL query batch (≤ beam; [[beamSearchTopKBatch]]
-    * routes here). Per-query state is the same bounded
-    * ≤ beam + beam·degree·rounds (id, distance) map as the single-query
-    * path — Q of them, still the model-artifact cost class — and each
-    * round costs exactly TWO single-stage engine jobs REGARDLESS of query
-    * count: one `src IN (all frontiers)` edge scan and one
-    * `id IN (all new)` corpus scan that computes one engine-codegen'd
-    * distance column per active query (so distances stay engine-computed —
-    * the driver only routes and orders them, and the probe shapes cannot
-    * drift). The entry beam is one bounded-heap
-    * [[SimilarityJoin.bruteForceTopKBatch]] job over the centroid subset;
-    * the heap drops NULL distances, so any query left short of `beam`
-    * entries re-runs the exact single-query entry (NULLS LAST) — the
-    * degenerate-vector path, never taken on healthy data. Row-identical
-    * per query to [[pointProbeTopK]] and the join shape (spec-asserted).
-    */
-  private[graft] def pointProbeTopKBatch(df: DataFrame, idCol: String,
-      vecCol: String, edges: DataFrame, qRows: Seq[(Long, Seq[Double])],
-      qidCol: String, k: Int, stride: Int, beam: Int,
-      rounds: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // Whole-stage codegen + AQE OFF for the loop's micro-jobs: every round's
-    // isin list and query-vector literals differ, so each ≤400-row collect
-    // would pay a fresh janino compilation (the dominant fixed cost at gate
-    // size — measured ~100 ms/job), and AQE adds a query-stage job to the
-    // entry aggregate. Interpreted eval of the SAME expressions is
-    // bit-identical (ExpressionEvalSpec-class guarantee) and instant on
-    // frontier-sized inputs. Restored (and serialized against concurrent
-    // graft probes) by withSessionConfs — corpus-sized work never
-    // runs inside this path.
-    withSessionConfs(spark,
-        "spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.adaptive.enabled" -> "false") {
-      pointProbeTopKBatchLoop(df, idCol, vecCol, edges, qRows, qidCol,
-        k, stride, beam, rounds)
-    }
-  }
-
-  private def pointProbeTopKBatchLoop(df: DataFrame, idCol: String,
-      vecCol: String, edges: DataFrame, qRows: Seq[(Long, Seq[Double])],
-      qidCol: String, k: Int, stride: Int, beam: Int,
-      rounds: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val vecs = df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
-    // (distance asc NULLS LAST, id asc) — see pointProbeTopK's note on why
-    // exact double comparison of engine-computed values is drift-free
-    val sortKey: ((Long, java.lang.Double)) => (Boolean, Double, Long) = {
-      case (id, d) => (d == null, if (d == null) 0d else d.doubleValue, id)
-    }
-    val qids = qRows.map(_._1).distinct
-    val qv = qRows.toMap
-    val visited = qids.map(_ ->
-      scala.collection.mutable.HashMap.empty[Long, java.lang.Double]).toMap
-    val expanded = qids.map(_ ->
-      scala.collection.mutable.HashSet.empty[Long]).toMap
-    if (qids.nonEmpty) {
-      val qDf = qids.map(q => (q, qv(q))).toDF("__bqid", "__bqv")
-      SimilarityJoin.bruteForceTopKBatch(
-          df.where(pmod(col(idCol), lit(stride)) === 0), idCol, vecCol,
-          qDf, "__bqid", "__bqv", k = beam)
-        .select(col("__bqid"), col(idCol).cast("long"), col("cos_dist"))
-        .collect()
-        .foreach { r =>
-          visited(r.getLong(0))(r.getLong(1)) =
-            if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2))
-        }
-    }
-    for (qid <- qids if visited(qid).size < beam) {
-      // short entry: either fewer centroids than `beam` (tiny corpus) or
-      // NULL distances the heap dropped — replay the exact per-query entry
-      visited(qid).clear()
-      df.where(pmod(col(idCol), lit(stride)) === 0)
-        .select(col(idCol).cast("long").as("__nid"),
-          array_cosine_distance(col(vecCol), typedLit(qv(qid))).as("__d"))
-        .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
-        .limit(beam).collect()
-        .foreach(r => visited(qid)(r.getLong(0)) =
-          if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1)))
-    }
-    var round = 0
-    var continue = rounds > 0 && qids.nonEmpty
-    while (continue) {
-      // per-query frontier under the shared HNSW convergence rule: a
-      // converged query contributes no frontier rows while the rest walk
-      val frontiers: Map[Long, Seq[Long]] = qids.iterator.map { qid =>
-        val conv = round > 0 && converged(
-          visited(qid).iterator.map { case (i, d) => (i, d) }.toSeq
-            .sortBy(sortKey).take(k).map(_._1),
-          expanded(qid))
-        val f =
-          if (conv) Seq.empty[Long]
-          else visited(qid).iterator.filterNot(kv => expanded(qid)(kv._1))
-            .map { case (i, d) => (i, d) }.toSeq.sortBy(sortKey)
-            .take(beam).map(_._1)
-        qid -> f
-      }.toMap
-      val allFront = frontiers.valuesIterator.flatten.toSeq.distinct
-      if (allFront.isEmpty) continue = false
-      else {
-        round += 1
-        frontiers.foreach { case (qid, f) => expanded(qid) ++= f }
-        val fsets = frontiers.map { case (qid, f) => qid -> f.toSet }
-        val live = qids.filter(fsets(_).nonEmpty)
-        // tabu on scoring: a node's distance is a pure function of
-        // (query, id), so skipping already-visited ids is identical to the
-        // join shape's union + min-groupBy dedup
-        if (edges.columns.contains(DstVecCol)) {
-          // vector-adjacent artifact: the round is ONE src-pushdown scan
-          // yielding neighbors AND their per-query distances — the corpus
-          // table is never touched after the entry beam
-          val cols = Seq(col("src").cast("long"), col("dst").cast("long")) ++
-            live.map(qid =>
-              array_cosine_distance(col(DstVecCol), typedLit(qv(qid)))
-                .as(s"__d_$qid"))
-          edges.where(col("src").isin(allFront: _*)).select(cols: _*)
-            .collect().foreach { r =>
-              val src = r.getLong(0); val dst = r.getLong(1)
-              live.zipWithIndex.foreach { case (qid, i) =>
-                if (fsets(qid)(src) && !visited(qid).contains(dst))
-                  visited(qid)(dst) =
-                    if (r.isNullAt(i + 2)) null
-                    else java.lang.Double.valueOf(r.getDouble(i + 2))
-              }
-            }
-        } else {
-          // plain (src, dst) edges: expand then score in two point-read jobs
-          val es = edges.where(col("src").isin(allFront: _*))
-            .select(col("src").cast("long"), col("dst").cast("long"))
-            .collect().map(r => (r.getLong(0), r.getLong(1)))
-          val newIds: Map[Long, Set[Long]] = qids.iterator.map { qid =>
-            qid -> es.iterator.filter(e => fsets(qid)(e._1)).map(_._2)
-              .filterNot(visited(qid).contains).toSet
-          }.toMap
-          val active = qids.filter(q => newIds(q).nonEmpty)
-          val allNew = active.iterator.flatMap(newIds(_)).toSeq.distinct
-          if (allNew.nonEmpty) {
-            val cols = col("__nid") +: active.map(qid =>
-              array_cosine_distance(col("__nv"), typedLit(qv(qid)))
-                .as(s"__d_$qid"))
-            vecs.where(col("__nid").isin(allNew: _*)).select(cols: _*)
-              .collect().foreach { r =>
-                val nid = r.getLong(0)
-                active.zipWithIndex.foreach { case (qid, i) =>
-                  if (newIds(qid)(nid))
-                    visited(qid)(nid) =
-                      if (r.isNullAt(i + 1)) null
-                      else java.lang.Double.valueOf(r.getDouble(i + 1))
-                }
-              }
-          }
-        }
-        if (round >= rounds) continue = false
-      }
-    }
-    probeRounds.set(round)
-    val out = qids.flatMap { qid =>
-      visited(qid).iterator.map { case (i, d) => (i, d) }.toSeq
-        .sortBy(sortKey).take(k).zipWithIndex
-        .map { case ((nid, d), i) =>
-          org.apache.spark.sql.Row(qid, (i + 1).toLong, nid, d) }
-    }
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField(qidCol, LongType, nullable = false),
-      StructField("rank", LongType, nullable = false),
-      StructField(idCol, LongType, nullable = false),
-      StructField("cos_dist", DoubleType, nullable = true))))
   }
 }

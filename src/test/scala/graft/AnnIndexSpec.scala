@@ -779,6 +779,14 @@ class GraphAnnSpec extends SparkTestBase {
       rowsN(GraphAnn.beamSearchTopKBatchJoin(emb, "vec_id", "embedding",
         edges, withNull, "qid", "qv", k = 10, stride = 64)),
       "NULL-qid batch diverged from the join shape")
+    // two vectors under one query id would share one beam on the driver
+    // route and merge their visited sets on the join route: rejected
+    val dupIds = queries.union(queries.where(col("qid") === 42L)
+      .select(lit(7L).as("qid"), col("qv")))
+    intercept[IllegalArgumentException] {
+      GraphAnn.beamSearchTopKBatch(emb, "vec_id", "embedding", edges, dupIds,
+        "qid", "qv", k = 10, stride = 64)
+    }
   }
 
   test("tiered centroid layer: parity-class recall, bounded degree, geometry guard") {
@@ -1118,7 +1126,8 @@ class GraphAnnSpec extends SparkTestBase {
     * executed rounds, the plain point probe over the `built` edge frame on
     * every query, and the join shape on the first. The join shape runs at
     * two rounds: its plan string, built at every action, grows
-    * exponentially with the round count.
+    * exponentially with the round count. All queries as one batch over the
+    * store give each query its point-probe rows.
     */
   private def assertStoreProbes(what: String, df: org.apache.spark.sql.DataFrame,
       idCol: String, vecCol: String, store: org.apache.spark.sql.DataFrame,
@@ -1131,16 +1140,29 @@ class GraphAnnSpec extends SparkTestBase {
         stride, beam, rounds).collect().toSeq
       (rows, GraphAnn.lastProbeRounds)
     }
-    queries.zipWithIndex.foreach { case (q, i) =>
+    val singles = queries.zipWithIndex.map { case (q, i) =>
       val (got, gotRounds) = probe(store, q, rounds)
       assert(got.nonEmpty, s"$what q$i: empty probe")
       assert((got, gotRounds) == probe(built, q, rounds),
         s"$what q$i: store probe diverged from the plain point probe")
+      got
     }
     val got = probe(store, queries.head, 2)._1
     assert(got == GraphAnn.beamSearchTopK(df, idCol, vecCol, built,
         queries.head, k, stride, beam, 2).collect().toSeq,
       s"$what: store probe diverged from the join shape")
+    val sp = spark
+    import sp.implicits._
+    val batch = GraphAnn.beamSearchTopKBatch(df, idCol, vecCol, store,
+        queries.zipWithIndex.map { case (q, i) => (i.toLong, q.toSeq) }
+          .toDF("qid", "qv"), "qid", "qv", k, stride, beam, rounds)
+      .collect().toSeq.groupMap(_.getLong(0))(r => (r.getLong(1), r.getLong(2), r.get(3)))
+    singles.zipWithIndex.foreach { case (rows, i) =>
+      val single = rows.zipWithIndex
+        .map { case (r, j) => (j + 1L, r.getLong(0), r.get(1)) }
+      assert(batch.getOrElse(i.toLong, Nil).sortBy(_._1) == single,
+        s"$what q$i: batch store probe diverged from the point probe")
+    }
   }
 
   test("store probe equals both in-memory shapes on flat and tiered stores") {
@@ -1270,6 +1292,18 @@ class GraphAnnSpec extends SparkTestBase {
       assert(rounds >= 2, s"q$id: expected a multi-round probe, got $rounds")
       assert(jobs == 2, s"q$id: $jobs jobs in $rounds rounds")
     }
+    // a Q-query batch: Q entry jobs, then still at most one job per round
+    val sp = spark
+    import sp.implicits._
+    val qids = Seq(1L, 7L, 42L)
+    val queries = qids.map(id => (id, qvec(id).toSeq)).toDF("qid", "qv")
+    val (_, jobs) = JobCount(spark.sparkContext) {
+      GraphAnn.beamSearchTopKBatch(emb, "vec_id", "embedding", store, queries,
+        "qid", "qv", k = 10, stride = 16, beam = 4).collect()
+    }
+    val rounds = GraphAnn.lastProbeRounds
+    assert(rounds >= 1 && jobs <= qids.size + rounds,
+      s"batch: $jobs jobs in $rounds rounds")
   }
 }
 
