@@ -43,6 +43,10 @@ object Centrality {
     * ones first — the same requirement Spark itself places on cached
     * non-deterministic plans.
     *
+    * Size route: a long-id adjacency of at most [[SizeRoute.PageRankRows]]
+    * rows runs the rank loop on the driver ([[SizeRoute.driverGate]]),
+    * bit-identical by construction; CentralitySpec holds the differential.
+    *
     * @param pairs  unique undirected pairs, `aCol < bCol` per row (the
     *               dedup-pair contract); vertices are the docs that appear
     *               in at least one pair; must be DETERMINISTIC (above)
@@ -50,25 +54,8 @@ object Centrality {
     * @param unit   fixed-point scale of the initial rank (1.0 == unit)
     * @return (id, pr) — rank in integer units after `iters` rounds
     */
-  /** @param driverMaxEdges below this adjacency-row count the rank loop
-    *   runs on the driver over the collected `(src, dst, deg)` table —
-    *   bit-identical by construction (every step is integer arithmetic:
-    *   `pr DIV deg` contributions, integer damping — the same
-    *   order-independence that makes the oracle replay exact makes the
-    *   driver replay exact), one bounded collect instead of `iters`
-    *   chained shuffle rounds in the consuming job's plan. The route key
-    *   is the MEASURED pinned-adjacency count (scale-adaptive); above it
-    *   (or for non-long ids) the distributed loop is unchanged.
-    *   Driver-heap footprint at the default 2^20 cap: ~1M collected
-    *   3-long Rows plus two |V|-sized HashMaps — roughly 150–250 MB
-    *   transiently (r20: was 2^22 — r19 ADVICE); an adjacency whose
-    *   materialized cache exceeds [[FixpointPin.DriverRouteMaxBytes]]
-    *   stays distributed regardless of row count.
-    *   CentralitySpec holds the route differential.
-    */
   def pageRankInt(pairs: DataFrame, aCol: String, bCol: String, iters: Int,
-      unit: Long = 1000000L, dampNum: Long = 85, dampDen: Long = 100,
-      driverMaxEdges: Long = 1L << 20): DataFrame = {
+      unit: Long = 1000000L, dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
     require(iters >= 1, s"need at least one iteration: $iters")
     require((unit * (dampDen - dampNum)) % dampDen == 0,
       s"teleport base must be integer-exact: $unit * ($dampDen - $dampNum) / $dampDen")
@@ -112,13 +99,10 @@ object Centrality {
       .repartition(col("src"))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val (adj, persisted) = FixpointPin.pinScoped(edges.join(deg, "src"))
-    // size route (scaladoc above): the pinned adjacency is consumed every
-    // round anyway — the count materializes it once, and a small graph
-    // replays the integer loop on the driver
-    val longIds = Seq(aCol, bCol).forall(c =>
-      pairs.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && adj.count() <= driverMaxEdges &&
-        FixpointPin.underDriverByteBound(adj)) {
+    // size route (Scaladoc above): the pinned adjacency is consumed every
+    // round anyway — the gate's count materializes it once, and a small
+    // graph replays the integer loop on the driver
+    if (SizeRoute.driverGate(adj, SizeRoute.PageRankRows)) {
       val rows = adj.select(col("src"), col("dst"), col("deg")).collect()
       if (persisted) FixpointPin.retire(adj)
       var cur = new java.util.HashMap[Long, Long]()

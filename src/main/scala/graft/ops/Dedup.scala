@@ -418,44 +418,24 @@ object Dedup {
     * unconverged labeling would look like valid clusters).
     *
     * Output: (idCol, component) for every node appearing in `pairs`.
-    */
-  /** @param checkpointDir when set, per-round lineage truncation uses
+    *
+    * Size route: a long-id edge set of at most
+    * [[SizeRoute.GraphLabelEdges]] (symmetric) edges is labeled by a driver
+    * union-find instead of the distributed fixpoint ([[SizeRoute.driverGate]]);
+    * identical min-id labeling, differential-tested.
+    *
+    * @param checkpointDir when set, per-round lineage truncation uses
     *   RELIABLE `checkpoint()` into this directory (survives executor loss —
     *   required for long cluster jobs) instead of `localCheckpoint()`
     *   (executor-memory/disk only — fastest, fine for short-lived local
     *   work, but an executor loss mid-iteration kills the job).
     */
-  /** @param driverMaxEdges below this (symmetric) edge count the labeling
-    *   routes through the [[labelMicroGraph]] driver union-find instead of
-    *   the distributed fixpoint — identical min-id labeling (the
-    *   incrementalComponents/embedComponents route, differential-tested),
-    *   one collect instead of ~3 driver-blocking jobs per propagation
-    *   round. Gate-scale near-dup graphs are a few hundred edges; the
-    *   fixpoint paid ~10 stage floors for work a HashMap does in
-    *   microseconds. The route key is the MEASURED count of the pinned
-    *   edge set (scale-adaptive — never a constant tuned to one SF), and
-    *   the count itself reads the pin the fixpoint's first round would
-    *   have materialized anyway. Driver-heap footprint at the default
-    *   cap: ~2^20 collected 2-long Rows plus the boxed-Long union-find
-    *   map — roughly 100–200 MB transiently, sized for a default 1–2 GB
-    *   driver (r20: was 2^22, which at the boundary meant several hundred
-    *   MB — r19 ADVICE); a pinned edge set whose materialized cache
-    *   exceeds [[FixpointPin.DriverRouteMaxBytes]] stays distributed
-    *   regardless of row count.
-    */
   def components(pairs: DataFrame, idCol: String = "id",
-      maxIters: Int = 25, checkpointDir: Option[String] = None,
-      driverMaxEdges: Long = 1L << 20): DataFrame = {
-    val spark = pairs.sparkSession
+      maxIters: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
     // truncate lineage each round: a round's plan references the previous
     // round's twice, so without checkpointing the logical plan doubles per
     // iteration and analysis itself OOMs around round 10
-    val checkpoint: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        spark.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint()
-    }
+    val checkpoint = roundCheckpoint(pairs.sparkSession, checkpointDir)
     // pre-partition the (large) edge side on the per-round join key: the
     // cached exchange satisfies every iteration's join distribution, so
     // only the (node-sized) label side shuffles per round — without this,
@@ -476,20 +456,11 @@ object Dedup {
         .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
         .repartition(col("dst"))
         .distinct())
-    // size route (scaladoc above): long-id edge sets under driverMaxEdges
-    // label on the driver — same labeling, none of the per-round jobs. The
-    // symmetric edge view double-counts each pair; union-find is immune to
-    // the duplication, and the bound applies to what is actually collected.
-    // The route condition is explicit on longIds (r19 ADVICE: the old
-    // Long.MaxValue sentinel coupled this check to labelMicroGraph's
-    // internal re-check); non-long ids never count, never collect.
-    val longIds = edges.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    val edgeCount = if (longIds) edges.count() else -1L
-    if (longIds && edgeCount <= driverMaxEdges &&
-        FixpointPin.underDriverByteBound(edges)) {
-      val out = labelMicroGraph(edges, edgeCount, maxIters, checkpointDir,
-        driverMaxEdges).select(col("__mid").as(idCol), col("component"))
+    // size route (Scaladoc above). The symmetric edge view double-counts
+    // each pair; union-find is immune to the duplication, and the bound
+    // applies to what is actually collected.
+    if (SizeRoute.driverGate(edges, SizeRoute.GraphLabelEdges)) {
+      val out = driverLabels(edges).select(col("__mid").as(idCol), col("component"))
       edges.unpersist()
       return out
     }
@@ -570,10 +541,9 @@ object Dedup {
     */
   def incrementalComponents(labels: DataFrame, idCol: String,
       newPairs: DataFrame, maxIters: Int = 25,
-      checkpointDir: Option[String] = None,
-      driverMaxEdges: Long = 1L << 20): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     val (plan, caches) = incrementalComponentsPlan(labels, idCol, newPairs,
-      maxIters, checkpointDir, driverMaxEdges)
+      maxIters, checkpointDir)
     // pin the output, then release every internal cache (scoped cleanup —
     // nothing this function persisted outlives it)
     val out = plan.localCheckpoint()
@@ -589,8 +559,7 @@ object Dedup {
     */
   private[graft] def incrementalComponentsPlan(labels: DataFrame, idCol: String,
       newPairs: DataFrame, maxIters: Int = 25,
-      checkpointDir: Option[String] = None,
-      driverMaxEdges: Long = 1L << 20): (DataFrame, Seq[DataFrame]) = {
+      checkpointDir: Option[String] = None): (DataFrame, Seq[DataFrame]) = {
     val lab = labels.select(col(idCol).as("__oid"), col("component").as("__ocomp"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val np = newPairs.select(col("a"), col("b"))
@@ -601,38 +570,14 @@ object Dedup {
     val anchors = lab.join(touched, Seq("__oid"))
       .where(col("__oid") =!= col("__ocomp"))
       .select(col("__oid").as("a"), col("__ocomp").as("b"))
-    // The micro edge set is pinned first: it is consumed more than once
-    // below (size routing + the fixpoint — don't re-pay the anchor join),
-    // and the truncation keeps the fixpoint's nested self-joins off the
-    // composite upstream lineage. The local branch persists-then-counts
-    // so ONE job both materializes the cache and sizes the route (a
-    // localCheckpoint would spend a separate job on materialization
-    // before the count — one extra driver-blocking job per streaming
-    // epoch); the reliable branch keeps checkpoint() for executor-loss
-    // tolerance on long cluster jobs.
-    val microPlan = np.unionAll(anchors)
-    val microEdges = checkpointDir match {
-      case Some(dir) =>
-        lab.sparkSession.sparkContext.setCheckpointDir(dir)
-        microPlan.checkpoint()
-      case None => microPlan.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    val microCount = microEdges.count()
     // The micro graph is batch-sized BY CONSTRUCTION (new pairs + one
-    // anchor per touched member — never corpus-sized), so route it by
-    // size: below `driverMaxEdges`, a driver union-find labels it in one
-    // collect (a distributed fixpoint pays ~4 driver-blocking jobs PER
-    // ROUND for work that fits in memory — measured ~7 s of pure round
-    // overhead on a 500-edge graph); above, distributed star contraction
-    // (O(log n) rounds — a batch that bridges many clusters daisy-chains
-    // their canonicals into one long path, adversarial for plain label
-    // propagation even when the batch is small). Identical min-id
-    // labeling either way.
+    // anchor per touched member — never corpus-sized), so it is labeled
+    // through the size route of [[labelMicroGraph]].
+    val microEdges = pinMicroEdges(np.unionAll(anchors), checkpointDir)
     // no persist on micro: the driver branch is a LocalRelation and the
     // star branch's labels sit on the fixpoint's final checkpoint — both
     // of its two consumers below re-derive from pinned blocks
-    val micro = labelMicroGraph(microEdges, microCount, maxIters,
-      checkpointDir, driverMaxEdges)
+    val micro = labelMicroGraph(microEdges, maxIters, checkpointDir)
     // affected old clusters: canonical id -> merged (global-min) label
     val relabel = micro.join(
         lab.select(col("__ocomp").as("__mid")).distinct(), Seq("__mid"))
@@ -649,48 +594,77 @@ object Dedup {
 
   /** Size-routed labeling of a BOUNDED (batch-neighborhood-sized) micro
     * pair graph — the shared engine under [[incrementalComponents]]'
-    * merge and [[deleteFromComponents]]' split recompute. Below
-    * `driverMaxEdges` a driver union-find labels the graph in one collect
-    * (a distributed fixpoint pays ~4 driver-blocking jobs PER ROUND for
-    * work that fits in memory — measured ~7 s of pure round overhead on a
-    * 500-edge graph); above, distributed star contraction (O(log n)
-    * rounds — bridge batches daisy-chain canonicals into long paths,
-    * adversarial for plain label propagation even when the batch is
-    * small). Identical min-id labeling either way. `microEdges` must be
-    * two same-typed columns and already PINNED (persist/checkpoint) with
-    * `microCount` its row count. Output: (__mid, component) for every
+    * merge, [[deleteFromComponents]]' split recompute and
+    * [[embedComponents]]' representative graph. Through
+    * [[SizeRoute.driverGate]] at [[SizeRoute.GraphLabelEdges]] a driver
+    * union-find labels the graph in one collect; above, distributed star
+    * contraction (O(log n) rounds — bridge batches daisy-chain canonicals
+    * into long paths, adversarial for plain label propagation even when
+    * the batch is small). Identical min-id labeling either way. `microEdges` must be two same-typed columns and already
+    * PINNED (persist/checkpoint). Output: (__mid, component) for every
     * node appearing in an edge.
     */
-  private[graft] def labelMicroGraph(microEdges: DataFrame, microCount: Long,
-      maxIters: Int, checkpointDir: Option[String],
-      driverMaxEdges: Long): DataFrame = {
-    val longIds = microEdges.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && microCount <= driverMaxEdges &&
-        FixpointPin.underDriverByteBound(microEdges)) {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-        var c = x // path compression
-        while (parent.getOrDefault(c, c) != c) {
-          val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
-        }
-        parent.putIfAbsent(r, r)
-        r
+  private[graft] def labelMicroGraph(microEdges: DataFrame, maxIters: Int,
+      checkpointDir: Option[String]): DataFrame =
+    if (SizeRoute.driverGate(microEdges, SizeRoute.GraphLabelEdges))
+      driverLabels(microEdges)
+    else componentsStar(microEdges, "__mid", maxIters, checkpointDir)
+
+  /** Driver union-find over a collected long edge set: (__mid, component =
+    * min id of the node's component) for every node appearing in an edge.
+    */
+  private def driverLabels(edges: DataFrame): DataFrame = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+      var c = x // path compression
+      while (parent.getOrDefault(c, c) != c) {
+        val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
       }
-      microEdges.collect().foreach { row =>
-        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-      import scala.jdk.CollectionConverters._
-      // snapshot before mapping: find() path-compresses (value writes on
-      // existing keys only — roots were inserted during edge processing)
-      val keys = parent.keySet().asScala.toVector
-      val rows = keys.map(x => (x, find(x)))
-      microEdges.sparkSession.createDataFrame(rows).toDF("__mid", "component")
-    } else componentsStar(microEdges, "__mid", maxIters, checkpointDir)
+      parent.putIfAbsent(r, r)
+      r
+    }
+    edges.collect().foreach { row =>
+      val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+      if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+    }
+    import scala.jdk.CollectionConverters._
+    // snapshot before mapping: find() path-compresses (value writes on
+    // existing keys only — roots were inserted during edge processing)
+    val keys = parent.keySet().asScala.toVector
+    val rows = keys.map(x => (x, find(x)))
+    edges.sparkSession.createDataFrame(rows).toDF("__mid", "component")
   }
+
+  /** Pin a micro edge set for its two consumers (the size gate's count and
+    * the labeling — don't re-pay the upstream join), keeping the
+    * fixpoint's nested self-joins off the composite upstream lineage. The
+    * local branch persists so the gate's count both materializes the cache
+    * and sizes the route in ONE job (a localCheckpoint would spend a
+    * separate job on materialization first — one extra driver-blocking
+    * job per streaming epoch); the reliable branch keeps checkpoint() for
+    * executor-loss tolerance on long cluster jobs.
+    */
+  private def pinMicroEdges(microPlan: DataFrame,
+      checkpointDir: Option[String]): DataFrame = checkpointDir match {
+    case Some(dir) =>
+      microPlan.sparkSession.sparkContext.setCheckpointDir(dir)
+      microPlan.checkpoint()
+    case None => microPlan.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Per-round lineage truncation of the distributed fixpoints: reliable
+    * `checkpoint()` into `checkpointDir` when set, else `localCheckpoint()`.
+    */
+  private def roundCheckpoint(spark: org.apache.spark.sql.SparkSession,
+      checkpointDir: Option[String]): DataFrame => DataFrame =
+    checkpointDir match {
+      case Some(dir) =>
+        spark.sparkContext.setCheckpointDir(dir)
+        df => df.checkpoint()
+      case None => df => df.localCheckpoint()
+    }
 
   /** Remove `delIds` from an at-rest component labeling — the DELETE twin
     * of [[incrementalComponents]], for takedowns/redactions folded into a
@@ -729,8 +703,7 @@ object Dedup {
     */
   def deleteFromComponents(labels: DataFrame, idCol: String,
       delIds: DataFrame, pairsAmong: DataFrame => DataFrame,
-      maxIters: Int = 25, checkpointDir: Option[String] = None,
-      driverMaxEdges: Long = 1L << 20): DataFrame = {
+      maxIters: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
     val lab = labels.select(col(idCol).as("__oid"), col("component").as("__ocomp"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val del = delIds.select(col(idCol).as("__oid")).distinct()
@@ -746,16 +719,9 @@ object Dedup {
     // the induced pair set among affected survivors, re-derived under the
     // caller's pair rule (deletion can PROMOTE a split, so neither stored
     // labels nor any stored pair subset can stand in for the recompute)
-    val microPlan = pairsAmong(affected).select(col("a"), col("b"))
-    val microEdges = checkpointDir match {
-      case Some(dir) =>
-        lab.sparkSession.sparkContext.setCheckpointDir(dir)
-        microPlan.checkpoint()
-      case None => microPlan.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    val microCount = microEdges.count()
-    val micro = labelMicroGraph(microEdges, microCount, maxIters,
-      checkpointDir, driverMaxEdges)
+    val microEdges = pinMicroEdges(
+      pairsAmong(affected).select(col("a"), col("b")), checkpointDir)
+    val micro = labelMicroGraph(microEdges, maxIters, checkpointDir)
     // survivors with no remaining pair drop out (components' node
     // contract); everyone micro labeled is an affected survivor
     val relabeled = micro.select(col("__mid").as(idCol), col("component"))
@@ -783,13 +749,7 @@ object Dedup {
     */
   def componentsStar(pairs: DataFrame, idCol: String = "id",
       maxIters: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    val checkpoint: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        spark.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint()
-    }
+    val checkpoint = roundCheckpoint(pairs.sparkSession, checkpointDir)
     // single consumer (the final root join) — no persist: caching it
     // would leak a CacheManager entry per call on the streaming path
     val nodes = pairs.select(col("a").as("__id"))
@@ -882,23 +842,17 @@ object Dedup {
     *    row is in the raw output iff its representative reached the pair
     *    set — the inner-join semantics of the expansion's null filter.
     *
-    * @param allPairsMaxRows input-row bound (measured via a bounded
-    *   limit-probe) below which the representative pair set comes from the
-    *   all-pairs [[SimilarityJoin.cosineJoinLsh]] tier instead of the
-    *   spanning tier: at gate scale the spanning tier's typed per-bucket
-    *   union-find costs ~2.3× the pure-codegen all-pairs plan, while the
-    *   near-dup quadratic it bounds is capped at allPairsMaxRows²/2 pairs
-    *   here. `0` forces spanning (spec pin), `Int.MaxValue` forces
-    *   all-pairs. Identical labeling either way.
+    * Inputs of at most [[SizeRoute.EmbedAllPairsRows]] rows (a bounded
+    * probe of the pinned input) take the representative pair set from the
+    * all-pairs [[SimilarityJoin.cosineJoinLsh]] tier instead of the
+    * spanning tier. Identical labeling either way.
     */
   def embedComponents(df: DataFrame, idCol: String, vecCol: String,
       tau: Double, dim: Int,
       nBits: Int = SimilarityJoin.DefaultNBits,
       bands: Int = SimilarityJoin.DefaultBands,
       seed: Long = SimilarityJoin.DefaultSeed,
-      maxIters: Int = 50, checkpointDir: Option[String] = None,
-      driverMaxEdges: Long = 1L << 20,
-      allPairsMaxRows: Int = 1 << 12): DataFrame = {
+      maxIters: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
     val keyed = df
       .select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .withColumn("__selfdup",
@@ -919,14 +873,11 @@ object Dedup {
     val repVecs = groups.select(col("__rep").as(idCol), col("__v").as(vecCol))
       .unionAll(keyed.where(!col("__selfdup"))
         .select(col("__id").as(idCol), col("__v").as(vecCol)))
-    // SIZE-ROUTED labeling of the representative graph, same mechanism as
-    // incrementalComponents ([[labelMicroGraph]]): after contraction the
-    // rep pair set is small by construction whenever duplication is the
-    // dominant term, and the driver union-find labels a micro graph in
-    // one collect where the distributed fixpoint pays ~10 stage floors;
-    // above `driverMaxEdges` (or for non-long ids) it falls back to
-    // [[componentsStar]]. The localCheckpoint materializes the LSH pair
-    // pipeline once — it feeds both the size probe and the labeling.
+    // SIZE-ROUTED labeling of the representative graph ([[labelMicroGraph]]):
+    // after contraction the rep pair set is small by construction whenever
+    // duplication is the dominant term. The localCheckpoint materializes
+    // the LSH pair pipeline once — it feeds both the size gate and the
+    // labeling.
     //
     // Edge TIER (r19): connectivity needs a spanning structure, not the
     // pair listing, so long-id inputs take
@@ -941,20 +892,11 @@ object Dedup {
     // by the randomized differentials in DedupSpec.
     val idIsLong =
       df.schema(idCol).dataType == org.apache.spark.sql.types.LongType
-    // SMALL-INPUT route to the all-pairs tier (r20): the spanning tier's
-    // typed per-bucket union-find + census probe cost ~0.5 s over the
-    // pure-codegen cosineJoinLsh at gate scale (EmbedProf interleaved
-    // A/B: 0.89-1.04 s vs 0.39-0.44 s warm), and below `allPairsMaxRows`
-    // input rows the quadratic it exists to bound is capped at
-    // allPairsMaxRows²/2 ≈ 8.4M verified pairs at the default — the load
-    // class the downstream fixpoint handles routinely. The route key is a
-    // MEASURED bounded probe (limit(n+1).count() — stops at n+1 rows,
-    // never a full scan), so any real corpus routes spanning. Labeling is
-    // identical on both tiers (DedupSpec randomized differentials, plus
-    // the forced-route differential).
-    require(allPairsMaxRows >= 0, s"allPairsMaxRows must be >= 0: $allPairsMaxRows")
-    val useSpanning = idIsLong && allPairsMaxRows != Int.MaxValue &&
-      df.limit(allPairsMaxRows + 1).count() > allPairsMaxRows
+    // SMALL-INPUT route to the all-pairs tier ([[SizeRoute.EmbedAllPairsRows]]).
+    // The probe reads the pinned `keyed` frame, so it fills the pin every
+    // consumer below reads instead of recomputing the caller's lineage.
+    val useSpanning = idIsLong &&
+      !SizeRoute.atMost(keyed, SizeRoute(SizeRoute.EmbedAllPairsRows))
     val rawPairs =
       if (useSpanning)
         SimilarityJoin.cosineLshComponentEdges(repVecs, idCol, vecCol, tau,
@@ -966,8 +908,7 @@ object Dedup {
     // checkpoint spent a separate driver-blocking job on the LSH pair
     // pipeline before the count could read the blocks
     val pairs = rawPairs.localCheckpoint(eager = false)
-    val repComp = labelMicroGraph(pairs, pairs.count(), maxIters,
-        checkpointDir, driverMaxEdges)
+    val repComp = labelMicroGraph(pairs, maxIters, checkpointDir)
       .withColumnRenamed("__mid", "__rep")
     val out = members.join(repComp, Seq("__rep"), "left")
       .where(col("__m") >= 2 || col("component").isNotNull)

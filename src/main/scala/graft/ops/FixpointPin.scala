@@ -31,6 +31,9 @@ import org.apache.spark.storage.StorageLevel
   * ladder input = 19 optimized vs 3867 analyzed nodes; gate-scale input =
   * 67 vs 115). Shallow lineage (≤ [[MaxPersistNodes]]) → persist; deep →
   * localCheckpoint.
+  *
+  * The driver-route byte bound on a pinned frame lives in [[SizeRoute]]
+  * ([[SizeRoute.driverGate]], [[SizeRoute.DriverRouteMaxBytes]]).
   */
 private[graft] object FixpointPin {
 
@@ -39,30 +42,6 @@ private[graft] object FixpointPin {
     * value in [300, 1000] routes both measured regimes correctly.
     */
   val MaxPersistNodes = 400
-
-  /** Byte ceiling for the driver-route collects ([[Dedup.labelMicroGraph]],
-    * [[Centrality.pageRankInt]]): the row-count cap alone cannot see row
-    * WIDTH, so a pinned edge/adjacency set whose materialized cache
-    * already exceeds this is kept on the distributed path regardless of
-    * its row count — a mid-size graph just under the row cap must not OOM
-    * a 1–2 GB production driver (r19 ADVICE). 256 MB of columnar-cached
-    * longs is ~10× the worst case the 2^20-row cap admits (2–3 long
-    * columns ≈ 16–24 MB), so this only fires on estimation anomalies or
-    * unexpectedly wide rows, never on the measured gate/rung regimes.
-    */
-  val DriverRouteMaxBytes: Long = 256L << 20
-
-  /** True when `df`'s materialized cache is under [[DriverRouteMaxBytes]].
-    * Checkpoint-pinned frames have no cache entry (None) and unmaterialized
-    * caches size 0 — both pass, leaving the caller's row cap as the only
-    * bound there (the routes call this right after a count() that
-    * materializes the persist branch, so the loaded-size read is live
-    * exactly where the byte risk is).
-    */
-  def underDriverByteBound(df: DataFrame): Boolean =
-    (try org.apache.spark.sql.graftshim.SparkShims.cachedEntry(df)
-     catch { case _: Throwable => None })
-      .forall(_._2 <= DriverRouteMaxBytes)
 
   /** True if `df`'s lineage is shallow enough that a persist's per-task
     * lineage re-serialization is cheaper than an eager checkpoint job.
@@ -183,7 +162,7 @@ private[graft] object FixpointPin {
     val entry = new Retired(df)
     synchronized { retired.addLast(entry) }
     evictor.execute { () =>
-      // Size from the ACTUAL cached bytes (SparkShims.cachedEntry), never
+      // Size from the ACTUAL cached bytes (SizeRoute.cachedEntry), never
       // the optimizer estimate: pins retire while their consumer is still
       // LAZY, and a pre-materialization join estimate overshoots by
       // orders of magnitude (93 GB estimated vs 12 KB cached for the
@@ -191,8 +170,7 @@ private[graft] object FixpointPin {
       // bytes evicted each rerun's still-needed shared entry). A pin
       // sized before its cache materializes records 0 — under-counting
       // that the count bound backstops — rather than a phantom eviction.
-      val info = try org.apache.spark.sql.graftshim.SparkShims.cachedEntry(df)
-        catch { case _: Throwable => None }
+      val info = SizeRoute.cachedEntry(df)
       // Refresh pass over the existing deque, every evictor run (the deque
       // is ≤ MaxRetired and cachedEntry is a CacheManager lookup — cheap,
       // and this is the daemon thread, never a caller's timed path):
@@ -220,8 +198,7 @@ private[graft] object FixpointPin {
         val dead = sessionStopped(e.df)
         val sized =
           if (dead || e.bytes != 0L) None
-          else try org.apache.spark.sql.graftshim.SparkShims.cachedEntry(e.df)
-            catch { case _: Throwable => None }
+          else SizeRoute.cachedEntry(e.df)
         (e, dead, sized)
       }
       val evictees: Seq[Retired] = synchronized {

@@ -824,11 +824,11 @@ object GraphAnn {
     queries.schema(qvecCol).dataType match {
       case org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.DoubleType, _) =>
-        val head = queries
-          .select(col(qidCol).cast("long"), col(qvecCol)).limit(beam + 1).collect()
+        val head = SizeRoute.collectAtMost(
+          queries.select(col(qidCol).cast("long"), col(qvecCol)), beam)
         // NULL ids/vectors stay on the join shape: getLong would silently
         // read a NULL id as 0 and alias it with a real query 0
-        if (head.length <= beam && head.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+        if (head.exists(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1))))
           // Whole-stage codegen + AQE OFF for the loop's micro-jobs: an IN
           // list is inlined into generated code and differs every round,
           // so each frontier-sized collect would pay a fresh janino
@@ -839,7 +839,7 @@ object GraphAnn {
               "spark.sql.codegen.wholeStage" -> "false",
               "spark.sql.adaptive.enabled" -> "false") {
             probeLoop(df, idCol, vecCol, edges,
-              head.map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq)).toSeq,
+              head.get.map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq)).toSeq,
               qidCol, k, stride, beam, rounds)
           }
       case _ =>

@@ -181,19 +181,17 @@ object SimilarityJoin {
     * shuffle-free, intended for sides that fit in an executor.
     *
     * Guarded: broadcasting an unbounded side OOMs every executor at scale,
-    * so the size ceiling is checked up front with `limit(n+1).count()` —
-    * a short-circuit scan that reads at most n+1 rows, never the full
+    * so the size ceiling is checked up front with a bounded probe
+    * ([[SizeRoute.atMost]]) that reads at most n+1 rows, never the full
     * table. Pass `maxBroadcastRows = Int.MaxValue` to skip the check (and
     * its one cheap job) when the caller already knows the size.
     */
   def cosineJoinBroadcast(df: DataFrame, idCol: String, vecCol: String,
       tau: Double, maxBroadcastRows: Int = DefaultMaxBroadcastRows): DataFrame = {
-    if (maxBroadcastRows < Int.MaxValue) {
-      require(df.limit(maxBroadcastRows + 1).count() <= maxBroadcastRows,
-        s"cosineJoinBroadcast: side exceeds $maxBroadcastRows rows — " +
-          "broadcasting it would exhaust executor memory; use cosineJoin " +
-          "(auto-routes) or cosineJoinLsh (banded scale path)")
-    }
+    require(SizeRoute.atMost(df, maxBroadcastRows),
+      s"cosineJoinBroadcast: side exceeds $maxBroadcastRows rows — " +
+        "broadcasting it would exhaust executor memory; use cosineJoin " +
+        "(auto-routes) or cosineJoinLsh (banded scale path)")
     // repartition the stream side: a single-row-group parquet scan is one
     // partition, which would run the O(n^2) distance loop on one thread
     val par = df.sparkSession.sparkContext.defaultParallelism
@@ -213,10 +211,7 @@ object SimilarityJoin {
       dim: Int, maxExactRows: Int = DefaultMaxBroadcastRows,
       nBits: Int = DefaultNBits, bands: Int = DefaultBands,
       seed: Long = DefaultSeed): DataFrame =
-    // Int.MaxValue disables the size probe (limit(MaxValue+1) would overflow
-    // negative) — the caller is explicitly forcing the exact tier
-    if (maxExactRows == Int.MaxValue ||
-        df.limit(maxExactRows + 1).count() <= maxExactRows)
+    if (SizeRoute.atMost(df, maxExactRows))
       cosineJoinBroadcast(df, idCol, vecCol, tau, maxBroadcastRows = Int.MaxValue)
     else
       cosineJoinLsh(df, idCol, vecCol, tau, dim, nBits, bands, seed)
@@ -335,14 +330,12 @@ object SimilarityJoin {
     val projected = df.select(col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
       .where(col("__v").isNotNull && !exists(col("__v"), _.isNull))
-    // Small-input bypass probe BEFORE the widen: limit().count() on the
+    // Small-input bypass probe BEFORE the widen: the bounded probe on the
     // pre-shuffle projection stops scanning at maxBucketRows + 1 rows,
     // whereas probing the repartitioned frame would execute the exchange's
     // full map side (every row scanned and shuffle-written) first.
-    // (Int.MaxValue disables the decomposition outright — and the +1 probe
-    // would overflow — so it takes the bypass unconditionally.)
-    val small = maxBucketRows == Int.MaxValue ||
-      projected.limit(maxBucketRows + 1).count() <= maxBucketRows
+    // (Int.MaxValue disables the decomposition outright with no probe.)
+    val small = SizeRoute.atMost(projected, maxBucketRows)
     val vecd = graft.util.Partitions.widenNarrowScan(projected)
     val sigsRaw = vecd.select(col("__id"), col("__v"),
       signBits(col("__v"), planes).as("__sig"))

@@ -1,0 +1,122 @@
+package graft.ops
+
+import scala.util.DynamicVariable
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.LongType
+
+/** Size routes: each place where a driver-side copy of an algorithm beats
+  * the distributed plan on small inputs. Every route takes the small copy
+  * iff the MEASURED size ≤ the bound, measured by a bounded probe
+  * ([[atMost]], [[collectAtMost]]) or, on a frame the route pins anyway,
+  * by the [[driverGate]] count that materializes the pin. The named
+  * [[Bound]]s are the route registry; tests force a route with
+  * [[withBounds]].
+  */
+private[graft] object SizeRoute {
+
+  /** A registered route bound, in rows (or edges) of the measured frame. */
+  final case class Bound(name: String, default: Int)
+
+  /** Edges up to which a pinned (symmetric) edge set is labeled by a
+    * driver union-find instead of the distributed fixpoint
+    * ([[Dedup.components]], [[Dedup.labelMicroGraph]]): one collect instead
+    * of ~3 driver-blocking jobs per propagation round. The key is a
+    * measured count, not a constant tuned to one scale. Driver-heap
+    * footprint at 2^20: the collected 2-long Rows plus the boxed-Long
+    * union-find map, roughly 100–200 MB transiently — sized for a default
+    * 1–2 GB driver (2^22 meant several hundred MB at the boundary).
+    */
+  val GraphLabelEdges = Bound("graph-label-edges", 1 << 20)
+
+  /** Adjacency rows up to which [[Centrality.pageRankInt]] replays its
+    * integer rank loop on the driver over the collected `(src, dst, deg)`
+    * table: one bounded collect instead of `iters` chained shuffle rounds.
+    * Driver-heap footprint at 2^20: the collected 3-long Rows plus two
+    * |V|-sized HashMaps, roughly 150–250 MB transiently.
+    */
+  val PageRankRows = Bound("pagerank-adjacency-rows", 1 << 20)
+
+  /** Input rows up to which [[Dedup.embedComponents]] takes the
+    * representative pairs from the all-pairs [[SimilarityJoin.cosineJoinLsh]]
+    * tier instead of the spanning tier: at gate scale the spanning tier's
+    * typed per-bucket union-find costs ~2.3× the pure-codegen all-pairs
+    * plan, while the near-dup quadratic it bounds is capped here at
+    * 4096²/2 ≈ 8.4M verified pairs.
+    */
+  val EmbedAllPairsRows = Bound("embed-all-pairs-rows", 1 << 12)
+
+  /** Distinct words up to which [[Subword.bpeTrain]] runs its merge loop
+    * on the driver over the collected `(word, count)` table: one bounded
+    * collect instead of one aggregate job per merge round. The word table
+    * is vocabulary-sized at any corpus scale (Heaps' law).
+    */
+  val BpeWords = Bound("bpe-words", 1 << 20)
+
+  val Registry: Seq[Bound] =
+    Seq(GraphLabelEdges, PageRankRows, EmbedAllPairsRows, BpeWords)
+
+  private val forced = new DynamicVariable(Map.empty[Bound, Int])
+
+  /** The bound in effect: the constant, unless [[withBounds]] forced it. */
+  def apply(b: Bound): Int = forced.value.getOrElse(b, b.default)
+
+  /** Test-only: run `body` with the given bounds in place of the constants
+    * (scoped to this thread and the threads it starts).
+    */
+  private[graft] def withBounds[A](bounds: (Bound, Int)*)(body: => A): A =
+    forced.withValue(forced.value ++ bounds)(body)
+
+  /** True iff `df` has at most `n` rows, reading at most n + 1 of them (one
+    * short-circuit job). `Int.MaxValue` answers true with no job.
+    */
+  def atMost(df: DataFrame, n: Int): Boolean = {
+    require(n >= 0, s"size bound must be >= 0: $n")
+    n == Int.MaxValue || df.limit(n + 1).count() <= n
+  }
+
+  /** `df`'s rows iff it has at most `n` of them, reading at most n + 1. */
+  def collectAtMost(df: DataFrame, n: Int): Option[Array[Row]] = {
+    require(n >= 0, s"size bound must be >= 0: $n")
+    val rows = if (n == Int.MaxValue) df.collect() else df.limit(n + 1).collect()
+    if (rows.length <= n) Some(rows) else None
+  }
+
+  /** Byte ceiling for the driver-route collects ([[Dedup.labelMicroGraph]],
+    * [[Centrality.pageRankInt]]): the row-count cap alone cannot see row
+    * WIDTH, so a pinned edge/adjacency set whose materialized cache
+    * already exceeds this is kept on the distributed path regardless of
+    * its row count — a mid-size graph just under the row cap must not OOM
+    * a 1–2 GB production driver (r19 ADVICE). 256 MB of columnar-cached
+    * longs is ~10× the worst case the 2^20-row cap admits (2–3 long
+    * columns ≈ 16–24 MB), so this only fires on estimation anomalies or
+    * unexpectedly wide rows, never on the measured gate/rung regimes.
+    */
+  val DriverRouteMaxBytes: Long = 256L << 20
+
+  /** [[org.apache.spark.sql.graftshim.SparkShims.cachedEntry]], or None
+    * when the lookup fails (e.g. a stopped session).
+    */
+  def cachedEntry(df: DataFrame): Option[(AnyRef, Long)] =
+    try org.apache.spark.sql.graftshim.SparkShims.cachedEntry(df)
+    catch { case _: Throwable => None }
+
+  /** True when `df`'s materialized cache is under [[DriverRouteMaxBytes]].
+    * Checkpoint-pinned frames have no cache entry (None) and unmaterialized
+    * caches size 0 — both pass, leaving the row cap as the only bound
+    * there ([[driverGate]] reads this right after the count that
+    * materializes the persist branch, so the loaded size is live exactly
+    * where the byte risk is).
+    */
+  def underDriverByteBound(df: DataFrame): Boolean =
+    cachedEntry(df).forall(_._2 <= DriverRouteMaxBytes)
+
+  /** The driver-route gate on an already-PINNED frame: every column is
+    * long, its row count is ≤ the route's bound, and its cache is under
+    * [[DriverRouteMaxBytes]] — checked in that order, so a non-long frame
+    * is never counted.
+    */
+  def driverGate(pinned: DataFrame, route: Bound): Boolean =
+    pinned.schema.fields.forall(_.dataType == LongType) &&
+      pinned.count() <= apply(route) && underDriverByteBound(pinned)
+}

@@ -231,17 +231,9 @@ object Subword {
     * Deterministic; ties pinned. Distinct-word table persisted once; the
     * per-round collect is exactly one row (the merge), never data-sized.
     *
-    * SIZE-ROUTED (r19 optimization round): the distinct-WORD table is the
-    * only state the merge loop ever reads, and it is vocabulary-sized (a
-    * few thousand rows at gate scale; bounded by the language, not the
-    * corpus, at any scale — Heaps' law). Below `driverMaxWords` the loop
-    * runs on the driver over the collected `(word, count)` table —
-    * one aggregate job + one bounded collect instead of `rounds`
-    * driver-blocking aggregate jobs (each round of the distributed loop
-    * re-scans the cached table, re-counts every adjacent pair and pays a
-    * full job floor to fetch ONE row). The probe is `limit(n+1)` on the
-    * persisted table, so the route key is a measured size, the collect is
-    * bounded either way, and an over-limit vocabulary falls back to the
+    * SIZE-ROUTED: a distinct-word table of at most [[SizeRoute.BpeWords]]
+    * rows (a bounded collect of the persisted table) runs the merge loop
+    * on the driver; an over-limit vocabulary falls back to the
     * distributed loop with the cache already warm. The driver twin
     * replicates the engine semantics exactly: code-point wrapping
     * (regexp `(.)` matches a code point), Java literal `replace`
@@ -250,8 +242,7 @@ object Subword {
     * (UTF8String.compareTo). SubwordSpec holds the route differential.
     */
   def bpeTrain(docs: DataFrame, textCol: String, rounds: Int,
-      wordPattern: String = BpeWordPattern,
-      driverMaxWords: Int = 1 << 20): Seq[BpeMerge] = {
+      wordPattern: String = BpeWordPattern): Seq[BpeMerge] = {
     require(rounds > 0, s"need positive rounds: $rounds")
     val base = docs
       .select(explode(TextOps.tokens(col(textCol))).as("word"))
@@ -260,16 +251,10 @@ object Subword {
       .select(col("word"), col("c"), bpeInitRep(col("word")).as("rep"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // +1 saturates instead of overflowing: driverMaxWords = Int.MaxValue
-      // ("always local") would otherwise flip the limit negative and fail
-      // the query instead of routing (r19 ADVICE)
-      val probeCap = math.min(driverMaxWords.toLong + 1, Int.MaxValue).toInt
-      val probe =
-        if (driverMaxWords > 0)
-          base.select(col("word"), col("c")).limit(probeCap).collect()
-        else Array.empty[org.apache.spark.sql.Row]
-      if (driverMaxWords > 0 && probe.length <= driverMaxWords)
-        bpeTrainLocal(probe.iterator.map(r => (r.getString(0), r.getLong(1))).toSeq, rounds)
+      val probe = SizeRoute.collectAtMost(base.select(col("word"), col("c")),
+        SizeRoute(SizeRoute.BpeWords))
+      if (probe.isDefined)
+        bpeTrainLocal(probe.get.iterator.map(r => (r.getString(0), r.getLong(1))).toSeq, rounds)
       else {
         val out = Seq.newBuilder[BpeMerge]
         var words = base

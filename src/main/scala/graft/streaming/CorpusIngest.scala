@@ -291,16 +291,17 @@ object CorpusIngest {
     scala.util.Try(graft.ops.IndexFiles.readStringOpt(spark, marker)
       .map(_.trim.toLong).getOrElse(-1L)).getOrElse(-1L)
 
-  /** Run `append` once per (store, epoch): a parquet append is not
-    * idempotent under foreachBatch's at-least-once re-delivery, so each
-    * store records the last epoch it absorbed and a replayed epoch is a
-    * no-op — the standard epoch-id dedup recipe for exactly-once sinks
-    * (single-writer per store, like every materialized-index mutation
-    * here).
+  /** Run `mutate` once per (store, epoch): a parquet append or takedown is
+    * not idempotent under foreachBatch's at-least-once re-delivery, so each
+    * store records the last epoch it absorbed in `markerName` and a
+    * replayed epoch is a no-op — the standard epoch-id dedup recipe for
+    * exactly-once sinks (single-writer per store, like every
+    * materialized-index mutation here). `leaseOp` labels the writer lease.
     */
-  private def appendOnce(spark: org.apache.spark.sql.SparkSession,
-      path: String, epochId: Long)(append: => Unit): Boolean = {
-    val marker = s"$path/$EpochMarker"
+  private def epochOnce(spark: org.apache.spark.sql.SparkSession,
+      path: String, epochId: Long, markerName: String, leaseOp: String)
+      (mutate: => Unit): Boolean = {
+    val marker = s"$path/$markerName"
     def lastAbsorbed: Long = graft.ops.IndexFiles.readStringOpt(spark, marker)
       .map(_.trim.toLong).getOrElse(-1L)
     // definitely-replayed epochs short-circuit BEFORE the lease: the
@@ -324,10 +325,10 @@ object CorpusIngest {
     // fencing only the inner op would let a racing writer slide between
     // the re-check and the append — the marker's replay guarantee holds
     // only if the check and the mutation are one exclusive unit
-    graft.ops.IndexFiles.withWriterLease(spark, path, "stream-ingest-epoch") {
+    graft.ops.IndexFiles.withWriterLease(spark, path, leaseOp) {
       if (epochId <= lastAbsorbed) false
       else {
-        append
+        mutate
         // temp+rename via the store's Hadoop FileSystem: the marker lives
         // beside the index data (HDFS/S3/local alike) and can never be read
         // torn — a crash mid-write leaves the previous epoch value
@@ -354,7 +355,8 @@ object CorpusIngest {
     val rows = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val spark = batch.sparkSession
     try {
-      val annDone = appendOnce(spark, annPath, epochId) {
+      val annDone = epochOnce(spark, annPath, epochId, EpochMarker,
+          "stream-ingest-epoch") {
         AnnIndex.appendToMaterialized(rows, base, idCol, vecCol, stride, annPath)
       }
       // layout dispatch: a bucket-partitioned (IVF-PQ) code table takes the
@@ -368,7 +370,8 @@ object CorpusIngest {
         if (ProductQuantizer.layoutIsIvfPq(spark, p))
           ProductQuantizer.appendToIvfPq(rows, idCol, vecCol, base, stride, p)
         else ProductQuantizer.appendToMaterialized(rows, idCol, vecCol, p)
-      val pqDone = pqPath.filter(p => appendOnce(spark, p, epochId)(appendPq(p)))
+      val pqDone = pqPath.filter(p =>
+        epochOnce(spark, p, epochId, EpochMarker, "stream-ingest-epoch")(appendPq(p)))
       (if (annDone) Seq(annPath) else Nil) ++ pqDone
     } finally rows.unpersist()
   }
@@ -423,25 +426,6 @@ object CorpusIngest {
     */
   private val TakedownMarker = "_graft_takedown_epoch"
 
-  private def takedownOnce(spark: org.apache.spark.sql.SparkSession,
-      path: String, epochId: Long)(del: => Unit): Boolean = {
-    // same shape as [[appendOnce]]: lease-less short-circuit for
-    // definitely-replayed epochs (crash-restart recovery stays automatic
-    // through the replay tail), one exclusive unit for a real takedown
-    val marker = s"$path/$TakedownMarker"
-    def lastAbsorbed: Long = graft.ops.IndexFiles.readStringOpt(spark, marker)
-      .map(_.trim.toLong).getOrElse(-1L)
-    if (epochId <= leaselessLastAbsorbed(spark, marker)) return false
-    graft.ops.IndexFiles.withWriterLease(spark, path, "stream-takedown-epoch") {
-      if (epochId <= lastAbsorbed) false
-      else {
-        del
-        graft.ops.IndexFiles.writeString(spark, marker, epochId.toString)
-        true
-      }
-    }
-  }
-
   /** One takedown micro-batch against the materialized vector stores — the
     * delete twin of [[appendVectorEpoch]]: the batch's rows (ids AND
     * vectors — the assignment is REPLAYED from `base`'s frozen centroids,
@@ -458,7 +442,8 @@ object CorpusIngest {
     val rows = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val spark = batch.sparkSession
     try {
-      val annDone = takedownOnce(spark, annPath, epochId) {
+      val annDone = epochOnce(spark, annPath, epochId, TakedownMarker,
+          "stream-takedown-epoch") {
         AnnIndex.deleteFromMaterialized(rows, base, idCol, vecCol, stride,
           annPath)
       }
@@ -466,7 +451,8 @@ object CorpusIngest {
         if (ProductQuantizer.layoutIsIvfPq(spark, p))
           ProductQuantizer.deleteFromIvfPq(rows, idCol, vecCol, base, stride, p)
         else ProductQuantizer.deleteFromMaterialized(rows, idCol, p)
-      val pqDone = pqPath.filter(p => takedownOnce(spark, p, epochId)(delPq(p)))
+      val pqDone = pqPath.filter(p =>
+        epochOnce(spark, p, epochId, TakedownMarker, "stream-takedown-epoch")(delPq(p)))
       (if (annDone) Seq(annPath) else Nil) ++ pqDone
     } finally rows.unpersist()
   }
@@ -510,7 +496,8 @@ object CorpusIngest {
         val rows = batch.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val absorbed = takedownOnce(batch.sparkSession, path, epochId) {
+          val absorbed = epochOnce(batch.sparkSession, path, epochId,
+              TakedownMarker, "stream-takedown-epoch") {
             graft.ops.GraphAnn.deleteFromMaterialized(rows, base, idCol,
               vecCol, stride, degree, path, superStride)
           }
@@ -541,7 +528,8 @@ object CorpusIngest {
         val rows = batch.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val absorbed = appendOnce(batch.sparkSession, path, epochId) {
+          val absorbed = epochOnce(batch.sparkSession, path, epochId,
+              EpochMarker, "stream-ingest-epoch") {
             graft.ops.GraphAnn.appendToMaterialized(rows, base, idCol,
               vecCol, stride, degree, path, superStride)
           }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Centrality
+import graft.ops.{Centrality, SizeRoute}
 
 /** Integer-exact PageRank (ops/Centrality) — fixed-point ranks over the
   * near-dup pair graph and the canonical-representative selection built
@@ -45,8 +45,10 @@ class CentralitySpec extends SparkTestBase {
     val df = rp.toDF("a", "b")
     val driver = Centrality.pageRankInt(df, "a", "b", 5) // tiny routes driver
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Centrality.pageRankInt(df, "a", "b", 5, driverMaxEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = SizeRoute.withBounds(SizeRoute.PageRankRows -> 0) {
+      Centrality.pageRankInt(df, "a", "b", 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(driver == dist)
     assert(driver == localPr(rp, 5))
   }

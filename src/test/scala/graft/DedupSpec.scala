@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Dedup, SizeRoute, TextOps}
 
 /** Substring-level dedup (Lee et al. ExactSubstr, fixed-window form):
   * planted boilerplate is flagged and removed span-exactly; unique text
@@ -415,7 +415,9 @@ class ComponentsSpec extends SparkTestBase {
     // the guard belongs to the distributed fixpoint — force it (the driver
     // union-find route needs no iteration bound)
     assertThrows[IllegalArgumentException] {
-      graft.ops.Dedup.components(chain, maxIters = 3, driverMaxEdges = 0L)
+      SizeRoute.withBounds(SizeRoute.GraphLabelEdges -> 0) {
+        graft.ops.Dedup.components(chain, maxIters = 3)
+      }
     }
   }
 
@@ -426,8 +428,10 @@ class ComponentsSpec extends SparkTestBase {
     val pairs = pairRows.toDF("a", "b")
     val driver = graft.ops.Dedup.components(pairs) // routes driver (tiny)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = graft.ops.Dedup.components(pairs, driverMaxEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = SizeRoute.withBounds(SizeRoute.GraphLabelEdges -> 0) {
+      graft.ops.Dedup.components(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(driver == dist)
   }
 
@@ -436,9 +440,10 @@ class ComponentsSpec extends SparkTestBase {
     val dir = graft.util.TempDirs.create("graft_ckpt")
     // reliable checkpointing is a distributed-fixpoint concern — force the
     // route so the checkpoint-dir assertion below stays meaningful
-    val reliable = graft.ops.Dedup.components(pairs,
-        checkpointDir = Some(dir), driverMaxEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val reliable = SizeRoute.withBounds(SizeRoute.GraphLabelEdges -> 0) {
+      graft.ops.Dedup.components(pairs, checkpointDir = Some(dir))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     val local = graft.ops.Dedup.components(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(reliable == local)
@@ -597,11 +602,12 @@ class ComponentsSpec extends SparkTestBase {
       val labels = graft.ops.Dedup.components(pairs.toDF("a", "b"), "doc_id")
       val dels = (0L until 50L).filter(_ => rnd.nextDouble() < 0.3)
       // even seeds drive the driver union-find, odd the star contraction
-      val maxEdges = if (seed % 2 == 0) 1L << 22 else 0L
-      val got = graft.ops.Dedup.deleteFromComponents(labels, "doc_id",
-          dels.toDF("doc_id"), pairsAmongFrom(pairs),
-          driverMaxEdges = maxEdges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val maxEdges = if (seed % 2 == 0) 1 << 22 else 0
+      val got = SizeRoute.withBounds(SizeRoute.GraphLabelEdges -> maxEdges) {
+        graft.ops.Dedup.deleteFromComponents(labels, "doc_id",
+            dels.toDF("doc_id"), pairsAmongFrom(pairs))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       val surviving = pairs.filter { case (a, b) =>
         !dels.contains(a) && !dels.contains(b) }
       val want = graft.ops.Dedup.components(surviving.toDF("a", "b"), "doc_id")
@@ -929,14 +935,28 @@ class ComponentsSpec extends SparkTestBase {
     val df = rows.toDF("vec_id", "embedding")
     val tau = 0.25
     def run(allPairsMaxRows: Int): Map[Long, Long] =
-      graft.ops.Dedup.embedComponents(df, "vec_id", "embedding", tau, dim,
-          allPairsMaxRows = allPairsMaxRows)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      SizeRoute.withBounds(SizeRoute.EmbedAllPairsRows -> allPairsMaxRows) {
+        graft.ops.Dedup.embedComponents(df, "vec_id", "embedding", tau, dim)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
     val spanning = run(0)
     val allPairs = run(Int.MaxValue)
     val default = contractedEmbed(df, tau, dim)
     assert(spanning == allPairs, "route labelings diverged")
     assert(default == spanning, "default route diverged")
     assert(spanning.nonEmpty)
+  }
+
+  test("embedComponents evaluates each caller row once (the size probe reads the pin)") {
+    val acc = spark.sparkContext.longAccumulator("embed-rows")
+    val seen = udf { (id: Long) => acc.add(1); true }
+    val rnd = new scala.util.Random(4242L)
+    val rows = (0 until 40).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat())))
+    // an RDD source, not a driver-folded LocalRelation: the filter runs in
+    // tasks, once per row per evaluation of the caller's lineage
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("vec_id", "embedding")
+      .where(seen(col("vec_id")))
+    graft.ops.Dedup.embedComponents(df, "vec_id", "embedding", 0.25, 8).collect()
+    assert(acc.value == rows.size.toLong)
   }
 }

@@ -1,0 +1,133 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.scalacheck.{Gen, Prop, Test}
+
+import graft.ops.{Centrality, Dedup, SizeRoute, Subword}
+import graft.ops.SizeRoute.Bound
+
+/** One differential over the size-route registry: for every registered
+  * route, a generated fixture of measured size n runs at the bounds n−1,
+  * n and n+1, and each output must equal the forced-distributed run
+  * (bound 0). The route itself must flip between n−1 and n, seen through
+  * what the code already exposes: a driver-built output is a
+  * LocalRelation, and the driver copy runs a different number of jobs.
+  */
+class SizeRouteSpec extends SparkTestBase {
+  import SizeRouteSpec._
+
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Driver copies return a `createDataFrame` of driver rows. */
+  private def driverBuilt(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst { case l: LocalRelation => l }.isDefined
+
+  /** Random long-id pairs, parallelized so the input is not itself a
+    * LocalRelation.
+    */
+  private def randomPairs(seed: Long, nodes: Int, count: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(count)((rnd.nextInt(nodes).toLong, nodes + rnd.nextInt(nodes).toLong)).distinct
+  }
+
+  private def pairsDf(ps: Seq[(Long, Long)]): DataFrame = {
+    val sp = spark
+    import sp.implicits._
+    sp.sparkContext.parallelize(ps, 2).toDF("a", "b")
+  }
+
+  private val fixtures: Map[Bound, Long => Fixture] = Map(
+    SizeRoute.GraphLabelEdges -> { seed =>
+      val ps = randomPairs(seed, 30, 40)
+      val df = pairsDf(ps)
+      // the route measures the pinned symmetric, distinct edge set
+      val n = ps.flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct.size
+      Fixture(n, () => {
+        val out = Dedup.components(df)
+        Run(labels(out), driverBuilt(out))
+      })
+    },
+    SizeRoute.PageRankRows -> { seed =>
+      val ps = randomPairs(seed, 30, 50)
+      val df = pairsDf(ps)
+      // adjacency = both directions of every pair, one degree row each
+      Fixture(2 * ps.size, () => {
+        val out = Centrality.pageRankInt(df, "a", "b", 4)
+        Run(labels(out), driverBuilt(out))
+      })
+    },
+    SizeRoute.EmbedAllPairsRows -> { seed =>
+      val sp = spark
+      import sp.implicits._
+      val rnd = new scala.util.Random(seed)
+      val dim = 8
+      val base = Array.fill(dim)(rnd.nextFloat() * 2f - 1f)
+      val rows = (0 until 30 + rnd.nextInt(20)).map { i =>
+        val v =
+          if (i % 3 == 0) { val c = base.clone(); c(i % dim) += (i + 1) * 1e-5f; c }
+          else Array.fill(dim)(rnd.nextFloat() * 2f - 1f)
+        ((i * 7 + 1).toLong, v)
+      }
+      Fixture(rows.size, () => {
+        // a fresh RDD per run: pins a run retires stay cached and a later
+        // run on the same plan would reuse them, skipping jobs
+        val df = sp.sparkContext.parallelize(rows, 2).toDF("vec_id", "embedding")
+        val (out, jobs) = JobCount(sp.sparkContext) {
+          labels(Dedup.embedComponents(df, "vec_id", "embedding", 0.25, dim))
+        }
+        Run(out, jobs)
+      })
+    },
+    SizeRoute.BpeWords -> { seed =>
+      val sp = spark
+      import sp.implicits._
+      val rnd = new scala.util.Random(seed)
+      def word = Seq.fill(2 + rnd.nextInt(4))("abcde"(rnd.nextInt(5))).mkString
+      val texts = Seq.fill(6)(Seq.fill(5)(word).mkString(" "))
+      Fixture(texts.flatMap(_.split(" ")).distinct.size, () => {
+        val df = sp.sparkContext.parallelize(texts, 2).toDF("text")
+        val (out, jobs) = JobCount(sp.sparkContext)(Subword.bpeTrain(df, "text", 4))
+        Run(out, jobs)
+      })
+    })
+
+  test("the fixture map covers every registered route") {
+    assert(fixtures.keySet == SizeRoute.Registry.toSet)
+  }
+
+  test("every registered route: bound n-1, n, n+1 equal the forced-distributed run") {
+    for (route <- SizeRoute.Registry) {
+      val prop = Prop.forAllNoShrink(Gen.choose(1L, 1000000L)) { seed =>
+        val f = fixtures(route)(seed)
+        def at(bound: Int): Run = SizeRoute.withBounds(route -> bound)(f.run())
+        val distributed = at(0)
+        val below = at(f.n - 1)
+        val exact = at(f.n)
+        val above = at(f.n + 1)
+        val ctx = s"${route.name} seed=$seed n=${f.n} observed " +
+          Seq(distributed, below, exact, above).map(_.observed).mkString("/")
+        assert(f.n > 1, ctx)
+        Seq(below, exact, above).foreach(r => assert(r.out == distributed.out, ctx))
+        // the route flips between n-1 and n and nowhere else
+        assert(below.observed == distributed.observed, ctx)
+        assert(exact.observed == above.observed, ctx)
+        assert(below.observed != exact.observed, ctx)
+        true
+      }
+      val result = Test.check(
+        Test.Parameters.default.withMinSuccessfulTests(2).withWorkers(1), prop)
+      assert(result.passed, s"${route.name}: ${result.status}")
+    }
+  }
+}
+
+object SizeRouteSpec {
+
+  /** A run's comparable output and its route observable. */
+  final case class Run(out: Any, observed: Any)
+
+  /** A generated input: its measured size and one route run. */
+  final case class Fixture(n: Int, run: () => Run)
+}

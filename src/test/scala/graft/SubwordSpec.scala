@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Subword
+import graft.ops.{SizeRoute, Subword}
 import graft.queries.EncoderFixture
 import graft.search.{ModelRegistry, VectorSearchClient}
 
@@ -155,7 +155,9 @@ class SubwordSpec extends SparkTestBase {
     val df = bpeTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val driver = Subword.bpeTrain(df, "text", 6) // tiny vocab routes driver
-    val dist = Subword.bpeTrain(df, "text", 6, driverMaxWords = 0)
+    val dist = SizeRoute.withBounds(SizeRoute.BpeWords -> 0) {
+      Subword.bpeTrain(df, "text", 6)
+    }
     assert(driver == dist)
   }
 

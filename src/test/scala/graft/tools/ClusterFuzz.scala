@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.SizeRoute
+
 /** Differential fuzz of the cluster-maintenance geometry
   * (Dedup.incrementalComponents + deleteFromComponents +
   * CorpusIngest.clusterBatch/deleteBatch): random merge AND delete
@@ -17,7 +19,8 @@ import org.apache.spark.sql.functions._
   *  - fresh-node-only batches, empty batches, batch == the entire at-rest
   *    pair set (an at-least-once re-delivery);
   *  - BOTH size routes (driver union-find and distributed star
-  *    contraction, forced via driverMaxEdges = 0 on odd scenarios);
+  *    contraction, forced via a zero GraphLabelEdges route bound on odd
+  *    scenarios);
   *  - DELETE epochs interleaved with merges (~every other epoch): each
   *    seen node leaves w.p. 0.3 — bridge deletions exercise the SPLIT
   *    path — plus a never-seen id per batch (no-op contract);
@@ -137,9 +140,10 @@ object ClusterFuzz {
               }.filter(p => p._1 != p._2)
           }
           // odd scenarios force the distributed star route
-          val maxEdges = if (i % 2 == 1) 0L else 1L << 22
-          labels = graft.ops.Dedup.incrementalComponents(labels, "id",
-            pairsDf(batch), driverMaxEdges = maxEdges)
+          val maxEdges = if (i % 2 == 1) 0 else 1 << 22
+          labels = SizeRoute.withBounds(SizeRoute.GraphLabelEdges -> maxEdges) {
+            graft.ops.Dedup.incrementalComponents(labels, "id", pairsDf(batch))
+          }
           allPairs = (allPairs ++ batch).distinct
           // delete epoch after every other merge: each seen node leaves
           // w.p. 0.3 (bridges included — the SPLIT geometry), plus one
@@ -148,12 +152,13 @@ object ClusterFuzz {
             val seen = allPairs.flatMap(p => Seq(p._1, p._2)).distinct
             val dels = seen.filter(_ => rng.nextDouble() < 0.3) :+ 888888888L
             val delSet = dels.toSet
-            labels = graft.ops.Dedup.deleteFromComponents(labels, "id",
-              dels.toDF("id"),
-              ids => pairsDf(allPairs)
-                .join(ids.select(col("id").as("a")), Seq("a"), "left_semi")
-                .join(ids.select(col("id").as("b")), Seq("b"), "left_semi"),
-              driverMaxEdges = maxEdges)
+            labels = SizeRoute.withBounds(SizeRoute.GraphLabelEdges -> maxEdges) {
+              graft.ops.Dedup.deleteFromComponents(labels, "id",
+                dels.toDF("id"),
+                ids => pairsDf(allPairs)
+                  .join(ids.select(col("id").as("a")), Seq("a"), "left_semi")
+                  .join(ids.select(col("id").as("b")), Seq("b"), "left_semi"))
+            }
             allPairs = allPairs.filter(p => !delSet(p._1) && !delSet(p._2))
           }
         }
