@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.SparkShims
 import org.apache.spark.sql.graftshim.SparkShims.AbstractDataType
 import org.apache.spark.sql.types._
@@ -27,9 +29,10 @@ object VectorErrors {
   * double (reference widens via .tolist() at vector.py:134 and casts to DOUBLE
   * at vector.py:176), all accumulation is in double, dimension mismatch raises.
   *
-  * Designed for whole-stage codegen: `doGenCode` emits a tight primitive loop
-  * over `ArrayData` with no boxing — this is the hot path of the brute-force
-  * scan, executed once per (row x query) at 100 TB scale.
+  * Designed for whole-stage codegen: `doGenCode` makes one call per row into
+  * the primitive [[VectorLoop]] over `ArrayData`, with no boxing — this is
+  * the hot path of the brute-force scan, executed once per (row x query) at
+  * 100 TB scale.
   */
 trait VectorBinaryOp extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] = Seq(
@@ -49,52 +52,81 @@ trait VectorBinaryOp extends BinaryExpression with ExpectsInputTypes {
   /** Java source computing the result from accumulators (codegen path). */
   protected def finishCode(dot: String, na: String, nb: String): String
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorLoop.eval(l.asInstanceOf[ArrayData], leftIsFloat,
+      r.asInstanceOf[ArrayData], rightIsFloat, finish)
+
+  // one call per row into the shared loop (see VectorLoop)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val acc = ctx.addMutableState("double[]", "acc", v => s"$v = new double[3];")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""
+        |if (graft.functions.VectorLoop.accumulate($a, $leftIsFloat, $b, $rightIsFloat, $acc)) {
+        |  ${ev.value} = ${finishCode(s"$acc[0]", s"$acc[1]", s"$acc[2]")};
+        |} else {
+        |  ${ev.isNull} = true;
+        |}
+      """.stripMargin)
+  }
+}
+
+/** The one (dot, |a|², |b|²) loop behind [[VectorBinaryOp]],
+  * [[CosineArgmin]] and [[CosineTopK]], interpreted and generated code
+  * alike, plus the cosine-distance finish they share — so the three
+  * distances cannot drift. A dimension mismatch throws before any element
+  * is read; a NULL element makes the result NULL.
+  *
+  * Generated code calls it once per row instead of inlining the loop: a
+  * JVM method stays JIT-compiled for the life of the process, while a
+  * generated loop lives in a class each new session compiles again and
+  * runs cold until the JIT catches up (measured: the in-bucket kNN stage
+  * of a search-corpus graph build took 1.55 s of CPU inline, 0.25 s here).
+  */
+private[functions] object VectorLoop {
+
+  /** Stores (dot, |a|², |b|²) in `acc`; false on a NULL element. */
+  def accumulate(a: ArrayData, af: Boolean, b: ArrayData, bf: Boolean,
+      acc: Array[Double]): Boolean = {
     val n = a.numElements()
     if (n != b.numElements()) throw VectorErrors.dimMismatch(n, b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
-    val lf = leftIsFloat; val rf = rightIsFloat
     while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
+      if (a.isNullAt(i) || b.isNullAt(i)) return false
+      val x = if (af) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bf) b.getFloat(i).toDouble else b.getDouble(i)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
-    finish(dot, na, nb)
+    acc(0) = dot; acc(1) = na; acc(2) = nb
+    true
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getL = if (leftIsFloat) (a: String, i: String) => s"(double) $a.getFloat($i)"
-               else (a: String, i: String) => s"$a.getDouble($i)"
-    val getR = if (rightIsFloat) (b: String, i: String) => s"(double) $b.getFloat($i)"
-               else (b: String, i: String) => s"$b.getDouble($i)"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-        |final int $n = $a.numElements();
-        |if ($n != $b.numElements()) {
-        |  throw graft.functions.VectorErrors.dimMismatch($n, $b.numElements());
-        |}
-        |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-        |for (int $i = 0; $i < $n; $i++) {
-        |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-        |  final double $x = ${getL(a, i)};
-        |  final double $y = ${getR(b, i)};
-        |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-        |}
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = ${finishCode(dot, na, nb)};
-        |}
-      """.stripMargin
-    })
+  def eval(a: ArrayData, af: Boolean, b: ArrayData, bf: Boolean,
+      finish: (Double, Double, Double) => Double): Any = {
+    val acc = new Array[Double](3)
+    if (accumulate(a, af, b, bf, acc)) finish(acc(0), acc(1), acc(2)) else null
   }
+
+  /** [[cosineDistance]] of `a` and `b` into `acc(0)`; false on a NULL
+    * element.
+    */
+  def cosine(a: ArrayData, af: Boolean, b: ArrayData, bf: Boolean,
+      acc: Array[Double]): Boolean =
+    if (!accumulate(a, af, b, bf, acc)) false
+    else { acc(0) = cosineDistance(acc(0), acc(1), acc(2)); true }
+
+  /** Cosine distance: a zero vector gives 2.0, and the similarity is
+    * clamped to [-1, 1] before 1 - x (float drift can push the ratio one
+    * ULP past 1 on self-similarity; the DuckDB 1.0 oracle clamps).
+    */
+  def cosineDistance(dot: Double, na: Double, nb: Double): Double =
+    if (na == 0.0 || nb == 0.0) 2.0
+    else 1.0 - math.max(-1.0, math.min(1.0, dot / (math.sqrt(na) * math.sqrt(nb))))
+
+  def cosineDistanceCode(dot: String, na: String, nb: String): String =
+    s"(($na == 0.0 || $nb == 0.0) ? 2.0 : 1.0 - java.lang.Math.max(-1.0, " +
+      s"java.lang.Math.min(1.0, $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb)))))"
 }
 
 /** `array_cosine_distance(a, b)` = 1 - cos_sim; zero vector -> 2.0 and NULL -> NULL,
@@ -103,15 +135,12 @@ trait VectorBinaryOp extends BinaryExpression with ExpectsInputTypes {
   */
 case class CosineDistance(left: Expression, right: Expression) extends VectorBinaryOp {
   override def prettyName: String = "array_cosine_distance"
-  // Similarity is clamped to [-1, 1] before 1-x: float drift can push the
-  // ratio one ULP past 1 (self-similarity), and the DuckDB 1.0 oracle clamps
-  // (verified: self-similarity returns exactly 1.0, not 1.0000000000000002).
+  // clamped (verified: DuckDB self-similarity returns exactly 1.0, not
+  // 1.0000000000000002); see VectorLoop.cosineDistance
   override protected def finish(dot: Double, na: Double, nb: Double): Double =
-    if (na == 0.0 || nb == 0.0) 2.0
-    else 1.0 - math.max(-1.0, math.min(1.0, dot / (math.sqrt(na) * math.sqrt(nb))))
+    VectorLoop.cosineDistance(dot, na, nb)
   override protected def finishCode(dot: String, na: String, nb: String): String =
-    s"(($na == 0.0 || $nb == 0.0) ? 2.0 : 1.0 - java.lang.Math.max(-1.0, " +
-      s"java.lang.Math.min(1.0, $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb)))))"
+    VectorLoop.cosineDistanceCode(dot, na, nb)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -265,7 +294,7 @@ object Int8Codes {
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -390,8 +419,9 @@ case class L2Norm(child: Expression) extends UnaryExpression with ExpectsInputTy
   * join falls to SortAggregate over candidate-many wide rows (measured:
   * 4× the exact build), and `array_min(transform(...))` is a higher-order
   * function — CodegenFallback, interpreted per element (measured: just as
-  * bad). Here the candidate loop runs inside whole-stage codegen with no
-  * boxing, no row explosion, and no aggregate at all.
+  * bad). Here the row stays inside whole-stage codegen and makes one call
+  * into [[CosineArgmin.argmin]] (a JVM method, see [[VectorLoop]]): no
+  * row explosion and no aggregate at all.
   *
   * Distance semantics are EXACTLY [[CosineDistance]] (zero vector → 2.0,
   * similarity clamped); ties break to the lowest cid — the
@@ -422,34 +452,40 @@ case class CosineArgmin(vec: Expression, ids: Expression, vecs: Expression)
     vecs.dataType.asInstanceOf[ArrayType].elementType
       .asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(v: Any, cidsAny: Any, cvecsAny: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val cids = cidsAny.asInstanceOf[ArrayData]
-    val cvecs = cvecsAny.asInstanceOf[ArrayData]
+  override def nullSafeEval(v: Any, cids: Any, cvecs: Any): Any =
+    CosineArgmin.argmin(v.asInstanceOf[ArrayData], vecIsFloat,
+      cids.asInstanceOf[ArrayData], cvecs.asInstanceOf[ArrayData], candIsFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, cids, cvecs) => {
+      val r = ctx.freshName("argmin")
+      s"""
+        |final java.lang.Long $r = graft.functions.CosineArgmin.argmin(
+        |  $a, $vecIsFloat, $cids, $cvecs, $candIsFloat);
+        |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
+      """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(f: Expression, s: Expression,
+      t: Expression): Expression = copy(vec = f, ids = s, vecs = t)
+}
+
+object CosineArgmin {
+  /** The argmin shared by interpreted and generated code; NULL as `null`. */
+  def argmin(a: ArrayData, vf: Boolean, cids: ArrayData, cvecs: ArrayData,
+      cf: Boolean): java.lang.Long = {
     val m = cids.numElements()
     if (m != cvecs.numElements()) throw new IllegalArgumentException(
       s"cosine_argmin: ${m} ids vs ${cvecs.numElements()} vectors")
-    val n = a.numElements()
-    val vf = vecIsFloat; val cf = candIsFloat
+    val acc = new Array[Double](3)
     var found = false
     var bestD = 0.0
     var bestId = 0L
     var j = 0
     while (j < m) {
-      if (cids.isNullAt(j) || cvecs.isNullAt(j)) return null
-      val cv = cvecs.getArray(j)
-      if (cv.numElements() != n) throw VectorErrors.dimMismatch(n, cv.numElements())
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        if (a.isNullAt(i) || cv.isNullAt(i)) return null
-        val x = if (vf) a.getFloat(i).toDouble else a.getDouble(i)
-        val y = if (cf) cv.getFloat(i).toDouble else cv.getDouble(i)
-        dot += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      val d = if (na == 0.0 || nb == 0.0) 2.0
-        else 1.0 - math.max(-1.0, math.min(1.0, dot / (math.sqrt(na) * math.sqrt(nb))))
+      if (cids.isNullAt(j) || cvecs.isNullAt(j) ||
+          !VectorLoop.cosine(a, vf, cvecs.getArray(j), cf, acc)) return null
+      val d = acc(0)
       val cid = cids.getLong(j)
       // d == d skips NaN candidates (NaN-largest, struct-min ordering);
       // an all-NaN candidate set leaves found=false → NULL.
@@ -460,60 +496,170 @@ case class CosineArgmin(vec: Expression, ids: Expression, vecs: Expression)
     }
     if (found) bestId else null
   }
+}
+
+/** `cosine_topk(v, self_id, ids, vecs, k)` — the `k` candidates nearest `v`
+  * as `array<struct<dst: long, idx: int>>` in rank order, where `idx` is
+  * the candidate's position in the index-aligned `ids`/`vecs` arrays: a
+  * whole bucket's in-bucket kNN for one member as ONE expression on the
+  * whole-stage-codegen path, with no pair explosion, no sort and no
+  * shuffle. Its generated code makes one call per row into the task's
+  * [[TopKSelector]] (a JVM method, see [[VectorLoop]]).
+  *
+  * It returns exactly what a `candidate.id =!= self_id` filter, a
+  * `Window.partitionBy(self).orderBy(d.asc_nulls_last, id.asc)` and
+  * `row_number <= k` return over the same candidates, `d` being
+  * [[CosineDistance]] (zero vector → 2.0, similarity clamped):
+  *   - numbers rank first, then NaN, then NULL (a NULL `v`, candidate
+  *     vector or element gives a NULL distance — it ranks last, it is not
+  *     dropped);
+  *   - equal distances tie to the lowest id;
+  *   - a NULL candidate id never matches, so it is skipped;
+  *   - fewer than `k` candidates return them all.
+  * A NULL `self_id`, `ids` or `vecs` gives NULL. Unequal `ids`/`vecs`
+  * lengths and a candidate whose dimension differs from `v` raise errors.
+  */
+case class CosineTopK(vec: Expression, self: Expression, ids: Expression,
+    vecs: Expression, k: Int) extends QuaternaryExpression with ExpectsInputTypes {
+  override def first: Expression = vec
+  override def second: Expression = self
+  override def third: Expression = ids
+  override def fourth: Expression = vecs
+  override def prettyName: String = "cosine_topk"
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(
+    SparkShims.typeCollection(ArrayType(FloatType), ArrayType(DoubleType)),
+    LongType,
+    ArrayType(LongType),
+    SparkShims.typeCollection(ArrayType(ArrayType(FloatType)),
+      ArrayType(ArrayType(DoubleType))))
+  override def dataType: DataType = CosineTopK.ResultType
+  override def nullable: Boolean = true
+
+  private def vecIsFloat: Boolean =
+    vec.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private def candIsFloat: Boolean =
+    vecs.dataType.asInstanceOf[ArrayType].elementType
+      .asInstanceOf[ArrayType].elementType == FloatType
+
+  @transient private lazy val selector = new TopKSelector(k, vecIsFloat, candIsFloat)
+
+  // not null-safe in `vec`: a NULL query vector still ranks its candidates
+  // (all distances NULL, so by id)
+  override def eval(input: InternalRow): Any = {
+    val s = self.eval(input)
+    if (s == null) return null
+    val c = ids.eval(input)
+    if (c == null) return null
+    val w = vecs.eval(input)
+    if (w == null) return null
+    selector.select(vec.eval(input).asInstanceOf[ArrayData], s.asInstanceOf[Long],
+      c.asInstanceOf[ArrayData], w.asInstanceOf[ArrayData])
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getV = if (vecIsFloat) (a: String, i: String) => s"(double) $a.getFloat($i)"
-               else (a: String, i: String) => s"$a.getDouble($i)"
-    val getC = if (candIsFloat) (a: String, i: String) => s"(double) $a.getFloat($i)"
-               else (a: String, i: String) => s"$a.getDouble($i)"
-    nullSafeCodeGen(ctx, ev, (a, cids, cvecs) => {
-      val m = ctx.freshName("m"); val n = ctx.freshName("n")
-      val j = ctx.freshName("j"); val i = ctx.freshName("i")
-      val cv = ctx.freshName("cv"); val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val d = ctx.freshName("d"); val cid = ctx.freshName("cid")
-      val found = ctx.freshName("found"); val bestD = ctx.freshName("bestD")
-      val bestId = ctx.freshName("bestId")
-      s"""
-        |final int $m = $cids.numElements();
-        |if ($m != $cvecs.numElements()) {
-        |  throw new IllegalArgumentException(
-        |    "cosine_argmin: " + $m + " ids vs " + $cvecs.numElements() + " vectors");
-        |}
-        |final int $n = $a.numElements();
-        |boolean $found = false;
-        |double $bestD = 0.0;
-        |long $bestId = 0L;
-        |for (int $j = 0; $j < $m && !${ev.isNull}; $j++) {
-        |  if ($cids.isNullAt($j) || $cvecs.isNullAt($j)) { ${ev.isNull} = true; break; }
-        |  final org.apache.spark.sql.catalyst.util.ArrayData $cv = $cvecs.getArray($j);
-        |  if ($cv.numElements() != $n) {
-        |    throw graft.functions.VectorErrors.dimMismatch($n, $cv.numElements());
-        |  }
-        |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-        |  for (int $i = 0; $i < $n; $i++) {
-        |    if ($a.isNullAt($i) || $cv.isNullAt($i)) { ${ev.isNull} = true; break; }
-        |    final double $x = ${getV(a, i)};
-        |    final double $y = ${getC(cv, i)};
-        |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-        |  }
-        |  if (${ev.isNull}) break;
-        |  final double $d = ($na == 0.0 || $nb == 0.0) ? 2.0
-        |    : 1.0 - java.lang.Math.max(-1.0, java.lang.Math.min(1.0,
-        |        $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb))));
-        |  final long $cid = $cids.getLong($j);
-        |  if ($d == $d && (!$found || $d < $bestD || ($d == $bestD && $cid < $bestId))) {
-        |    $found = true; $bestD = $d; $bestId = $cid;
-        |  }
-        |}
-        |if (!${ev.isNull}) {
-        |  if ($found) { ${ev.value} = $bestId; } else { ${ev.isNull} = true; }
-        |}
-      """.stripMargin
-    })
+    val selClass = classOf[TopKSelector].getName
+    val sel = ctx.addMutableState(selClass, "topk",
+      v => s"$v = new $selClass($k, $vecIsFloat, $candIsFloat);")
+    val v = vec.genCode(ctx); val s = self.genCode(ctx)
+    val c = ids.genCode(ctx); val w = vecs.genCode(ctx)
+    ev.copy(code = code"""
+      |boolean ${ev.isNull} = true;
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+      |${s.code}
+      |if (!${s.isNull}) {
+      |  ${c.code}
+      |  if (!${c.isNull}) {
+      |    ${w.code}
+      |    if (!${w.isNull}) {
+      |      ${v.code}
+      |      ${ev.isNull} = false;
+      |      ${ev.value} = $sel.select(${v.isNull} ? null : ${v.value}, ${s.value},
+      |        ${c.value}, ${w.value});
+      |    }
+      |  }
+      |}
+    """.stripMargin)
   }
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(vec = f, ids = s, vecs = t)
+      t: Expression, u: Expression): Expression =
+    copy(vec = f, self = s, ids = t, vecs = u)
+}
+
+object CosineTopK {
+  val ResultType: DataType = ArrayType(StructType(Seq(
+    StructField("dst", LongType, nullable = false),
+    StructField("idx", IntegerType, nullable = false))), containsNull = false)
+}
+
+/** The selection behind [[CosineTopK]], shared by interpreted and
+  * generated code: keeps the `k` smallest `(class, distance, id)` keys of
+  * a row's candidates, class 0 being a number, 1 NaN and 2 NULL. Ties keep
+  * the earlier candidate first. One instance per task (generated code) or
+  * per expression (interpreted).
+  */
+final class TopKSelector(k: Int, vecIsFloat: Boolean, candIsFloat: Boolean) {
+  private val cap = math.max(k, 0)
+  private val cls = new Array[Int](cap)
+  private val dist = new Array[Double](cap)
+  private val ids = new Array[Long](cap)
+  private val idxs = new Array[Int](cap)
+  private val acc = new Array[Double](3)
+  private var size = 0
+
+  /** The top `k` of `cids`/`cvecs` for `v` (NULL allowed), `self` skipped. */
+  def select(v: ArrayData, self: Long, cids: ArrayData, cvecs: ArrayData): ArrayData = {
+    val m = cids.numElements()
+    if (m != cvecs.numElements()) throw new IllegalArgumentException(
+      s"cosine_topk: $m ids vs ${cvecs.numElements()} vectors")
+    size = 0
+    var j = 0
+    while (j < m) {
+      if (!cids.isNullAt(j) && cids.getLong(j) != self) {
+        val id = cids.getLong(j)
+        if (v == null || cvecs.isNullAt(j) ||
+            !VectorLoop.cosine(v, vecIsFloat, cvecs.getArray(j), candIsFloat, acc))
+          offer(TopKSelector.Null, 0.0, id, j)
+        else {
+          val d = acc(0)
+          offer(if (d != d) TopKSelector.NaN else TopKSelector.Number, d, id, j)
+        }
+      }
+      j += 1
+    }
+    result()
+  }
+
+  private def offer(c: Int, d: Double, id: Long, idx: Int): Unit = {
+    if (cap == 0 || (size == cap && !before(c, d, id, cap - 1))) return
+    var p = if (size < cap) { size += 1; size - 1 } else cap - 1
+    while (p > 0 && before(c, d, id, p - 1)) {
+      cls(p) = cls(p - 1); dist(p) = dist(p - 1)
+      ids(p) = ids(p - 1); idxs(p) = idxs(p - 1)
+      p -= 1
+    }
+    cls(p) = c; dist(p) = d; ids(p) = id; idxs(p) = idx
+  }
+
+  private def before(c: Int, d: Double, id: Long, p: Int): Boolean =
+    if (c != cls(p)) c < cls(p)
+    else if (c == TopKSelector.Number && d != dist(p)) d < dist(p)
+    else id < ids(p)
+
+  private def result(): ArrayData = {
+    val out = new Array[Any](size)
+    var i = 0
+    while (i < size) {
+      out(i) = new GenericInternalRow(Array[Any](ids(i), idxs(i)))
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
+object TopKSelector {
+  val Number = 0
+  val NaN = 1
+  val Null = 2
 }

@@ -69,6 +69,13 @@ package object functions {
   def cosine_argmin(v: Column, cids: Column, cvecs: Column): Column =
     col(CosineArgmin(ex(v), ex(cids), ex(cvecs)))
 
+  /** In-bucket top-`k` nearest candidates of `v` (skipping `selfId`) in one
+    * codegen'd pass; see [[CosineTopK]]. `ids`/`vecs` must be index-aligned.
+    */
+  def cosine_topk(v: Column, selfId: Column, ids: Column, vecs: Column,
+      k: Int): Column =
+    col(CosineTopK(ex(v), ex(selfId), ex(ids), ex(vecs), k))
+
   /** Bounded top-k heap over `struct(score double, id long)`; see
     * [[TopKByScore]]. Map-side combining: each partition ships at most k
     * rows per group to the shuffle.
@@ -148,6 +155,17 @@ package object functions {
       }
       (FunctionIdentifier("cosine_argmin"),
         new ExpressionInfo("graft.functions", "cosine_argmin"), builder)
+    },
+    {
+      val builder: Seq[Expression] => Expression = {
+        case Seq(v, self, ids, vecs,
+            org.apache.spark.sql.catalyst.expressions.Literal(k: Int, _)) =>
+          CosineTopK(v, self, ids, vecs, k)
+        case other => throw new IllegalArgumentException(
+          s"cosine_topk expects (v, self_id, ids, vecs, int literal k), got ${other.size} args")
+      }
+      (FunctionIdentifier("cosine_topk"),
+        new ExpressionInfo("graft.functions", "cosine_topk"), builder)
     },
     unaryBuilder("array_l2_norm", L2Norm.apply),
     unaryBuilder("array_int8_codes", Int8Codes.apply),

@@ -17,16 +17,20 @@ import graft.functions.array_cosine_distance
   * same capability re-derived for Spark's execution model:
   *
   *  - **Build** (once, corpus-sized, all DataFrame plans): assign vectors
-  *    to their nearest stride centroid (the IVF argmin — broadcast join +
-  *    map-side-combined `min(struct)`), then take each vector's `degree`
-  *    nearest bucket-mates as its out-edges (a bucket-partitioned self-join
-  *    — Σ bucket² work, the LSH-join cost class, never all-pairs) plus each
-  *    centroid's `degree` nearest centroids (a tiny self-join). The result
-  *    is one bounded-degree edge table: ≤ degree·(n + n/stride) rows of two
-  *    longs, written as plain parquet. Centroids are corpus rows, so the
-  *    two edge families share one id space and the centroid layer is the
-  *    navigable "upper level": centroid→centroid links move across the
-  *    space, centroid→member links descend into a neighborhood.
+  *    to their nearest stride centroid (`cosine_argmin` against one
+  *    broadcast row of every centroid — no shuffle), then take each
+  *    vector's `degree` nearest bucket-mates as its out-edges plus each
+  *    centroid's `degree` nearest centroids. Both levels run ONE codegen'd
+  *    kernel, `cosine_topk`: a node scores its candidates from a broadcast
+  *    row of index-aligned `(ids, vecs)` arrays — per bucket for members,
+  *    one row of all centroids for the top level — and keeps the top
+  *    `degree`. That is Σ bucket² distance evaluations (the LSH-join cost
+  *    class, never all-pairs) with no pair explosion, sort or shuffle, on
+  *    the input's partitions. The result is one bounded-degree edge table:
+  *    ≤ degree·(n + n/stride) rows of two longs. Centroids are corpus rows,
+  *    so the two edge families share one id space and the centroid layer
+  *    is the navigable "upper level": centroid→centroid links move across
+  *    the space, centroid→member links descend into a neighborhood.
   *
   *  - **Probe** (`rounds` fixed beam-search rounds, the join-per-round
   *    shape of `Dedup.components`): start from the `beam` centroids
@@ -54,82 +58,86 @@ object GraphAnn {
   val DefaultBeam = 16
   val DefaultRounds = 4
 
-  private def assignedOf(df: DataFrame, idCol: String, vecCol: String,
+  private def centroidsOf(df: DataFrame, idCol: String, vecCol: String,
       stride: Int): DataFrame =
-    assignedTo(df, idCol, vecCol,
-      df.where(pmod(col(idCol), lit(stride)) === 0)
-        .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec")))
+    df.where(pmod(col(idCol), lit(stride)) === 0)
+      .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
 
-  /** Assignment against an EXPLICIT (broadcastable) centroid frame
-    * `(__cid, __cvec)` — the seam [[appendToMaterialized]] needs: an
-    * appended batch must score the same centroid set the at-rest index was
-    * built over, not centroids derived from the batch itself.
+  /** Index-aligned candidate arrays `(__ids, __vecs)` over the nodes
+    * `(__nid, __nv)`: one row per `key` value, or one row of every node
+    * when no key is given. ONE `collect_list` of structs builds both, so a
+    * NULL id or vector keeps its slot (two `collect_list`s would drop it
+    * and misalign the arrays).
+    */
+  private def candidateArrays(nodes: DataFrame, key: String*): DataFrame = {
+    val m = collect_list(struct(col("__nid"), col("__nv"))).as("__m")
+    (if (key.isEmpty) nodes.agg(m) else nodes.groupBy(key.map(col): _*).agg(m))
+      .select(key.map(col) :+ col("__m.__nid").as("__ids")
+        :+ col("__m.__nv").as("__vecs"): _*)
+  }
+
+  /** `__nv`'s nearest candidate in `(__ids, __vecs)` (ties → lowest id).
+    * A row with none — a NULL vector, a NULL element (its own or a
+    * candidate's), or only NaN distances — fails the build instead of
+    * landing in an arbitrary bucket.
+    */
+  private def nearest: Column =
+    coalesce(graft.functions.cosine_argmin(col("__nv"), col("__ids"), col("__vecs")),
+      raise_error(concat(lit("GraphAnn: no nearest centroid for id "),
+        col("__nid").cast("string"),
+        lit(" (NULL vector, NULL element or NaN distances)"))))
+
+  /** Assignment `(__nid, __nv, __centroid)` against an EXPLICIT centroid
+    * frame `(__cid, __cvec)` — also the seam [[appendToMaterialized]]
+    * needs: an appended batch must score the same centroid set the at-rest
+    * index was built over, not centroids derived from the batch itself.
+    * Every row scores all centroids from ONE broadcast row through the
+    * codegen'd `cosine_argmin` — no shuffle, so the input's partitions
+    * (widened to the core count when narrower) carry through. One row per
+    * input row: ids must be unique.
     */
   private def assignedTo(df: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame): DataFrame = {
-    // widen a narrower-than-core-count scan before the broadcast
-    // cross-join: a one-file input otherwise runs the n·(n/stride) argmin
-    // partial-aggregate in ONE map task (the r18 100×-rung finding on
-    // AnnIndex.buildWith, graph-tier instance). No-op on multi-split
-    // inputs — never a gratuitous corpus shuffle.
-    val wide = graft.util.Partitions.widenNarrowScan(
-      df.select(col(idCol).cast("long").as("__nid"),
-        col(vecCol).as("__nv")))
-    wide
-      .crossJoin(broadcast(cents))
-      .select(col("__nid"), col("__nv"),
-        struct(array_cosine_distance(col("__nv"), col("__cvec")).as("d"),
-          col("__cid").as("cid")).as("__dc"))
-      .groupBy(col("__nid"))
-      .agg(first(col("__nv")).as("__nv"),
-        min(col("__dc")).getField("cid").as("__centroid"))
-  }
+      cents: DataFrame): DataFrame =
+    graft.util.Partitions.widenNarrowScan(
+        df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv")))
+      .crossJoin(broadcast(candidateArrays(
+        cents.select(col("__cid").as("__nid"), col("__cvec").as("__nv")))))
+      .select(col("__nid"), col("__nv"), nearest.as("__centroid"))
 
-  /** degree-NN edges within each bucket of an [[assignedOf]] frame (ties →
-    * lowest dst id) — Σ bucket² distance evaluations, the same cost class
-    * as every banded/bucketed join in this repo, never n².
+  /** The one kNN kernel of the build: each row's node `(__nid, __nv)`
+    * keeps its `degree` nearest candidates of `(__ids, __vecs)` (itself
+    * excluded; ties → lowest dst id) as edges `(src, dst, __dstv)`, the
+    * dst vector read off the candidate array. `keep` columns ride along.
+    */
+  private def knnEdges(rows: DataFrame, degree: Int, keep: String*): DataFrame =
+    rows.select(Seq(col("__nid").as("src"), col("__vecs")) ++ keep.map(col) :+
+        explode(graft.functions.cosine_topk(col("__nv"), col("__nid"),
+          col("__ids"), col("__vecs"), degree)).as("__e"): _*)
+      .select(Seq(col("src"), col("__e.dst").as("dst"),
+        col("__vecs")(col("__e.idx")).as(DstVecCol)) ++ keep.map(col): _*)
+
+  /** degree-NN edges within each bucket of an assignment `(__nid, __nv,
+    * __centroid)`, keeping src's bucket as `__bucket` — the materialized
+    * layout partitions member-level edges by it so an incremental insert
+    * can replace ONLY touched bucket partitions. Each member scores its
+    * bucket from one broadcast per-bucket array row: Σ bucket² distance
+    * evaluations, the same cost class as every banded/bucketed join in
+    * this repo, never n².
     */
   private def bucketKnnEdges(assigned: DataFrame, degree: Int): DataFrame =
-    bucketKnnEdgesWithBucket(assigned, degree).select(col("src"), col("dst"))
+    knnEdges(assigned.join(broadcast(candidateArrays(assigned, "__centroid")),
+        Seq("__centroid")).withColumnRenamed("__centroid", BucketCol),
+      degree, BucketCol)
 
-  /** [[bucketKnnEdges]] keeping src's bucket (= the join key) — the
-    * materialized layout partitions member-level edges by it so an
-    * incremental insert can replace ONLY touched bucket partitions.
-    */
-  private def bucketKnnEdgesWithBucket(assigned: DataFrame,
-      degree: Int): DataFrame = {
-    val l = assigned.select(col("__centroid"), col("__nid").as("src"),
-      col("__nv").as("__vl"))
-    val r = assigned.select(col("__centroid"), col("__nid").as("dst"),
-      col("__nv").as("__vr"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("__d").asc_nulls_last, col("dst").asc)
-    l.join(r, Seq("__centroid"))
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        array_cosine_distance(col("__vl"), col("__vr")).as("__d"),
-        col("__centroid").as("__bucket"))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= degree)
-      .select(col("src"), col("dst"), col("__bucket"))
-  }
-
-  /** Exact degree-NN among a (small, broadcastable) node set — the top
-    * navigable layer. Quadratic in the layer's node count BY DESIGN: only
-    * ever applied to a layer whose size the caller bounds (all centroids
-    * in the flat build; super-centroids in the tiered build).
+  /** Exact degree-NN among a (small, broadcastable) node set `(__cid,
+    * __cvec)` — the top navigable layer, scored from one candidate row of
+    * every node. Quadratic in the layer's node count BY DESIGN: only ever
+    * applied to a layer whose size the caller bounds (all centroids in the
+    * flat build; super-centroids in the tiered build).
     */
   private def exactKnnEdges(nodes: DataFrame, degree: Int): DataFrame = {
-    val cw = Window.partitionBy(col("src"))
-      .orderBy(col("__d").asc_nulls_last, col("dst").asc)
-    nodes.select(col("__cid").as("src"), col("__cvec").as("__vl"))
-      .crossJoin(broadcast(nodes.select(col("__cid").as("dst"), col("__cvec").as("__vr"))))
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        array_cosine_distance(col("__vl"), col("__vr")).as("__d"))
-      .withColumn("__rn", row_number().over(cw))
-      .where(col("__rn") <= degree)
-      .select(col("src"), col("dst"))
+    val n = nodes.select(col("__cid").as("__nid"), col("__cvec").as("__nv"))
+    knnEdges(n.crossJoin(broadcast(candidateArrays(n))), degree)
   }
 
   /** The bounded-degree edge table `(src, dst)`: per vector its `degree`
@@ -156,29 +164,38 @@ object GraphAnn {
     * kNN. Every level shares the one id space (a super-centroid IS a
     * centroid IS a corpus row), so the probe is unchanged: beam search
     * just follows edges.
+    *
+    * Input contract: ids are unique and every vector has a nearest
+    * centroid. A row without one (a NULL vector, a NULL element, or only
+    * NaN distances) fails the build; before the `cosine_argmin`
+    * assignment it was filed under the lowest centroid id. A duplicated id
+    * is one node per row (each row assigned and ranked on its own, never
+    * linked to a row of the same id); before, the rows merged into one
+    * node carrying whichever vector `first` saw.
     */
   def buildEdges(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, degree: Int = DefaultDegree,
       superStride: Int = 0): DataFrame = {
-    val (member, upper, _) = levels(df, idCol, vecCol, stride, degree, superStride)
-    member.select(col("src"), col("dst")).union(upper)
+    val (member, upper, _) =
+      levels(df, idCol, vecCol, stride, degree, superStride)(identity)
+    member.select(col("src"), col("dst"))
+      .union(upper.select(col("src"), col("dst")))
   }
 
-  /** The build decomposed by level — member edges WITH their bucket key,
-    * the upper (centroid/super) levels, and the member assignment — so
-    * [[materialize]] can lay the artifact out for incremental maintenance
-    * while [[buildEdges]] keeps its flat union shape.
+  /** The build decomposed by level — member edges `(src, dst, __dstv,
+    * __bucket)`, the upper (centroid/super) levels `(src, dst, __dstv)`,
+    * and the member assignment, which `pin` pins once before it feeds the
+    * bucket arrays, the kernel and the caller — so [[materialize]] can lay
+    * the artifact out for incremental maintenance while [[buildEdges]]
+    * keeps its flat union shape.
     */
   private def levels(df: DataFrame, idCol: String, vecCol: String,
-      stride: Int, degree: Int,
-      superStride: Int): (DataFrame, DataFrame, DataFrame) = {
-    val centDf = df.where(pmod(col(idCol), lit(stride)) === 0)
+      stride: Int, degree: Int, superStride: Int)(
+      pin: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val cents = centroidsOf(df, idCol, vecCol, stride)
     if (superStride <= 0) {
-      val assigned = assignedOf(df, idCol, vecCol, stride)
-      (bucketKnnEdgesWithBucket(assigned, degree),
-        exactKnnEdges(centDf.select(col(idCol).cast("long").as("__cid"),
-          col(vecCol).as("__cvec")), degree),
-        assigned)
+      val assigned = pin(assignedTo(df, idCol, vecCol, cents))
+      (bucketKnnEdges(assigned, degree), exactKnnEdges(cents, degree), assigned)
     } else {
       require(superStride > stride && superStride % stride == 0,
         s"superStride $superStride must be a multiple of stride $stride above it")
@@ -188,17 +205,17 @@ object GraphAnn {
       // degenerate index, not an error (r8 ADVICE)
       require(!df.where(pmod(col(idCol), lit(superStride)) === 0).isEmpty,
         s"no super-centroids: no $idCol divisible by superStride $superStride")
-      val supers = df.where(pmod(col(idCol), lit(superStride)) === 0)
-        .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
+      val supers = centroidsOf(df, idCol, vecCol, superStride)
       // centroids carry their super assignment (centroids × supers — the
       // small side of the hierarchy)
-      val centAssigned = assignedTo(centDf, idCol, vecCol, supers)
-      val assigned = hierarchicalAssign(df, idCol, vecCol, supers, centAssigned)
+      val centAssigned = assignedTo(cents, "__cid", "__cvec", supers)
+      val assigned =
+        pin(hierarchicalAssign(df, idCol, vecCol, supers, centAssigned))
       // the families are disjoint (a node of each level is its own
       // bucket's centroid at that level), so plain unions need no
       // distinct() exchange
-      (bucketKnnEdgesWithBucket(assigned, degree),
-        bucketKnnEdges(centAssigned, degree)
+      (bucketKnnEdges(assigned, degree),
+        bucketKnnEdges(centAssigned, degree).drop(BucketCol)
           .union(exactKnnEdges(supers, degree)),
         assigned)
     }
@@ -211,34 +228,26 @@ object GraphAnn {
     * against the at-rest geometry (frozen `supers` + the centroid→super
     * map `centAssigned`).
     *
-    * The bucket's centroids ride as TWO index-aligned array columns in
-    * ONE row per super (two collect_lists in one aggregate — same row
-    * stream, same order), so the join never explodes members ×
-    * candidates, and the codegen'd `cosine_argmin` replaces both the
-    * SortAggregate-over-wide-rows shape (min(struct) after explosion)
+    * The bucket's centroids ride as index-aligned array columns in ONE
+    * row per super ([[candidateArrays]]), so the join never explodes
+    * members × candidates, and the codegen'd `cosine_argmin` replaces both
+    * the SortAggregate-over-wide-rows shape (min(struct) after explosion)
     * and the interpreted higher-order array_min(transform(...)) — each
     * measured ~4× the FLAT build's cost at the 50× ScaleSmoke rung.
     * `cosine_argmin` tie-breaks on the lowest cid independent of array
     * order, so the collect_list row order is immaterial to the result.
     */
   private def hierarchicalAssign(df: DataFrame, idCol: String, vecCol: String,
-      supers: DataFrame, centAssigned: DataFrame): DataFrame = {
-    val candArrs = centAssigned
-      .groupBy(col("__centroid").as("__s"))
-      .agg(collect_list(col("__nid")).as("__cids"),
-        collect_list(col("__nv")).as("__cvecs"))
-    // broadcast is load-bearing: candArrs' post-aggregation size estimate
+      supers: DataFrame, centAssigned: DataFrame): DataFrame =
+    // broadcast is load-bearing: the arrays' post-aggregation size estimate
     // is unknown to the planner, and a sort-merge fallback would route
-    // every member of a super bucket into ONE task's argmin loop. Its
-    // real size is all centroid vectors — the same payload the flat
-    // path already broadcasts as `cents`
+    // every member of a super bucket into ONE task's argmin loop. Their
+    // real size is all centroid vectors
     assignedTo(df, idCol, vecCol, supers)
-      .select(col("__nid"), col("__nv"), col("__centroid").as("__s"))
-      .join(broadcast(candArrs), Seq("__s"))
-      .select(col("__nid"), col("__nv"),
-        graft.functions.cosine_argmin(col("__nv"), col("__cids"),
-          col("__cvecs")).as("__centroid"))
-  }
+      .withColumnRenamed("__centroid", "__s")
+      .join(broadcast(candidateArrays(
+        centAssigned.withColumnRenamed("__centroid", "__s"), "__s")), Seq("__s"))
+      .select(col("__nid"), col("__nv"), nearest.as("__centroid"))
 
   private val SpecMarker = "_graft_graph_spec"
 
@@ -301,46 +310,34 @@ object GraphAnn {
     * over the id range of every file. Storage is degree·(n + n/stride)
     * rows × (2 longs + one vector): the artifact trades `degree` copies of
     * each vector for locality, exactly as an in-process HNSW trades memory
-    * for it.
+    * for it. The input contract is [[buildEdges]]'s.
     */
   def materialize(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, degree: Int, path: String, superStride: Int = 0): Unit = {
     require(!df.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
       s"no centroids: no $idCol divisible by stride $stride")
-    val dstVecs = df.select(col(idCol).cast("long").as("dst"),
-      col(vecCol).as(DstVecCol))
+    // the assignment is pinned once: it feeds the bucket arrays, the
+    // kernel and the assign/ write
     val (member, upper, assigned) =
-      levels(df, idCol, vecCol, stride, degree, superStride)
-    // one build-time shuffle to attach dst vectors; every dst is a corpus
-    // row by construction, so the join cannot drop edges.
-    // Member-level edges are PARTITIONED BY SRC'S BUCKET: an incremental
-    // insert ([[appendToMaterialized]]) touches only the buckets the batch
-    // lands in, so it can replace exactly those partitions (dynamic
-    // partition overwrite) and never rewrite the at-rest remainder. The
-    // upper (centroid/super) levels change only on a re-materialize —
-    // they live in their own small table.
-    // repartition on the partition key before the partitioned writes: one
-    // task owns each bucket, so a bucket directory holds ONE file instead
-    // of one per writing task — the listing/footer cost of every later
-    // bucket-pruned read (and of the probes) stays proportional to bucket
-    // count, not bucket count × build parallelism
-    member.join(dstVecs, Seq("dst"), "left")
-      .select(col("src"), col("dst"), col(DstVecCol), col("__bucket"))
-      .repartition(col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket")
-      .parquet(s"$path/edges")
-    upper.join(dstVecs, Seq("dst"), "left")
-      .select(col("src"), col("dst"), col(DstVecCol))
-      .write.mode("overwrite").parquet(s"$path/cedges")
-    // the member ASSIGNMENT rides along, bucket-partitioned (the IVF
-    // layout): an insert must see a touched bucket's existing members
-    // (vectors included) without scanning the corpus — a bucket-pruned
-    // read of this table is exactly that
-    assigned.repartition(col("__centroid"))
-      .write.mode("overwrite").partitionBy("__centroid")
-      .parquet(s"$path/assign")
-    writeBucketManifest(df.sparkSession, s"$path/edges", "__bucket")
-    writeBucketManifest(df.sparkSession, s"$path/assign", "__centroid")
+      levels(df, idCol, vecCol, stride, degree, superStride)(_.persist())
+    try {
+      // Member-level edges are PARTITIONED BY SRC'S BUCKET: an incremental
+      // insert ([[appendToMaterialized]]) touches only the buckets the
+      // batch lands in, so it can replace exactly those partitions (dynamic
+      // partition overwrite) and never rewrite the at-rest remainder. The
+      // upper (centroid/super) levels change only on a re-materialize —
+      // they live in their own small table. writeBuckets spreads the
+      // bucket writes over every core with one file per bucket directory,
+      // so the listing/footer cost of every later bucket-pruned read (and
+      // of the probes) stays proportional to bucket count.
+      IndexManifests.writeBuckets(member, s"$path/edges", "__bucket")
+      upper.write.mode("overwrite").parquet(s"$path/cedges")
+      // the member ASSIGNMENT rides along, bucket-partitioned (the IVF
+      // layout): an insert must see a touched bucket's existing members
+      // (vectors included) without scanning the corpus — a bucket-pruned
+      // read of this table is exactly that
+      IndexManifests.writeBuckets(assigned, s"$path/assign", "__centroid")
+    } finally assigned.unpersist()
     IndexFiles.writeString(df.sparkSession, s"$path/$SpecMarker",
       if (superStride > 0) s"$stride $degree $superStride"
       else s"$stride $degree")
@@ -455,13 +452,11 @@ object GraphAnn {
     require(batch.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
       s"batch contains centroid-level ids ($idCol divisible by $stride): " +
         "inserting centroids changes the bucket geometry — re-materialize instead")
-    val cents = base.where(pmod(col(idCol), lit(stride)) === 0)
-      .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
+    val cents = centroidsOf(base, idCol, vecCol, stride)
     // batch-sized; pinned — consumed by the touched-list collect, both
     // candidate joins, and the assign append
     val newMembers = (if (superStride > 0) {
-      val supers = base.where(pmod(col(idCol), lit(superStride)) === 0)
-        .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
+      val supers = centroidsOf(base, idCol, vecCol, superStride)
       hierarchicalAssign(batch, idCol, vecCol, supers,
         assignedTo(cents, "__cid", "__cvec", supers))
     } else assignedTo(batch, idCol, vecCol, cents)).localCheckpoint()
@@ -525,6 +520,29 @@ object GraphAnn {
     writeBucketManifest(spark, s"$path/assign", "__centroid")
   }
 
+  /** degree-NN edges `(src, dst, __bucket)` within each bucket of an
+    * assignment, ranked by a bucket self-join and a `row_number` window —
+    * the maintenance ranking [[deleteFromMaterialized]] recomputes touched
+    * buckets with (batch-sized input). It is the rule `cosine_topk`
+    * reproduces in the build; the delete-equals-rebuild spec ties the two.
+    */
+  private def rankedBucketEdges(assigned: DataFrame, degree: Int): DataFrame = {
+    val l = assigned.select(col("__centroid"), col("__nid").as("src"),
+      col("__nv").as("__vl"))
+    val r = assigned.select(col("__centroid"), col("__nid").as("dst"),
+      col("__nv").as("__vr"))
+    val w = Window.partitionBy(col("src"))
+      .orderBy(col("__d").asc_nulls_last, col("dst").asc)
+    l.join(r, Seq("__centroid"))
+      .where(col("src") =!= col("dst"))
+      .select(col("src"), col("dst"),
+        array_cosine_distance(col("__vl"), col("__vr")).as("__d"),
+        col("__centroid").as("__bucket"))
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= degree)
+      .select(col("src"), col("dst"), col("__bucket"))
+  }
+
   /** Batch DELETE from a materialized graph — the other half of index
     * maintenance (takedowns, dedup removals; without it any deletion
     * forced a full rebuild). `batch` holds the rows being removed (id +
@@ -572,13 +590,11 @@ object GraphAnn {
     require(batch.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
       s"batch contains centroid-level ids ($idCol divisible by $stride): " +
         "deleting centroids changes the bucket geometry — re-materialize instead")
-    val cents = base.where(pmod(col(idCol), lit(stride)) === 0)
-      .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
+    val cents = centroidsOf(base, idCol, vecCol, stride)
     // replay the build's assignment rule on the deleted rows — recovers
     // their stored buckets exactly (frozen sets, deterministic tie-break)
     val delAssigned = (if (superStride > 0) {
-      val supers = base.where(pmod(col(idCol), lit(superStride)) === 0)
-        .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
+      val supers = centroidsOf(base, idCol, vecCol, superStride)
       hierarchicalAssign(batch, idCol, vecCol, supers,
         assignedTo(cents, "__cid", "__cvec", supers))
     } else assignedTo(batch, idCol, vecCol, cents)).localCheckpoint()
@@ -596,7 +612,7 @@ object GraphAnn {
     // recompute the touched buckets' member edges from scratch over the
     // survivors (exactly the build's rule), re-attaching dst vectors from
     // the survivors themselves (a dst is a surviving bucket-mate)
-    val newEdges = bucketKnnEdgesWithBucket(remaining, degree)
+    val newEdges = rankedBucketEdges(remaining, degree)
       .join(remaining.select(col("__nid").as("dst"),
         col("__nv").as(DstVecCol)), Seq("dst"))
       .select(col("src"), col("dst"), col(DstVecCol), col("__bucket"))

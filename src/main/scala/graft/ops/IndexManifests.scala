@@ -58,6 +58,20 @@ private[graft] object IndexManifests {
     }
   }
 
+  /** Full-store write of a bucket-partitioned table, then its manifest.
+    * The explicit-count `repartition(defaultParallelism, partCol)` keeps
+    * one task — so one file — per bucket, and unlike `repartition(partCol)`
+    * it is not coalesced by AQE: a small store's buckets are written by all
+    * cores instead of one task. Shared by every index build (`AnnIndex`,
+    * `GraphAnn`, `ProductQuantizer`); batch-sized append and delete
+    * writes keep their own shape.
+    */
+  def writeBuckets(df: DataFrame, table: String, partCol: String): Unit = {
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(partCol))
+      .write.mode("overwrite").partitionBy(partCol).parquet(table)
+    write(df.sparkSession, table, partCol)
+  }
+
   def read(spark: SparkSession, table: String): Option[Seq[Long]] = {
     val p = new org.apache.hadoop.fs.Path(table, FileName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

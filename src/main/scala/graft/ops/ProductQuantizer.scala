@@ -547,13 +547,11 @@ object ProductQuantizer {
       s"no codebook entries: no $idCol divisible by stride ${spec.stride}")
     requireCodebookFits(cb, s"stride ${spec.stride} over this corpus")
     cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    encode(df, idCol, vecCol, cb, spec)
+    // resetCodesState leaves codes/ and its manifest alone
+    IndexManifests.writeBuckets(encode(df, idCol, vecCol, cb, spec)
       .join(assignment.select(col(idCol).cast("long").as("__id"),
-        col("__centroid")), Seq("__id"))
-      .write.mode("overwrite").partitionBy("__centroid")
-      .parquet(s"$path/codes")
+        col("__centroid")), Seq("__id")), s"$path/codes", "__centroid")
     resetCodesState(df.sparkSession, path)
-    IndexManifests.write(df.sparkSession, s"$path/codes", "__centroid")
     IndexFiles.writeString(df.sparkSession, s"$path/$SpecMarker",
       s"${spec.m} ${spec.dsub} ${spec.stride}")
   }

@@ -673,7 +673,10 @@ object AnnIndex {
     * pruning cuts the scan to the `nprobe` bucket directories; the other
     * buckets are never read. `stride` doubles as the file-granularity knob:
     * pick it so a bucket is a healthy parquet file (hundreds of MB), since
-    * each bucket is one output directory.
+    * each bucket is one output directory holding one file. The write goes
+    * through [[IndexManifests.writeBuckets]], so every core writes buckets
+    * (a `repartition(__centroid)` alone is coalesced to one task on a small
+    * store).
     */
   def materialize(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, path: String): Unit = {
@@ -682,9 +685,8 @@ object AnnIndex {
     // later read die with an unrelated schema-inference error
     require(!centroidsOf(df, idCol, vecCol, stride).isEmpty,
       s"no centroids: no $idCol divisible by stride $stride")
-    build(df, idCol, vecCol, stride).assigned
-      .write.mode("overwrite").partitionBy("__centroid").parquet(path)
-    IndexManifests.write(df.sparkSession, path, "__centroid")
+    IndexManifests.writeBuckets(build(df, idCol, vecCol, stride).assigned,
+      path, "__centroid")
     IndexFiles.writeString(df.sparkSession, s"$path/$StrideMarker",
       stride.toString)
   }

@@ -641,6 +641,156 @@ class GraphAnnSpec extends SparkTestBase {
       s"centroid out-degree $centDeg has no centroid-layer edges")
   }
 
+  /** An independent bucket kNN in plain Scala, one node per ROW (a
+    * duplicated id is two nodes that never link to each other): stride
+    * centroids, nearest-centroid assignment by (distance, id) — through
+    * the nearest super and then its centroids when `superStride > 0` —
+    * each node's `degree` nearest bucket-mates by (distance, dst id), and
+    * the upper levels (centroid kNN within supers, exact kNN among the top
+    * level). Returns member edges `(src, dst, dst row, bucket)`, upper
+    * edges `(src, dst, dst row)` and the assignment `(row, bucket)`.
+    */
+  private def referenceBuild(rows: IndexedSeq[(Long, Array[Double])], stride: Int,
+      degree: Int, superStride: Int = 0)
+      : (Seq[(Long, Long, Int, Long)], Seq[(Long, Long, Int)], Seq[(Int, Long)]) = {
+    def d(a: Array[Double], b: Array[Double]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      a.indices.foreach { i => dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i) }
+      if (na == 0.0 || nb == 0.0) 2.0
+      else 1.0 - math.max(-1.0, math.min(1.0, dot / (math.sqrt(na) * math.sqrt(nb))))
+    }
+    def argmin(i: Int, cands: Seq[Int]): Long =
+      cands.map(c => (d(rows(i)._2, rows(c)._2), rows(c)._1)).min._2
+    def knn(nodes: Seq[Int]): Seq[(Long, Long, Int)] = nodes.flatMap { i =>
+      nodes.filter(j => rows(j)._1 != rows(i)._1)
+        .sortBy(j => (d(rows(i)._2, rows(j)._2), rows(j)._1)).take(degree)
+        .map(j => (rows(i)._1, rows(j)._1, j))
+    }
+    val cents = rows.indices.filter(i => rows(i)._1 % stride == 0)
+    val (assign, upper) =
+      if (superStride <= 0) (rows.indices.map(i => i -> argmin(i, cents)), knn(cents))
+      else {
+        val supers = rows.indices.filter(i => rows(i)._1 % superStride == 0)
+        val superOf = cents.map(c => c -> argmin(c, supers)).toMap
+        (rows.indices.map { i =>
+          val s = argmin(i, supers)
+          i -> argmin(i, cents.filter(superOf(_) == s))
+        }, cents.groupBy(superOf).values.toSeq.flatMap(knn) ++ knn(supers))
+      }
+    val member = assign.groupBy(_._2).toSeq.flatMap { case (b, in) =>
+      knn(in.map(_._1)).map { case (src, dst, j) => (src, dst, j, b) }
+    }
+    (member, upper, assign)
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame, idCol: String,
+      vecCol: String): IndexedSeq[(Long, Array[Double])] =
+    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toIndexedSeq
+
+  private def parquetFilesPerBucket(table: String): Seq[Int] =
+    new java.io.File(table).listFiles().toSeq.filter(_.getName.contains("="))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+
+  /** buildEdges and materialize equal [[referenceBuild]] row for row (as
+    * multisets), and every bucket directory of edges/ and assign/ holds one
+    * file.
+    */
+  private def assertBuildMatchesReference(what: String,
+      df: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String,
+      stride: Int, degree: Int, superStride: Int = 0): Unit = {
+    val rows = rowsOf(df, idCol, vecCol)
+    val (member, upper, assign) = referenceBuild(rows, stride, degree, superStride)
+    def vec(j: Int): Seq[Double] = rows(j)._2.toSeq
+    val built = GraphAnn.buildEdges(df, idCol, vecCol, stride, degree, superStride)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(built.sorted == (member.map(e => (e._1, e._2)) ++ upper.map(e => (e._1, e._2))).sorted,
+      s"$what: buildEdges diverged from the reference kNN")
+    val p = tmpDir("graph_ref")
+    GraphAnn.materialize(df, idCol, vecCol, stride, degree, p, superStride)
+    def read(t: String, cols: String*) = spark.read.parquet(s"$p/$t")
+      .select(cols.map(c => col(c)): _*).collect().toSeq
+    def stored(r: org.apache.spark.sql.Row, i: Int): Seq[Double] =
+      r.getSeq[Any](i).map { case f: Float => f.toDouble; case x: Double => x }
+    assert(read("edges", "src", "dst", GraphAnn.DstVecCol, "__bucket")
+        .map(r => (r.getLong(0), r.getLong(1), stored(r, 2), r.get(3).toString.toLong))
+        .sortBy(e => (e._1, e._2, e._4)) ==
+      member.map(e => (e._1, e._2, vec(e._3), e._4)).sortBy(e => (e._1, e._2, e._4)),
+      s"$what: edges/ diverged from the reference kNN")
+    assert(read("cedges", "src", "dst", GraphAnn.DstVecCol)
+        .map(r => (r.getLong(0), r.getLong(1), stored(r, 2))).sortBy(e => (e._1, e._2)) ==
+      upper.map(e => (e._1, e._2, vec(e._3))).sortBy(e => (e._1, e._2)),
+      s"$what: cedges/ diverged from the reference kNN")
+    assert(read("assign", "__nid", "__centroid")
+        .map(r => (r.getLong(0), r.get(1).toString.toLong)).sorted ==
+      assign.map { case (i, b) => (rows(i)._1, b) }.sorted,
+      s"$what: assign/ diverged from the reference assignment")
+    for (t <- Seq("edges", "assign"))
+      assert(parquetFilesPerBucket(s"$p/$t").forall(_ == 1),
+        s"$what: a $t/ bucket directory holds more than one file")
+  }
+
+  /** The degenerate fixture: stride 8 over ids 0..47, centroids 0, 8, 40
+    * head clusters A, B, C; centroid 16 duplicates 8's vector, member 45
+    * duplicates it too, centroid 24 is the zero vector (both assigned to
+    * the lowest tied centroid, so their own buckets stay empty); centroid
+    * 32 points along an axis no member uses (a singleton bucket).
+    */
+  private def degenerateFixture: (org.apache.spark.sql.DataFrame, Seq[Array[Double]]) = {
+    val sp = spark
+    import sp.implicits._
+    def u(x: Long): Double =
+      graft.util.Hashing.splitmix64(x).toDouble / Long.MaxValue.toDouble
+    def axis(a: Int): Array[Double] = Array.tabulate(8)(i => if (i == a) 1.0 else 0.0)
+    val vecs = (0L until 48L).map {
+      case 0L => axis(0)
+      case 8L | 16L | 45L => axis(1)
+      case 24L => Array.fill(8)(0.0)
+      case 32L => axis(7)
+      case 40L => axis(2)
+      case i => Array.tabulate(8)(d =>
+        (if (d == (i % 3).toInt) 1.0 else 0.0) + (if (d < 6) 0.4 * u(i * 31 + d) else 0.0))
+    }
+    (vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v"), vecs)
+  }
+
+  test("build equals an independent bucket kNN: flat, tiered, degenerate; one file per bucket") {
+    assertBuildMatchesReference("flat/64", emb, "vec_id", "embedding", 64,
+      GraphAnn.DefaultDegree)
+    assertBuildMatchesReference("tiered/16/64", emb, "vec_id", "embedding", 16,
+      GraphAnn.DefaultDegree, superStride = 64)
+    val (deg, _) = degenerateFixture
+    assertBuildMatchesReference("degenerate", deg, "id", "v", 8, 4)
+    assertBuildMatchesReference("degenerate tiered", deg, "id", "v", 8, 4, superStride = 16)
+    // the IVF store's bucket writes keep one file per bucket directory too
+    val ivf = tmpDir("ivf_files")
+    AnnIndex.materialize(emb, "vec_id", "embedding", 64, ivf)
+    val files = parquetFilesPerBucket(ivf)
+    assert(files.size == 8 && files.forall(_ == 1), s"IVF files per bucket: $files")
+  }
+
+  test("build contract: a duplicated id is one node per row; a NULL vector fails the build") {
+    val sp = spark
+    import sp.implicits._
+    // id 3 twice, with different vectors: each row is assigned and ranked
+    // on its own and neither links to the other
+    val dup = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.9, 0.1)), (3L, Seq(0.8, 0.3)),
+      (3L, Seq(0.7, 0.2)), (4L, Seq(0.2, 0.9)), (5L, Seq(0.6, 0.6)),
+      (6L, Seq(0.0, 1.0)), (7L, Seq(0.3, 0.8))).toDF("id", "v")
+    assertBuildMatchesReference("duplicate ids", dup, "id", "v", 6, 2)
+    val (member, _, assign) = referenceBuild(rowsOf(dup, "id", "v"), 6, 2)
+    assert(assign.count(a => a._1 == 2 || a._1 == 3) == 2)
+    assert(member.count(_._1 == 3L) == 4 && !member.exists(e => e._1 == 3L && e._2 == 3L))
+    // a row with no nearest centroid (here: a NULL vector) fails the build
+    // with its id instead of landing in an arbitrary bucket
+    val withNull = Seq((0L, Some(Seq(1.0, 0.0))), (1L, Some(Seq(0.0, 1.0))),
+      (2L, Some(Seq(0.5, 0.5))), (3L, Option.empty[Seq[Double]])).toDF("id", "v")
+    val e = intercept[Exception](GraphAnn.buildEdges(withNull, "id", "v", 2, 2).collect())
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("no nearest centroid for id 3")), messages(e))
+  }
+
   test("beam search: recall@10 vs brute force at IVF-equivalent cost; deterministic") {
     // the uniform synthetic corpus is graph navigation's WORST case
     // (neighbor-of-neighbor correlation is weakest for i.i.d. uniform
@@ -1229,26 +1379,7 @@ class GraphAnnSpec extends SparkTestBase {
   }
 
   test("store probe is exact on duplicate, zero-vector and singleton-bucket centroids") {
-    val sp = spark
-    import sp.implicits._
-    // stride 8 over ids 0..47: centroids 0, 8, 40 head clusters A, B, C;
-    // centroid 16 duplicates 8's vector and centroid 24 is the zero vector
-    // (both assigned to the lowest tied centroid, so their own buckets stay
-    // empty); centroid 32 points along an axis no member uses (a
-    // singleton bucket)
-    def u(x: Long): Double =
-      graft.util.Hashing.splitmix64(x).toDouble / Long.MaxValue.toDouble
-    def axis(a: Int): Array[Double] = Array.tabulate(8)(i => if (i == a) 1.0 else 0.0)
-    val vecs = (0L until 48L).map {
-      case 0L => axis(0)
-      case 8L | 16L => axis(1)
-      case 24L => Array.fill(8)(0.0)
-      case 32L => axis(7)
-      case 40L => axis(2)
-      case i => Array.tabulate(8)(d =>
-        (if (d == (i % 3).toInt) 1.0 else 0.0) + (if (d < 6) 0.4 * u(i * 31 + d) else 0.0))
-    }
-    val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+    val (df, vecs) = degenerateFixture
     val p = tmpDir("graph_probe_degenerate")
     GraphAnn.materialize(df, "id", "v", 8, 4, p)
     for (b <- Seq(16, 24, 32)) assert(!java.nio.file.Files.exists(
@@ -1257,7 +1388,7 @@ class GraphAnnSpec extends SparkTestBase {
     assertStoreProbes("degenerate", df, "id", "v",
       GraphAnn.fromMaterialized(spark, p, 8, 4),
       GraphAnn.buildEdges(df, "id", "v", 8, 4),
-      Seq(axis(1), axis(7), vecs(5), vecs(13)), 8, k = 20, beam = 6)
+      Seq(vecs(8), vecs(32), vecs(5), vecs(13)), 8, k = 20, beam = 6)
   }
 
   test("store probe runs at most one job per round plus the entry job") {

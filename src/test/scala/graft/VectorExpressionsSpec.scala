@@ -146,6 +146,114 @@ class VectorExpressionsSpec extends SparkTestBase {
       err.getCause != null && err.getCause.getMessage.contains("cosine_argmin"))
   }
 
+  test("cosine_topk equals the filter + window rule, interpreted and generated") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test}
+    type Vec = Option[Seq[Option[Double]]]
+    // a small value pool makes ties, zero vectors, NaN and NULL elements common
+    val elem: Gen[Option[Double]] = Gen.frequency(
+      9 -> Gen.oneOf(0.0, 1.0, -1.0, 0.5, 2.0).map(Some(_)),
+      1 -> Gen.const(Some(Double.NaN)), 1 -> Gen.const(None))
+    def vec(dim: Int): Gen[Vec] =
+      Gen.frequency(1 -> Gen.const(None), 9 -> Gen.listOfN(dim, elem).map(Some(_)))
+    val id: Gen[Option[Long]] =
+      Gen.frequency(1 -> Gen.const(None), 9 -> Gen.choose(0L, 6L).map(Some(_)))
+    final case class Case(v: Vec, self: Long, cands: Seq[(Option[Long], Vec)], k: Int)
+    val cases = for {
+      dim <- Gen.choose(1, 4); m <- Gen.choose(0, 10)
+      v <- vec(dim); self <- Gen.choose(0L, 6L)
+      cands <- Gen.listOfN(m, Gen.zip(id, vec(dim))); k <- Gen.choose(0, m + 3)
+    } yield Case(v, self, cands, k)
+    // the rule being replaced: drop NULL ids and self, order by
+    // (distance asc, NaN after numbers, NULL last, then id), take k
+    def distance(a: Seq[Option[Double]], b: Seq[Option[Double]]): Option[Double] =
+      if (a.exists(_.isEmpty) || b.exists(_.isEmpty)) None
+      else {
+        var dot = 0.0; var na = 0.0; var nb = 0.0
+        a.indices.foreach { i =>
+          val x = a(i).get; val y = b(i).get
+          dot += x * y; na += x * x; nb += y * y
+        }
+        Some(if (na == 0.0 || nb == 0.0) 2.0
+          else 1.0 - math.max(-1.0, math.min(1.0, dot / (math.sqrt(na) * math.sqrt(nb)))))
+      }
+    def reference(c: Case): Seq[(Long, Int)] = {
+      val scored = c.cands.zipWithIndex.collect {
+        case ((Some(cid), w), j) if cid != c.self =>
+          (cid, j, for (a <- c.v; b <- w; d <- distance(a, b)) yield d)
+      }
+      def rank(d: Option[Double]) = d match {
+        case None => 2; case Some(x) if x.isNaN => 1; case _ => 0 }
+      scored.sortWith { case ((ia, _, da), (ib, _, db)) =>
+        if (rank(da) != rank(db)) rank(da) < rank(db)
+        else if (rank(da) == 0 && da.get != db.get) da.get < db.get
+        else ia < ib
+      }.take(c.k).map { case (cid, j, _) => (cid, j) }
+    }
+    def catalyst(v: Vec, float: Boolean): ArrayData = v.map(xs =>
+      new GenericArrayData(xs.map(_.map[Any](x => if (float) x.toFloat else x).orNull).toArray[Any]))
+      .orNull
+    def pairs(out: ArrayData): Seq[(Long, Int)] =
+      (0 until out.numElements()).map { i =>
+        val r = out.getStruct(i, 2); (r.getLong(0), r.getInt(1)) }
+    for (float <- Seq(false, true)) {
+      val vt = ArrayType(if (float) FloatType else DoubleType, containsNull = true)
+      def expr(k: Int) = CosineTopK(BoundReference(0, vt, nullable = true),
+        BoundReference(1, LongType, nullable = false),
+        BoundReference(2, ArrayType(LongType, containsNull = true), nullable = false),
+        BoundReference(3, ArrayType(vt, containsNull = true), nullable = false), k)
+      val compiled = scala.collection.mutable.Map.empty[Int,
+        org.apache.spark.sql.catalyst.expressions.UnsafeProjection]
+      val prop = Prop.forAllNoShrink(cases) { c =>
+        val row = InternalRow(catalyst(c.v, float), c.self,
+          new GenericArrayData(c.cands.map(_._1.map(Long.box).orNull).toArray[Any]),
+          new GenericArrayData(c.cands.map(x => catalyst(x._2, float)).toArray[Any]))
+        val interpreted = pairs(expr(c.k).eval(row).asInstanceOf[ArrayData])
+        val generated = pairs(compiled.getOrElseUpdate(c.k,
+          GenerateUnsafeProjection.generate(Seq(expr(c.k)))).apply(row).getArray(0))
+        val want = reference(c)
+        assert(interpreted == want, s"interpreted $interpreted != $want for $c")
+        assert(generated == want, s"generated $generated != $want for $c")
+        true
+      }
+      val result = Test.check(
+        Test.Parameters.default.withMinSuccessfulTests(300).withWorkers(1), prop)
+      assert(result.passed, s"float=$float: ${result.status}")
+    }
+    // error paths on both paths: unequal id/vector array lengths, and a
+    // candidate whose dimension differs from the query's
+    val dt = ArrayType(DoubleType)
+    def arr(xs: Any*) = new GenericArrayData(xs.toArray[Any])
+    val bad = Seq(
+      ("1 ids vs 2 vectors", InternalRow(arr(1.0, 0.0), 9L, arr(1L),
+        arr(arr(1.0, 0.0), arr(0.0, 1.0)))),
+      ("dimension mismatch (2 vs 3)", InternalRow(arr(1.0, 0.0), 9L, arr(1L),
+        arr(arr(1.0, 0.0, 0.0)))))
+    for ((msg, row) <- bad) {
+      val e = CosineTopK(BoundReference(0, dt, true), BoundReference(1, LongType, false),
+        BoundReference(2, ArrayType(LongType), false), BoundReference(3, ArrayType(dt), false), 2)
+      val i = intercept[IllegalArgumentException](e.eval(row))
+      val g = intercept[IllegalArgumentException](
+        GenerateUnsafeProjection.generate(Seq(e)).apply(row))
+      assert(i.getMessage.contains(msg) && g.getMessage.contains(msg), s"$i / $g")
+    }
+    // through SQL: NULL self id gives NULL, k above the candidate count
+    // returns every candidate
+    graft.functions.registerAll(spark)
+    val r = spark.sql(
+      """SELECT cosine_topk(array(1.0D, 0.0D), 7L, array(7L, 3L, 5L),
+        |         array(array(1.0D, 0.0D), array(0.0D, 1.0D), array(1.0D, 1.0D)), 5) AS all,
+        |       cosine_topk(array(1.0D, 0.0D), CAST(NULL AS BIGINT), array(3L),
+        |         array(array(1.0D, 0.0D)), 5) AS noself""".stripMargin).head()
+    assert(r.getSeq[org.apache.spark.sql.Row](0).map(x => (x.getLong(0), x.getInt(1))) ==
+      Seq((5L, 2), (3L, 1)))
+    assert(r.isNullAt(1))
+  }
+
   test("simhash: equal token arrays agree, empty array is 0, null is null") {
     graft.functions.registerAll(spark)
     val r = spark.sql(
