@@ -597,14 +597,16 @@ object CosineTopK {
   * generated code: keeps the `k` smallest `(class, distance, id)` keys of
   * a row's candidates, class 0 being a number, 1 NaN and 2 NULL. Ties keep
   * the earlier candidate first. One instance per task (generated code) or
-  * per expression (interpreted).
+  * per expression (interpreted). The buffers hold min(k, candidates) and
+  * grow with the largest row seen, so a `k` far above any row's candidate
+  * count costs nothing.
   */
 final class TopKSelector(k: Int, vecIsFloat: Boolean, candIsFloat: Boolean) {
-  private val cap = math.max(k, 0)
-  private val cls = new Array[Int](cap)
-  private val dist = new Array[Double](cap)
-  private val ids = new Array[Long](cap)
-  private val idxs = new Array[Int](cap)
+  private var cap = 0
+  private var cls = new Array[Int](0)
+  private var dist = new Array[Double](0)
+  private var ids = new Array[Long](0)
+  private var idxs = new Array[Int](0)
   private val acc = new Array[Double](3)
   private var size = 0
 
@@ -613,6 +615,11 @@ final class TopKSelector(k: Int, vecIsFloat: Boolean, candIsFloat: Boolean) {
     val m = cids.numElements()
     if (m != cvecs.numElements()) throw new IllegalArgumentException(
       s"cosine_topk: $m ids vs ${cvecs.numElements()} vectors")
+    cap = math.max(math.min(k, m), 0)
+    if (cls.length < cap) {
+      cls = new Array[Int](cap); dist = new Array[Double](cap)
+      ids = new Array[Long](cap); idxs = new Array[Int](cap)
+    }
     size = 0
     var j = 0
     while (j < m) {

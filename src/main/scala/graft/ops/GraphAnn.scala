@@ -21,12 +21,13 @@ import graft.functions.array_cosine_distance
   *    broadcast row of every centroid — no shuffle), then take each
   *    vector's `degree` nearest bucket-mates as its out-edges plus each
   *    centroid's `degree` nearest centroids. Both levels run ONE codegen'd
-  *    kernel, `cosine_topk`: a node scores its candidates from a broadcast
-  *    row of index-aligned `(ids, vecs)` arrays — per bucket for members,
-  *    one row of all centroids for the top level — and keeps the top
-  *    `degree`. That is Σ bucket² distance evaluations (the LSH-join cost
-  *    class, never all-pairs) with no pair explosion, sort or shuffle, on
-  *    the input's partitions. The result is one bounded-degree edge table:
+  *    kernel, `cosine_topk`: a node scores its candidates from a row of
+  *    index-aligned `(ids, vecs)` arrays — its own bucket's row for
+  *    members (one shuffle groups each bucket into one row, spread over
+  *    every core), one broadcast row of all centroids for the top level —
+  *    and keeps the top `degree`. That is Σ bucket² distance evaluations
+  *    (the LSH-join cost class, never all-pairs) with no pair explosion
+  *    and no sort. The result is one bounded-degree edge table:
   *    ≤ degree·(n + n/stride) rows of two longs. Centroids are corpus rows,
   *    so the two edge families share one id space and the centroid layer
   *    is the navigable "upper level": centroid→centroid links move across
@@ -78,14 +79,13 @@ object GraphAnn {
 
   /** `__nv`'s nearest candidate in `(__ids, __vecs)` (ties → lowest id).
     * A row with none — a NULL vector, a NULL element (its own or a
-    * candidate's), or only NaN distances — fails the build instead of
-    * landing in an arbitrary bucket.
+    * candidate's), or only NaN distances — is filed under the LOWEST
+    * candidate id. Build, insert and delete share this rule, so a delete
+    * finds such a row's bucket again.
     */
   private def nearest: Column =
     coalesce(graft.functions.cosine_argmin(col("__nv"), col("__ids"), col("__vecs")),
-      raise_error(concat(lit("GraphAnn: no nearest centroid for id "),
-        col("__nid").cast("string"),
-        lit(" (NULL vector, NULL element or NaN distances)"))))
+      array_min(col("__ids")))
 
   /** Assignment `(__nid, __nv, __centroid)` against an EXPLICIT centroid
     * frame `(__cid, __cvec)` — also the seam [[appendToMaterialized]]
@@ -119,15 +119,24 @@ object GraphAnn {
   /** degree-NN edges within each bucket of an assignment `(__nid, __nv,
     * __centroid)`, keeping src's bucket as `__bucket` — the materialized
     * layout partitions member-level edges by it so an incremental insert
-    * can replace ONLY touched bucket partitions. Each member scores its
-    * bucket from one broadcast per-bucket array row: Σ bucket² distance
-    * evaluations, the same cost class as every banded/bucketed join in
-    * this repo, never n².
+    * can replace ONLY touched bucket partitions. One shuffle groups each
+    * bucket into its own candidate row on an explicit-count partitioning
+    * (AQE leaves it at the core count), and the row's members are exploded
+    * back out of its arrays, so a member meets only its own bucket: Σ
+    * bucket² distance evaluations, the same cost class as every
+    * banded/bucketed join in this repo, never n², and nothing corpus-sized
+    * on the driver. The build and [[deleteFromMaterialized]] share it.
     */
-  private def bucketKnnEdges(assigned: DataFrame, degree: Int): DataFrame =
-    knnEdges(assigned.join(broadcast(candidateArrays(assigned, "__centroid")),
-        Seq("__centroid")).withColumnRenamed("__centroid", BucketCol),
+  private def bucketKnnEdges(assigned: DataFrame, degree: Int): DataFrame = {
+    val cores = assigned.sparkSession.sparkContext.defaultParallelism
+    val buckets = candidateArrays(
+      assigned.repartition(cores, col("__centroid")), "__centroid")
+    knnEdges(buckets
+        .select(col("__centroid").as(BucketCol), col("__ids"), col("__vecs"),
+          posexplode(col("__ids")).as(Seq("__i", "__nid")))
+        .withColumn("__nv", col("__vecs")(col("__i"))),
       degree, BucketCol)
+  }
 
   /** Exact degree-NN among a (small, broadcastable) node set `(__cid,
     * __cvec)` — the top navigable layer, scored from one candidate row of
@@ -165,13 +174,15 @@ object GraphAnn {
     * centroid IS a corpus row), so the probe is unchanged: beam search
     * just follows edges.
     *
-    * Input contract: ids are unique and every vector has a nearest
-    * centroid. A row without one (a NULL vector, a NULL element, or only
-    * NaN distances) fails the build; before the `cosine_argmin`
-    * assignment it was filed under the lowest centroid id. A duplicated id
-    * is one node per row (each row assigned and ranked on its own, never
-    * linked to a row of the same id); before, the rows merged into one
-    * node carrying whichever vector `first` saw.
+    * Input contract: ids are unique. A duplicated id is one node per row
+    * (each row assigned and ranked on its own, never linked to a row of
+    * the same id). A row with no nearest centroid (a NULL vector, a NULL
+    * element, or only NaN distances) is filed under the lowest candidate
+    * centroid id: the lowest centroid in the flat build, the lowest
+    * centroid of the lowest super in the tiered one. A centroid with a
+    * NULL vector or element leaves every row without a nearest centroid,
+    * so all land in the lowest centroid. Inserts and deletes replay the
+    * same rule.
     */
   def buildEdges(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, degree: Int = DefaultDegree,
@@ -400,7 +411,9 @@ object GraphAnn {
     *  - the batch is assigned against the centroids of `base` (the same
     *    frozen-centroid contract as [[AnnIndex.appendToMaterialized]] —
     *    and the batch must not itself contain centroid-level ids, checked
-    *    below), so assignments match the full rebuild's;
+    *    below), so assignments match the full rebuild's (a row with no
+    *    nearest centroid, e.g. a NULL vector, lands in the lowest centroid's
+    *    bucket, the [[buildEdges]] rule);
     *  - a full rebuild changes member edges ONLY inside buckets the batch
     *    lands in, and within a touched bucket an old node's new top-degree
     *    neighbors are a subset of {its stored top-degree neighbors} ∪
@@ -520,29 +533,6 @@ object GraphAnn {
     writeBucketManifest(spark, s"$path/assign", "__centroid")
   }
 
-  /** degree-NN edges `(src, dst, __bucket)` within each bucket of an
-    * assignment, ranked by a bucket self-join and a `row_number` window —
-    * the maintenance ranking [[deleteFromMaterialized]] recomputes touched
-    * buckets with (batch-sized input). It is the rule `cosine_topk`
-    * reproduces in the build; the delete-equals-rebuild spec ties the two.
-    */
-  private def rankedBucketEdges(assigned: DataFrame, degree: Int): DataFrame = {
-    val l = assigned.select(col("__centroid"), col("__nid").as("src"),
-      col("__nv").as("__vl"))
-    val r = assigned.select(col("__centroid"), col("__nid").as("dst"),
-      col("__nv").as("__vr"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("__d").asc_nulls_last, col("dst").asc)
-    l.join(r, Seq("__centroid"))
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        array_cosine_distance(col("__vl"), col("__vr")).as("__d"),
-        col("__centroid").as("__bucket"))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= degree)
-      .select(col("src"), col("dst"), col("__bucket"))
-  }
-
   /** Batch DELETE from a materialized graph — the other half of index
     * maintenance (takedowns, dedup removals; without it any deletion
     * forced a full rebuild). `batch` holds the rows being removed (id +
@@ -566,7 +556,9 @@ object GraphAnn {
     *
     * The deleted rows' buckets are recovered by REPLAYING the (frozen,
     * deterministic) assignment rule on the batch — no corpus-sized lookup
-    * of the assignment table by a non-partition key. Storage mutation is
+    * of the assignment table by a non-partition key; a row with no
+    * nearest centroid (a NULL vector) replays to the lowest centroid's
+    * bucket, where [[buildEdges]] filed it. Storage mutation is
     * two dynamic partition overwrites plus explicit directory removal for
     * touched buckets whose edge/member sets become empty (a dynamic
     * overwrite only replaces partitions it has rows for). Deleting an id
@@ -610,13 +602,8 @@ object GraphAnn {
         "left_anti")
       .localCheckpoint()
     // recompute the touched buckets' member edges from scratch over the
-    // survivors (exactly the build's rule), re-attaching dst vectors from
-    // the survivors themselves (a dst is a surviving bucket-mate)
-    val newEdges = rankedBucketEdges(remaining, degree)
-      .join(remaining.select(col("__nid").as("dst"),
-        col("__nv").as(DstVecCol)), Seq("dst"))
-      .select(col("src"), col("dst"), col(DstVecCol), col("__bucket"))
-      .localCheckpoint()
+    // survivors with the build's own kernel (dst vectors ride along)
+    val newEdges = bucketKnnEdges(remaining, degree).localCheckpoint()
     newEdges.repartition(col("__bucket")).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__bucket").parquet(s"$path/edges")

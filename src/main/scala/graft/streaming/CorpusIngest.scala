@@ -484,7 +484,9 @@ object CorpusIngest {
     * graph under the build's exact rules
     * ([[graft.ops.GraphAnn.deleteFromMaterialized]] — survivors' edges
     * recomputed inside touched buckets only), epoch-guarded so a replayed
-    * epoch is a no-op. `onEpoch` receives (epochId, absorbed).
+    * epoch is a no-op. A NULL-vector row is found in the lowest centroid's
+    * bucket, where the build and [[graphIngest]] file it. `onEpoch`
+    * receives (epochId, absorbed).
     */
   def graphDeletes(delVectors: DataFrame, base: DataFrame, idCol: String,
       vecCol: String, stride: Int, degree: Int, path: String,
@@ -511,7 +513,8 @@ object CorpusIngest {
     * materialized graph under the build's exact rules
     * ([[graft.ops.GraphAnn.appendToMaterialized]] — frozen centroid/super
     * sets, touched buckets only), epoch-guarded per store so a replayed
-    * epoch cannot double-append. `compactEvery > 0` folds the
+    * epoch cannot double-append. A NULL-vector row has no nearest
+    * centroid and is filed under the lowest one, as the build files it. `compactEvery > 0` folds the
     * small-files maintenance in ([[graft.ops.GraphAnn.compact]] over both
     * partitioned tables — appends grow `assign/` one file per epoch per
     * touched bucket), inside foreachBatch so compaction and appends never

@@ -769,7 +769,7 @@ class GraphAnnSpec extends SparkTestBase {
     assert(files.size == 8 && files.forall(_ == 1), s"IVF files per bucket: $files")
   }
 
-  test("build contract: a duplicated id is one node per row; a NULL vector fails the build") {
+  test("build contract: a duplicated id is one node per row; a NULL vector files under the lowest centroid") {
     val sp = spark
     import sp.implicits._
     // id 3 twice, with different vectors: each row is assigned and ranked
@@ -781,14 +781,37 @@ class GraphAnnSpec extends SparkTestBase {
     val (member, _, assign) = referenceBuild(rowsOf(dup, "id", "v"), 6, 2)
     assert(assign.count(a => a._1 == 2 || a._1 == 3) == 2)
     assert(member.count(_._1 == 3L) == 4 && !member.exists(e => e._1 == 3L && e._2 == 3L))
-    // a row with no nearest centroid (here: a NULL vector) fails the build
-    // with its id instead of landing in an arbitrary bucket
+    // a row with no nearest centroid (here: a NULL vector) is filed under
+    // the lowest centroid (flat) or the lowest centroid of the lowest super
+    // (tiered); an insert and a delete of that row replay the same rule, so
+    // each equals a rebuild
     val withNull = Seq((0L, Some(Seq(1.0, 0.0))), (1L, Some(Seq(0.0, 1.0))),
-      (2L, Some(Seq(0.5, 0.5))), (3L, Option.empty[Seq[Double]])).toDF("id", "v")
-    val e = intercept[Exception](GraphAnn.buildEdges(withNull, "id", "v", 2, 2).collect())
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("no nearest centroid for id 3")), messages(e))
+      (2L, Some(Seq(0.5, 0.5))), (3L, Option.empty[Seq[Double]]),
+      (4L, Some(Seq(0.1, 0.9))), (5L, Some(Seq(0.9, 0.2)))).toDF("id", "v")
+    val nullRow = withNull.where(col("v").isNull)
+    def store(p: String): (Set[(Long, Long, Long)], Set[(Long, Long)], Set[(Long, Long)]) = (
+      spark.read.parquet(s"$p/edges").collect()
+        .map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"),
+          r.getAs[Any]("__bucket").toString.toLong)).toSet,
+      spark.read.parquet(s"$p/cedges").select("src", "dst").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet,
+      spark.read.parquet(s"$p/assign").collect()
+        .map(r => (r.getAs[Long]("__nid"), r.getAs[Any]("__centroid").toString.toLong)).toSet)
+    for (superStride <- Seq(0, 4)) {
+      val full = tmpDir("null_full")
+      GraphAnn.materialize(withNull, "id", "v", 2, 2, full, superStride)
+      assert(store(full)._3.contains((3L, 0L)), s"superStride $superStride: ${store(full)._3}")
+      val grown = tmpDir("null_grown")
+      GraphAnn.materialize(withNull.where(col("v").isNotNull), "id", "v", 2, 2, grown,
+        superStride)
+      GraphAnn.appendToMaterialized(nullRow, withNull, "id", "v", 2, 2, grown, superStride)
+      assert(store(grown) == store(full), s"superStride $superStride: insert != rebuild")
+      val reduced = tmpDir("null_reduced")
+      GraphAnn.materialize(withNull.where(col("v").isNotNull), "id", "v", 2, 2, reduced,
+        superStride)
+      GraphAnn.deleteFromMaterialized(nullRow, withNull, "id", "v", 2, 2, full, superStride)
+      assert(store(full) == store(reduced), s"superStride $superStride: delete != rebuild")
+    }
   }
 
   test("beam search: recall@10 vs brute force at IVF-equivalent cost; deterministic") {

@@ -242,16 +242,22 @@ class VectorExpressionsSpec extends SparkTestBase {
       assert(i.getMessage.contains(msg) && g.getMessage.contains(msg), s"$i / $g")
     }
     // through SQL: NULL self id gives NULL, k above the candidate count
-    // returns every candidate
+    // returns every candidate, and the largest k allocates only for the
+    // candidates a row has
     graft.functions.registerAll(spark)
     val r = spark.sql(
       """SELECT cosine_topk(array(1.0D, 0.0D), 7L, array(7L, 3L, 5L),
         |         array(array(1.0D, 0.0D), array(0.0D, 1.0D), array(1.0D, 1.0D)), 5) AS all,
         |       cosine_topk(array(1.0D, 0.0D), CAST(NULL AS BIGINT), array(3L),
-        |         array(array(1.0D, 0.0D)), 5) AS noself""".stripMargin).head()
-    assert(r.getSeq[org.apache.spark.sql.Row](0).map(x => (x.getLong(0), x.getInt(1))) ==
-      Seq((5L, 2), (3L, 1)))
+        |         array(array(1.0D, 0.0D)), 5) AS noself,
+        |       cosine_topk(array(1.0D, 0.0D), 7L, array(7L, 3L, 5L),
+        |         array(array(1.0D, 0.0D), array(0.0D, 1.0D), array(1.0D, 1.0D)),
+        |         2147483647) AS maxk""".stripMargin).head()
+    def topk(i: Int) =
+      r.getSeq[org.apache.spark.sql.Row](i).map(x => (x.getLong(0), x.getInt(1)))
+    assert(topk(0) == Seq((5L, 2), (3L, 1)))
     assert(r.isNullAt(1))
+    assert(topk(2) == topk(0))
   }
 
   test("simhash: equal token arrays agree, empty array is 0, null is null") {
