@@ -670,3 +670,145 @@ object TopKSelector {
   val NaN = 1
   val Null = 2
 }
+
+/** `cosine_distances(v, queries)` — `array_cosine_distance(v, q)` for every
+  * `q` of `queries`, in order, as one `array<double>`: a whole batch of
+  * query distances for a row in one expression. Element `j` is EXACTLY
+  * [[CosineDistance]] of `v` and `queries[j]`, NULL when the query is NULL
+  * or holds a NULL element; a dimension mismatch raises. A NULL `v` or
+  * `queries`, or a `v` holding a NULL element (every distance NULL), gives
+  * NULL — so a caller whose queries hold no NULL gets an array without
+  * NULL elements or no array at all.
+  *
+  * Its generated code makes one call per row into the task's
+  * [[DistanceScorer]], which reads `v` once and scores each query in a loop
+  * over primitive arrays, in [[VectorLoop.accumulate]]'s order of
+  * operations, so each distance is bit-identical to the per-pair loop at a
+  * fraction of its cost (measured: 4.2M distances of 64 dimensions take
+  * 0.65–0.9 s as 256 `array_cosine_distance` columns on 4 cores).
+  */
+case class CosineDistances(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "cosine_distances"
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(
+    SparkShims.typeCollection(ArrayType(FloatType), ArrayType(DoubleType)),
+    SparkShims.typeCollection(ArrayType(ArrayType(FloatType)),
+      ArrayType(ArrayType(DoubleType))))
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def nullable: Boolean = true
+
+  private def vecIsFloat: Boolean =
+    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private def queriesAreFloat: Boolean =
+    right.dataType.asInstanceOf[ArrayType].elementType
+      .asInstanceOf[ArrayType].elementType == FloatType
+
+  @transient private lazy val scorer =
+    new DistanceScorer(vecIsFloat, queriesAreFloat, right.foldable)
+
+  override def nullSafeEval(v: Any, qs: Any): Any =
+    scorer.score(v.asInstanceOf[ArrayData], qs.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[DistanceScorer].getName
+    val sc = ctx.addMutableState(cls, "scorer",
+      s => s"$s = new $cls($vecIsFloat, $queriesAreFloat, ${right.foldable});")
+    nullSafeCodeGen(ctx, ev, (v, qs) => s"""
+      |${ev.value} = $sc.score($v, $qs);
+      |${ev.isNull} = ${ev.value} == null;
+    """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** The scorer behind [[CosineDistances]], shared by interpreted and
+  * generated code; one instance per task (generated) or per expression
+  * (interpreted). Constant `queries` (a literal) are unpacked into
+  * primitive arrays once, with each query's |q|²; others on every row.
+  * Each element follows [[VectorLoop.accumulate]]: dimensions are checked
+  * before any element is read, x = v's element widened to double, y = the
+  * query's, and dot, |v|² and |q|² each sum in index order — so hoisting
+  * |v|² and |q|² out of the per-query loop changes no bit.
+  */
+final class DistanceScorer(vecIsFloat: Boolean, queriesAreFloat: Boolean,
+    constantQueries: Boolean) {
+  private var loaded = false
+  private var lens = new Array[Int](0)             // -1: a NULL query
+  private var qs = new Array[Array[Double]](0)     // null: a NULL element
+  private var qn = new Array[Double](0)
+  private var vs = new Array[Double](0)
+
+  private def load(queries: ArrayData): Unit = {
+    val m = queries.numElements()
+    lens = new Array[Int](m); qs = new Array[Array[Double]](m); qn = new Array[Double](m)
+    var j = 0
+    while (j < m) {
+      if (queries.isNullAt(j)) lens(j) = -1
+      else {
+        val q = queries.getArray(j)
+        val n = q.numElements()
+        lens(j) = n
+        val y = new Array[Double](n)
+        var norm = 0.0
+        var complete = true
+        var i = 0
+        while (i < n && complete) {
+          if (q.isNullAt(i)) complete = false
+          else {
+            y(i) = if (queriesAreFloat) q.getFloat(i).toDouble else q.getDouble(i)
+            norm += y(i) * y(i)
+          }
+          i += 1
+        }
+        if (complete) { qs(j) = y; qn(j) = norm }
+      }
+      j += 1
+    }
+    loaded = constantQueries
+  }
+
+  /** The distances, or null when `v` holds a NULL element. */
+  def score(v: ArrayData, queries: ArrayData): ArrayData = {
+    if (!loaded) load(queries)
+    val n = v.numElements()
+    val m = lens.length
+    var j = 0
+    while (j < m) {
+      if (lens(j) >= 0 && lens(j) != n) throw VectorErrors.dimMismatch(n, lens(j))
+      j += 1
+    }
+    if (vs.length < n) vs = new Array[Double](n)
+    var na = 0.0
+    var vNull = false
+    var i = 0
+    while (i < n && !vNull) {
+      if (v.isNullAt(i)) vNull = true
+      else {
+        val x = if (vecIsFloat) v.getFloat(i).toDouble else v.getDouble(i)
+        vs(i) = x; na += x * x
+      }
+      i += 1
+    }
+    if (vNull) return null
+    val out = new Array[Double](m)
+    var nulls = false
+    j = 0
+    while (j < m) {
+      val y = qs(j)
+      if (y == null) nulls = true
+      else {
+        var dot = 0.0
+        i = 0
+        while (i < n) { dot += vs(i) * y(i); i += 1 }
+        out(j) = VectorLoop.cosineDistance(dot, na, qn(j))
+      }
+      j += 1
+    }
+    if (!nulls) UnsafeArrayData.fromPrimitiveArray(out)
+    else new GenericArrayData(Array.tabulate[Any](m)(j =>
+      if (qs(j) == null) null else out(j)))
+  }
+}

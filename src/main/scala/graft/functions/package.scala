@@ -76,6 +76,12 @@ package object functions {
       k: Int): Column =
     col(CosineTopK(ex(v), ex(selfId), ex(ids), ex(vecs), k))
 
+  /** `array_cosine_distance(v, q)` for every `q` of `queries`, as one
+    * `array<double>`; see [[CosineDistances]].
+    */
+  def cosine_distances(v: Column, queries: Column): Column =
+    col(CosineDistances(ex(v), ex(queries)))
+
   /** Bounded top-k heap over `struct(score double, id long)`; see
     * [[TopKByScore]]. Map-side combining: each partition ships at most k
     * rows per group to the shuffle.
@@ -147,6 +153,7 @@ package object functions {
     binaryBuilder("array_inner_product", DotProduct.apply),
     binaryBuilder("array_distance", L2Distance.apply),
     binaryBuilder("array_int8_cosine_distance", Int8CosineDistance.apply),
+    binaryBuilder("cosine_distances", CosineDistances.apply),
     {
       val builder: Seq[Expression] => Expression = {
         case Seq(v, cids, cvecs) => CosineArgmin(v, cids, cvecs)

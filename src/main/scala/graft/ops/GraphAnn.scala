@@ -3,8 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-import graft.functions.array_cosine_distance
+import graft.functions.{array_cosine_distance, cosine_distances}
 
 /** Graph-based ANN — the navigable-graph tier of the reference's voyager
   * (HNSW) dependency (cobalt-duckdb requirements.txt:31-33,
@@ -33,15 +34,17 @@ import graft.functions.array_cosine_distance
   *    is the navigable "upper level": centroid→centroid links move across
   *    the space, centroid→member links descend into a neighborhood.
   *
-  *  - **Probe** (`rounds` fixed beam-search rounds, the join-per-round
-  *    shape of `Dedup.components`): start from the `beam` centroids
-  *    nearest the query, expand every frontier node's out-edges, score the
-  *    newly reached vectors against the query (a broadcast semi-join of
-  *    ≤ beam·degree ids against the corpus — never a corpus scan), keep
-  *    the best `beam` as the next frontier. Per-round work is
-  *    O(beam·degree) rows; total vectors scored ≈ beam·degree·rounds — at
-  *    100 TB the probe cost is independent of corpus size once the edge
-  *    table is built.
+  *  - **Probe** (one driver loop, [[probeLoop]], behind every entry point;
+  *    at most `rounds` best-first rounds): start from the `beam` centroids
+  *    nearest the query, expand the best `beam` visited-but-unexpanded
+  *    nodes' out-edges, score the newly reached vectors against the query
+  *    with the engine's distance expression (on a store, read off the
+  *    stored dst vectors of whole bucket partitions — never a corpus
+  *    scan), and stop once the current top-k is fully expanded. The beam
+  *    state lives in driver maps of ≤ beam + beam·degree·rounds pairs per
+  *    query; total vectors scored ≈ beam·degree·rounds, so at 100 TB the
+  *    probe cost is independent of corpus size once the edge table is
+  *    built. A batch of queries runs the same loop over chunks of queries.
   *
   * Everything is deterministic and engine-replayable: fixed stride
   * centroids, (distance, id)-ordered neighbor ranking, fixed round count,
@@ -371,9 +374,8 @@ object GraphAnn {
     * see one `(src, dst, __dstv, __bucket)` frame: member-level rows carry
     * their src's bucket (the partition key, which is also dst's bucket —
     * member edges never leave their bucket), centroid-level rows a NULL
-    * bucket. The driver probe loop ([[pointProbeTopK]], gate-sized
-    * [[beamSearchTopKBatch]] calls) routes on that column and expands the
-    * store bucket by bucket.
+    * bucket. The probe loop ([[pointProbeTopK]], [[beamSearchTopKBatch]])
+    * routes on that column and expands the store bucket by bucket.
     */
   def fromMaterialized(spark: org.apache.spark.sql.SparkSession, path: String,
       stride: Int, degree: Int, superStride: Int = 0): DataFrame = {
@@ -664,152 +666,51 @@ object GraphAnn {
   private val probeRounds = new ThreadLocal[Int] { override def initialValue = 0 }
   private[graft] def lastProbeRounds: Int = probeRounds.get()
 
-  /** The HNSW termination rule, shared by both probe shapes and replayed
-    * by the SQL oracle's per-round frontier guard: continue expanding only
-    * while some node of the CURRENT top-k is still unexpanded. Once every
-    * top-k node has been expanded, the best unexpanded candidate ranks
-    * below k — the greedy search has converged and further fixed rounds
-    * are pure cost (they could only improve the result through a
-    * longer-range hop, which greedy best-first search forgoes BY
-    * DEFINITION — this is the standard HNSW stopping condition, identical
-    * on both engines, so the gate stays hash-exact). The `rounds`
-    * parameter becomes a CAP rather than the exact cost, which is what
-    * lets a deep-graph deployment raise it without paying on easy
-    * queries.
+  /** The HNSW termination rule of [[probeLoop]], replayed by the SQL
+    * oracle's per-round frontier guard: continue expanding only while some
+    * node of the CURRENT top-k is still unexpanded. Once every top-k node
+    * has been expanded, the best unexpanded candidate ranks below k — the
+    * greedy search has converged and further rounds are pure cost (they
+    * could only improve the result through a longer-range hop, which greedy
+    * best-first search forgoes BY DEFINITION — this is the standard HNSW
+    * stopping condition, identical on both engines, so the gate stays
+    * hash-exact). The `rounds` parameter is a CAP rather than the exact
+    * cost, which lets a deep-graph deployment raise it without paying on
+    * easy queries.
     */
   private def converged(visitedTopK: Seq[Long], expanded: Long => Boolean): Boolean =
     visitedTopK.forall(expanded)
 
-  /** Beam-search top-k over a built edge table. Entry = the `beam`
-    * centroids nearest the query; each of `rounds` rounds takes the best
-    * `beam` visited-but-UNEXPANDED nodes (best-first with a tabu set —
-    * re-expanding a node is pure waste, and on weakly-navigable data it
-    * stalls convergence), expands their out-edges, and scores the reached
-    * vectors against the query. Returns `(idCol, cos_dist)`, k rows,
-    * ranked (dist asc, id asc) over every node visited. Rounds stop early
-    * at [[converged]]; `rounds` is the cap.
+  /** Batched beam search: every query of a query-vector table gets its
+    * [[pointProbeTopK]] rows — the same loop, [[probeLoop]], run over
+    * chunks of queries. The query table is collected (one job, none for a
+    * driver-local table) and probed `SizeRoute(GraphProbeQueries)` queries
+    * at a time, each chunk one driver loop: ONE entry job
+    * scores every centroid row against every chunk query, then per round ≤
+    * 1 job on a [[fromMaterialized]] store (plus one unpruned scan in a
+    * round that expands a degenerate centroid) or 2 jobs on a plain
+    * `(src, dst)` frame, REGARDLESS of the chunk's size. A query that
+    * [[converged]] stops contributing frontier nodes while the rest keep
+    * walking. [[lastProbeRounds]] reports the most rounds any chunk ran.
     *
-    * Per-round work is O(beam·degree) rows; the vector lookup for reached
-    * ids is a BROADCAST semi-join of those ≤ beam·degree ids into a scan
-    * of the corpus.
-    *
-    * Preconditions: numeric ids, non-null vectors, `edges` built over the
-    * same corpus/stride (centroids must exist in `df`).
-    */
-  def beamSearchTopK(df: DataFrame, idCol: String, vecCol: String,
-      edges: DataFrame, qvec: Array[Double], k: Int, stride: Int,
-      beam: Int = DefaultBeam, rounds: Int = DefaultRounds): DataFrame = {
-    require(k > 0 && beam > 0 && rounds >= 0, s"invalid probe: k=$k beam=$beam rounds=$rounds")
-    val q = typedLit(qvec.toSeq)
-    val vecs = df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
-    var visited = df.where(pmod(col(idCol), lit(stride)) === 0)
-      .select(col(idCol).cast("long").as("__nid"),
-        array_cosine_distance(col(vecCol), q).as("__d"))
-      .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
-      .limit(beam)
-    var expanded: DataFrame = null
-    var prevVisited: DataFrame = null
-    var round = 0
-    var done = rounds == 0
-    while (!done) {
-      round += 1
-      val unexpanded =
-        if (expanded == null) visited
-        else visited.join(expanded, Seq("__nid"), "left_anti")
-      val frontier = unexpanded
-        .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
-        .limit(beam)
-        .select(col("__nid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val prevExpanded = expanded
-      expanded =
-        (if (expanded == null) frontier else expanded.union(frontier))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val reached = edges
-        .join(broadcast(frontier.select(col("__nid").as("__fid"))),
-          col("src") === col("__fid"), "left_semi")
-        .select(col("dst").as("__nid")).distinct()
-      val scored = vecs
-        .join(broadcast(reached), Seq("__nid"), "left_semi")
-        .select(col("__nid"), array_cosine_distance(col("__nv"), q).as("__d"))
-      // min-dedup is formal (a node's distance is a pure function of its
-      // id), it just keeps the visited set one row per node
-      visited = visited.union(scored)
-        .groupBy(col("__nid")).agg(min(col("__d")).as("__d"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize THIS round's state (both frames are beam-bounded —
-      // counts are trivial jobs), then release the superseded caches: a
-      // long-lived session probing many queries must not accumulate
-      // 3 cached frames per round until eviction pressure (r8 ADVICE)
-      visited.count()
-      expanded.count()
-      if (prevVisited != null) prevVisited.unpersist(blocking = false)
-      if (prevExpanded != null) prevExpanded.unpersist(blocking = false)
-      // round 1 aliases expanded = frontier — keep that one cached
-      if (!(expanded eq frontier)) frontier.unpersist(blocking = false)
-      prevVisited = visited
-      // HNSW convergence ([[converged]] — the oracle's per-round frontier
-      // guard): stop once every current-top-k node has been expanded. The
-      // check reads two beam-bounded cached frames — trivial driver work.
-      if (round >= rounds) done = true
-      else {
-        val topK = visited
-          .orderBy(col("__d").asc_nulls_last, col("__nid").asc).limit(k)
-          .collect().map(_.getLong(0)).toSeq
-        val exp = expanded.collect().map(_.getLong(0)).toSet
-        if (converged(topK, exp)) done = true
-      }
-    }
-    probeRounds.set(round)
-    // the final round's expanded set feeds nothing downstream
-    if (expanded != null) expanded.unpersist(blocking = false)
-    visited
-      .select(col("__nid").as(idCol), col("__d").as("cos_dist"))
-      .orderBy(col("cos_dist").asc_nulls_last, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Batched beam search: every query of a query-vector table walks the
-    * same rounds. Row-identical per query to [[beamSearchTopK]] /
-    * [[pointProbeTopK]] (spec-asserted): same entry beam, same best-first
-    * tabu frontier, same min-dedup, and the same per-query HNSW
-    * [[converged]] rule — a query that converges simply stops contributing
-    * frontier rows while the rest keep walking. Two routes serve it:
-    *
-    *  - a gate-sized table (≤ `beam` rows, double vectors, no NULL id or
-    *    vector) runs [[probeLoop]], the driver loop behind
-    *    [[pointProbeTopK]], with all Q queries at once. Jobs per call: Q
-    *    entry jobs, then per round ≤ 1 job on a [[fromMaterialized]] store
-    *    (plus one unpruned scan in a round that expands a degenerate
-    *    centroid) or 2 jobs on a plain `(src, dst)` frame, REGARDLESS of Q.
-    *    Driver state: Q maps of ≤ beam + beam·degree·rounds (id, distance)
-    *    pairs, plus, on a store, the loaded buckets' edges with Q distances
-    *    each.
-    *  - a larger table runs [[beamSearchTopKBatchJoin]]: each round is one
-    *    edge-table join and one corpus scan regardless of query count, all
-    *    per-round state in (queries × beam)-bounded frames keyed by
-    *    `(__qid, __nid)` — nothing corpus-sized and no driver-side beam
-    *    state; the driver only sees one tiny emptiness check per round. The
-    *    query table is broadcast twice per round (frontier semi-join and
-    *    distance lookup), so it must be broadcast-sized — shard and union
-    *    beyond ~10^5 queries, as with [[AnnIndex.probeTopKBatch]].
+    * Driver state per chunk: every centroid row with one distance per
+    * chunk query (centroids × chunk); per query a map of ≤ beam +
+    * beam·degree·rounds (id, distance) pairs; on a store, the loaded
+    * buckets' edges with one distance per chunk query each. For the whole
+    * call the driver holds the query vectors and the ranked output,
+    * queries × k rows.
     *
     * Output: `(qidCol, rank, idCol, cos_dist)`, rank 1-based per query by
     * (dist asc NULLS LAST, id asc) — the [[AnnIndex.probeTopKBatch]] shape.
-    * Preconditions: numeric query ids, `edges` built over the same
-    * corpus/stride. Query ids must be distinct: the driver route rejects
-    * duplicates with an `IllegalArgumentException`; the join route does not
-    * check, and would merge the duplicates' visited sets.
+    * Query vectors of any numeric array type are cast to `array<double>`.
+    * A NULL query id, a NULL query vector or element, or a repeated query
+    * id raises an `IllegalArgumentException` naming it. `edges` must be built over the
+    * same corpus/stride.
     *
-    * EXECUTION CONTRACT: this call is EAGER, not a lazy plan builder. Both
-    * routes run Spark jobs at call time — the driver route collects the
-    * query table head and drives the whole probe loop (inside a
-    * [[withSessionConfs]] override window), and the join route
-    * localCheckpoints every round — and both return a materialized
-    * (checkpointed or driver-local) frame. Callers composing the result
-    * into a larger plan get a scan of that materialized state, not a
-    * deferred probe; the probe's (queries × beam)-bounded output makes
-    * that the intended cost model at any corpus size.
+    * EXECUTION CONTRACT: this call is EAGER, not a lazy plan builder. It
+    * runs every probe job at call time and returns a driver-local frame;
+    * a caller composing the result into a larger plan gets a scan of those
+    * rows, not a deferred probe. No session conf is touched.
     */
   def beamSearchTopKBatch(df: DataFrame, idCol: String, vecCol: String,
       edges: DataFrame, queries: DataFrame, qidCol: String, qvecCol: String,
@@ -817,38 +718,32 @@ object GraphAnn {
       rounds: Int = DefaultRounds): DataFrame = {
     require(k > 0 && beam > 0 && rounds >= 0,
       s"invalid probe: k=$k beam=$beam rounds=$rounds")
-    // Route GATE-SIZED batches (≤ beam queries, double vectors) through the
-    // driver loop: the join shape's per-round wall at tiny batch sizes is
-    // FIXED driver scheduling (checkpoint + window + dedup jobs per round),
-    // not data — measured 2.24 s for 3 queries, where the driver loop lands
-    // well under 1 s. The two shapes are row-identical (spec-asserted);
-    // beyond `beam` queries the join shape's amortization wins and driver
-    // maps stop being the model-artifact cost class.
-    queries.schema(qvecCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, _) =>
-        val head = SizeRoute.collectAtMost(
-          queries.select(col(qidCol).cast("long"), col(qvecCol)), beam)
-        // NULL ids/vectors stay on the join shape: getLong would silently
-        // read a NULL id as 0 and alias it with a real query 0
-        if (head.exists(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1))))
-          // Whole-stage codegen + AQE OFF for the loop's micro-jobs: an IN
-          // list is inlined into generated code and differs every round,
-          // so each frontier-sized collect would pay a fresh janino
-          // compilation (measured ~100 ms/job), and AQE adds query-stage
-          // jobs. Interpreted eval of the SAME expressions is bit-identical
-          // and instant on frontier-sized inputs.
-          return withSessionConfs(df.sparkSession,
-              "spark.sql.codegen.wholeStage" -> "false",
-              "spark.sql.adaptive.enabled" -> "false") {
-            probeLoop(df, idCol, vecCol, edges,
-              head.get.map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq)).toSeq,
-              qidCol, k, stride, beam, rounds)
+    val chunk = math.max(1, SizeRoute(SizeRoute.GraphProbeQueries))
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    var mostRounds = 0
+    val out = queries
+      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
+      .collect().grouped(chunk).flatMap { part =>
+        val qs = part.map { r =>
+          require(!r.isNullAt(0), "graph probe query ids must not be NULL")
+          val qid = r.getLong(0)
+          require(!r.isNullAt(1), s"graph probe query $qid has a NULL vector")
+          val v = r.getSeq[java.lang.Double](1)
+          require(!v.contains(null), s"graph probe query $qid has a NULL element")
+          require(seen.add(qid), s"graph probe query ids must be distinct: $qid repeats")
+          qid -> v.map(_.doubleValue)
+        }
+        val top = probeLoop(df, idCol, vecCol, edges, qs.map(_._2), k, stride,
+          beam, rounds)
+        mostRounds = math.max(mostRounds, probeRounds.get())
+        qs.map(_._1).zip(top).flatMap { case (qid, ranked) =>
+          ranked.zipWithIndex.map { case ((id, d), r) =>
+            org.apache.spark.sql.Row(qid, r + 1L, id, d)
           }
-      case _ =>
-    }
-    beamSearchTopKBatchJoin(df, idCol, vecCol, edges, queries, qidCol,
-      qvecCol, k, stride, beam, rounds)
+        }
+      }.toVector
+    probeRounds.set(mostRounds)
+    localFrame(df, out, qidCol, "rank", idCol)
   }
 
   /** Serializes every graft conf-override window on a session (probe loops
@@ -989,80 +884,97 @@ object GraphAnn {
     }
   }
 
-  /** Single-query point probe — row-identical to [[beamSearchTopK]]
-    * (spec-asserted): [[probeLoop]], the driver loop behind gate-sized
-    * [[beamSearchTopKBatch]] calls, run with one query. The beam state is
-    * held on the driver, bounded by construction at
+  /** Single-query point probe: [[probeLoop]] run with one query. The beam
+    * state is held on the driver, bounded by construction at
     * ≤ beam + beam·degree·rounds (id, distance) pairs — a few hundred rows
     * REGARDLESS of corpus size, the same per-query working set an
     * in-process HNSW library keeps — so holding it driver-side is the
-    * model-artifact cost class, not a collect of data. On a store the
-    * driver also holds the loaded buckets' edges (see [[bucketExpansion]]).
-    * Distances are still computed by the engine's codegen'd expression —
-    * the driver only orders already-computed (distance, id) pairs, so the
-    * probe shapes cannot drift. Jobs per call: one entry job (top-`beam`
-    * over the centroids), then per round ≤ 1 job on a [[fromMaterialized]]
-    * store (plus one unpruned scan in a round that expands a degenerate
-    * centroid) or 2 jobs on a plain `(src, dst)` frame ([[buildEdges]]).
-    * No session conf is touched.
+    * model-artifact cost class, not a collect of data. The entry also
+    * holds one distance per centroid row, and on a store the driver holds
+    * the loaded buckets' edges (see [[bucketExpansion]]). Distances are
+    * computed by the engine's codegen'd expression; the driver only orders
+    * already-computed (distance, id) pairs. Jobs per call: one entry job,
+    * then per round ≤ 1 job on a [[fromMaterialized]] store (plus one
+    * unpruned scan in a round that expands a degenerate centroid) or 2 jobs
+    * on a plain `(src, dst)` frame ([[buildEdges]]). Returns a driver-local
+    * `(idCol, cos_dist)` frame, k rows ranked (dist asc NULLS LAST, id asc)
+    * over every node visited. No session conf is touched.
     *
-    * Use [[beamSearchTopKBatch]] when probing a BATCH of queries in one
-    * pass (its rounds amortize across queries); use this for the
-    * single-query / low-latency path.
+    * Use [[beamSearchTopKBatch]] when probing a BATCH of queries: its
+    * rounds serve a whole chunk of queries at once.
     */
   def pointProbeTopK(df: DataFrame, idCol: String, vecCol: String,
       edges: DataFrame, qvec: Array[Double], k: Int, stride: Int,
       beam: Int = DefaultBeam, rounds: Int = DefaultRounds): DataFrame = {
     require(k > 0 && beam > 0 && rounds >= 0,
       s"invalid probe: k=$k beam=$beam rounds=$rounds")
-    // renamed by position: idCol may equal any fixed column name
-    probeLoop(df, idCol, vecCol, edges, Seq(0L -> qvec.toSeq), "__qid", k,
-        stride, beam, rounds)
-      .toDF("__qid", "__rank", "__nid", "__d")
-      .select(col("__nid").as(idCol), col("__d").as("cos_dist"))
+    val top = probeLoop(df, idCol, vecCol, edges, Seq(qvec.toSeq), k, stride,
+      beam, rounds).head
+    localFrame(df, top.map { case (id, d) => org.apache.spark.sql.Row(id, d) },
+      idCol)
   }
 
-  private def distAt(r: org.apache.spark.sql.Row, i: Int): java.lang.Double =
-    if (r.isNullAt(i)) null else java.lang.Double.valueOf(r.getDouble(i))
+  /** A driver-local frame of `rows`: the given non-NULL long columns, then
+    * a nullable `cos_dist` double.
+    */
+  private def localFrame(df: DataFrame, rows: Seq[org.apache.spark.sql.Row],
+      longCols: String*): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    df.sparkSession.createDataFrame(rows.asJava, StructType(
+      longCols.map(StructField(_, LongType, nullable = false)) :+
+        StructField("cos_dist", DoubleType, nullable = true)))
+  }
 
-  /** The driver-loop probe over Q ≥ 1 queries (distinct ids), with each
-    * query's beam state in a driver map. Entry: per query, one top-`beam`
-    * job over the centroids. Each round takes every query's frontier — its
-    * best `beam` visited-but-unexpanded nodes, or none once the query has
-    * [[converged]] — and expands their union in one step, routed on the
-    * edge frame's columns: [[bucketExpansion]] for a [[fromMaterialized]]
-    * store (`__bucket` present); for a plain `(src, dst)` frame, one edge
-    * read of the union frontier, then one corpus read of the newly reached
-    * ids with one distance column per query that reached any. Returns a
-    * driver-local `(qidCol, rank, idCol, cos_dist)` frame, rank 1-based per
-    * query by (dist asc NULLS LAST, id asc).
+  /** Query `i`'s distance in a collected `cosine_distances` array. The
+    * probe's queries hold no NULL element, so the array is complete, or
+    * NULL for a NULL vector or element: every distance NULL.
+    */
+  private def distAt(ds: Array[Double], i: Int): java.lang.Double =
+    if (ds == null) null else ds(i)
+
+  /** The probe's ranking key: (distance asc NULLS LAST, id asc), the
+    * oracle's sort. java.lang.Double.compare is NaN-largest like Spark's
+    * ordering, and cos_dist never produces -0.0 (1 - 1 = +0.0), so exact
+    * double comparison of engine-computed values is drift-free.
+    */
+  private def rankKey(id: Long, d: java.lang.Double): (Boolean, Double, Long) =
+    (d == null, if (d == null) 0d else d.doubleValue, id)
+
+  /** The one graph probe: a best-first tabu beam search over Q ≥ 1 query
+    * vectors, each query's beam state in a driver map. Every distance comes
+    * from one engine expression per row, `cosine_distances` against all Q
+    * queries (bit-identical to `array_cosine_distance`). Entry: ONE job
+    * scores every centroid row (an id divisible by `stride`), and each
+    * query keeps its `beam` best by [[rankKey]]. Each round takes every
+    * query's frontier — its best `beam` visited-but-
+    * unexpanded nodes, or none once the query has [[converged]] — and
+    * expands their union in one step, routed on the edge frame's columns:
+    * [[bucketExpansion]] for a [[fromMaterialized]] store (`__bucket`
+    * present); for a plain `(src, dst)` frame, one edge read of the union
+    * frontier, then one corpus read of the newly reached ids. A node is
+    * scored once per query: its distance is a pure function of (query,
+    * id). Returns each query's top-k `(id, distance)` pairs in rank order
+    * and records the executed rounds for [[lastProbeRounds]].
     */
   private def probeLoop(df: DataFrame, idCol: String, vecCol: String,
-      edges: DataFrame, queries: Seq[(Long, Seq[Double])], qidCol: String,
-      k: Int, stride: Int, beam: Int, rounds: Int): DataFrame = {
+      edges: DataFrame, queries: Seq[Seq[Double]], k: Int, stride: Int,
+      beam: Int, rounds: Int): IndexedSeq[Seq[(Long, java.lang.Double)]] = {
     import scala.collection.mutable
-    require(queries.map(_._1).distinct.size == queries.size,
-      "graph probe query ids must be distinct")
-    val qs = queries.map { case (_, v) => typedLit(v) }
+    val sp = df.sparkSession
+    import sp.implicits._
+    val qs = typedLit(queries)
     val visited = queries.map(_ => mutable.HashMap.empty[Long, java.lang.Double])
       .toIndexedSeq
     val expanded = queries.map(_ => mutable.HashSet.empty[Long]).toIndexedSeq
-    // (distance asc NULLS LAST, id asc) — the join shape's exact sort key.
-    // java.lang.Double.compare is NaN-largest like Spark's ordering, and
-    // cos_dist never produces -0.0 (1 - 1 = +0.0), so exact double
-    // comparison of engine-computed values is drift-free.
-    def ranked(i: Int): Seq[(Long, java.lang.Double)] = visited(i).toSeq
-      .sortBy { case (id, d) => (d == null, if (d == null) 0d else d.doubleValue, id) }
-    for ((q, i) <- qs.zipWithIndex)
-      df.where(pmod(col(idCol), lit(stride)) === 0)
-        .select(col(idCol).cast("long").as("__nid"),
-          array_cosine_distance(col(vecCol), q).as("__d"))
-        .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
-        .limit(beam)
-        .collect().foreach(r => visited(i)(r.getLong(0)) = distAt(r, 1))
-    // tabu on scoring: a node's distance is a pure function of (query, id),
-    // so skipping already-visited ids is identical to the join shape's
-    // union + min-groupBy dedup
+    def ranked(i: Int): Seq[(Long, java.lang.Double)] =
+      visited(i).toSeq.sortBy { case (id, d) => rankKey(id, d) }
+    val cents = df.where(pmod(col(idCol), lit(stride)) === 0)
+      .select(col(idCol).cast("long"), cosine_distances(col(vecCol), qs))
+      .as[(Long, Array[Double])].collect()
+    for (i <- queries.indices)
+      cents.map { case (id, ds) => (id, distAt(ds, i)) }
+        .sortBy { case (id, d) => rankKey(id, d) }.take(beam)
+        .foreach { case (id, d) => visited(i)(id) = d }
     val expand: IndexedSeq[Seq[Long]] => Unit =
       if (edges.columns.contains(BucketCol))
         bucketExpansion(edges, qs, stride, visited)
@@ -1077,17 +989,11 @@ object GraphAnn {
         if (active.nonEmpty)
           df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
             .where(col("__nid").isin(active.flatMap(reached(_)).distinct: _*))
-            .select(col("__nid") +: active.map(i =>
-              array_cosine_distance(col("__nv"), qs(i))): _*)
-            .collect().foreach { r =>
-              val nid = r.getLong(0)
-              for ((i, c) <- active.zipWithIndex if reached(i)(nid))
-                visited(i)(nid) = distAt(r, c + 1)
+            .select(col("__nid"), cosine_distances(col("__nv"), qs))
+            .as[(Long, Array[Double])].collect().foreach { case (nid, ds) =>
+              for (i <- active if reached(i)(nid)) visited(i)(nid) = distAt(ds, i)
             }
       }
-    // HNSW convergence (shared [[converged]] rule — identical to the join
-    // shape and the oracle's frontier guard): a query stops once every node
-    // of its current top-k has been expanded; the rest keep walking
     def frontiers(round: Int): IndexedSeq[Seq[Long]] = visited.indices.map { i =>
       val ids = ranked(i).map(_._1)
       if (round > 0 && converged(ids.take(k), expanded(i))) Nil
@@ -1101,16 +1007,7 @@ object GraphAnn {
       round += 1
     }
     probeRounds.set(round)
-    val top = visited.indices.flatMap(i => ranked(i).take(k).zipWithIndex.map {
-      case ((id, d), r) => org.apache.spark.sql.Row(queries(i)._1, r + 1L, id, d)
-    })
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    df.sparkSession.createDataFrame(top.asJava, StructType(Seq(
-      StructField(qidCol, LongType, nullable = false),
-      StructField("rank", LongType, nullable = false),
-      StructField(idCol, LongType, nullable = false),
-      StructField("cos_dist", DoubleType, nullable = true))))
+    visited.indices.map(ranked(_).take(k))
   }
 
   /** [[probeLoop]]'s round step over a [[fromMaterialized]] frame: scores
@@ -1120,38 +1017,38 @@ object GraphAnn {
     * node (an id divisible by `stride`) is looked up in its own-id bucket.
     * Each round loads, in ONE job, every bucket of the frontier union not
     * loaded yet — whole `__bucket` partitions by partition pruning, plus
-    * those centroids' centroid-level out-edges — with one engine-computed
-    * distance column per query of the probe on every loaded row; a round
-    * whose frontiers sit in loaded buckets runs no job. Every query vector
-    * and the bucket set are array literals, so the probe keeps one compiled
-    * stage shape. A centroid whose own bucket holds no member edge from it
+    * those centroids' centroid-level out-edges — with every query's
+    * engine-computed distance on every loaded row; a round
+    * whose frontiers sit in loaded buckets runs no job. The queries and the
+    * bucket set are array literals, so the probe keeps one compiled stage
+    * shape. A centroid whose own bucket holds no member edge from it
     * costs one more, unpruned `src` scan: a duplicate or zero-vector
     * centroid (assigned to the lowest tied centroid, leaving its own bucket
     * empty) or a singleton bucket. Driver state beyond the beams is loaded
-    * buckets × bucket rows × degree edges, each two ids and Q distances —
-    * independent of the vector dimension.
+    * buckets × bucket rows × degree edges, each two ids and Q primitive
+    * distances — independent of the vector dimension.
     */
-  private def bucketExpansion(edges: DataFrame, qs: Seq[Column], stride: Int,
+  private def bucketExpansion(edges: DataFrame, qs: Column, stride: Int,
       visited: IndexedSeq[scala.collection.mutable.HashMap[Long, java.lang.Double]])
       : IndexedSeq[Seq[Long]] => Unit = {
     import scala.collection.mutable
-    // src -> (dst, per-query distances, dst's bucket — NULL on a
+    val sp = edges.sparkSession
+    import sp.implicits._
+    // src -> (dst, per-query distances, dst's bucket — None on a
     // centroid-level edge)
     val out = mutable.HashMap.empty[Long,
-      mutable.ArrayBuffer[(Long, Array[java.lang.Double], java.lang.Long)]]
+      mutable.ArrayBuffer[(Long, Array[Double], Option[Long])]]
     val bucketOf = mutable.HashMap.empty[Long, Long] // member nodes, as reached
     val loaded = mutable.HashSet.empty[Long]
     val held = mutable.HashSet.empty[Long] // srcs whose member edges are in `out`
     def fetch(cond: Column): Unit =
       edges.where(cond)
-        .select(Seq(col("src"), col("dst"), col(BucketCol)) ++
-          qs.map(array_cosine_distance(col(DstVecCol), _)): _*)
-        .collect().foreach { r =>
-          val src = r.getLong(0)
-          val b = if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2))
-          if (b != null) held += src
-          out.getOrElseUpdate(src, mutable.ArrayBuffer.empty) +=
-            ((r.getLong(1), Array.tabulate(qs.size)(i => distAt(r, 3 + i)), b))
+        .select(col("src"), col("dst"), col(BucketCol),
+          cosine_distances(col(DstVecCol), qs))
+        .as[(Long, Long, Option[Long], Array[Double])].collect()
+        .foreach { case (src, dst, b, ds) =>
+          if (b.isDefined) held += src
+          out.getOrElseUpdate(src, mutable.ArrayBuffer.empty) += ((dst, ds, b))
         }
     def isCentroid(id: Long) = id % stride == 0
     fs => {
@@ -1177,8 +1074,8 @@ object GraphAnn {
         held ++= missing
       }
       for (i <- fs.indices; n <- fs(i); (dst, ds, b) <- out.getOrElse(n, Nil)) {
-        if (!visited(i).contains(dst)) visited(i)(dst) = ds(i)
-        if (b != null) bucketOf(dst) = b
+        if (!visited(i).contains(dst)) visited(i)(dst) = distAt(ds, i)
+        b.foreach(bucketOf(dst) = _)
       }
     }
   }

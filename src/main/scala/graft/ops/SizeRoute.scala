@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.LongType
   * iff the MEASURED size ≤ the bound, measured by a bounded probe
   * ([[atMost]], [[collectAtMost]]) or, on a frame the route pins anyway,
   * by the [[driverGate]] count that materializes the pin. The named
-  * [[Bound]]s are the route registry; tests force a route with
-  * [[withBounds]].
+  * [[Bound]]s are the route registry, which also holds the one chunk
+  * bound of a driver loop ([[GraphProbeQueries]]); tests force a bound
+  * with [[withBounds]].
   */
 private[graft] object SizeRoute {
 
@@ -53,8 +54,17 @@ private[graft] object SizeRoute {
     */
   val BpeWords = Bound("bpe-words", 1 << 20)
 
+  /** Queries per chunk of [[GraphAnn.beamSearchTopKBatch]]: the query
+    * table is collected and probed this many queries at a time, each chunk
+    * one driver loop. It bounds the loop's driver state, which carries one
+    * distance per chunk query on every centroid row (entry) and every
+    * loaded edge row (rounds). A bound of 0 probes one query per chunk.
+    */
+  val GraphProbeQueries = Bound("graph-probe-queries", 64)
+
   val Registry: Seq[Bound] =
-    Seq(GraphLabelEdges, PageRankRows, EmbedAllPairsRows, BpeWords)
+    Seq(GraphLabelEdges, PageRankRows, EmbedAllPairsRows, BpeWords,
+      GraphProbeQueries)
 
   private val forced = new DynamicVariable(Map.empty[Bound, Int])
 

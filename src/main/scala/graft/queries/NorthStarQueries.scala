@@ -952,9 +952,9 @@ object NorthStarQueries {
       val qvec = emb.where(col("vec_id") === 1).select(col("embedding"))
         .head().getSeq[Float](0).map(_.toDouble).toArray
       val edges = GraphAnn.fromMaterialized(s, path, 64, GraphAnn.DefaultDegree)
-      // single-query probe → the point-probe shape (bounded driver beam
-      // state, IN-pushdown point reads per round); row-identical to the
-      // batch join shape by GraphAnnSpec
+      // single-query probe: the one driver loop (bounded driver beam
+      // state, bucket-pruned store reads per round); GraphAnnSpec checks
+      // it row for row against an independent reference beam search
       GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges, qvec,
         k = 10, stride = 64)
     },
@@ -987,10 +987,9 @@ object NorthStarQueries {
         k = 10, stride = 64)
     },
 
-    // Batched graph probe under the hash gate: one round loop serves the
-    // whole query table (per-round joins amortize across queries; all
-    // state is (queries × beam)-bounded (__qid, __nid) frames with
-    // localCheckpoint lineage truncation — no driver-side beam state).
+    // Batched graph probe under the hash gate: the point probe's driver
+    // loop serves a whole chunk of the query table (one entry job for the
+    // chunk, then each round's bucket loads serve every chunk query).
     // The oracle replays the identical unrolled rounds once per query id
     // over the SAME shared build CTEs.
     "ann_graph_batch_topk" -> { (s, dir) =>
@@ -3184,18 +3183,18 @@ object NorthStarQueries {
        |  SELECT c.m, c.j, c.cv FROM $prev c
        |  WHERE NOT EXISTS (SELECT 1 FROM a$n a WHERE a.m = c.m AND a.j = c.j))""".stripMargin
 
-  /** One beam-search round in DuckDB SQL: frontier = best `beam` visited
-    * nodes not yet expanded (the engine's tabu set), expand their
-    * out-edges, score the reached vectors, min-dedup into the visited set
-    * — mirrors `GraphAnn.beamSearchTopK` exactly. Expects CTEs `e`
-    * (vec_id, v), `q` (v), `edges` (src, dst) and `v{n-1}` (id, d).
-    */
   /** Query ids for `ann_graph_batch_topk` — shared between the engine
     * query and the generated oracle so the two can never drift.
     */
   private val GraphBatchQids: Seq[Long] = Seq(1L, 7L, 42L)
 
-  /** `sfx` namespaces the per-round CTEs (and the query CTE `q$sfx`) so a
+  /** One beam-search round in DuckDB SQL: frontier = best `beam` visited
+    * nodes not yet expanded (the engine's tabu set), expand their
+    * out-edges, score the reached vectors, min-dedup into the visited set
+    * — the round of the engine's one probe loop (`GraphAnn.probeLoop`,
+    * behind `pointProbeTopK` and `beamSearchTopKBatch`). Expects CTEs `e`
+    * (vec_id, v), `q` (v), `edges` (src, dst) and `v{n-1}` (id, d).
+    * `sfx` namespaces the per-round CTEs (and the query CTE `q$sfx`) so a
     * BATCH oracle can replay the identical round chain once per query id
     * inside one WITH, sharing the build CTEs (e/cents/assign/edges).
     */

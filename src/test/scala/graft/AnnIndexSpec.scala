@@ -614,7 +614,7 @@ class ProductQuantizerSpec extends SparkTestBase {
   * determinism, materialize round-trip, geometry guard.
   */
 class GraphAnnSpec extends SparkTestBase {
-  import graft.ops.{AnnIndex, GraphAnn}
+  import graft.ops.{AnnIndex, GraphAnn, SizeRoute}
 
   private def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
@@ -628,6 +628,31 @@ class GraphAnnSpec extends SparkTestBase {
           typedLit(q.toSeq)).as("d"))
       .orderBy(col("d").asc_nulls_last, col("vec_id").asc)
       .limit(k).collect().map(_.getLong(0)).toSeq
+
+  private def pair(r: org.apache.spark.sql.Row): (Long, Option[Double]) =
+    (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+
+  /** A probe's `(id, cos_dist)` rows as [[ReferenceBeamSearch]] rows. */
+  private def probed(df: org.apache.spark.sql.DataFrame): Seq[(Long, Option[Double])] =
+    df.collect().map(pair).toSeq
+
+  private def edgePairs(edges: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  /** [[ReferenceBeamSearch]] for query `q` over the `(src, dst)` pairs of
+    * an edge frame, with the engine's distance from `q` to every corpus id.
+    */
+  private def reference(df: org.apache.spark.sql.DataFrame, idCol: String,
+      vecCol: String, edges: Seq[(Long, Long)], q: Array[Double], k: Int,
+      stride: Int, beam: Int = GraphAnn.DefaultBeam,
+      rounds: Int = GraphAnn.DefaultRounds): ReferenceBeamSearch.Result = {
+    val dist = df.where(col(idCol).isNotNull)
+      .select(col(idCol).cast("long"),
+        graft.functions.array_cosine_distance(col(vecCol), typedLit(q.toSeq)))
+      .collect().map(pair).toMap
+    ReferenceBeamSearch(edges, dist, stride, k, beam, rounds)
+  }
 
   test("edge table is bounded-degree and two-family") {
     val edges = GraphAnn.buildEdges(emb, "vec_id", "embedding", stride = 64)
@@ -825,7 +850,7 @@ class GraphAnnSpec extends SparkTestBase {
     var (graphTotal, ivfTotal) = (0, 0)
     for (id <- Seq(1L, 7L, 42L)) {
       val brute = bruteIds(qvec(id), 10).toSet
-      val graph = GraphAnn.beamSearchTopK(emb, "vec_id", "embedding", edges,
+      val graph = GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges,
           qvec(id), k = 10, stride = 64)
         .collect().map(_.getLong(0)).toSet
       val ivfHits = ivf.probeTopK(qvec(id), 10, nprobe = 4)
@@ -838,9 +863,9 @@ class GraphAnnSpec extends SparkTestBase {
     assert(graphTotal >= ivfTotal - 3,
       s"graph total $graphTotal not parity-class with IVF $ivfTotal")
     // determinism: the probe is a pure function of (corpus, edges, query)
-    val a = GraphAnn.beamSearchTopK(emb, "vec_id", "embedding", edges,
+    val a = GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges,
       qvec(7), k = 10, stride = 64).collect().toSeq
-    val b = GraphAnn.beamSearchTopK(emb, "vec_id", "embedding", edges,
+    val b = GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges,
       qvec(7), k = 10, stride = 64).collect().toSeq
     assert(a == b)
   }
@@ -864,7 +889,7 @@ class GraphAnnSpec extends SparkTestBase {
         .limit(10).collect().map(_.getLong(0)).toSet
     val qids = Seq(7, 137, 341)
     val total = qids.map { qid =>
-      val got = GraphAnn.beamSearchTopK(df, "id", "v", edges, rows(qid)._2,
+      val got = GraphAnn.pointProbeTopK(df, "id", "v", edges, rows(qid)._2,
           k = 10, stride = 64)
         .collect().map(_.getLong(0)).toSet
       val r = got.intersect(brute(rows(qid)._2)).size
@@ -874,27 +899,29 @@ class GraphAnnSpec extends SparkTestBase {
     assert(total >= 9 * qids.size, s"clustered recall total $total/${10 * qids.size}")
   }
 
-  test("point probe is row-identical to the join-shape probe") {
+  test("point probe is row-identical to the reference beam search") {
     val edges = GraphAnn.buildEdges(emb, "vec_id", "embedding", stride = 64)
+    val pairs = edgePairs(edges)
     for (id <- Seq(1L, 7L, 42L)) {
-      val a = GraphAnn.beamSearchTopK(emb, "vec_id", "embedding", edges,
-        qvec(id), k = 10, stride = 64).collect().toSeq
-      val b = GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges,
-        qvec(id), k = 10, stride = 64).collect().toSeq
-      assert(a == b, s"query $id: point probe diverged from join shape")
+      val a = reference(emb, "vec_id", "embedding", pairs, qvec(id), k = 10,
+        stride = 64)
+      val b = probed(GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges,
+        qvec(id), k = 10, stride = 64))
+      assert(a.rows == b, s"query $id: point probe diverged from the reference")
+      assert(a.rounds == GraphAnn.lastProbeRounds, s"query $id: rounds differ")
     }
     // non-default geometry: narrower beam, fewer rounds
-    val a = GraphAnn.beamSearchTopK(emb, "vec_id", "embedding", edges,
-      qvec(3), k = 5, stride = 64, beam = 4, rounds = 2).collect().toSeq
-    val b = GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges,
-      qvec(3), k = 5, stride = 64, beam = 4, rounds = 2).collect().toSeq
-    assert(a == b)
+    val a = reference(emb, "vec_id", "embedding", pairs, qvec(3), k = 5,
+      stride = 64, beam = 4, rounds = 2)
+    val b = probed(GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges,
+      qvec(3), k = 5, stride = 64, beam = 4, rounds = 2))
+    assert(a.rows == b)
+    assert(a.rounds == GraphAnn.lastProbeRounds)
   }
 
   test("batched beam search is row-identical per query to the single-query shapes") {
-    val sp = spark
-    import sp.implicits._
     val edges = GraphAnn.buildEdges(emb, "vec_id", "embedding", stride = 64)
+    val pairs = edgePairs(edges)
     val qids = Seq(1L, 7L, 42L)
     val queries = emb.where(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("qid"),
@@ -904,12 +931,11 @@ class GraphAnnSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .groupBy(_._1)
     for (id <- qids) {
-      val single = GraphAnn.beamSearchTopK(emb, "vec_id", "embedding", edges,
-          qvec(id), k = 10, stride = 64)
-        .collect().zipWithIndex
-        .map { case (r, i) => (id, i + 1L, r.getLong(0), r.getDouble(1)) }.toSeq
+      val single = reference(emb, "vec_id", "embedding", pairs, qvec(id),
+          k = 10, stride = 64).rows.zipWithIndex
+        .map { case ((nid, d), i) => (id, i + 1L, nid, d.get) }
       assert(batch(id).toSeq.sortBy(_._2) == single,
-        s"query $id: batch probe diverged from single-query shape")
+        s"query $id: batch probe diverged from the reference")
     }
     // non-default geometry + a query whose convergence round differs from
     // the others must freeze at ITS round, not the batch's last
@@ -921,45 +947,40 @@ class GraphAnnSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
       .groupBy(_._1)
     for (id <- Seq(3L, 11L)) {
-      val single = GraphAnn.beamSearchTopK(emb, "vec_id", "embedding", edges,
-          qvec(id), k = 5, stride = 64, beam = 4, rounds = 2)
-        .collect().map(r => (id, r.getLong(0), r.getDouble(1))).toSeq
+      val single = reference(emb, "vec_id", "embedding", pairs, qvec(id),
+          k = 5, stride = 64, beam = 4, rounds = 2)
+        .rows.map { case (nid, d) => (id, nid, d.get) }
       assert(batch2(id).toSeq == single)
     }
-    // the router sends gate-sized batches down the driver point-probe path;
-    // the engine-side JOIN shape (the >beam scale path) must stay
-    // row-identical to it on the same queries
+    // one-query chunks and float query vectors give the rows of one chunk
+    // of double vectors
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2)).toSeq
-    val joinShape = GraphAnn.beamSearchTopKBatchJoin(emb, "vec_id",
-      "embedding", edges, queries, "qid", "qv", k = 10, stride = 64)
-    assert(rows(joinShape) ==
-      rows(GraphAnn.beamSearchTopKBatch(emb, "vec_id", "embedding", edges,
-        queries, "qid", "qv", k = 10, stride = 64)),
-      "driver-routed batch diverged from the join shape")
-    // a NULL query id must NOT be read as long 0 on the driver route (it
-    // would alias with a real query 0) — the router stays on the join shape
+    def batchOf(qs: org.apache.spark.sql.DataFrame) = GraphAnn.beamSearchTopKBatch(
+      emb, "vec_id", "embedding", edges, qs, "qid", "qv", k = 10, stride = 64)
+    val oneChunk = rows(batchOf(queries))
+    assert(rows(SizeRoute.withBounds(SizeRoute.GraphProbeQueries -> 1)(
+        batchOf(queries))) == oneChunk,
+      "one-query chunks diverged from one chunk")
+    assert(rows(batchOf(emb.where(col("vec_id").isin(qids: _*))
+        .select(col("vec_id").as("qid"), col("embedding").as("qv")))) == oneChunk,
+      "float query vectors diverged from double ones")
+    // a NULL query id must NOT be read as long 0 (it would alias with a
+    // real query 0), and a NULL vector has no probe: both are rejected
     val withNull = queries
       .select(when(col("qid") === 7L, lit(null).cast("long"))
         .otherwise(col("qid")).as("qid"), col("qv"))
-    def rowsN(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
-        r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(rowsN(GraphAnn.beamSearchTopKBatch(emb, "vec_id", "embedding",
-        edges, withNull, "qid", "qv", k = 10, stride = 64)) ==
-      rowsN(GraphAnn.beamSearchTopKBatchJoin(emb, "vec_id", "embedding",
-        edges, withNull, "qid", "qv", k = 10, stride = 64)),
-      "NULL-qid batch diverged from the join shape")
-    // two vectors under one query id would share one beam on the driver
-    // route and merge their visited sets on the join route: rejected
+    intercept[IllegalArgumentException](batchOf(withNull))
+    val nullVec = queries.select(col("qid"),
+      when(col("qid") === 7L, lit(null)).otherwise(col("qv")).as("qv"))
+    val e = intercept[IllegalArgumentException](batchOf(nullVec))
+    assert(e.getMessage.contains("query 7 "), e.getMessage)
+    // two vectors under one query id would share one beam: rejected
     val dupIds = queries.union(queries.where(col("qid") === 42L)
       .select(lit(7L).as("qid"), col("qv")))
-    intercept[IllegalArgumentException] {
-      GraphAnn.beamSearchTopKBatch(emb, "vec_id", "embedding", edges, dupIds,
-        "qid", "qv", k = 10, stride = 64)
-    }
+    val dup = intercept[IllegalArgumentException](batchOf(dupIds))
+    assert(dup.getMessage.contains(": 7 "), dup.getMessage)
   }
 
   test("tiered centroid layer: parity-class recall, bounded degree, geometry guard") {
@@ -1001,7 +1022,7 @@ class GraphAnnSpec extends SparkTestBase {
       degree = 8)
     val brute = bruteIds(qvec(3), 10).toSet
     val recalls = Seq((4, 1), (8, 2), (16, 3), (32, 4)).map { case (beam, rounds) =>
-      GraphAnn.beamSearchTopK(emb, "vec_id", "embedding", edges, qvec(3),
+      GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges, qvec(3),
           k = 10, stride = 64, beam = beam, rounds = rounds)
         .collect().map(_.getLong(0)).toSet.intersect(brute).size
     }
@@ -1014,8 +1035,8 @@ class GraphAnnSpec extends SparkTestBase {
     // clustered fixture (the case graph ANN exists for): the greedy walk
     // converges in a few rounds, so a deep cap must EARLY-EXIT with rows
     // identical to the capped run — `rounds` is a cap, not the cost. This
-    // is the HNSW termination rule, shared by both probe shapes and the
-    // SQL oracle's per-round frontier guard.
+    // is the HNSW termination rule, shared by the probe, the reference
+    // search and the SQL oracle's per-round frontier guard.
     def u(x: Long): Double =
       graft.util.Hashing.splitmix64(x).toDouble / Long.MaxValue.toDouble
     val rows = (0 until 512).map { i =>
@@ -1025,34 +1046,32 @@ class GraphAnnSpec extends SparkTestBase {
     val df = spark.createDataFrame(rows).toDF("id", "v")
     val edges = GraphAnn.buildEdges(df, "id", "v", stride = 64)
     val q = rows(137)._2
-    val capped = GraphAnn.pointProbeTopK(df, "id", "v", edges, q,
-      k = 10, stride = 64, rounds = 4).collect().toSeq
+    val capped = probed(GraphAnn.pointProbeTopK(df, "id", "v", edges, q,
+      k = 10, stride = 64, rounds = 4))
     val cappedRounds = GraphAnn.lastProbeRounds
-    val deep = GraphAnn.pointProbeTopK(df, "id", "v", edges, q,
-      k = 10, stride = 64, rounds = 16).collect().toSeq
+    val deep = probed(GraphAnn.pointProbeTopK(df, "id", "v", edges, q,
+      k = 10, stride = 64, rounds = 16))
     val deepRounds = GraphAnn.lastProbeRounds
     info(s"rounds executed: cap4=$cappedRounds cap16=$deepRounds")
     assert(deep == capped, "deep cap changed the converged result")
     assert(deepRounds < 16, "16-round cap never early-exited on clustered data")
-    // the join shape exits at the same round with the same rows
-    val joinDeep = GraphAnn.beamSearchTopK(df, "id", "v", edges, q,
-      k = 10, stride = 64, rounds = 16).collect().toSeq
-    assert(joinDeep == deep, "join shape diverged under early exit")
-    assert(GraphAnn.lastProbeRounds == deepRounds,
-      "join shape exited at a different round than the point probe")
+    // the reference search exits at the same round with the same rows
+    val refDeep = reference(df, "id", "v", edgePairs(edges), q, k = 10,
+      stride = 64, rounds = 16)
+    assert(refDeep.rows == deep, "reference diverged under early exit")
+    assert(refDeep.rounds == deepRounds,
+      "reference exited at a different round than the point probe")
   }
 
   test("materialized edges probe identically; geometry mismatch rejected") {
     val path = java.nio.file.Files.createTempDirectory("graph_mat").toString
     GraphAnn.materialize(emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, path)
     val edges = GraphAnn.fromMaterialized(spark, path, 64, GraphAnn.DefaultDegree)
-    val got = GraphAnn.beamSearchTopK(emb, "vec_id", "embedding", edges,
-        qvec(5), k = 10, stride = 64)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val want = GraphAnn.beamSearchTopK(emb, "vec_id", "embedding",
-        GraphAnn.buildEdges(emb, "vec_id", "embedding", 64),
-        qvec(5), k = 10, stride = 64)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val got = probed(GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", edges,
+      qvec(5), k = 10, stride = 64))
+    val want = reference(emb, "vec_id", "embedding",
+      edgePairs(GraphAnn.buildEdges(emb, "vec_id", "embedding", 64)),
+      qvec(5), k = 10, stride = 64).rows
     assert(got == want)
     intercept[IllegalArgumentException] {
       GraphAnn.fromMaterialized(spark, path, 64, 16)
@@ -1296,11 +1315,9 @@ class GraphAnnSpec extends SparkTestBase {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** A store probe (bucket-granular expansion) equals, row for row and in
-    * executed rounds, the plain point probe over the `built` edge frame on
-    * every query, and the join shape on the first. The join shape runs at
-    * two rounds: its plan string, built at every action, grows
-    * exponentially with the round count. All queries as one batch over the
-    * store give each query its point-probe rows.
+    * executed rounds, the plain point probe over the `built` edge frame and
+    * the [[ReferenceBeamSearch]] over its edges on every query. All queries
+    * as one batch over the store give each query its point-probe rows.
     */
   private def assertStoreProbes(what: String, df: org.apache.spark.sql.DataFrame,
       idCol: String, vecCol: String, store: org.apache.spark.sql.DataFrame,
@@ -1313,17 +1330,17 @@ class GraphAnnSpec extends SparkTestBase {
         stride, beam, rounds).collect().toSeq
       (rows, GraphAnn.lastProbeRounds)
     }
+    val pairs = edgePairs(built)
     val singles = queries.zipWithIndex.map { case (q, i) =>
       val (got, gotRounds) = probe(store, q, rounds)
       assert(got.nonEmpty, s"$what q$i: empty probe")
       assert((got, gotRounds) == probe(built, q, rounds),
         s"$what q$i: store probe diverged from the plain point probe")
+      val want = reference(df, idCol, vecCol, pairs, q, k, stride, beam, rounds)
+      assert((got.map(pair), gotRounds) == (want.rows, want.rounds),
+        s"$what q$i: store probe diverged from the reference")
       got
     }
-    val got = probe(store, queries.head, 2)._1
-    assert(got == GraphAnn.beamSearchTopK(df, idCol, vecCol, built,
-        queries.head, k, stride, beam, 2).collect().toSeq,
-      s"$what: store probe diverged from the join shape")
     val sp = spark
     import sp.implicits._
     val batch = GraphAnn.beamSearchTopKBatch(df, idCol, vecCol, store,
@@ -1414,6 +1431,37 @@ class GraphAnnSpec extends SparkTestBase {
       Seq(vecs(8), vecs(32), vecs(5), vecs(13)), 8, k = 20, beam = 6)
   }
 
+  test("concurrent probes on one session equal a serial run and leave its conf unchanged") {
+    val emb = this.emb
+    val p = tmpDir("graph_probe_concurrent")
+    GraphAnn.materialize(emb, "vec_id", "embedding", 16,
+      GraphAnn.DefaultDegree, p)
+    val store = GraphAnn.fromMaterialized(spark, p, 16, GraphAnn.DefaultDegree)
+    val sp = spark
+    import sp.implicits._
+    val ids = Seq(1L, 7L, 42L, 99L)
+    val vecs = ids.map(qvec)
+    val queries = ids.zip(vecs).map { case (id, v) => (id, v.toSeq) }.toDF("qid", "qv")
+    def run(t: Int) = (
+      GraphAnn.beamSearchTopKBatch(emb, "vec_id", "embedding", store, queries,
+          "qid", "qv", k = 10, stride = 16)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .sortBy(r => (r._1, r._2)).toSeq,
+      probed(GraphAnn.pointProbeTopK(emb, "vec_id", "embedding", store, vecs(t),
+        k = 10, stride = 16)))
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.adaptive.enabled",
+      "spark.sql.shuffle.partitions")
+    val confs = keys.map(spark.conf.get)
+    val serial = ids.indices.map(run)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val running = ids.indices.map(t =>
+        pool.submit(new java.util.concurrent.Callable[Any] { def call(): Any = run(t) }))
+      assert(running.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES)) == serial)
+    } finally pool.shutdown()
+    assert(keys.map(spark.conf.get) == confs)
+  }
+
   test("store probe runs at most one job per round plus the entry job") {
     // opened once: opening a parquet frame infers its schema in a job
     val emb = this.emb
@@ -1458,6 +1506,20 @@ class GraphAnnSpec extends SparkTestBase {
     val rounds = GraphAnn.lastProbeRounds
     assert(rounds >= 1 && jobs <= qids.size + rounds,
       s"batch: $jobs jobs in $rounds rounds")
+    // chunks of c queries: one entry job per chunk, then at most one job
+    // per round ([[GraphAnn.lastProbeRounds]] is the most any chunk ran)
+    for (c <- Seq(1, 2, 3)) {
+      val (_, jobs) = JobCount(spark.sparkContext) {
+        SizeRoute.withBounds(SizeRoute.GraphProbeQueries -> c) {
+          GraphAnn.beamSearchTopKBatch(emb, "vec_id", "embedding", store, queries,
+            "qid", "qv", k = 10, stride = 16, beam = 4).collect()
+        }
+      }
+      val rounds = GraphAnn.lastProbeRounds
+      val chunks = (qids.size + c - 1) / c
+      assert(rounds >= 1 && jobs <= chunks * (1 + rounds),
+        s"chunk $c: $jobs jobs in $chunks chunks of at most $rounds rounds")
+    }
   }
 }
 

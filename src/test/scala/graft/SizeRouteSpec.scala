@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalacheck.{Gen, Prop, Test}
 
-import graft.ops.{Centrality, Dedup, SizeRoute, Subword}
+import graft.ops.{Centrality, Dedup, GraphAnn, SizeRoute, Subword}
 import graft.ops.SizeRoute.Bound
 
 /** One differential over the size-route registry: for every registered
@@ -90,6 +90,25 @@ class SizeRouteSpec extends SparkTestBase {
         val df = sp.sparkContext.parallelize(texts, 2).toDF("text")
         val (out, jobs) = JobCount(sp.sparkContext)(Subword.bpeTrain(df, "text", 4))
         Run(out, jobs)
+      })
+    },
+    SizeRoute.GraphProbeQueries -> { seed =>
+      val sp = spark
+      import sp.implicits._
+      val rnd = new scala.util.Random(seed)
+      def vec = Seq.fill(8)(rnd.nextDouble() * 2 - 1)
+      val corpus = sp.sparkContext.parallelize((0L until 64L).map(_ -> vec), 2)
+        .toDF("id", "v")
+      val edges = GraphAnn.buildEdges(corpus, "id", "v", 8, 4).localCheckpoint()
+      val queries = (0 until 2 + rnd.nextInt(6)).map(i => (100L + i, vec))
+      // the chunk count shows in the entry jobs: one per chunk, and a
+      // zero-round probe runs no other job
+      def batch(rounds: Int): DataFrame = GraphAnn.beamSearchTopKBatch(corpus,
+        "id", "v", edges, queries.toDF("qid", "qv"), "qid", "qv", 5, 8, 4, rounds)
+      Fixture(queries.size, () => {
+        val out = batch(GraphAnn.DefaultRounds).collect().map(_.toSeq).toSet
+        val (_, entries) = JobCount(sp.sparkContext)(batch(0))
+        Run(out, entries > 1)
       })
     })
 

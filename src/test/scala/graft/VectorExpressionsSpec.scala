@@ -260,6 +260,70 @@ class VectorExpressionsSpec extends SparkTestBase {
     assert(topk(2) == topk(0))
   }
 
+  test("cosine_distances equals array_cosine_distance per query, interpreted and generated") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test}
+    type Vec = Option[Seq[Option[Double]]]
+    val elem: Gen[Option[Double]] = Gen.frequency(
+      12 -> Gen.choose(-2.0, 2.0).map(Some(_)), 2 -> Gen.const(Some(0.0)),
+      1 -> Gen.const(Some(Double.NaN)), 1 -> Gen.const(None))
+    def vec(dim: Int): Gen[Vec] =
+      Gen.frequency(1 -> Gen.const(None), 9 -> Gen.listOfN(dim, elem).map(Some(_)))
+    val cases = for {
+      dim <- Gen.choose(1, 5); m <- Gen.choose(0, 6)
+      v <- vec(dim); qs <- Gen.listOfN(m, vec(dim))
+    } yield (v, qs)
+    def catalyst(v: Vec, float: Boolean): ArrayData = v.map(xs =>
+      new GenericArrayData(xs.map(_.map[Any](x => if (float) x.toFloat else x).orNull).toArray[Any]))
+      .orNull
+    def doubles(a: ArrayData): Seq[Option[Double]] =
+      (0 until a.numElements()).map(i => if (a.isNullAt(i)) None else Some(a.getDouble(i)))
+    // bit-for-bit, NaN included
+    def bits(xs: Seq[Option[Double]]) = xs.map(_.map(java.lang.Double.doubleToRawLongBits))
+    for (float <- Seq(false, true); literal <- Seq(false, true)) {
+      val vt = ArrayType(if (float) FloatType else DoubleType, containsNull = true)
+      val qt = ArrayType(ArrayType(DoubleType, containsNull = true), containsNull = true)
+      val v = BoundReference(0, vt, nullable = true)
+      def queries(qs: ArrayData) =
+        if (literal) Literal(qs, qt) else BoundReference(1, qt, nullable = true)
+      val prop = Prop.forAllNoShrink(cases) { case (vv, qv) =>
+        val qs = new GenericArrayData(qv.map(catalyst(_, float = false)).toArray[Any])
+        val row = InternalRow(catalyst(vv, float), qs)
+        val e = CosineDistances(v, queries(qs))
+        val interpreted = Option(e.eval(row).asInstanceOf[ArrayData]).map(doubles)
+        val generated = {
+          val r = GenerateUnsafeProjection.generate(Seq(e)).apply(row)
+          if (r.isNullAt(0)) None else Some(doubles(r.getArray(0)))
+        }
+        val per = qv.indices.map(j => Option(CosineDistance(v,
+            Literal(qs.getArray(j), qt.elementType)).eval(row))
+          .map(_.asInstanceOf[Double]))
+        // a v holding a NULL element gives NULL, not an array of NULLs
+        val want = if (vv.isEmpty || vv.exists(_.contains(None))) None else Some(per)
+        assert(interpreted.map(bits) == want.map(bits), s"interpreted $interpreted != $want")
+        assert(generated.map(bits) == want.map(bits), s"generated $generated != $want")
+        true
+      }
+      val result = Test.check(
+        Test.Parameters.default.withMinSuccessfulTests(200).withWorkers(1), prop)
+      assert(result.passed, s"float=$float literal=$literal: ${result.status}")
+    }
+    // a query of another dimension raises on both paths
+    val dt = ArrayType(DoubleType)
+    def arr(xs: Any*) = new GenericArrayData(xs.toArray[Any])
+    val e = CosineDistances(BoundReference(0, dt, nullable = true),
+      Literal(arr(arr(1.0, 0.0), arr(1.0, 0.0, 0.0)), ArrayType(dt)))
+    val row = InternalRow(arr(1.0, 0.0))
+    val i = intercept[IllegalArgumentException](e.eval(row))
+    val g = intercept[IllegalArgumentException](
+      GenerateUnsafeProjection.generate(Seq(e)).apply(row))
+    assert(i.getMessage.contains("(2 vs 3)") && g.getMessage.contains("(2 vs 3)"), s"$i / $g")
+  }
+
   test("simhash: equal token arrays agree, empty array is 0, null is null") {
     graft.functions.registerAll(spark)
     val r = spark.sql(

@@ -893,10 +893,10 @@ object ScaleSmoke {
           System.nanoTime() - t0
         }.min / 1000000L
       }
-      // batched probe: ONE round loop serves 100 queries; wall should be
-      // ~flat in BOTH corpus size (state is beam-bounded) and query count
-      // (the loop's cost is fixed driver scheduling — SCALING.md quotes
-      // the 3/30/300-query ladder at 1×)
+      // batched probe: the point probe's driver loop serves the 100
+      // queries in chunks of SizeRoute(GraphProbeQueries), one entry job
+      // per chunk and at most one job per round (SCALING.md quotes the
+      // Q = 3 / 64 / 1024 A/B at 1×)
       timed("graph_batch100", k, nVec) { // wall millis as `out`
         val queries = emb.where(pmod(col("vec_id"), lit(97)) === lit(1))
           .limit(100)
