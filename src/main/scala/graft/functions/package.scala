@@ -153,7 +153,6 @@ package object functions {
     binaryBuilder("array_inner_product", DotProduct.apply),
     binaryBuilder("array_distance", L2Distance.apply),
     binaryBuilder("array_int8_cosine_distance", Int8CosineDistance.apply),
-    binaryBuilder("cosine_distances", CosineDistances.apply),
     {
       val builder: Seq[Expression] => Expression = {
         case Seq(v, cids, cvecs) => CosineArgmin(v, cids, cvecs)

@@ -685,11 +685,11 @@ object GraphAnn {
     * [[pointProbeTopK]] rows — the same loop, [[probeLoop]], run over
     * chunks of queries. The query table is collected (one job, none for a
     * driver-local table) and probed `SizeRoute(GraphProbeQueries)` queries
-    * at a time, each chunk one driver loop: ONE entry job
-    * scores every centroid row against every chunk query, then per round ≤
-    * 1 job on a [[fromMaterialized]] store (plus one unpruned scan in a
-    * round that expands a degenerate centroid) or 2 jobs on a plain
-    * `(src, dst)` frame, REGARDLESS of the chunk's size. A query that
+    * at a time, each chunk one driver loop: ONE entry job scores every
+    * centroid row against every chunk query, then per round ≤ 1 job on a
+    * [[fromMaterialized]] store (plus one unpruned scan in a round that
+    * expands a degenerate centroid) or 2 jobs on a plain `(src, dst)`
+    * frame, REGARDLESS of the chunk's size. A query that
     * [[converged]] stops contributing frontier nodes while the rest keep
     * walking. [[lastProbeRounds]] reports the most rounds any chunk ran.
     *
@@ -704,8 +704,8 @@ object GraphAnn {
     * (dist asc NULLS LAST, id asc) — the [[AnnIndex.probeTopKBatch]] shape.
     * Query vectors of any numeric array type are cast to `array<double>`.
     * A NULL query id, a NULL query vector or element, or a repeated query
-    * id raises an `IllegalArgumentException` naming it. `edges` must be built over the
-    * same corpus/stride.
+    * id raises an `IllegalArgumentException` naming it. `edges` must be
+    * built over the same corpus/stride.
     *
     * EXECUTION CONTRACT: this call is EAGER, not a lazy plan builder. It
     * runs every probe job at call time and returns a driver-local frame;
@@ -744,144 +744,6 @@ object GraphAnn {
       }.toVector
     probeRounds.set(mostRounds)
     localFrame(df, out, qidCol, "rank", idCol)
-  }
-
-  /** Serializes every graft conf-override window on a session (probe loops
-    * clamp shuffle partitions / disable AQE+codegen for their driver-sized
-    * micro-jobs). The monitor makes overlapping graft callers impossible —
-    * without it, two concurrent probes could interleave set/restore and
-    * leave the session with the wrong persistent conf after an exception.
-    * The overrides are still SESSION-visible for the duration: a concurrent
-    * NON-graft query on the same SparkSession (parallel bench, streaming
-    * ingest) that plans inside the window runs with them; callers needing
-    * full isolation should probe on their own SparkSession. Every body run
-    * here materializes its result (localCheckpoint / driver state) before
-    * returning, so nothing escapes the window lazily.
-    */
-  private val confWindowLock = new Object
-  private def withSessionConfs[A](spark: org.apache.spark.sql.SparkSession,
-      kvs: (String, String)*)(body: => A): A = confWindowLock.synchronized {
-    val prev = kvs.map { case (key, _) => key -> spark.conf.get(key) }
-    try { kvs.foreach { case (key, v) => spark.conf.set(key, v) }; body }
-    finally prev.foreach { case (key, v) => spark.conf.set(key, v) }
-  }
-
-  /** The join-shape batch probe — all per-round state in (queries × beam)-
-    * bounded engine frames; the scale path for large query tables (see
-    * [[beamSearchTopKBatch]], which routes here beyond `beam` queries).
-    */
-  private[graft] def beamSearchTopKBatchJoin(df: DataFrame, idCol: String,
-      vecCol: String, edges: DataFrame, queries: DataFrame, qidCol: String,
-      qvecCol: String, k: Int, stride: Int, beam: Int = DefaultBeam,
-      rounds: Int = DefaultRounds): DataFrame = {
-    val q = broadcast(queries.select(col(qidCol).cast("long").as("__qid"),
-      col(qvecCol).as("__qv")))
-    val vecs = df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
-    val wq = Window.partitionBy(col("__qid"))
-      .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
-    // Per-round state is localCheckpoint'd, not persisted: every round's
-    // frames reference the previous round's visited AND expanded, so
-    // without lineage truncation the logical plan compounds per round
-    // (same growth `Dedup.components` truncates) — at DefaultRounds=4 the
-    // un-truncated tree already OOMs the driver just STRINGIFYING the
-    // plan. Eager localCheckpoint bounds every round's plan at depth one;
-    // superseded checkpoint blocks are released by the ContextCleaner.
-    // `expanded` needs NO checkpoint of its own: it is a union of ≤rounds
-    // already-checkpointed frontiers — depth-one lineage by construction —
-    // which saves one materializing job per round.
-    //
-    // Every state frame is (queries × beam)-bounded, so the loop's
-    // shuffles (windows, anti-joins, the min-dedup groupBy) run with a
-    // CLAMPED partition count: at the session default (e.g. 200, or 32 in
-    // the bench) each tiny state shuffle pays task-scheduling overhead
-    // that dominates the probe wall-clock in local mode. The corpus-sized
-    // work (edge/vector scans) is broadcast-join probed, so its scan
-    // parallelism comes from the file splits, not this conf.
-    val spark = df.sparkSession
-    val clamped =
-      math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, 8).toString
-    // AQE off for the loop: every round's state frames are already
-    // (queries x beam)-bounded with a clamped partition count, so AQE
-    // can only re-plan trivial shuffles — but each re-plan is an extra
-    // driver round-trip of query-stage jobs PER ROUND, and the loop's
-    // wall-clock is pure scheduling at gate size. Restored (and serialized
-    // against concurrent graft probes) by withSessionConfs.
-    withSessionConfs(spark,
-        "spark.sql.shuffle.partitions" -> clamped,
-        "spark.sql.adaptive.enabled" -> "false") {
-      var round = 0
-      // entry: per query, the beam nearest centroids (the cross product is
-      // (n/stride × queries) rows against the broadcast query table)
-      var visited = df.where(pmod(col(idCol), lit(stride)) === 0)
-        .select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
-        .crossJoin(q)
-        .select(col("__qid"), col("__nid"),
-          array_cosine_distance(col("__nv"), col("__qv")).as("__d"))
-        .withColumn("__rn", row_number().over(wq))
-        .where(col("__rn") <= beam).drop("__rn")
-        .localCheckpoint()
-      var frontiers = Vector.empty[DataFrame] // checkpointed, per round
-      def expanded: DataFrame =
-        if (frontiers.isEmpty) null else frontiers.reduce(_ union _)
-      var done = rounds == 0
-      while (!done) {
-        round += 1
-        val exp = expanded
-        // Convergence gate + frontier in ONE pass (round 1 always runs —
-        // expanded empty). A query stays active while some current-top-k
-        // node is unexpanded; its frontier is the best `beam` unexpanded
-        // nodes. Both derive from window flags over the SAME per-query
-        // partitioning — one broadcast left-join against the expanded set
-        // and one sort, instead of the semi/anti-join cascade whose
-        // per-round broadcast and AQE-stage jobs dominate wall-clock in
-        // local mode (measured 68 driver-scheduled jobs for 4 rounds).
-        val marked =
-          if (exp == null) visited.withColumn("__x", lit(null).cast("int"))
-          // frontiers are disjoint by construction (each excludes the
-          // union of its predecessors), so the expanded set is duplicate-
-          // free and the left join cannot fan out
-          else visited.join(broadcast(exp.withColumn("__x", lit(1))),
-            Seq("__qid", "__nid"), "left")
-        val wqAll = Window.partitionBy(col("__qid"))
-          .orderBy(col("__d").asc_nulls_last, col("__nid").asc)
-        val frontier = marked
-          .withColumn("__rk", row_number().over(wqAll))
-          .withColumn("__live", max(when(col("__rk") <= k && col("__x").isNull, 1)
-            .otherwise(0)).over(Window.partitionBy(col("__qid"))))
-          .where(col("__x").isNull && col("__live") === 1)
-          .withColumn("__rn", row_number().over(wqAll))
-          .where(col("__rn") <= beam)
-          .select(col("__qid"), col("__nid"))
-          .localCheckpoint()
-        if (frontier.isEmpty) { // all queries converged (or stalled): stop
-          done = true
-        } else {
-          frontiers :+= frontier
-          val reached = edges
-            .join(broadcast(frontier.select(col("__qid").as("__fq"),
-              col("__nid").as("__fid"))), col("src") === col("__fid"))
-            .select(col("__fq").as("__qid"), col("dst").as("__nid")).distinct()
-          val scored = vecs
-            .join(broadcast(reached), Seq("__nid"))
-            .join(q, Seq("__qid"))
-            .select(col("__qid"), col("__nid"),
-              array_cosine_distance(col("__nv"), col("__qv")).as("__d"))
-          visited = visited.union(scored)
-            .groupBy(col("__qid"), col("__nid")).agg(min(col("__d")).as("__d"))
-            .localCheckpoint()
-          if (round >= rounds) done = true
-        }
-      }
-      probeRounds.set(round)
-      visited
-        .withColumn("__rn", row_number().over(wq))
-        .where(col("__rn") <= k)
-        .select(col("__qid").as(qidCol), col("__rn").cast("long").as("rank"),
-          col("__nid").as(idCol), col("__d").as("cos_dist"))
-        // the caller consumes this OUTSIDE the conf clamp — pin the final
-        // ranked frame so its window also runs on the clamped state size
-        .localCheckpoint()
-    }
   }
 
   /** Single-query point probe: [[probeLoop]] run with one query. The beam
