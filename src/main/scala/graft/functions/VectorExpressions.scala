@@ -684,8 +684,9 @@ object TopKSelector {
   * [[DistanceScorer]], which reads `v` once and scores each query in a loop
   * over primitive arrays, in [[VectorLoop.accumulate]]'s order of
   * operations, so each distance is bit-identical to the per-pair loop at a
-  * fraction of its cost (measured: 4.2M distances of 64 dimensions take
-  * 0.65–0.9 s as 256 `array_cosine_distance` columns on 4 cores).
+  * fraction of its cost: as 256 `array_cosine_distance` columns, 4.2M
+  * distances of 64 dimensions took 1.1–1.2 s on 4 cores, most of a graph
+  * probe's wall (`plans/r22/graph_probe_ab.md`).
   */
 case class CosineDistances(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

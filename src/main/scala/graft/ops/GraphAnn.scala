@@ -794,6 +794,12 @@ object GraphAnn {
   private def distAt(ds: Array[Double], i: Int): java.lang.Double =
     if (ds == null) null else ds(i)
 
+  // derived once: encoder derivation reflects on the type at every call
+  private lazy val ScoredIds =
+    org.apache.spark.sql.Encoders.product[(Long, Array[Double])]
+  private lazy val ScoredEdges =
+    org.apache.spark.sql.Encoders.product[(Long, Long, Option[Long], Array[Double])]
+
   /** The probe's ranking key: (distance asc NULLS LAST, id asc), the
     * oracle's sort. java.lang.Double.compare is NaN-largest like Spark's
     * ordering, and cos_dist never produces -0.0 (1 - 1 = +0.0), so exact
@@ -822,8 +828,6 @@ object GraphAnn {
       edges: DataFrame, queries: Seq[Seq[Double]], k: Int, stride: Int,
       beam: Int, rounds: Int): IndexedSeq[Seq[(Long, java.lang.Double)]] = {
     import scala.collection.mutable
-    val sp = df.sparkSession
-    import sp.implicits._
     val qs = typedLit(queries)
     val visited = queries.map(_ => mutable.HashMap.empty[Long, java.lang.Double])
       .toIndexedSeq
@@ -832,7 +836,7 @@ object GraphAnn {
       visited(i).toSeq.sortBy { case (id, d) => rankKey(id, d) }
     val cents = df.where(pmod(col(idCol), lit(stride)) === 0)
       .select(col(idCol).cast("long"), cosine_distances(col(vecCol), qs))
-      .as[(Long, Array[Double])].collect()
+      .as(ScoredIds).collect()
     for (i <- queries.indices)
       cents.map { case (id, ds) => (id, distAt(ds, i)) }
         .sortBy { case (id, d) => rankKey(id, d) }.take(beam)
@@ -852,7 +856,7 @@ object GraphAnn {
           df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
             .where(col("__nid").isin(active.flatMap(reached(_)).distinct: _*))
             .select(col("__nid"), cosine_distances(col("__nv"), qs))
-            .as[(Long, Array[Double])].collect().foreach { case (nid, ds) =>
+            .as(ScoredIds).collect().foreach { case (nid, ds) =>
               for (i <- active if reached(i)(nid)) visited(i)(nid) = distAt(ds, i)
             }
       }
@@ -894,8 +898,6 @@ object GraphAnn {
       visited: IndexedSeq[scala.collection.mutable.HashMap[Long, java.lang.Double]])
       : IndexedSeq[Seq[Long]] => Unit = {
     import scala.collection.mutable
-    val sp = edges.sparkSession
-    import sp.implicits._
     // src -> (dst, per-query distances, dst's bucket — None on a
     // centroid-level edge)
     val out = mutable.HashMap.empty[Long,
@@ -907,7 +909,7 @@ object GraphAnn {
       edges.where(cond)
         .select(col("src"), col("dst"), col(BucketCol),
           cosine_distances(col(DstVecCol), qs))
-        .as[(Long, Long, Option[Long], Array[Double])].collect()
+        .as(ScoredEdges).collect()
         .foreach { case (src, dst, b, ds) =>
           if (b.isDefined) held += src
           out.getOrElseUpdate(src, mutable.ArrayBuffer.empty) += ((dst, ds, b))
