@@ -814,9 +814,9 @@ object GraphAnn {
     * queries (bit-identical to `array_cosine_distance`). Entry: ONE job
     * scores every centroid row (an id divisible by `stride`), and each
     * query keeps its `beam` best by [[rankKey]]. Each round takes every
-    * query's frontier — its best `beam` visited-but-
-    * unexpanded nodes, or none once the query has [[converged]] — and
-    * expands their union in one step, routed on the edge frame's columns:
+    * query's frontier — its best `beam` visited-but-unexpanded nodes, or
+    * none once the query has [[converged]] — and expands their union in
+    * one step, routed on the edge frame's columns:
     * [[bucketExpansion]] for a [[fromMaterialized]] store (`__bucket`
     * present); for a plain `(src, dst)` frame, one edge read of the union
     * frontier, then one corpus read of the newly reached ids. A node is
