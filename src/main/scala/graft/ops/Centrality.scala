@@ -44,7 +44,7 @@ object Centrality {
     * non-deterministic plans.
     *
     * Size route: a long-id adjacency of at most [[SizeRoute.PageRankRows]]
-    * rows runs the rank loop on the driver ([[SizeRoute.driverGate]]),
+    * rows runs the rank loop on the driver ([[SizeRoute.driverRows]]),
     * bit-identical by construction; CentralitySpec holds the differential.
     *
     * @param pairs  unique undirected pairs, `aCol < bCol` per row (the
@@ -100,10 +100,11 @@ object Centrality {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val (adj, persisted) = FixpointPin.pinScoped(edges.join(deg, "src"))
     // size route (Scaladoc above): the pinned adjacency is consumed every
-    // round anyway — the gate's count materializes it once, and a small
-    // graph replays the integer loop on the driver
-    if (SizeRoute.driverGate(adj, SizeRoute.PageRankRows)) {
-      val rows = adj.select(col("src"), col("dst"), col("deg")).collect()
+    // round anyway — the route's one job materializes it, and a small
+    // graph comes back with it to replay the integer loop on the driver
+    val small = SizeRoute.driverRows(adj, SizeRoute.PageRankRows)
+    if (small.isDefined) {
+      val rows = small.get
       if (persisted) FixpointPin.retire(adj)
       var cur = new java.util.HashMap[Long, Long]()
       rows.foreach(r => cur.put(r.getLong(0), unit))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SparkShims
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.simhash
@@ -22,8 +23,8 @@ import graft.functions.simhash
   * oracle query; at production scale substitute xxhash64 — the machinery is
   * hash-agnostic.
   *
-  * Caching note: the multi-consumer pipelines (minhash, jaccard, simhash)
-  * persist shared intermediates (MEMORY_AND_DISK) and hand the lineage to
+  * Caching note: the multi-consumer pipelines (minhash, simhash) persist
+  * shared intermediates (MEMORY_AND_DISK) and hand the lineage to
   * the returned plan — the blocks live until the session ends or the caller
   * runs `spark.catalog.clearCache()`. In a long-lived session invoking
   * these repeatedly, clear between batches.
@@ -127,18 +128,20 @@ object Dedup {
     * doc's distinct shingles, equi-join on shingle (any pair with J > 0
     * shares one — exact, no recall loss, no cartesian), count matches per
     * pair, filter J >= tau. Set sizes travel with the exploded rows (no
-    * back-joins), pairs failing the length bound `tau*|A| <= |B| <= |A|/tau`
-    * are cut before aggregation, and the shingle sets are persisted so both
-    * join sides share one computation.
+    * back-joins), and pairs failing the length bound
+    * `tau*|A| <= |B| <= |A|/tau` are cut before aggregation. The postings
+    * shuffle ONCE on the shingle and both join sides read that one
+    * exchange (exchange reuse), so nothing is persisted: the plan leaves
+    * no cache entry behind.
     */
   def jaccardJoin(df: DataFrame, idCol: String, shingleCol: String,
       tau: Double): DataFrame = {
-    val base = df
+    val ex = df
       .select(col(idCol).as("__id"), array_distinct(col(shingleCol)).as("__arr"))
       .withColumn("__sz", size(col("__arr")).cast("long"))
       .where(col("__sz") > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ex = base.select(col("__id"), col("__sz"), explode(col("__arr")).as("__sh"))
+      .select(col("__id"), col("__sz"), explode(col("__arr")).as("__sh"))
+      .repartition(col("__sh"))
     val l = ex.select(col("__sh"), col("__id").as("a"), col("__sz").as("size_a"))
     val r = ex.select(col("__sh"), col("__id").as("b"), col("__sz").as("size_b"))
     l.join(r, "__sh")
@@ -421,8 +424,9 @@ object Dedup {
     *
     * Size route: a long-id edge set of at most
     * [[SizeRoute.GraphLabelEdges]] (symmetric) edges is labeled by a driver
-    * union-find instead of the distributed fixpoint ([[SizeRoute.driverGate]]);
-    * identical min-id labeling, differential-tested.
+    * union-find instead of the distributed fixpoint ([[SizeRoute.driverRows]]:
+    * one job pins, sizes and collects it); identical min-id labeling,
+    * differential-tested.
     *
     * @param checkpointDir when set, per-round lineage truncation uses
     *   RELIABLE `checkpoint()` into this directory (survives executor loss —
@@ -459,10 +463,13 @@ object Dedup {
     // size route (Scaladoc above). The symmetric edge view double-counts
     // each pair; union-find is immune to the duplication, and the bound
     // applies to what is actually collected.
-    if (SizeRoute.driverGate(edges, SizeRoute.GraphLabelEdges)) {
-      val out = driverLabels(edges).select(col("__mid").as(idCol), col("component"))
-      edges.unpersist()
-      return out
+    SizeRoute.driverRows(edges, SizeRoute.GraphLabelEdges) match {
+      case Some(rows) =>
+        val out = driverLabels(edges.sparkSession, rows)
+          .select(col("__mid").as(idCol), col("component"))
+        edges.unpersist()
+        return out
+      case None =>
     }
     var labels = checkpoint(
       edges.select(col("src").as("__id")).distinct()
@@ -526,18 +533,31 @@ object Dedup {
     * graph (new pairs + anchors) is batch-sized, its per-family minimum
     * over {touched ids, old canonical ids} equals the true minimum over
     * every member of every merged cluster, and untouched clusters never
-    * enter the computation at all. The only corpus-sized step is the final
-    * one-pass relabel join against `labels` — the unavoidable state write,
-    * with an affected-clusters-sized (AQE-broadcastable) relabel map.
+    * enter the computation at all.
+    *
+    * The new pairs are pinned once and every consumer reads that pin. Up
+    * to [[SizeRoute.GraphLabelEdges]] pairs ([[SizeRoute.driverRows]]) the
+    * merge runs in batch-sized steps: one job pins and collects the
+    * pairs, one narrow pass over `labels` against a broadcast
+    * LocalRelation of the touched ids reads their stored labels, the
+    * driver builds the anchors, the union-find, the relabel map and the
+    * fresh nodes' rows, and ONE narrow pass writes the new labeling
+    * (`labels` ⋈ broadcast relabel map, ∪ the fresh rows). A
+    * [[graft.streaming.CorpusIngest.clusterBatch]] epoch of 40 docs runs
+    * at most 6 jobs this way (CorpusIngestSpec holds the budget). Above
+    * the bound the micro graph is labeled distributed
+    * ([[labelMicroGraph]]) and the relabel joins run as shuffled joins.
     *
     * Output: `(idCol, component)` for every node in `labels` or
     * `newPairs`, identical row-for-row to [[components]] over the union of
-    * the old and new pair sets (DedupSpec asserts equality on randomized
-    * merge topologies). The returned frame is EAGERLY materialized
-    * (localCheckpoint) so every internal cache is released before return —
-    * the continuous `clusteredIngest` path calls this once per micro-batch
-    * and a per-epoch CacheManager leak would grow for the process
-    * lifetime. Callers therefore need no checkpoint of their own.
+    * the old and new pair sets when `labels` is such a labeling (DedupSpec
+    * asserts equality on randomized merge topologies). The returned frame
+    * is EAGERLY materialized (localCheckpoint) so every internal cache is
+    * released before return — the continuous `clusteredIngest` path calls
+    * this once per micro-batch and a per-epoch CacheManager leak would
+    * grow for the process lifetime. Callers therefore need no checkpoint
+    * of their own; a pinned `labels` (such as this method's own output) is
+    * read in place, never copied.
     */
   def incrementalComponents(labels: DataFrame, idCol: String,
       newPairs: DataFrame, maxIters: Int = 25,
@@ -553,68 +573,92 @@ object Dedup {
 
   /** The lazy merge plan plus the internal caches backing it — the public
     * entrypoint materializes the plan and releases the caches; PlanSpec
-    * asserts the plan SHAPE here (micro labeling enters as a bounded
-    * LocalRelation; the relabel/fresh joins are the only label-state
-    * passes). Callers of this variant own the returned caches.
+    * asserts the plan SHAPE here (the driver-built relabel map and fresh
+    * rows enter as bounded LocalRelations; the relabel join is the only
+    * label-state pass). Callers of this variant own the returned caches.
     */
   private[graft] def incrementalComponentsPlan(labels: DataFrame, idCol: String,
       newPairs: DataFrame, maxIters: Int = 25,
       checkpointDir: Option[String] = None): (DataFrame, Seq[DataFrame]) = {
     val lab = labels.select(col(idCol).as("__oid"), col("component").as("__ocomp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val np = newPairs.select(col("a"), col("b"))
-    val touched = np.select(col("a").as("__oid"))
-      .unionAll(np.select(col("b").as("__oid"))).distinct()
-    // old state enters ONLY through touched members: one anchor edge to
-    // the cluster's canonical node stands in for the whole old cluster
-    val anchors = lab.join(touched, Seq("__oid"))
-      .where(col("__oid") =!= col("__ocomp"))
-      .select(col("__oid").as("a"), col("__ocomp").as("b"))
-    // The micro graph is batch-sized BY CONSTRUCTION (new pairs + one
-    // anchor per touched member — never corpus-sized), so it is labeled
-    // through the size route of [[labelMicroGraph]].
-    val microEdges = pinMicroEdges(np.unionAll(anchors), checkpointDir)
-    // no persist on micro: the driver branch is a LocalRelation and the
-    // star branch's labels sit on the fixpoint's final checkpoint — both
-    // of its two consumers below re-derive from pinned blocks
-    val micro = labelMicroGraph(microEdges, maxIters, checkpointDir)
-    // affected old clusters: canonical id -> merged (global-min) label
-    val relabel = micro.join(
-        lab.select(col("__ocomp").as("__mid")).distinct(), Seq("__mid"))
-      .select(col("__mid").as("__ocomp"), col("component").as("__merged"))
-    val updatedOld = lab.join(relabel, Seq("__ocomp"), "left")
-      .select(col("__oid").as(idCol),
-        coalesce(col("__merged"), col("__ocomp")).as("component"))
-    // nodes the batch introduced (not in the at-rest labeling)
-    val fresh = micro
-      .join(lab.select(col("__oid").as("__mid")), Seq("__mid"), "left_anti")
-      .select(col("__mid").as(idCol), col("component"))
-    (updatedOld.unionAll(fresh), Seq(microEdges, lab))
+    val np = pinMicroEdges(newPairs.select(col("a"), col("b")), checkpointDir)
+    SizeRoute.driverRows(np, SizeRoute.GraphLabelEdges) match {
+      case Some(pairs) => (driverMerge(lab, idCol, pairs), Seq(np))
+      case None =>
+        val labPin = lab.persist(StorageLevel.MEMORY_AND_DISK)
+        val touched = np.select(col("a").as("__oid"))
+          .unionAll(np.select(col("b").as("__oid"))).distinct()
+        // old state enters ONLY through touched members: one anchor edge to
+        // the cluster's canonical node stands in for the whole old cluster
+        val anchors = labPin.join(touched, Seq("__oid"))
+          .where(col("__oid") =!= col("__ocomp"))
+          .select(col("__oid").as("a"), col("__ocomp").as("b"))
+        val microEdges = pinMicroEdges(np.unionAll(anchors), checkpointDir)
+        // no persist on micro: the star labels sit on the fixpoint's final
+        // checkpoint — both of its two consumers below re-derive from it
+        val micro = labelMicroGraph(microEdges, maxIters, checkpointDir)
+        // affected old clusters: canonical id -> merged (global-min) label
+        val relabel = micro.join(
+            labPin.select(col("__ocomp").as("__mid")).distinct(), Seq("__mid"))
+          .select(col("__mid").as("__ocomp"), col("component").as("__merged"))
+        val updatedOld = labPin.join(relabel, Seq("__ocomp"), "left")
+          .select(col("__oid").as(idCol),
+            coalesce(col("__merged"), col("__ocomp")).as("component"))
+        // nodes the batch introduced (not in the at-rest labeling)
+        val fresh = micro
+          .join(labPin.select(col("__oid").as("__mid")), Seq("__mid"), "left_anti")
+          .select(col("__mid").as(idCol), col("component"))
+        (updatedOld.unionAll(fresh), Seq(microEdges, labPin, np))
+    }
   }
 
-  /** Size-routed labeling of a BOUNDED (batch-neighborhood-sized) micro
-    * pair graph — the shared engine under [[incrementalComponents]]'
-    * merge, [[deleteFromComponents]]' split recompute and
-    * [[embedComponents]]' representative graph. Through
-    * [[SizeRoute.driverGate]] at [[SizeRoute.GraphLabelEdges]] a driver
-    * union-find labels the graph in one collect; above, distributed star
-    * contraction (O(log n) rounds — bridge batches daisy-chain canonicals
-    * into long paths, adversarial for plain label propagation even when
-    * the batch is small). Identical min-id labeling either way. `microEdges` must be two same-typed columns and already
-    * PINNED (persist/checkpoint). Output: (__mid, component) for every
-    * node appearing in an edge.
+  /** The driver route of [[incrementalComponentsPlan]] over the collected
+    * new pairs: the touched members' stored `(id, component)` rows come
+    * from one narrow pass over `lab` (a broadcast LocalRelation of touched
+    * ids, not a literal list in the plan), the union-find over pairs +
+    * anchors runs here, and the plan returned is the one narrow write pass.
+    * An old canonical id is always a member of its own cluster in a
+    * [[components]] labeling, so only touched ids can be fresh.
     */
-  private[graft] def labelMicroGraph(microEdges: DataFrame, maxIters: Int,
-      checkpointDir: Option[String]): DataFrame =
-    if (SizeRoute.driverGate(microEdges, SizeRoute.GraphLabelEdges))
-      driverLabels(microEdges)
-    else componentsStar(microEdges, "__mid", maxIters, checkpointDir)
+  private def driverMerge(lab: DataFrame, idCol: String,
+      pairs: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val spark = lab.sparkSession
+    val kept = lab.select(col("__oid").as(idCol), col("__ocomp").as("component"))
+    val uf = new MinUnionFind
+    pairs.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+    val touched = uf.nodes
+    if (touched.isEmpty) return kept
+    val stored = lab.join(broadcast(longs(spark, touched, "__oid")), "__oid")
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    stored.foreach { case (m, c) => uf.union(m, c) }
+    val relabel = stored.map(_._2).distinct.map(c => (c, uf.find(c)))
+      .filter { case (c, m) => c != m }
+    val storedIds = stored.map(_._1).toSet
+    val fresh = touched.filterNot(storedIds).map(x => (x, uf.find(x)))
+    val updated =
+      if (relabel.isEmpty) kept
+      else lab.join(broadcast(spark.createDataFrame(relabel.toSeq)
+          .toDF("__ocomp", "__merged")), Seq("__ocomp"), "left")
+        .select(col("__oid").as(idCol),
+          coalesce(col("__merged"), col("__ocomp")).as("component"))
+    narrowUnion(updated, spark.createDataFrame(fresh.toSeq).toDF(idCol, "component"))
+  }
 
-  /** Driver union-find over a collected long edge set: (__mid, component =
-    * min id of the node's component) for every node appearing in an edge.
+  /** `big ∪ small` coalesced to the default parallelism: a label state
+    * rewritten every epoch must not gain the small side's partitions each
+    * time, and a coalesce keeps the write one narrow pass.
     */
-  private def driverLabels(edges: DataFrame): DataFrame = {
-    val parent = new java.util.HashMap[Long, Long]()
+  private def narrowUnion(big: DataFrame, small: DataFrame): DataFrame =
+    big.unionAll(small).coalesce(big.sparkSession.sparkContext.defaultParallelism)
+
+  /** A one-column long LocalRelation. */
+  private def longs(spark: org.apache.spark.sql.SparkSession, xs: Iterable[Long],
+      name: String): DataFrame =
+    spark.createDataFrame(xs.toSeq.map(Tuple1(_))).toDF(name)
+
+  /** Union-find over long ids whose roots are component minima. */
+  private final class MinUnionFind {
+    private val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
       while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
@@ -625,34 +669,67 @@ object Dedup {
       parent.putIfAbsent(r, r)
       r
     }
-    edges.collect().foreach { row =>
-      val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
     }
-    import scala.jdk.CollectionConverters._
-    // snapshot before mapping: find() path-compresses (value writes on
-    // existing keys only — roots were inserted during edge processing)
-    val keys = parent.keySet().asScala.toVector
-    val rows = keys.map(x => (x, find(x)))
-    edges.sparkSession.createDataFrame(rows).toDF("__mid", "component")
+    /** Every id seen so far. */
+    def nodes: Vector[Long] = {
+      import scala.jdk.CollectionConverters._
+      parent.keySet().asScala.toVector
+    }
   }
 
-  /** Pin a micro edge set for its two consumers (the size gate's count and
-    * the labeling — don't re-pay the upstream join), keeping the
-    * fixpoint's nested self-joins off the composite upstream lineage. The
-    * local branch persists so the gate's count both materializes the cache
-    * and sizes the route in ONE job (a localCheckpoint would spend a
-    * separate job on materialization first — one extra driver-blocking
-    * job per streaming epoch); the reliable branch keeps checkpoint() for
-    * executor-loss tolerance on long cluster jobs.
+  /** Size-routed labeling of a BOUNDED (batch-neighborhood-sized) micro
+    * pair graph — the shared engine under [[incrementalComponents]]'
+    * distributed merge, [[deleteFromComponents]]' split recompute and
+    * [[embedComponents]]' representative graph. Through
+    * [[SizeRoute.driverRows]] at [[SizeRoute.GraphLabelEdges]] a driver
+    * union-find labels the graph from one collect; above, distributed star
+    * contraction (O(log n) rounds — bridge batches daisy-chain canonicals
+    * into long paths, adversarial for plain label propagation even when
+    * the batch is small). Identical min-id labeling either way.
+    * `microEdges` must be two same-typed columns and already PINNED
+    * ([[pinMicroEdges]]). Output: (__mid, component) for every node
+    * appearing in an edge.
+    */
+  private[graft] def labelMicroGraph(microEdges: DataFrame, maxIters: Int,
+      checkpointDir: Option[String]): DataFrame =
+    SizeRoute.driverRows(microEdges, SizeRoute.GraphLabelEdges) match {
+      case Some(rows) => driverLabels(microEdges.sparkSession, rows)
+      case None => componentsStar(microEdges, "__mid", maxIters, checkpointDir)
+    }
+
+  /** Driver union-find over collected long edge rows: (__mid, component =
+    * min id of the node's component) for every node appearing in an edge.
+    */
+  private def driverLabels(spark: org.apache.spark.sql.SparkSession,
+      edges: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val uf = new MinUnionFind
+    edges.foreach(row => uf.union(row.getLong(0), row.getLong(1)))
+    spark.createDataFrame(uf.nodes.map(x => (x, uf.find(x)))).toDF("__mid", "component")
+  }
+
+  /** Pin a micro edge set for its consumers (the size route and the
+    * labeling — don't re-pay the upstream join), keeping the fixpoint's
+    * nested self-joins off the composite upstream lineage. The local
+    * branch persists so the route's one job both materializes the cache
+    * and collects or sizes it; the reliable branch keeps checkpoint() for
+    * executor-loss tolerance on long cluster jobs. A plan over driver
+    * rows only (LocalRelation leaves) is not pinned: re-reading it runs
+    * no job.
     */
   private def pinMicroEdges(microPlan: DataFrame,
-      checkpointDir: Option[String]): DataFrame = checkpointDir match {
-    case Some(dir) =>
-      microPlan.sparkSession.sparkContext.setCheckpointDir(dir)
-      microPlan.checkpoint()
-    case None => microPlan.persist(StorageLevel.MEMORY_AND_DISK)
-  }
+      checkpointDir: Option[String]): DataFrame =
+    if (microPlan.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+      microPlan
+    else checkpointDir match {
+      case Some(dir) =>
+        microPlan.sparkSession.sparkContext.setCheckpointDir(dir)
+        microPlan.checkpoint()
+      case None => microPlan.persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Per-round lineage truncation of the distributed fixpoints: reliable
     * `checkpoint()` into `checkpointDir` when set, else `localCheckpoint()`.
@@ -676,18 +753,29 @@ object Dedup {
     * surviving pair set is closed within them (a qualifying pair between
     * two docs puts them in the same component by definition, so no
     * surviving pair can leave a touched component). The recompute is
-    * therefore exact and delete-neighborhood-sized:
+    * therefore exact and delete-neighborhood-sized. Up to
+    * [[SizeRoute.GraphLabelEdges]] deleted ids and affected survivors
+    * ([[SizeRoute.collectAtMost]]) it runs in batch-sized steps:
     *
-    *  1. touched components = labels ⋈ delIds (batch-sized);
-    *  2. affected survivors = members of touched components minus delIds;
-    *  3. `pairsAmong(affectedSurvivorIds)` re-derives the induced pair set
+    *  1. the deleted ids come to the driver (no job when they already are
+    *     a LocalRelation, as [[graft.streaming.CorpusIngest.deleteBatch]]
+    *     hands them over);
+    *  2. touched components: one narrow pass over `labels` against a
+    *     broadcast LocalRelation of the deleted ids;
+    *  3. affected survivors: one narrow pass over `labels` against a
+    *     broadcast LocalRelation of the touched components, minus the
+    *     deleted ids on the driver;
+    *  4. `pairsAmong(affectedSurvivorIds)` re-derives the induced pair set
     *     among them — the caller replays the SAME pair rule the labeling
     *     was built with (e.g. a Jaccard join over the survivors' stored
     *     shingles); work scales with the touched clusters, not the corpus;
-    *  4. the micro graph labels via the size-routed
-    *     [[labelMicroGraph]] (driver union-find / star contraction);
-    *  5. untouched labels pass through; touched components are replaced
-    *     wholesale by the recomputed labels.
+    *     the pairs are labeled by the size-routed [[labelMicroGraph]];
+    *  5. ONE narrow pass writes the result: `labels` anti the touched
+    *     components, ∪ the relabeled LocalRelation.
+    *
+    * A [[graft.streaming.CorpusIngest.deleteBatch]] epoch of 20 ids runs
+    * at most 9 jobs this way (CorpusIngestSpec holds the budget). Above
+    * the bound the same steps run as shuffled joins.
     *
     * Affected survivors left with NO qualifying pair drop out of the
     * labeling — exactly [[components]]' contract (only nodes appearing in
@@ -704,8 +792,55 @@ object Dedup {
   def deleteFromComponents(labels: DataFrame, idCol: String,
       delIds: DataFrame, pairsAmong: DataFrame => DataFrame,
       maxIters: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
+    val spark = labels.sparkSession
     val lab = labels.select(col(idCol).as("__oid"), col("component").as("__ocomp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val bound = SizeRoute(SizeRoute.GraphLabelEdges)
+    val driverDel =
+      if (delIds.schema(idCol).dataType != org.apache.spark.sql.types.LongType) None
+      else SizeRoute.collectAtMost(delIds.select(col(idCol)), bound)
+    val driverAffected = driverDel.flatMap { rows =>
+      val del = rows.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct
+      val touched =
+        if (del.isEmpty) Array.empty[Long]
+        else lab.join(broadcast(longs(spark, del, "__oid")), "__oid")
+          .select(col("__ocomp")).collect().map(_.getLong(0)).distinct
+      val members =
+        if (touched.isEmpty) Some(Array.empty[org.apache.spark.sql.Row])
+        else SizeRoute.collectAtMost(lab
+          .join(broadcast(longs(spark, touched, "__ocomp")), "__ocomp")
+          .select(col("__oid")), bound)
+      members.map { ms =>
+        val delSet = del.toSet
+        (touched, ms.map(_.getLong(0)).filterNot(delSet))
+      }
+    }
+    driverAffected match {
+      case None => deleteDistributed(lab, idCol, delIds, pairsAmong, maxIters,
+        checkpointDir)
+      case Some((touched, affected)) =>
+        def labeled(df: DataFrame) =
+          df.select(col("__oid").as(idCol), col("__ocomp").as("component"))
+        if (touched.isEmpty) return labeled(lab).localCheckpoint()
+        val kept = labeled(lab.join(broadcast(longs(spark, touched, "__ocomp")),
+          Seq("__ocomp"), "left_anti"))
+        val microEdges = pinMicroEdges(
+          pairsAmong(longs(spark, affected, idCol)).select(col("a"), col("b")),
+          checkpointDir)
+        val relabeled = labelMicroGraph(microEdges, maxIters, checkpointDir)
+          .select(col("__mid").as(idCol), col("component"))
+        val out = narrowUnion(kept, relabeled).localCheckpoint()
+        microEdges.unpersist()
+        out
+    }
+  }
+
+  /** [[deleteFromComponents]] above its driver bound: the same five steps
+    * as shuffled joins over pinned frames.
+    */
+  private def deleteDistributed(lab0: DataFrame, idCol: String,
+      delIds: DataFrame, pairsAmong: DataFrame => DataFrame, maxIters: Int,
+      checkpointDir: Option[String]): DataFrame = {
+    val lab = lab0.persist(StorageLevel.MEMORY_AND_DISK)
     val del = delIds.select(col(idCol).as("__oid")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // components that contain at least one deleted member — everything
@@ -730,6 +865,44 @@ object Dedup {
     val out = untouched.unionAll(relabeled).localCheckpoint()
     Seq(lab, del, touched, microEdges).foreach(_.unpersist())
     out
+  }
+
+  /** The near-dup pairs `(a, b)` of a shingled batch `(idCol, shingleCol)`
+    * under [[jaccardJoin]]'s rule — within it (`a < b`) and, given
+    * `atRest`, against it (a = batch id, b = at-rest id, the
+    * [[jaccardJoinAgainst]] pairs) — plus the batch's own copy to keep
+    * beyond the caller's epoch.
+    *
+    * A batch of at most [[SizeRoute.IngestBatchRows]] rows (long ids,
+    * string shingles) is collected in one job and kept as a LocalRelation;
+    * its [[BatchPostings]] index yields the within pairs on the driver and
+    * the against pairs in one narrow scan of `atRest`
+    * ([[BatchJaccardMatches]]) — no shuffle on the shingle or the pair.
+    * A larger batch is lazily checkpointed and joined as before.
+    */
+  private[graft] def batchPairs(batch: DataFrame, atRest: Option[DataFrame],
+      idCol: String, shingleCol: String, tau: Double): (DataFrame, DataFrame) = {
+    val rows = batch.select(col(idCol), col(shingleCol))
+    val held =
+      if (!BatchPostings.fits(rows.schema, idCol, shingleCol)) None
+      else SizeRoute.collectAtMost(rows, SizeRoute(SizeRoute.IngestBatchRows))
+    held match {
+      case Some(rs) =>
+        val spark = batch.sparkSession
+        val postings = BatchPostings(rs, tau)
+        val within = spark.createDataFrame(postings.withinPairs).toDF("a", "b")
+        val pairs = atRest.fold(within)(r => within.unionAll(r.select(
+          explode(SparkShims.column(BatchJaccardMatches(
+            SparkShims.expression(col(shingleCol)), postings))).as("a"),
+          col(idCol).as("b"))))
+        (spark.createDataFrame(java.util.Arrays.asList(rs: _*), rows.schema)
+          .coalesce(1), pairs)
+      case None =>
+        val pinned = rows.localCheckpoint(eager = false)
+        val within = jaccardJoin(pinned, idCol, shingleCol, tau).select("a", "b")
+        (pinned, atRest.fold(within)(r => within.unionAll(
+          jaccardJoinAgainst(pinned, r, idCol, shingleCol, tau).select("a", "b"))))
+    }
   }
 
   /** Connected components by alternating large-star/small-star contraction

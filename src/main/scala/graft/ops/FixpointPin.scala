@@ -33,7 +33,7 @@ import org.apache.spark.storage.StorageLevel
   * localCheckpoint.
   *
   * The driver-route byte bound on a pinned frame lives in [[SizeRoute]]
-  * ([[SizeRoute.driverGate]], [[SizeRoute.DriverRouteMaxBytes]]).
+  * ([[SizeRoute.driverRows]], [[SizeRoute.DriverRouteMaxBytes]]).
   */
 private[graft] object FixpointPin {
 

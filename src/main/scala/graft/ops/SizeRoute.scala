@@ -1,15 +1,19 @@
 package graft.ops
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import scala.util.DynamicVariable
 
+import org.apache.spark.FutureAction
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.LongType
 
 /** Size routes: each place where a driver-side copy of an algorithm beats
   * the distributed plan on small inputs. Every route takes the small copy
   * iff the MEASURED size ≤ the bound, measured by a bounded probe
   * ([[atMost]], [[collectAtMost]]) or, on a frame the route pins anyway,
-  * by the [[driverGate]] count that materializes the pin. The named
+  * by the [[driverRows]] collect that materializes the pin. The named
   * [[Bound]]s are the route registry, which also holds the one chunk
   * bound of a driver loop ([[GraphProbeQueries]]); tests force a bound
   * with [[withBounds]].
@@ -62,9 +66,20 @@ private[graft] object SizeRoute {
     */
   val GraphProbeQueries = Bound("graph-probe-queries", 64)
 
+  /** Rows of a shingled ingest batch (or of a takedown's id batch) up to
+    * which [[graft.streaming.CorpusIngest]] holds it on the driver: the
+    * batch's pairs then come from its [[BatchPostings]] index, within it
+    * on the driver and against the at-rest shingles in one narrow scan,
+    * instead of the shuffled [[Dedup.jaccardJoin]] and
+    * [[Dedup.jaccardJoinAgainst]]. Driver-heap footprint at 2^12: the
+    * collected rows plus one index entry per distinct shingle, a few MB
+    * for web-page-sized docs; every scan task carries a copy.
+    */
+  val IngestBatchRows = Bound("ingest-batch-rows", 1 << 12)
+
   val Registry: Seq[Bound] =
     Seq(GraphLabelEdges, PageRankRows, EmbedAllPairsRows, BpeWords,
-      GraphProbeQueries)
+      GraphProbeQueries, IngestBatchRows)
 
   private val forced = new DynamicVariable(Map.empty[Bound, Int])
 
@@ -85,11 +100,38 @@ private[graft] object SizeRoute {
     n == Int.MaxValue || df.limit(n + 1).count() <= n
   }
 
-  /** `df`'s rows iff it has at most `n` of them, reading at most n + 1. */
+  /** `df`'s rows iff it has at most `n` of them, in ONE job: each task
+    * returns at most n + 1 rows, and the job is cancelled as soon as more
+    * than n have arrived, so the driver holds at most 2n + 1 rows. A
+    * frame already on the driver (a LocalRelation) answers with no job.
+    * Rows come in partition order.
+    */
   def collectAtMost(df: DataFrame, n: Int): Option[Array[Row]] = {
     require(n >= 0, s"size bound must be >= 0: $n")
-    val rows = if (n == Int.MaxValue) df.collect() else df.limit(n + 1).collect()
-    if (rows.length <= n) Some(rows) else None
+    if (n == Int.MaxValue || df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) {
+      val rows = df.collect()
+      return if (rows.length <= n) Some(rows) else None
+    }
+    val rdd = df.rdd
+    val parts = new Array[Array[Row]](rdd.getNumPartitions)
+    val cap = n + 1
+    var total = 0L
+    var job: FutureAction[Unit] = null
+    job = df.sparkSession.sparkContext.submitJob(rdd,
+      (it: Iterator[Row]) => it.take(cap).toArray, parts.indices,
+      (i: Int, rows: Array[Row]) => parts.synchronized {
+        total += rows.length
+        if (total <= n) parts(i) = rows
+        else if (job != null) job.cancel()
+      }, ())
+    Await.ready(job, Duration.Inf)
+    parts.synchronized {
+      if (total > n) None
+      else {
+        job.value.foreach(_.get) // a failure other than the cancel above
+        Some(parts.flatten)
+      }
+    }
   }
 
   /** Byte ceiling for the driver-route collects ([[Dedup.labelMicroGraph]],
@@ -114,19 +156,20 @@ private[graft] object SizeRoute {
   /** True when `df`'s materialized cache is under [[DriverRouteMaxBytes]].
     * Checkpoint-pinned frames have no cache entry (None) and unmaterialized
     * caches size 0 — both pass, leaving the row cap as the only bound
-    * there ([[driverGate]] reads this right after the count that
+    * there ([[driverRows]] reads this right after the job that
     * materializes the persist branch, so the loaded size is live exactly
     * where the byte risk is).
     */
   def underDriverByteBound(df: DataFrame): Boolean =
     cachedEntry(df).forall(_._2 <= DriverRouteMaxBytes)
 
-  /** The driver-route gate on an already-PINNED frame: every column is
-    * long, its row count is ≤ the route's bound, and its cache is under
-    * [[DriverRouteMaxBytes]] — checked in that order, so a non-long frame
-    * is never counted.
+  /** The driver-route gate on an already-PINNED frame, and the collect
+    * behind it, in ONE job: its rows iff every column is long (checked
+    * first, so a non-long frame runs no job), it has at most the route's
+    * bound of rows, and its cache is under [[DriverRouteMaxBytes]]. The
+    * job materializes the pin, so the distributed route reads it too.
     */
-  def driverGate(pinned: DataFrame, route: Bound): Boolean =
-    pinned.schema.fields.forall(_.dataType == LongType) &&
-      pinned.count() <= apply(route) && underDriverByteBound(pinned)
+  def driverRows(pinned: DataFrame, route: Bound): Option[Array[Row]] =
+    if (!pinned.schema.fields.forall(_.dataType == LongType)) None
+    else collectAtMost(pinned, apply(route)).filter(_ => underDriverByteBound(pinned))
 }

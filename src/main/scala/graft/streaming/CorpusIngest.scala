@@ -1,9 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.{AnnIndex, Dedup, ProductQuantizer}
+import graft.ops.{AnnIndex, Dedup, ProductQuantizer, SizeRoute}
 
 /** Continuous corpus ingest with near-dup dedup — the streaming twin of the
   * `incremental_dedup` batch tier: documents arrive as a stream, each
@@ -143,20 +144,23 @@ object CorpusIngest {
     * one at-rest relabel pass — the corpus graph is never recomputed),
     * and the batch folds into the at-rest side for later epochs. Returns
     * the merged labeling (also the new `state.currentLabels`).
+    *
+    * A 40-doc epoch runs at most 6 Spark jobs: the batch collect, the pair
+    * pin (one narrow scan of the at-rest shingles), the touched-label read
+    * and the label write (two jobs each: a broadcast and the pass; the
+    * write needs no broadcast when no old cluster merges). A collapse
+    * epoch adds the one job that re-pins the at-rest side.
     */
   def clusterBatch(batch: DataFrame, state: ClusterState, idCol: String,
       shingleCol: String, tau: Double): DataFrame = {
-    // LAZY local checkpoint (r20): the pin is mandatory — the fold-in below
-    // re-reads bsh in later epochs, when the micro-batch frame is no longer
-    // valid — but its materialization needn't be its own driver-blocking
-    // job: the merge's micro-edge count below computes through bsh within
-    // THIS epoch, materializing the checkpoint as a side effect (one job
-    // floor saved per epoch; the r19 shape paid an eager job here).
-    val bsh = batch.select(idCol, shingleCol).localCheckpoint(eager = false)
-    val newPairs = Dedup.jaccardJoin(bsh, idCol, shingleCol, tau)
-      .select("a", "b")
-      .unionAll(Dedup.jaccardJoinAgainst(bsh, state.ingested, idCol,
-        shingleCol, tau).select("a", "b"))
+    // the batch's pairs, within it and against everything ingested so far
+    // (Dedup.batchPairs): a bounded batch is collected in one job and its
+    // postings are scored against the at-rest shingles in one narrow scan;
+    // `bsh` is the batch's own copy (a LocalRelation, or a lazy local
+    // checkpoint above the bound), which the fold-in below keeps for later
+    // epochs, when the micro-batch frame is no longer valid
+    val (bsh, newPairs) = Dedup.batchPairs(batch, Some(state.ingested), idCol,
+      shingleCol, tau)
     // incrementalComponents returns an eagerly pinned (localCheckpoint)
     // frame with its internal caches already released — no second pin here
     val merged = Dedup.incrementalComponents(state.labels, idCol, newPairs)
@@ -201,7 +205,8 @@ object CorpusIngest {
     * so the touched components' induced pair set is re-derived from the
     * survivors' stored shingles (the same jaccard rule that built the
     * labeling) and relabeled; untouched components pass through. The
-    * at-rest shingle side drops the deleted rows via an anti-join
+    * at-rest shingle side drops the deleted rows by a filter on the held
+    * id set, or an anti-join above [[graft.ops.SizeRoute.IngestBatchRows]]
     * (lazy, over pinned epoch blocks — the same per-epoch plan-growth
     * budget as [[clusterBatch]]'s fold-in, counted against the same
     * collapse cadence). Per-epoch work scales with the touched clusters
@@ -211,19 +216,29 @@ object CorpusIngest {
     */
   def deleteBatch(delIds: DataFrame, state: ClusterState, idCol: String,
       shingleCol: String, tau: Double): DataFrame = {
-    // pin the takedown set: it gates BOTH state transitions, and a
-    // micro-batch frame is only valid during its own epoch. LAZY (r20):
-    // deleteFromComponents' touched-component derivation computes through
-    // it within this epoch, materializing the checkpoint without a
-    // dedicated job (same rationale as clusterBatch's batch pin).
-    val del = delIds.select(idCol).localCheckpoint(eager = false)
+    // the takedown set gates BOTH state transitions, and a micro-batch
+    // frame is only valid during its own epoch: a bounded one is collected
+    // in one job and kept as a LocalRelation (deleteFromComponents then
+    // reads it with no job), a larger one is lazily checkpointed
+    val delRows = delIds.select(idCol)
+    val held = SizeRoute.collectAtMost(delRows, SizeRoute(SizeRoute.IngestBatchRows))
+    val del = held.fold(delRows.localCheckpoint(eager = false))(rs => delRows
+      .sparkSession.createDataFrame(java.util.Arrays.asList(rs: _*), delRows.schema))
     val ingested = state.ingested
+    // pairsAmong replays the labeling's pair rule over the survivors'
+    // stored shingles (Dedup.batchPairs with no at-rest side)
     val relabeled = Dedup.deleteFromComponents(state.labels, idCol, del,
-      affectedIds => Dedup.jaccardJoin(
+      affectedIds => Dedup.batchPairs(
         ingested.join(affectedIds, Seq(idCol), "left_semi"),
-        idCol, shingleCol, tau).select("a", "b"))
+        None, idCol, shingleCol, tau)._2)
     state.labels = relabeled
-    state.ingested = ingested.join(del, Seq(idCol), "left_anti")
+    // a held takedown set leaves the at-rest side through a literal id set:
+    // an anti-join would broadcast it in every later scan of the at-rest
+    // side until the next collapse, one job per scan
+    state.ingested = held.fold(ingested.join(del, Seq(idCol), "left_anti")) { rs =>
+      val ids = rs.filterNot(_.isNullAt(0)).map(_.get(0))
+      ingested.where(col(idCol).isNull || !col(idCol).isin(ids.toIndexedSeq: _*))
+    }
     state.epochsSinceCollapse += 1
     if (state.epochsSinceCollapse >= state.collapseEvery) {
       state.ingested = state.ingested.localCheckpoint()

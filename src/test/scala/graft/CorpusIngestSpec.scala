@@ -637,4 +637,94 @@ class CorpusIngestSpec extends SparkTestBase {
     val e2 = ingest(docsDf(3L -> "an entirely new document with its own novel wording here"))
     assert(e1 == Set(2L) && e2 == Set.empty)
   }
+  /** A shingled crawl fixture for the cluster-maintenance epochs: 12-word
+    * docs, a third of them one-word edits of an earlier doc (J = 7/13 on
+    * word 3-grams, a near-dup at tau 0.5). Frames are parallelized, so no
+    * input is already a driver-held LocalRelation.
+    */
+  private def crawl(seed: Long, ids: Seq[Long]): DataFrame = {
+    val sp = spark
+    import sp.implicits._
+    val rnd = new scala.util.Random(seed)
+    val words = (0 until 400).map(i => s"w$i")
+    val texts = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
+    val rows = ids.map { id =>
+      val t =
+        if (texts.nonEmpty && rnd.nextInt(3) == 0) {
+          val c = texts(rnd.nextInt(texts.size)).clone()
+          c(rnd.nextInt(c.length)) = words(rnd.nextInt(words.size)); c
+        } else Array.fill(12)(words(rnd.nextInt(words.size)))
+      texts += t
+      id -> t.mkString(" ")
+    }
+    sp.sparkContext.parallelize(rows, 1).toDF("doc_id", "text")
+      .select(col("doc_id"), TextOps.wordNGrams(col("text"), 3).as("sh"))
+  }
+
+  private def labelMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("cluster and takedown epochs leave the cache-entry count where it started") {
+    val sp = spark
+    import sp.implicits._
+    // both routes: the driver-held batch and the distributed joins
+    for (forced <- Seq(false, true)) {
+      val bounds =
+        if (forced) Seq(graft.ops.SizeRoute.IngestBatchRows -> 0,
+          graft.ops.SizeRoute.GraphLabelEdges -> 0)
+        else Nil
+      graft.ops.SizeRoute.withBounds(bounds: _*) {
+        val state = CorpusIngest.clusterState(crawl(1L, 0L until 30L),
+          "doc_id", "sh", Tau, collapseEvery = 2)
+        val before = org.apache.spark.sql.CacheEntries(sp)
+        (0 until 3).foreach { e =>
+          CorpusIngest.clusterBatch(crawl(10L + e, (100L * (e + 1)) until (100L * (e + 1) + 8)),
+            state, "doc_id", "sh", Tau)
+          CorpusIngest.deleteBatch(Seq(3L * e, 100L * (e + 1)).toDF("doc_id"),
+            state, "doc_id", "sh", Tau)
+        }
+        assert(org.apache.spark.sql.CacheEntries(sp) == before, s"forced=$forced")
+      }
+    }
+  }
+
+  test("cluster and takedown epochs stay within the per-epoch job budget") {
+    val sp = spark
+    import sp.implicits._
+    val state = CorpusIngest.clusterState(crawl(2L, 0L until 60L),
+      "doc_id", "sh", Tau)
+    val all = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    all += crawl(2L, 0L until 60L)
+    var gone = Set.empty[Long]
+    (0 until 3).foreach { e =>
+      val ids = (1000L * (e + 1)) until (1000L * (e + 1) + 40)
+      val batch = crawl(20L + e, ids)
+      all += batch
+      val (_, cluster) = JobCount(sp.sparkContext)(
+        CorpusIngest.clusterBatch(batch, state, "doc_id", "sh", Tau))
+      val dels = Seq(5L * e, 7L * e + 1, ids.head, ids.last)
+      gone ++= dels
+      val (_, delete) = JobCount(sp.sparkContext)(CorpusIngest.deleteBatch(
+        sp.sparkContext.parallelize(dels, 1).toDF("doc_id"), state,
+        "doc_id", "sh", Tau))
+      assert(cluster <= CorpusIngestSpec.ClusterEpochJobs, s"epoch $e cluster: $cluster jobs")
+      assert(delete <= CorpusIngestSpec.DeleteEpochJobs, s"epoch $e delete: $delete jobs")
+    }
+    // the budgeted epochs still maintain the exact labeling
+    val survivors = all.reduce(_ unionAll _).where(!col("doc_id").isin(gone.toSeq: _*))
+    val want = graft.ops.Dedup.components(
+      graft.ops.Dedup.jaccardJoin(survivors, "doc_id", "sh", Tau).select("a", "b"), "doc_id")
+    assert(labelMap(state.currentLabels) == labelMap(want))
+  }
+}
+
+object CorpusIngestSpec {
+  /** Spark jobs one epoch may run on the crawl fixture: a cluster epoch
+    * collects the batch, pins and collects its pairs, reads the touched
+    * labels and writes the new ones (6 measured); a takedown epoch
+    * collects the ids, reads the touched components, their members and
+    * the members' shingles, and writes the new labels (9 measured).
+    */
+  val ClusterEpochJobs = 6
+  val DeleteEpochJobs = 9
 }

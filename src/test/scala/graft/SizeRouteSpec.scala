@@ -92,6 +92,27 @@ class SizeRouteSpec extends SparkTestBase {
         Run(out, jobs)
       })
     },
+    SizeRoute.IngestBatchRows -> { seed =>
+      val sp = spark
+      import sp.implicits._
+      val rnd = new scala.util.Random(seed)
+      val vocab = (0 until 12).map(v => s"s$v")
+      def docs(ids: Seq[Long]): DataFrame =
+        sp.sparkContext.parallelize(ids.map(id => (id, rnd.shuffle(vocab).take(2 + rnd.nextInt(4)))), 2)
+          .toDF("doc_id", "sh")
+      val corpus = docs(0L until 15L).localCheckpoint()
+      val batch = docs(100L until 100L + 3 + rnd.nextInt(6)).localCheckpoint()
+      // the batch's kept copy shows the route: driver-held rows are a
+      // LocalRelation in the at-rest union
+      Fixture(batch.count().toInt, () => {
+        val state = graft.streaming.CorpusIngest.clusterState(corpus, "doc_id", "sh", 0.5)
+        graft.streaming.CorpusIngest.clusterBatch(batch, state, "doc_id", "sh", 0.5)
+        val held = driverBuilt(state.currentIngested)
+        graft.streaming.CorpusIngest.deleteBatch(Seq(3L, 101L).toDF("doc_id"), state,
+          "doc_id", "sh", 0.5)
+        Run(labels(state.currentLabels), held)
+      })
+    },
     SizeRoute.GraphProbeQueries -> { seed =>
       val sp = spark
       import sp.implicits._

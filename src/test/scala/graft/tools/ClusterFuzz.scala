@@ -27,7 +27,10 @@ import graft.ops.SizeRoute
   *  - the streaming twin (clusterState/clusterBatch/deleteBatch over
   *    synthesized shingle corpora, tau = 0.5) on every 5th scenario,
   *    with a takedown epoch after the merges and sometimes one more
-  *    ingest epoch AFTER the delete (post-delete re-pairing).
+  *    ingest epoch AFTER the delete (post-delete re-pairing); every other
+  *    streaming scenario forces the distributed routes (zero
+  *    IngestBatchRows and GraphLabelEdges bounds), the rest hold the
+  *    batch on the driver.
   *
   * Usage: sbt "Test/runMain graft.tools.ClusterFuzz [nScenarios] [seed]"
   * Prints one line per mismatch and a final `CLUSTERFUZZ` summary; exits
@@ -54,7 +57,9 @@ object ClusterFuzz {
 
     (0 until n).foreach { i =>
       ran += 1
-      if (i % 5 == 4) {
+      if (i % 5 == 4) SizeRoute.withBounds((if (i % 10 == 9)
+          Seq(SizeRoute.IngestBatchRows -> 0, SizeRoute.GraphLabelEdges -> 0)
+          else Nil): _*) {
         // ---- streaming twin: synthesized shingle corpus, 2–3 epochs ----
         val vocab = (0 until 12).map(v => s"s$v")
         def doc(id: Long): (Long, Seq[String]) = {
