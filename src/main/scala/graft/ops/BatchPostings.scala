@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * It ships inside [[BatchJaccardMatches]] to every task of the scan
   * (batch-sized: the caller holds the batch under
-  * [[SizeRoute.IngestBatchRows]]). The count buffers are per deserialized
-  * copy, so one copy serves one task thread.
+  * [[SizeRoute.IngestBatchBytes]] by [[BatchPostings.weight]]). The count
+  * buffers are per deserialized copy, so one copy serves one task thread.
   */
 private[graft] final class BatchPostings private (ids: Array[Long],
     sets: Array[java.util.HashSet[UTF8String]],
@@ -99,6 +99,27 @@ private[graft] object BatchPostings {
     new BatchPostings(kept.map(_.getLong(0)), sets, postings, tau)
   }
 
+  /** Estimated heap bytes of one indexed row, apart from its shingles. */
+  val RowBytes = 160L
+  /** Estimated heap bytes of one indexed shingle, apart from its
+    * characters: its set entry, its string object and its postings entry.
+    */
+  val ShingleBytes = 256L
+
+  /** The estimated heap bytes a collected `(id, shingles)` row adds to the
+    * index: [[RowBytes]] plus, per shingle, [[ShingleBytes]] and its
+    * characters (its UTF-8 bytes for ASCII text). On indexes of distinct
+    * shingles (1–100 a row, 8–32 characters, 1,000–4,000 rows) Spark's
+    * `SizeEstimator` measured 0.84–0.98 of this estimate
+    * (`graft.tools.IngestRouteSweep fit`); shingles shared between rows
+    * share one postings entry, so they weigh less.
+    */
+  def weight(r: Row): Long =
+    if (r.isNullAt(1)) RowBytes
+    else r.getSeq[String](1).foldLeft(RowBytes) { (w, x) =>
+      w + ShingleBytes + (if (x == null) 0 else x.length)
+    }
+
   /** True when a frame's `(idCol, shingleCol)` fit the index: long ids and
     * string shingle arrays.
     */
@@ -133,4 +154,29 @@ private[graft] case class BatchJaccardMatches(child: Expression,
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
+}
+
+/** `id NOT IN ids` for a driver-held id set, as one expression over a
+  * sorted primitive array (8 bytes an id) rather than one literal per id:
+  * a filter that a state frame carries for many later scans stays one
+  * plan node. NULL for a NULL id, like `NOT IN`.
+  */
+private[graft] case class NotAmong(child: Expression, sortedIds: Array[Long])
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "not_among"
+
+  override def nullSafeEval(id: Any): Any =
+    java.util.Arrays.binarySearch(sortedIds, id.asInstanceOf[Long]) < 0
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ids = ctx.addReferenceObj("ids", sortedIds, "long[]")
+    defineCodeGen(ctx, ev, c => s"java.util.Arrays.binarySearch($ids, $c) < 0")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+
+  override def toString: String = s"not_among($child, ${sortedIds.length} ids)"
 }

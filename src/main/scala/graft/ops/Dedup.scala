@@ -755,7 +755,8 @@ object Dedup {
     * surviving pair can leave a touched component). The recompute is
     * therefore exact and delete-neighborhood-sized. Up to
     * [[SizeRoute.GraphLabelEdges]] deleted ids and affected survivors
-    * ([[SizeRoute.collectAtMost]]) it runs in batch-sized steps:
+    * ([[SizeRoute.collectAtMost]], [[SizeRoute.collectWithin]]) it runs in
+    * batch-sized steps:
     *
     *  1. the deleted ids come to the driver (no job when they already are
     *     a LocalRelation, as [[graft.streaming.CorpusIngest.deleteBatch]]
@@ -763,7 +764,9 @@ object Dedup {
     *  2. touched components: one narrow pass over `labels` against a
     *     broadcast LocalRelation of the deleted ids;
     *  3. affected survivors: one narrow pass over `labels` against a
-    *     broadcast LocalRelation of the touched components, minus the
+    *     broadcast LocalRelation of the touched components, collected in
+    *     one job ([[SizeRoute.collectWithin]]; a limit probe would take up
+    *     to four growing jobs over a 32-partition labeling), minus the
     *     deleted ids on the driver;
     *  4. `pairsAmong(affectedSurvivorIds)` re-derives the induced pair set
     *     among them — the caller replays the SAME pair rule the labeling
@@ -806,9 +809,9 @@ object Dedup {
           .select(col("__ocomp")).collect().map(_.getLong(0)).distinct
       val members =
         if (touched.isEmpty) Some(Array.empty[org.apache.spark.sql.Row])
-        else SizeRoute.collectAtMost(lab
+        else SizeRoute.collectWithin(lab
           .join(broadcast(longs(spark, touched, "__ocomp")), "__ocomp")
-          .select(col("__oid")), bound)
+          .select(col("__oid")), bound, _ => 1L)
       members.map { ms =>
         val delSet = del.toSet
         (touched, ms.map(_.getLong(0)).filterNot(delSet))
@@ -871,38 +874,37 @@ object Dedup {
     * under [[jaccardJoin]]'s rule — within it (`a < b`) and, given
     * `atRest`, against it (a = batch id, b = at-rest id, the
     * [[jaccardJoinAgainst]] pairs) — plus the batch's own copy to keep
-    * beyond the caller's epoch.
+    * beyond the caller's epoch: a local checkpoint of its two columns.
     *
-    * A batch of at most [[SizeRoute.IngestBatchRows]] rows (long ids,
-    * string shingles) is collected in one job and kept as a LocalRelation;
-    * its [[BatchPostings]] index yields the within pairs on the driver and
-    * the against pairs in one narrow scan of `atRest`
-    * ([[BatchJaccardMatches]]) — no shuffle on the shingle or the pair.
-    * A larger batch is lazily checkpointed and joined as before.
+    * One job fills that checkpoint and, for a batch (long ids, string
+    * shingles) whose [[BatchPostings]] index weighs at most
+    * [[SizeRoute.IngestBatchBytes]], collects it ([[SizeRoute.collectWithin]]);
+    * the index then yields the within pairs on the driver and the against
+    * pairs in one narrow scan of `atRest` ([[BatchJaccardMatches]]), with
+    * no shuffle on the shingle or the pair. A heavier batch is joined
+    * from the checkpoint as before.
     */
   private[graft] def batchPairs(batch: DataFrame, atRest: Option[DataFrame],
       idCol: String, shingleCol: String, tau: Double): (DataFrame, DataFrame) = {
-    val rows = batch.select(col(idCol), col(shingleCol))
+    val pinned = batch.select(col(idCol), col(shingleCol)).localCheckpoint(eager = false)
     val held =
-      if (!BatchPostings.fits(rows.schema, idCol, shingleCol)) None
-      else SizeRoute.collectAtMost(rows, SizeRoute(SizeRoute.IngestBatchRows))
-    held match {
+      if (!BatchPostings.fits(pinned.schema, idCol, shingleCol)) None
+      else SizeRoute.collectWithin(pinned, SizeRoute(SizeRoute.IngestBatchBytes),
+        BatchPostings.weight)
+    val pairs = held match {
       case Some(rs) =>
-        val spark = batch.sparkSession
         val postings = BatchPostings(rs, tau)
-        val within = spark.createDataFrame(postings.withinPairs).toDF("a", "b")
-        val pairs = atRest.fold(within)(r => within.unionAll(r.select(
+        val within = batch.sparkSession.createDataFrame(postings.withinPairs).toDF("a", "b")
+        atRest.fold(within)(r => within.unionAll(r.select(
           explode(SparkShims.column(BatchJaccardMatches(
             SparkShims.expression(col(shingleCol)), postings))).as("a"),
           col(idCol).as("b"))))
-        (spark.createDataFrame(java.util.Arrays.asList(rs: _*), rows.schema)
-          .coalesce(1), pairs)
       case None =>
-        val pinned = rows.localCheckpoint(eager = false)
         val within = jaccardJoin(pinned, idCol, shingleCol, tau).select("a", "b")
-        (pinned, atRest.fold(within)(r => within.unionAll(
-          jaccardJoinAgainst(pinned, r, idCol, shingleCol, tau).select("a", "b"))))
+        atRest.fold(within)(r => within.unionAll(
+          jaccardJoinAgainst(pinned, r, idCol, shingleCol, tau).select("a", "b")))
     }
+    (pinned, pairs)
   }
 
   /** Connected components by alternating large-star/small-star contraction

@@ -1,10 +1,7 @@
 package graft.ops
 
-import scala.concurrent.Await
-import scala.concurrent.duration.Duration
 import scala.util.DynamicVariable
 
-import org.apache.spark.FutureAction
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.LongType
@@ -12,15 +9,18 @@ import org.apache.spark.sql.types.LongType
 /** Size routes: each place where a driver-side copy of an algorithm beats
   * the distributed plan on small inputs. Every route takes the small copy
   * iff the MEASURED size ≤ the bound, measured by a bounded probe
-  * ([[atMost]], [[collectAtMost]]) or, on a frame the route pins anyway,
-  * by the [[driverRows]] collect that materializes the pin. The named
+  * ([[atMost]], [[collectAtMost]]) or, on a frame read in full anyway (a
+  * pin the route materializes, or one narrow pass), by the one
+  * [[collectWithin]] job that also collects it. The named
   * [[Bound]]s are the route registry, which also holds the one chunk
   * bound of a driver loop ([[GraphProbeQueries]]); tests force a bound
   * with [[withBounds]].
   */
 private[graft] object SizeRoute {
 
-  /** A registered route bound, in rows (or edges) of the measured frame. */
+  /** A registered route bound, in rows (or edges, or estimated bytes) of
+    * the measured frame.
+    */
   final case class Bound(name: String, default: Int)
 
   /** Edges up to which a pinned (symmetric) edge set is labeled by a
@@ -66,20 +66,25 @@ private[graft] object SizeRoute {
     */
   val GraphProbeQueries = Bound("graph-probe-queries", 64)
 
-  /** Rows of a shingled ingest batch (or of a takedown's id batch) up to
-    * which [[graft.streaming.CorpusIngest]] holds it on the driver: the
-    * batch's pairs then come from its [[BatchPostings]] index, within it
-    * on the driver and against the at-rest shingles in one narrow scan,
-    * instead of the shuffled [[Dedup.jaccardJoin]] and
-    * [[Dedup.jaccardJoinAgainst]]. Driver-heap footprint at 2^12: the
-    * collected rows plus one index entry per distinct shingle, a few MB
-    * for web-page-sized docs; every scan task carries a copy.
+  /** Estimated heap bytes of a shingled ingest batch's [[BatchPostings]]
+    * index (weighed row by row with [[BatchPostings.weight]]) up to which
+    * [[Dedup.batchPairs]] holds the batch on the driver: its pairs then
+    * come from the index, within the batch on the driver and against the
+    * at-rest shingles in one narrow scan, instead of the shuffled
+    * [[Dedup.jaccardJoin]] and [[Dedup.jaccardJoinAgainst]]. The index
+    * has one copy on the driver and one in each task of that scan. The
+    * bound is the measured crossover (`graft.tools.IngestRouteSweep`,
+    * `plans/r23/cluster_epoch_ab.md` §5): one epoch against 2,000 at-rest
+    * docs ran faster through the index at every measured weight up to
+    * 17 MB, and the shuffled joins caught up at about 21 MB for 24-shingle
+    * docs and 68 MB for 960-shingle docs. 16 MiB is about 2,400 rows of
+    * 24-shingle docs or 60 of 960-shingle docs.
     */
-  val IngestBatchRows = Bound("ingest-batch-rows", 1 << 12)
+  val IngestBatchBytes = Bound("ingest-batch-bytes", 1 << 24)
 
   val Registry: Seq[Bound] =
     Seq(GraphLabelEdges, PageRankRows, EmbedAllPairsRows, BpeWords,
-      GraphProbeQueries, IngestBatchRows)
+      GraphProbeQueries, IngestBatchBytes)
 
   private val forced = new DynamicVariable(Map.empty[Bound, Int])
 
@@ -100,38 +105,50 @@ private[graft] object SizeRoute {
     n == Int.MaxValue || df.limit(n + 1).count() <= n
   }
 
-  /** `df`'s rows iff it has at most `n` of them, in ONE job: each task
-    * returns at most n + 1 rows, and the job is cancelled as soon as more
-    * than n have arrived, so the driver holds at most 2n + 1 rows. A
-    * frame already on the driver (a LocalRelation) answers with no job.
-    * Rows come in partition order.
-    */
+  /** `df`'s rows iff it has at most `n` of them, reading at most n + 1. */
   def collectAtMost(df: DataFrame, n: Int): Option[Array[Row]] = {
     require(n >= 0, s"size bound must be >= 0: $n")
-    if (n == Int.MaxValue || df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) {
-      val rows = df.collect()
-      return if (rows.length <= n) Some(rows) else None
-    }
+    val rows = if (n == Int.MaxValue) df.collect() else df.limit(n + 1).collect()
+    if (rows.length <= n) Some(rows) else None
+  }
+
+  /** `df`'s rows iff their summed `weight` is at most `bound`, in ONE job
+    * that computes every partition in full — for a pinned frame, the job
+    * that materializes the pin, so the distributed route reads the pin
+    * too. A task returns its rows only while their running weight stays
+    * within the bound, so the driver receives at most `bound` of weight
+    * per partition and keeps at most `bound` in all. A frame already on
+    * the driver (a LocalRelation) answers with no job. Rows come in
+    * partition order. The job is a plain RDD job (no SQL execution id), as
+    * an eager checkpoint's is. Unlike [[collectAtMost]]'s limit probe it
+    * cannot stop early on a frame over the bound, so it suits a frame that
+    * is read in full anyway: a pin, or a narrow pass that the limit probe
+    * would scan in several growing jobs.
+    */
+  def collectWithin(df: DataFrame, bound: Long, weight: Row => Long): Option[Array[Row]] = {
+    require(bound >= 0, s"size bound must be >= 0: $bound")
+    def within(rows: Array[Row]) =
+      Some(rows).filter(_.iterator.map(weight).sum <= bound)
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      return within(df.collect())
     val rdd = df.rdd
     val parts = new Array[Array[Row]](rdd.getNumPartitions)
-    val cap = n + 1
     var total = 0L
-    var job: FutureAction[Unit] = null
-    job = df.sparkSession.sparkContext.submitJob(rdd,
-      (it: Iterator[Row]) => it.take(cap).toArray, parts.indices,
-      (i: Int, rows: Array[Row]) => parts.synchronized {
-        total += rows.length
-        if (total <= n) parts(i) = rows
-        else if (job != null) job.cancel()
-      }, ())
-    Await.ready(job, Duration.Inf)
-    parts.synchronized {
-      if (total > n) None
-      else {
-        job.value.foreach(_.get) // a failure other than the cancel above
-        Some(parts.flatten)
-      }
-    }
+    df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[Row]) => {
+        val out = Array.newBuilder[Row]
+        var w = 0L
+        while (w <= bound && it.hasNext) {
+          val r = it.next()
+          w += weight(r)
+          if (w <= bound) out += r
+        }
+        (w, if (w <= bound) out.result() else Array.empty[Row])
+      }, (i: Int, res: (Long, Array[Row])) => {
+        total += res._1
+        if (total <= bound) parts(i) = res._2
+        else parts.indices.foreach(parts(_) = null)
+      })
+    if (total <= bound) Some(parts.flatten) else None
   }
 
   /** Byte ceiling for the driver-route collects ([[Dedup.labelMicroGraph]],
@@ -164,12 +181,12 @@ private[graft] object SizeRoute {
     cachedEntry(df).forall(_._2 <= DriverRouteMaxBytes)
 
   /** The driver-route gate on an already-PINNED frame, and the collect
-    * behind it, in ONE job: its rows iff every column is long (checked
-    * first, so a non-long frame runs no job), it has at most the route's
-    * bound of rows, and its cache is under [[DriverRouteMaxBytes]]. The
-    * job materializes the pin, so the distributed route reads it too.
+    * behind it, in ONE job ([[collectWithin]]): its rows iff every column
+    * is long (checked first, so a non-long frame runs no job), it has at
+    * most the route's bound of rows, and its cache is under
+    * [[DriverRouteMaxBytes]].
     */
   def driverRows(pinned: DataFrame, route: Bound): Option[Array[Row]] =
     if (!pinned.schema.fields.forall(_.dataType == LongType)) None
-    else collectAtMost(pinned, apply(route)).filter(_ => underDriverByteBound(pinned))
+    else collectWithin(pinned, apply(route), _ => 1L).filter(_ => underDriverByteBound(pinned))
 }

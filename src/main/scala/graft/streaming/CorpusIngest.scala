@@ -2,9 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.SparkShims
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.LongType
 
-import graft.ops.{AnnIndex, Dedup, ProductQuantizer, SizeRoute}
+import graft.ops.{AnnIndex, Dedup, NotAmong, ProductQuantizer, SizeRoute}
 
 /** Continuous corpus ingest with near-dup dedup — the streaming twin of the
   * `incremental_dedup` batch tier: documents arrive as a stream, each
@@ -145,20 +147,21 @@ object CorpusIngest {
     * and the batch folds into the at-rest side for later epochs. Returns
     * the merged labeling (also the new `state.currentLabels`).
     *
-    * A 40-doc epoch runs at most 6 Spark jobs: the batch collect, the pair
-    * pin (one narrow scan of the at-rest shingles), the touched-label read
-    * and the label write (two jobs each: a broadcast and the pass; the
-    * write needs no broadcast when no old cluster merges). A collapse
-    * epoch adds the one job that re-pins the at-rest side.
+    * A 40-doc epoch runs at most 6 Spark jobs: the batch checkpoint and
+    * collect (one job), the pair pin (one narrow scan of the at-rest
+    * shingles), the touched-label read and the label write (two jobs
+    * each: a broadcast and the pass; the write needs no broadcast when no
+    * old cluster merges). A collapse epoch adds the one job that re-pins
+    * the at-rest side.
     */
   def clusterBatch(batch: DataFrame, state: ClusterState, idCol: String,
       shingleCol: String, tau: Double): DataFrame = {
     // the batch's pairs, within it and against everything ingested so far
-    // (Dedup.batchPairs): a bounded batch is collected in one job and its
-    // postings are scored against the at-rest shingles in one narrow scan;
-    // `bsh` is the batch's own copy (a LocalRelation, or a lazy local
-    // checkpoint above the bound), which the fold-in below keeps for later
-    // epochs, when the micro-batch frame is no longer valid
+    // (Dedup.batchPairs): one job checkpoints the batch and, below the
+    // size route, collects it, and its postings are scored against the
+    // at-rest shingles in one narrow scan; `bsh` is that checkpoint, which
+    // the fold-in below keeps for later epochs, when the micro-batch frame
+    // is no longer valid
     val (bsh, newPairs) = Dedup.batchPairs(batch, Some(state.ingested), idCol,
       shingleCol, tau)
     // incrementalComponents returns an eagerly pinned (localCheckpoint)
@@ -205,23 +208,26 @@ object CorpusIngest {
     * so the touched components' induced pair set is re-derived from the
     * survivors' stored shingles (the same jaccard rule that built the
     * labeling) and relabeled; untouched components pass through. The
-    * at-rest shingle side drops the deleted rows by a filter on the held
-    * id set, or an anti-join above [[graft.ops.SizeRoute.IngestBatchRows]]
-    * (lazy, over pinned epoch blocks — the same per-epoch plan-growth
-    * budget as [[clusterBatch]]'s fold-in, counted against the same
-    * collapse cadence). Per-epoch work scales with the touched clusters
-    * plus one pass over the label state — never with the corpus graph.
-    * Returns the post-delete labeling (also the new
+    * at-rest shingle side drops the deleted rows by a filter on the id
+    * set [[graft.ops.Dedup.deleteFromComponents]] holds on the driver (up
+    * to [[graft.ops.SizeRoute.GraphLabelEdges]] ids, a sorted long array
+    * of at most 8 MB in each later scan until the next collapse), or by an
+    * anti-join above that bound (lazy, over pinned epoch blocks — the same
+    * per-epoch plan-growth budget as [[clusterBatch]]'s fold-in, counted
+    * against the same collapse cadence). Per-epoch work scales with the
+    * touched clusters plus one pass over the label state — never with the
+    * corpus graph. Returns the post-delete labeling (also the new
     * `state.currentLabels`).
     */
   def deleteBatch(delIds: DataFrame, state: ClusterState, idCol: String,
       shingleCol: String, tau: Double): DataFrame = {
     // the takedown set gates BOTH state transitions, and a micro-batch
-    // frame is only valid during its own epoch: a bounded one is collected
-    // in one job and kept as a LocalRelation (deleteFromComponents then
-    // reads it with no job), a larger one is lazily checkpointed
+    // frame is only valid during its own epoch: one within
+    // deleteFromComponents' bound is collected here and handed over as a
+    // LocalRelation (deleteFromComponents then reads it with no job), a
+    // larger one is lazily checkpointed
     val delRows = delIds.select(idCol)
-    val held = SizeRoute.collectAtMost(delRows, SizeRoute(SizeRoute.IngestBatchRows))
+    val held = SizeRoute.collectAtMost(delRows, SizeRoute(SizeRoute.GraphLabelEdges))
     val del = held.fold(delRows.localCheckpoint(eager = false))(rs => delRows
       .sparkSession.createDataFrame(java.util.Arrays.asList(rs: _*), delRows.schema))
     val ingested = state.ingested
@@ -232,13 +238,16 @@ object CorpusIngest {
         ingested.join(affectedIds, Seq(idCol), "left_semi"),
         None, idCol, shingleCol, tau)._2)
     state.labels = relabeled
-    // a held takedown set leaves the at-rest side through a literal id set:
-    // an anti-join would broadcast it in every later scan of the at-rest
-    // side until the next collapse, one job per scan
-    state.ingested = held.fold(ingested.join(del, Seq(idCol), "left_anti")) { rs =>
-      val ids = rs.filterNot(_.isNullAt(0)).map(_.get(0))
-      ingested.where(col(idCol).isNull || !col(idCol).isin(ids.toIndexedSeq: _*))
-    }
+    // a held takedown set leaves the at-rest side through a filter on its
+    // sorted ids: an anti-join would broadcast it in every later scan of
+    // the at-rest side until the next collapse, one job per scan
+    val longIds = Seq(delRows, ingested).forall(_.schema(idCol).dataType == LongType)
+    state.ingested = held.filter(_ => longIds)
+      .fold(ingested.join(del, Seq(idCol), "left_anti")) { rs =>
+        val ids = rs.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted
+        ingested.where(col(idCol).isNull ||
+          SparkShims.column(NotAmong(SparkShims.expression(col(idCol)), ids)))
+      }
     state.epochsSinceCollapse += 1
     if (state.epochsSinceCollapse >= state.collapseEvery) {
       state.ingested = state.ingested.localCheckpoint()

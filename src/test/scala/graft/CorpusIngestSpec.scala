@@ -670,7 +670,7 @@ class CorpusIngestSpec extends SparkTestBase {
     // both routes: the driver-held batch and the distributed joins
     for (forced <- Seq(false, true)) {
       val bounds =
-        if (forced) Seq(graft.ops.SizeRoute.IngestBatchRows -> 0,
+        if (forced) Seq(graft.ops.SizeRoute.IngestBatchBytes -> 0,
           graft.ops.SizeRoute.GraphLabelEdges -> 0)
         else Nil
       graft.ops.SizeRoute.withBounds(bounds: _*) {

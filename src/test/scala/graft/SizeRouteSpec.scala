@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalacheck.{Gen, Prop, Test}
 
-import graft.ops.{Centrality, Dedup, GraphAnn, SizeRoute, Subword}
+import graft.ops.{BatchPostings, Centrality, Dedup, GraphAnn, SizeRoute, Subword}
 import graft.ops.SizeRoute.Bound
 
 /** One differential over the size-route registry: for every registered
@@ -92,25 +92,24 @@ class SizeRouteSpec extends SparkTestBase {
         Run(out, jobs)
       })
     },
-    SizeRoute.IngestBatchRows -> { seed =>
+    SizeRoute.IngestBatchBytes -> { seed =>
       val sp = spark
       import sp.implicits._
       val rnd = new scala.util.Random(seed)
       val vocab = (0 until 12).map(v => s"s$v")
-      def docs(ids: Seq[Long]): DataFrame =
-        sp.sparkContext.parallelize(ids.map(id => (id, rnd.shuffle(vocab).take(2 + rnd.nextInt(4)))), 2)
-          .toDF("doc_id", "sh")
-      val corpus = docs(0L until 15L).localCheckpoint()
-      val batch = docs(100L until 100L + 3 + rnd.nextInt(6)).localCheckpoint()
-      // the batch's kept copy shows the route: driver-held rows are a
-      // LocalRelation in the at-rest union
-      Fixture(batch.count().toInt, () => {
+      def docs(ids: Seq[Long]) = ids.map(id => (id, rnd.shuffle(vocab).take(2 + rnd.nextInt(4))))
+      val corpus = sp.sparkContext.parallelize(docs(0L until 15L), 2).toDF("doc_id", "sh")
+        .localCheckpoint()
+      val batch = docs(100L until 100L + 3 + rnd.nextInt(6))
+      // the route measures the batch's index weight; the driver copy runs
+      // fewer jobs than the shuffled joins
+      Fixture(batch.map(d => BatchPostings.weight(Row(d._1, d._2))).sum.toInt, () => {
         val state = graft.streaming.CorpusIngest.clusterState(corpus, "doc_id", "sh", 0.5)
-        graft.streaming.CorpusIngest.clusterBatch(batch, state, "doc_id", "sh", 0.5)
-        val held = driverBuilt(state.currentIngested)
+        val (_, jobs) = JobCount(sp.sparkContext)(graft.streaming.CorpusIngest.clusterBatch(
+          sp.sparkContext.parallelize(batch, 2).toDF("doc_id", "sh"), state, "doc_id", "sh", 0.5))
         graft.streaming.CorpusIngest.deleteBatch(Seq(3L, 101L).toDF("doc_id"), state,
           "doc_id", "sh", 0.5)
-        Run(labels(state.currentLabels), held)
+        Run(labels(state.currentLabels), jobs)
       })
     },
     SizeRoute.GraphProbeQueries -> { seed =>
@@ -132,6 +131,19 @@ class SizeRouteSpec extends SparkTestBase {
         Run(out, entries > 1)
       })
     })
+
+  test("collectWithin: a many-partition frame over its bound falls back; at it, every row comes back") {
+    val sp = spark
+    import sp.implicits._
+    val pinned = sp.sparkContext.parallelize(1L to 200L, 16).toDF("x")
+      .localCheckpoint(eager = false)
+    val weight = (r: Row) => r.getLong(0)
+    val total = (1L to 200L).sum
+    assert(SizeRoute.collectWithin(pinned, total - 1, weight).isEmpty)
+    assert(SizeRoute.collectWithin(pinned, 0, weight).isEmpty)
+    assert(SizeRoute.collectWithin(pinned, total, weight).map(_.map(_.getLong(0)).toSeq)
+      .contains(1L to 200L))
+  }
 
   test("the fixture map covers every registered route") {
     assert(fixtures.keySet == SizeRoute.Registry.toSet)

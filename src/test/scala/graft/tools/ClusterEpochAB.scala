@@ -2,22 +2,19 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.JobCount
-import graft.ops.{Dedup, SizeRoute, TextOps}
+import graft.ops.TextOps
 import graft.streaming.CorpusIngest
 
-/** Interleaved in-JVM A/B of one cluster-maintenance epoch: the engine's
-  * `CorpusIngest.clusterBatch`/`deleteBatch` (A) against the epoch bodies
-  * of the previous design (B, kept below as `Previous`: two shuffled
-  * Jaccard joins, the micro graph pinned and counted, shuffled relabel
-  * joins). Both arms run the same crawl — at-rest docs, 40-doc ingest
-  * epochs, a 20-doc takedown every 3rd epoch, a collapse every 4th — from
-  * JSONL files, so no batch is a driver-held LocalRelation. Each round
-  * builds a fresh state per arm (untimed), runs the epochs, and records
-  * each epoch's wall and Spark jobs; arms alternate order per round. The
-  * two arms' final labelings must be equal.
+/** Times the cluster-maintenance epochs of one crawl: the engine's
+  * `CorpusIngest.clusterBatch`/`deleteBatch` over at-rest docs, 40-doc
+  * ingest epochs, a 20-doc takedown every 3rd epoch and a collapse every
+  * 4th, read from JSONL files so no batch is a driver-held LocalRelation.
+  * Each round builds a fresh state (untimed) and records each epoch's wall
+  * and Spark jobs. It uses only the public epoch API, so the same file
+  * runs against an older checkout: an A/B alternates runs of the two
+  * checkouts and compares their per-kind lines and label digests.
   *
   * Usage: sbt "Test/runMain graft.tools.ClusterEpochAB [rounds] [epochs] [seed]"
   */
@@ -28,198 +25,6 @@ object ClusterEpochAB {
   val TakedownEvery = 3
   val CollapseEvery = 4
   val Tau = 0.5
-
-  /** The previous design's epoch bodies (engine calls replaced by their
-    * former definitions where those changed).
-    */
-  object Previous {
-    final class State(var ingested: DataFrame, var labels: DataFrame, var since: Int = 0)
-
-    def jaccardJoin(df: DataFrame, idCol: String, shingleCol: String,
-        tau: Double): DataFrame = {
-      val base = df
-        .select(col(idCol).as("__id"), array_distinct(col(shingleCol)).as("__arr"))
-        .withColumn("__sz", size(col("__arr")).cast("long"))
-        .where(col("__sz") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val ex = base.select(col("__id"), col("__sz"), explode(col("__arr")).as("__sh"))
-      val l = ex.select(col("__sh"), col("__id").as("a"), col("__sz").as("size_a"))
-      val r = ex.select(col("__sh"), col("__id").as("b"), col("__sz").as("size_b"))
-      l.join(r, "__sh")
-        .where(col("a") < col("b") &&
-          col("size_b") >= ceil(lit(tau) * col("size_a")) &&
-          col("size_a") >= ceil(lit(tau) * col("size_b")))
-        .groupBy("a", "b", "size_a", "size_b")
-        .agg(count(lit(1)).as("inter"))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (col("size_a") + col("size_b") - col("inter")).cast("double"))
-        .where(col("jaccard") >= tau)
-        .select("a", "b", "inter", "size_a", "size_b", "jaccard")
-    }
-
-    def clusterBatch(batch: DataFrame, state: State, idCol: String,
-        shingleCol: String, tau: Double): DataFrame = {
-      val bsh = batch.select(idCol, shingleCol).localCheckpoint(eager = false)
-      val newPairs = jaccardJoin(bsh, idCol, shingleCol, tau)
-        .select("a", "b")
-        .unionAll(Dedup.jaccardJoinAgainst(bsh, state.ingested, idCol,
-          shingleCol, tau).select("a", "b"))
-      val merged = incrementalComponents(state.labels, idCol, newPairs)
-      state.labels = merged
-      state.ingested = state.ingested.unionAll(bsh)
-      collapse(state)
-      merged
-    }
-
-    def deleteBatch(delIds: DataFrame, state: State, idCol: String,
-        shingleCol: String, tau: Double): DataFrame = {
-      val del = delIds.select(idCol).localCheckpoint(eager = false)
-      val ingested = state.ingested
-      val relabeled = deleteFromComponents(state.labels, idCol, del,
-        affectedIds => jaccardJoin(
-          ingested.join(affectedIds, Seq(idCol), "left_semi"),
-          idCol, shingleCol, tau).select("a", "b"))
-      state.labels = relabeled
-      state.ingested = ingested.join(del, Seq(idCol), "left_anti")
-      collapse(state)
-      relabeled
-    }
-
-    private def collapse(state: State): Unit = {
-      state.since += 1
-      if (state.since >= CollapseEvery) {
-        state.ingested = state.ingested.localCheckpoint()
-        state.since = 0
-      }
-    }
-
-    def incrementalComponents(labels: DataFrame, idCol: String,
-        newPairs: DataFrame, maxIters: Int = 25,
-        checkpointDir: Option[String] = None): DataFrame = {
-      val (plan, caches) = incrementalComponentsPlan(labels, idCol, newPairs,
-        maxIters, checkpointDir)
-      // pin the output, then release every internal cache (scoped cleanup —
-      // nothing this function persisted outlives it)
-      val out = plan.localCheckpoint()
-      caches.foreach(_.unpersist())
-      out
-    }
-
-    def incrementalComponentsPlan(labels: DataFrame, idCol: String,
-        newPairs: DataFrame, maxIters: Int = 25,
-        checkpointDir: Option[String] = None): (DataFrame, Seq[DataFrame]) = {
-      val lab = labels.select(col(idCol).as("__oid"), col("component").as("__ocomp"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val np = newPairs.select(col("a"), col("b"))
-      val touched = np.select(col("a").as("__oid"))
-        .unionAll(np.select(col("b").as("__oid"))).distinct()
-      // old state enters ONLY through touched members: one anchor edge to
-      // the cluster's canonical node stands in for the whole old cluster
-      val anchors = lab.join(touched, Seq("__oid"))
-        .where(col("__oid") =!= col("__ocomp"))
-        .select(col("__oid").as("a"), col("__ocomp").as("b"))
-      // The micro graph is batch-sized BY CONSTRUCTION (new pairs + one
-      // anchor per touched member — never corpus-sized), so it is labeled
-      // through the size route of [[labelMicroGraph]].
-      val microEdges = pinMicroEdges(np.unionAll(anchors), checkpointDir)
-      // no persist on micro: the driver branch is a LocalRelation and the
-      // star branch's labels sit on the fixpoint's final checkpoint — both
-      // of its two consumers below re-derive from pinned blocks
-      val micro = labelMicroGraph(microEdges, maxIters, checkpointDir)
-      // affected old clusters: canonical id -> merged (global-min) label
-      val relabel = micro.join(
-          lab.select(col("__ocomp").as("__mid")).distinct(), Seq("__mid"))
-        .select(col("__mid").as("__ocomp"), col("component").as("__merged"))
-      val updatedOld = lab.join(relabel, Seq("__ocomp"), "left")
-        .select(col("__oid").as(idCol),
-          coalesce(col("__merged"), col("__ocomp")).as("component"))
-      // nodes the batch introduced (not in the at-rest labeling)
-      val fresh = micro
-        .join(lab.select(col("__oid").as("__mid")), Seq("__mid"), "left_anti")
-        .select(col("__mid").as(idCol), col("component"))
-      (updatedOld.unionAll(fresh), Seq(microEdges, lab))
-    }
-
-    def labelMicroGraph(microEdges: DataFrame, maxIters: Int,
-        checkpointDir: Option[String]): DataFrame =
-      if (microEdges.count() <= SizeRoute(SizeRoute.GraphLabelEdges) &&
-          SizeRoute.underDriverByteBound(microEdges))
-        driverLabels(microEdges)
-      else Dedup.componentsStar(microEdges, "__mid", maxIters, checkpointDir)
-
-    def driverLabels(edges: DataFrame): DataFrame = {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-        var c = x // path compression
-        while (parent.getOrDefault(c, c) != c) {
-          val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
-        }
-        parent.putIfAbsent(r, r)
-        r
-      }
-      edges.collect().foreach { row =>
-        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-      import scala.jdk.CollectionConverters._
-      // snapshot before mapping: find() path-compresses (value writes on
-      // existing keys only — roots were inserted during edge processing)
-      val keys = parent.keySet().asScala.toVector
-      val rows = keys.map(x => (x, find(x)))
-      edges.sparkSession.createDataFrame(rows).toDF("__mid", "component")
-    }
-
-    def pinMicroEdges(microPlan: DataFrame,
-        checkpointDir: Option[String]): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        microPlan.sparkSession.sparkContext.setCheckpointDir(dir)
-        microPlan.checkpoint()
-      case None => microPlan.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-
-    def roundCheckpoint(spark: org.apache.spark.sql.SparkSession,
-        checkpointDir: Option[String]): DataFrame => DataFrame =
-      checkpointDir match {
-        case Some(dir) =>
-          spark.sparkContext.setCheckpointDir(dir)
-          df => df.checkpoint()
-        case None => df => df.localCheckpoint()
-      }
-
-    def deleteFromComponents(labels: DataFrame, idCol: String,
-        delIds: DataFrame, pairsAmong: DataFrame => DataFrame,
-        maxIters: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
-      val lab = labels.select(col(idCol).as("__oid"), col("component").as("__ocomp"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val del = delIds.select(col(idCol).as("__oid")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // components that contain at least one deleted member — everything
-      // else is provably unaffected and passes through below
-      val touched = lab.join(del, Seq("__oid"))
-        .select(col("__ocomp")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val affected = lab.join(touched, Seq("__ocomp"), "left_semi")
-        .join(del, Seq("__oid"), "left_anti")
-        .select(col("__oid").as(idCol))
-      // the induced pair set among affected survivors, re-derived under the
-      // caller's pair rule (deletion can PROMOTE a split, so neither stored
-      // labels nor any stored pair subset can stand in for the recompute)
-      val microEdges = pinMicroEdges(
-        pairsAmong(affected).select(col("a"), col("b")), checkpointDir)
-      val micro = labelMicroGraph(microEdges, maxIters, checkpointDir)
-      // survivors with no remaining pair drop out (components' node
-      // contract); everyone micro labeled is an affected survivor
-      val relabeled = micro.select(col("__mid").as(idCol), col("component"))
-      val untouched = lab.join(touched, Seq("__ocomp"), "left_anti")
-        .select(col("__oid").as(idCol), col("__ocomp").as("component"))
-      val out = untouched.unionAll(relabeled).localCheckpoint()
-      Seq(lab, del, touched, microEdges).foreach(_.unpersist())
-      out
-    }
-  }
 
   /** The crawl: at-rest docs (a tenth with a one-word near-dup), then
     * epochs of 40 docs (30% one-word edits of at-rest docs) with a 20-doc
@@ -282,50 +87,35 @@ object ClusterEpochAB {
     val raw = read(s"$dir/at_rest").cache()
     raw.count()
 
-    // arm -> (kind, ms, jobs) per epoch, over all rounds
-    val walls = scala.collection.mutable.Map.empty[String, Vector[(String, Double, Int)]]
-      .withDefaultValue(Vector.empty)
-    var lastLabels = Map.empty[String, Map[Long, Long]]
-    def labelMap(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    def runArm(arm: String): Unit = {
-      val engine = CorpusIngest.clusterState(shingled(raw), "id", "sh", Tau, CollapseEvery)
-      val prev = if (arm == "B")
-        Some(new Previous.State(engine.currentIngested, engine.currentLabels))
-        else None
-      var out: DataFrame = engine.currentLabels
+    // (kind, ms, jobs) per epoch, over all rounds
+    var walls = Vector.empty[(String, Double, Int)]
+    var digests = Set.empty[Int]
+    (0 until rounds).foreach { round =>
+      val state = CorpusIngest.clusterState(shingled(raw), "id", "sh", Tau, CollapseEvery)
+      var out: DataFrame = state.currentLabels
       c.epochs.zipWithIndex.foreach { case ((takedown, _), e) =>
         val kind = if ((e + 1) % CollapseEvery == 0) "collapse"
           else if (takedown) "delete" else "cluster"
         val batch = read(s"$dir/epoch$e")
         val t0 = System.nanoTime()
         val (_, jobs) = JobCount(spark.sparkContext) {
-          out = (takedown, prev) match {
-            case (true, None) => CorpusIngest.deleteBatch(batch.select("id"), engine, "id", "sh", Tau)
-            case (false, None) => CorpusIngest.clusterBatch(shingled(batch), engine, "id", "sh", Tau)
-            case (true, Some(p)) => Previous.deleteBatch(batch.select("id"), p, "id", "sh", Tau)
-            case (false, Some(p)) => Previous.clusterBatch(shingled(batch), p, "id", "sh", Tau)
-          }
+          out = if (takedown) CorpusIngest.deleteBatch(batch.select("id"), state, "id", "sh", Tau)
+            else CorpusIngest.clusterBatch(shingled(batch), state, "id", "sh", Tau)
         }
-        walls(arm) = walls(arm) :+ ((kind, (System.nanoTime() - t0) / 1e6, jobs))
+        walls :+= ((kind, (System.nanoTime() - t0) / 1e6, jobs))
       }
-      lastLabels += arm -> labelMap(out)
+      val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+      digests += labels.hashCode
+      println(s"EPOCHS round=$round labels=${labels.size} digest=${labels.hashCode}")
     }
-
-    (0 until rounds).foreach { r =>
-      val order = if (r % 2 == 0) Seq("A", "B") else Seq("B", "A")
-      order.foreach(runArm)
-      val same = lastLabels("A") == lastLabels("B")
-      println(s"AB round $r order=${order.mkString} labels_equal=$same")
-      if (!same) sys.error(s"round $r: arms disagree")
-    }
+    if (digests.size != 1) sys.error(s"rounds disagree: $digests")
     def at(xs: Seq[Double], q: Double) = {
       val s = xs.sorted; if (s.isEmpty) 0.0 else s(((s.size - 1) * q).round.toInt)
     }
-    for (kind <- Seq("cluster", "delete", "collapse"); arm <- Seq("A", "B")) {
-      val xs = walls(arm).filter(_._1 == kind)
+    for (kind <- Seq("cluster", "delete", "collapse")) {
+      val xs = walls.filter(_._1 == kind)
       val ms = xs.map(_._2)
-      println(f"AB kind=$kind arm=$arm n=${xs.size} median_ms=${at(ms, 0.5)}%.0f " +
+      println(f"EPOCHS kind=$kind n=${xs.size} median_ms=${at(ms, 0.5)}%.0f " +
         f"q1_ms=${at(ms, 0.25)}%.0f q3_ms=${at(ms, 0.75)}%.0f " +
         f"jobs_median=${at(xs.map(_._3.toDouble), 0.5)}%.0f jobs_max=${xs.map(_._3).maxOption.getOrElse(0)}")
     }

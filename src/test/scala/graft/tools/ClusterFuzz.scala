@@ -29,7 +29,7 @@ import graft.ops.SizeRoute
   *    with a takedown epoch after the merges and sometimes one more
   *    ingest epoch AFTER the delete (post-delete re-pairing); every other
   *    streaming scenario forces the distributed routes (zero
-  *    IngestBatchRows and GraphLabelEdges bounds), the rest hold the
+  *    IngestBatchBytes and GraphLabelEdges bounds), the rest hold the
   *    batch on the driver.
   *
   * Usage: sbt "Test/runMain graft.tools.ClusterFuzz [nScenarios] [seed]"
@@ -58,7 +58,7 @@ object ClusterFuzz {
     (0 until n).foreach { i =>
       ran += 1
       if (i % 5 == 4) SizeRoute.withBounds((if (i % 10 == 9)
-          Seq(SizeRoute.IngestBatchRows -> 0, SizeRoute.GraphLabelEdges -> 0)
+          Seq(SizeRoute.IngestBatchBytes -> 0, SizeRoute.GraphLabelEdges -> 0)
           else Nil): _*) {
         // ---- streaming twin: synthesized shingle corpus, 2–3 epochs ----
         val vocab = (0 until 12).map(v => s"s$v")
