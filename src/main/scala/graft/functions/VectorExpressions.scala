@@ -82,7 +82,7 @@ trait VectorBinaryOp extends BinaryExpression with ExpectsInputTypes {
   * runs cold until the JIT catches up (measured: the in-bucket kNN stage
   * of a search-corpus graph build took 1.55 s of CPU inline, 0.25 s here).
   */
-private[functions] object VectorLoop {
+private[graft] object VectorLoop {
 
   /** Stores (dot, |a|², |b|²) in `acc`; false on a NULL element. */
   def accumulate(a: ArrayData, af: Boolean, b: ArrayData, bf: Boolean,
@@ -106,6 +106,21 @@ private[functions] object VectorLoop {
       finish: (Double, Double, Double) => Double): Any = {
     val acc = new Array[Double](3)
     if (accumulate(a, af, b, bf, acc)) finish(acc(0), acc(1), acc(2)) else null
+  }
+
+  /** [[cosineDistance]] of two non-null double vectors, on the driver:
+    * the same accumulation as [[accumulate]], over primitive arrays.
+    */
+  def cosine(a: Array[Double], b: Array[Double]): Double = {
+    if (a.length != b.length) throw VectorErrors.dimMismatch(a.length, b.length)
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < a.length) {
+      val x = a(i); val y = b(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    cosineDistance(dot, na, nb)
   }
 
   /** [[cosineDistance]] of `a` and `b` into `acc(0)`; false on a NULL

@@ -265,23 +265,11 @@ object GraphAnn {
 
   private val SpecMarker = "_graft_graph_spec"
 
-  // bucket manifests + manifest-driven pruned reads live in
-  // [[IndexManifests]] (shared with the IVF store)
-  private def writeBucketManifest(spark: org.apache.spark.sql.SparkSession,
-      table: String, partCol: String): Unit =
-    IndexManifests.write(spark, table, partCol)
-
-  private def readBuckets(spark: org.apache.spark.sql.SparkSession,
-      table: String, partCol: String, wanted: Seq[Long],
-      emptySchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame =
-    IndexManifests.readBuckets(spark, table, partCol, wanted, emptySchema)
-
-  /** Expected stored shapes for the fileless-table read fallback (a table
-    * whose every bucket was dropped or never written holds zero parquet
-    * files — nothing to infer a schema from). `vecType` is the corpus
-    * vector column's type, which the stored `__nv`/`__dstv` columns carry
-    * verbatim.
+  /** The stored shapes of the bucket tables, so their pruned reads infer
+    * no schema — also the shape of a table whose every bucket was dropped
+    * or never written (zero parquet files, nothing to infer from).
+    * `vecType` is the corpus vector column's type, which the stored
+    * `__nv`/`__dstv` columns carry verbatim.
     */
   private def assignSchema(vecType: org.apache.spark.sql.types.DataType) =
     Some(org.apache.spark.sql.types.StructType(Seq(
@@ -481,8 +469,8 @@ object GraphAnn {
     // old members of touched buckets only: a bucket-PRUNED read of the
     // assignment table (manifest-listed directories), never a corpus scan
     val vecType = base.schema(vecCol).dataType
-    val oldTouched = readBuckets(spark, s"$path/assign", "__centroid", touched,
-        assignSchema(vecType))
+    val oldTouched = IndexManifests.readBuckets(spark, s"$path/assign", "__centroid",
+        touched, assignSchema(vecType))
       .select(col("__nid"), col("__nv"), col("__centroid").cast("long"))
       .localCheckpoint()
     val newSide = newMembers.select(col("__centroid"),
@@ -505,8 +493,8 @@ object GraphAnn {
         col("__centroid").as("__bucket"), col("__vr").as(DstVecCol))
     // ... merged with their STORED top-degree edges (bucket-pruned read;
     // the stored __dstv recomputes the identical distance expression)
-    val storedCand = readBuckets(spark, s"$path/edges", "__bucket", touched,
-        edgesSchema(vecType))
+    val storedCand = IndexManifests.readBuckets(spark, s"$path/edges", "__bucket",
+        touched, edgesSchema(vecType))
       .select(col("src"), col("dst"), col(DstVecCol),
         col("__bucket").cast("long"))
       .join(oldSrc.select(col("src"), col("__vl")), Seq("src"))
@@ -521,18 +509,14 @@ object GraphAnn {
       .select(col("src"), col("dst"), col(DstVecCol), col("__bucket"))
     // replace exactly the touched bucket partitions; append the batch's
     // assignment rows (existing assignment rows never change). Same
-    // one-file-per-bucket repartition discipline as the build.
-    updated.repartition(col("__bucket")).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket").parquet(s"$path/edges")
+    // one-file-per-bucket repartition discipline as the build. Both
+    // manifests refresh so the NEXT mutation's pruned reads see any bucket
+    // directory this one created.
+    IndexManifests.replaceBuckets(spark, s"$path/edges", "__bucket", touched, updated)
     newMembers.repartition(col("__centroid"))
       .write.mode("append").partitionBy("__centroid")
       .parquet(s"$path/assign")
-    // refresh both manifests (one single-level listStatus each) so the
-    // NEXT mutation's pruned reads see any bucket directory this one
-    // created
-    writeBucketManifest(spark, s"$path/edges", "__bucket")
-    writeBucketManifest(spark, s"$path/assign", "__centroid")
+    IndexManifests.write(spark, s"$path/assign", "__centroid")
   }
 
   /** Batch DELETE from a materialized graph — the other half of index
@@ -597,40 +581,20 @@ object GraphAnn {
     if (touched.isEmpty) return
     // surviving members of touched buckets: bucket-pruned read minus the
     // batch (anti-join, batch-sized broadcast side — no id-list literals)
-    val remaining = readBuckets(spark, s"$path/assign", "__centroid", touched,
-        assignSchema(base.schema(vecCol).dataType))
+    val remaining = IndexManifests.readBuckets(spark, s"$path/assign", "__centroid",
+        touched, assignSchema(base.schema(vecCol).dataType))
       .select(col("__nid"), col("__nv"), col("__centroid").cast("long"))
       .join(broadcast(delAssigned.select(col("__nid"))), Seq("__nid"),
         "left_anti")
       .localCheckpoint()
     // recompute the touched buckets' member edges from scratch over the
-    // survivors with the build's own kernel (dst vectors ride along)
-    val newEdges = bucketKnnEdges(remaining, degree).localCheckpoint()
-    newEdges.repartition(col("__bucket")).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket").parquet(s"$path/edges")
-    remaining
-      .repartition(col("__centroid")).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__centroid").parquet(s"$path/assign")
-    // dynamic overwrite cannot CLEAR a partition it has no rows for:
-    // explicitly remove touched bucket directories that became empty
-    // (edge-less single-member buckets; fully-emptied memberships)
-    def dropEmptied(table: String, partCol: String, live: Set[Long]): Unit = {
-      val fs = new org.apache.hadoop.fs.Path(table)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      touched.filterNot(live).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(table, s"$partCol=$b"), true)
-      }
-    }
-    dropEmptied(s"$path/edges", "__bucket",
-      newEdges.select(col("__bucket")).distinct()
-        .collect().map(_.getLong(0)).toSet)
-    dropEmptied(s"$path/assign", "__centroid",
-      remaining.select(col("__centroid")).distinct()
-        .collect().map(_.getLong(0)).toSet)
-    writeBucketManifest(spark, s"$path/edges", "__bucket")
-    writeBucketManifest(spark, s"$path/assign", "__centroid")
+    // survivors with the build's own kernel (dst vectors ride along), and
+    // replace both tables' touched buckets — emptied ones (edge-less
+    // single-member buckets; fully-emptied memberships) are dropped
+    IndexManifests.replaceBuckets(spark, s"$path/edges", "__bucket", touched,
+      bucketKnnEdges(remaining, degree))
+    IndexManifests.replaceBuckets(spark, s"$path/assign", "__centroid", touched,
+      remaining)
   }
 
   /** Compact a materialized graph's over-fragmented bucket directories —

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SparkShims
 import org.apache.spark.sql.types.StructType
 
 /** Bucket-directory manifests for partitioned index tables (one bucket id
@@ -58,17 +59,23 @@ private[graft] object IndexManifests {
     }
   }
 
-  /** Full-store write of a bucket-partitioned table, then its manifest.
-    * The explicit-count `repartition(defaultParallelism, partCol)` keeps
-    * one task — so one file — per bucket, and unlike `repartition(partCol)`
-    * it is not coalesced by AQE: a small store's buckets are written by all
-    * cores instead of one task. Shared by every index build (`AnnIndex`,
-    * `GraphAnn`, `ProductQuantizer`); batch-sized append and delete
-    * writes keep their own shape.
+  /** `df` spread for a bucket-partitioned write: the explicit-count
+    * `repartition(defaultParallelism, partCol)` keeps one task — so one
+    * file — per bucket, and unlike `repartition(partCol)` it is not
+    * coalesced by AQE, so even a batch-sized write's buckets are written by
+    * all cores instead of one task (each parquet file costs about 12 ms to
+    * open and close on a 4-core box, so a 40-row append touching 20 buckets
+    * took 0.3 s in one task).
+    */
+  def byBucket(df: DataFrame, partCol: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(partCol))
+
+  /** Full-store write of a bucket-partitioned table ([[byBucket]]), then
+    * its manifest. Shared by every index build (`AnnIndex`, `GraphAnn`,
+    * `ProductQuantizer`).
     */
   def writeBuckets(df: DataFrame, table: String, partCol: String): Unit = {
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(table)
+    byBucket(df, partCol).write.mode("overwrite").partitionBy(partCol).parquet(table)
     write(df.sparkSession, table, partCol)
   }
 
@@ -95,45 +102,76 @@ private[graft] object IndexManifests {
     * graph_insert ScaleSmoke rung's shuffle grew with the corpus until
     * this fix).
     *
-    * When none of the wanted buckets exist (an all-fresh batch) the read
-    * is empty by construction: schema comes from ONE existing bucket
-    * directory when the table has any, else from `emptySchema` — the
-    * caller's expected shape, required because a table with zero bucket
-    * directories holds zero parquet files and schema inference over it
-    * throws (reachable: a graph `edges/` table whose buckets were all
-    * single-member at build time, or a delete that emptied every bucket).
+    * `schema` is the table's stored shape when the caller knows it: every
+    * read then uses it, so Spark infers no schema (no job before the scan
+    * itself), and it is the shape of an empty read. Without it, a read of
+    * none of the wanted buckets (an all-fresh batch) takes its schema from
+    * ONE existing bucket directory; a table with zero bucket directories
+    * holds zero parquet files, and inferring a schema over it throws.
     */
   def readBuckets(spark: SparkSession, table: String, partCol: String,
-      wanted: Seq[Long], emptySchema: Option[StructType] = None): DataFrame =
+      wanted: Seq[Long], schema: Option[StructType] = None): DataFrame = {
+    def parquet(paths: String*): DataFrame =
+      schema.fold(spark.read)(spark.read.schema(_)).option("basePath", table)
+        .parquet(paths: _*)
     read(spark, table) match {
       case Some(all) =>
         val have = all.toSet
         val hit = wanted.filter(have)
-        if (hit.nonEmpty)
-          spark.read.option("basePath", table)
-            .parquet(hit.map(b => s"$table/$partCol=$b"): _*)
-        else if (all.nonEmpty)
-          // none of the wanted buckets exist, but the table has data:
-          // empty frame with the stored schema, read off ONE bucket dir
-          // (still ∝ one bucket, never a full-table listing)
-          spark.read.option("basePath", table)
-            .parquet(s"$table/$partCol=${all.head}")
+        if (hit.nonEmpty) parquet(hit.map(b => s"$table/$partCol=$b"): _*)
+        else schema match {
+          case Some(s) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
+          // still ∝ one bucket, never a full-table listing
+          case None => parquet(all.headOption.fold(table)(b => s"$table/$partCol=$b"))
             .where(lit(false))
-        else emptySchema match {
-          // zero bucket directories -> zero parquet files: nothing to
-          // infer from, so the caller's expected shape is authoritative
-          case Some(schema) => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], schema)
-          case None => spark.read.parquet(table).where(lit(false))
         }
       case None =>
-        val df = spark.read.parquet(table)
+        val df = schema.fold(spark.read)(spark.read.schema(_)).parquet(table)
         val vals: Seq[Any] = df.schema(partCol).dataType match {
           case org.apache.spark.sql.types.IntegerType => wanted.map(_.toInt)
           case _ => wanted
         }
         df.where(col(partCol).isin(vals: _*))
     }
+  }
+
+  /** Replace the `touched` buckets of a partitioned table with `rows`,
+    * their new content — the rewrite step every bucket-partitioned store
+    * shares (IVF store, IVF-PQ code table, graph edges and members): ONE
+    * dynamic partition overwrite replaces just those bucket directories.
+    * `rows` may read the directories it replaces: the commit swaps them
+    * only after every task has finished reading. A dynamic overwrite
+    * cannot CLEAR a bucket it writes no rows for, so the write observes
+    * which buckets still hold rows and the emptied ones are dropped after
+    * it; the manifest is refreshed last.
+    */
+  def replaceBuckets(spark: SparkSession, table: String, partCol: String,
+      touched: Seq[Long], rows: DataFrame): Unit = {
+    val live = new Observation()
+    byBucket(rows.observe(live, collect_set(col(partCol).cast("long")).as("live")), partCol)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(table)
+    val kept = live.get("live").asInstanceOf[scala.collection.Seq[Long]].toSet
+    val fs = IndexFiles.fs(spark, table)
+    touched.filterNot(kept).foreach { b =>
+      fs.delete(new org.apache.hadoop.fs.Path(table, s"$partCol=$b"), true)
+    }
+    write(spark, table, partCol)
+  }
+
+  /** Remove the rows whose `idCol` is among `ids` from the `touched`
+    * buckets ([[replaceBuckets]] over a manifest-listed read of them);
+    * untouched buckets are never read or written. NULL ids are never
+    * removed. `ids` are batch-sized: they ride in the plan as one sorted
+    * array ([[NotAmong]]).
+    */
+  def deleteRows(spark: SparkSession, table: String, partCol: String,
+      idCol: String, touched: Seq[Long], ids: Seq[Long],
+      schema: Option[StructType] = None): Unit =
+    if (touched.nonEmpty) replaceBuckets(spark, table, partCol, touched,
+      readBuckets(spark, table, partCol, touched, schema)
+        .where(coalesce(SparkShims.column(NotAmong(SparkShims.expression(
+          col(idCol).cast("long")), ids.distinct.sorted.toArray)), lit(true))))
 
   /** Compact a partitioned index table's over-fragmented bucket
     * directories — shared by the IVF store (`AnnIndex.compactBuckets`),
@@ -167,28 +205,19 @@ private[graft] object IndexManifests {
       c -> math.max(1L, (bucketStats(c)._2 + targetBytes - 1) / targetBytes)).toMap
     val sliceLit = map(slices.toSeq.flatMap {
       case (c, n) => Seq(lit(c), lit(n)) }: _*)
-    val confKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "dynamic")
-    try {
-      // manifest-listed pruned read: the read cost is ∝ over-threshold
-      // buckets even when the table holds thousands of healthy ones
-      val df = readBuckets(spark, table, partCol, over)
-      val dataCols = df.columns.filterNot(_ == partCol).map(col)
-      val nTasks = math.max(slices.values.sum,
-          spark.sparkContext.defaultParallelism.toLong)
-        .min(Int.MaxValue).toInt
-      df.withColumn("__slice",
-          pmod(hash(dataCols: _*), element_at(sliceLit, col(partCol).cast("long"))))
-        .repartition(nTasks, col(partCol), col("__slice"))
-        .drop("__slice")
-        .write.mode("overwrite").partitionBy(partCol).parquet(table)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
-      }
-    }
+    // manifest-listed pruned read: the read cost is ∝ over-threshold
+    // buckets even when the table holds thousands of healthy ones
+    val df = readBuckets(spark, table, partCol, over)
+    val dataCols = df.columns.filterNot(_ == partCol).map(col)
+    val nTasks = math.max(slices.values.sum,
+        spark.sparkContext.defaultParallelism.toLong)
+      .min(Int.MaxValue).toInt
+    df.withColumn("__slice",
+        pmod(hash(dataCols: _*), element_at(sliceLit, col(partCol).cast("long"))))
+      .repartition(nTasks, col(partCol), col("__slice"))
+      .drop("__slice")
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(table)
     // a compaction only rewrites files within existing bucket dirs, but
     // refresh anyway so the manifest is re-derived from directory truth
     // after any mutation

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SparkShims
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.{array_cosine_distance, array_distance}
 
@@ -621,16 +623,25 @@ object ProductQuantizer {
   /** Append a NEW vector batch to a [[materializeIvfPq]]'d (bucket-
     * partitioned) store: the batch encodes against the STORED codebooks
     * and lands in its buckets under the REPLAYED IVF assignment rule
-    * against `base`'s frozen stride centroids
-    * ([[AnnIndex.replayedAssignment]] — the same frozen-centroid contract
-    * as `AnnIndex.appendToMaterialized`, so the code table and the
-    * companion float index stay bucket-consistent by construction). Only
-    * the batch's rows write (parquet append into their partition
+    * against `base`'s stride centroids ([[AnnIndex.replayedAssignment]] —
+    * the rule `AnnIndex.materialize` files rows by, so the code table and
+    * the companion float index stay bucket-consistent by construction).
+    * Only the batch's rows write (parquet append into their partition
     * directories); the manifest refreshes so the next pruned read sees
     * any bucket this append created.
     */
   def appendToIvfPq(batch: DataFrame, idCol: String, vecCol: String,
       base: DataFrame, stride: Int, path: String,
+      expect: Option[PqSpec] = None): Unit =
+    appendAssigned(batch, idCol, vecCol,
+      AnnIndex.replayedAssignment(batch, idCol, vecCol, base, stride), stride, path, expect)
+
+  /** [[appendToIvfPq]] with the batch's `(idCol, __centroid)` assignment
+    * given — streaming ingest replays it against the companion IVF store
+    * ([[AnnIndex.storedAssignment]]).
+    */
+  private[graft] def appendAssigned(batch: DataFrame, idCol: String, vecCol: String,
+      assignment: DataFrame, stride: Int, path: String,
       expect: Option[PqSpec] = None): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "ivfpq-append") {
     val spark = batch.sparkSession
@@ -647,8 +658,7 @@ object ProductQuantizer {
       s"batch contains IVF centroid-level ids ($idCol divisible by " +
         s"$stride) — re-materialize instead")
     encode(batch, idCol, vecCol, cb, spec)
-      .join(AnnIndex.replayedAssignment(batch, idCol, vecCol, base, stride)
-        .select(col(idCol).cast("long").as("__id"), col("__centroid")),
+      .join(assignment.select(col(idCol).cast("long").as("__id"), col("__centroid")),
         Seq("__id"))
       .write.mode("append").partitionBy("__centroid")
       .parquet(s"$path/codes")
@@ -683,13 +693,15 @@ object ProductQuantizer {
       IndexFiles.withWriterLease(ids.sparkSession, path, "pq-delete") {
     val spark = ids.sparkSession
     val (spec, (_, codes)) = fromMaterialized(spark, path)
-    val delIds = ids.select(col(idCol).cast("long").as("__id")).distinct()
-      .localCheckpoint() // batch-sized; feeds a require + the anti-joins
+    // batch-sized: one collect feeds the refusal, the coverage check and
+    // the id filters as driver values
+    val delIds = ids.where(col(idCol).isNotNull).select(col(idCol).cast("long"))
+      .collect().map(_.getLong(0)).distinct.sorted
     // an empty takedown batch must not leave a zero-row sidecar: any
     // sidecar presence makes every read pay the anti-join and forces the
     // next compactCodes into a full rewrite
     if (delIds.isEmpty) return
-    require(delIds.where(pmod(col("__id"), lit(spec.stride)) === 0).isEmpty,
+    require(!delIds.exists(_ % spec.stride == 0),
       s"batch contains codebook-entry ids ($idCol divisible by " +
         s"${spec.stride}): deleting them orphans every code that references " +
         "their entries — re-materialize instead")
@@ -698,60 +710,43 @@ object ProductQuantizer {
         "IVF-PQ layout: pass the deleted rows' IVF assignment " +
           s"(($idCol, __centroid) frame covering the batch), or use " +
           "deleteFromIvfPq to replay the assignment rule"))
-      val asgIds = asg.select(col(idCol).cast("long").as("__id"),
-        col("__centroid").cast("long").as("__c"))
+      val pairs = asg.select(col(idCol).cast("long").as("__id"),
+          col("__centroid").cast("long"))
+        .where(!SparkShims.column(NotAmong(SparkShims.expression(col("__id")), delIds)))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
       // coverage check: an id missing from the frame would silently keep
       // its code rows (the post-delete-read-back ordering footgun)
-      val uncovered = delIds.join(asgIds, Seq("__id"), "left_anti")
+      val uncovered = delIds.filterNot(pairs.map(_._1).toSet)
       require(uncovered.isEmpty,
         "IVF-PQ delete: the assignment frame does not cover every deleted " +
-          s"id (e.g. ${uncovered.limit(3).collect().map(_.getLong(0)).mkString(", ")}) — " +
+          s"id (e.g. ${uncovered.take(3).mkString(", ")}) — " +
           "pass an assignment taken BEFORE the companion index's own " +
           "delete, or use deleteFromIvfPq")
-      val touched = asgIds
-        .join(broadcast(delIds), Seq("__id"), "left_semi")
-        .select(col("__c")).distinct()
-        .collect().map(_.getLong(0)) // bounded by the batch size
-      if (touched.isEmpty) return
-      // manifest-listed bucket-pruned read (typed-isin legacy fallback
-      // inside; IndexManifests is the graph/IVF tiers' shared mechanism)
-      val remaining = IndexManifests
-        .readBuckets(spark, s"$path/codes", "__centroid", touched.toSeq)
-        .join(broadcast(delIds), Seq("__id"), "left_anti")
-        .localCheckpoint()
-      remaining.repartition(col("__centroid"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__centroid").parquet(s"$path/codes")
-      val live = remaining.select(col("__centroid").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val fs = new org.apache.hadoop.fs.Path(s"$path/codes")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      touched.filterNot(live).foreach { b =>
-        fs.delete(
-          new org.apache.hadoop.fs.Path(s"$path/codes", s"__centroid=$b"), true)
-      }
-      IndexManifests.write(spark, s"$path/codes", "__centroid")
+      IndexManifests.deleteRows(spark, s"$path/codes", "__centroid", "__id",
+        pairs.map(_._2).distinct.sorted, delIds)
     } else {
       // TOMBSTONE delete: append the ids to the sidecar and stop — one
       // batch-sized parquet write, never a corpus-sized codes rewrite
       // (the r14 shape rewrote all M-byte code rows per delete batch).
       // Every read path anti-joins the sidecar (fromMaterialized), and
       // compactCodes folds it into the files under the store's
-      // single-writer contract. coalesce(1): the sidecar is batch-sized,
-      // one file per delete epoch keeps its own listing trivial.
-      delIds.select(col("__id")).coalesce(1)
-        .write.mode("append").parquet(s"$path/$TombstoneDir")
+      // single-writer contract. One file per delete epoch keeps the
+      // sidecar's own listing trivial.
+      spark.createDataFrame(java.util.Arrays.asList(delIds.map(Row(_)): _*),
+          StructType(Seq(StructField("__id", LongType))))
+        .coalesce(1).write.mode("append").parquet(s"$path/$TombstoneDir")
     }
   }
 
   /** [[deleteFromMaterialized]] for the IVF-PQ layout with the assignment
-    * REPLAYED from `base`'s frozen stride centroids instead of trusted
-    * from a caller frame (`batch` carries the deleted rows' vectors — the
-    * caller has them: they are corpus rows). Exactly the stored buckets by
-    * the frozen-centroid argument ([[AnnIndex.replayedAssignment]]), so a
-    * stale or partial frame can never turn the delete into a silent
-    * partial no-op — the same contract as `AnnIndex.deleteFromMaterialized`
-    * and `GraphAnn.deleteFromMaterialized`.
+    * REPLAYED from `base`'s stride centroids instead of trusted from a
+    * caller frame (`batch` carries the deleted rows' vectors — the caller
+    * has them: they are corpus rows). Exactly the stored buckets, since
+    * the replay is the rule the build filed them by
+    * ([[AnnIndex.replayedAssignment]]), so a stale or partial frame can
+    * never turn the delete into a silent partial no-op — the same contract
+    * as `AnnIndex.deleteFromMaterialized` and
+    * `GraphAnn.deleteFromMaterialized`.
     */
   def deleteFromIvfPq(batch: DataFrame, idCol: String, vecCol: String,
       base: DataFrame, stride: Int, path: String): Unit =

@@ -1,10 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
 
-import graft.functions.{array_cosine_distance, array_inner_product, array_l2_norm}
+import graft.functions.{VectorLoop, array_cosine_distance, array_inner_product, array_l2_norm}
 
 /** Embedding-similarity joins and approximate-nearest-neighbor search
   * (north star: similarity search over an embedding column).
@@ -421,7 +424,7 @@ object SimilarityJoin {
         var hit = false
         while (mi < members.length && !hit) {
           val (mid, mv, mblk) = members(mi)
-          if (cosineDistanceLocal(v, mv) <= tau) {
+          if (VectorLoop.cosine(v, mv) <= tau) {
             if (emitIntraBlock || mblk != blk)
               out += ((math.min(id, mid), math.max(id, mid)))
             hit = true
@@ -443,26 +446,6 @@ object SimilarityJoin {
       }
     }
     out.iterator
-  }
-
-  /** Bit-exact local replica of [[graft.functions.CosineDistance]] over
-    * non-null double vectors: same left-to-right accumulation, same
-    * zero-vector -> 2.0, same [-1, 1] clamp before 1-x. Dimension mismatch
-    * throws the same error (unreachable after signature computation, which
-    * already dot-products every vector against dim-length planes).
-    */
-  private def cosineDistanceLocal(a: Array[Double], b: Array[Double]): Double = {
-    val n = a.length
-    if (n != b.length) throw graft.functions.VectorErrors.dimMismatch(n, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a(i); val y = b(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 2.0
-    else 1.0 - math.max(-1.0, math.min(1.0, dot / (math.sqrt(na) * math.sqrt(nb))))
   }
 
   /** Approximate cosine-threshold self-join: random-hyperplane signatures,
@@ -522,22 +505,25 @@ object SimilarityJoin {
 }
 
 /** IVF-style ANN index: a coarse quantizer over deterministic centroids.
-  * Build: pick every `stride`-th vector as a centroid (deterministic — no
-  * k-means iterations needed for a correctness-first index; swap in k-means||
-  * at scale), assign each vector to its nearest centroid via a BROADCAST
-  * centroid join + `min(struct(dist, cid))` argmin aggregation — the
-  * assignment is a plan over DataFrames end to end, so centroid count scales
-  * to millions without any driver collect or per-centroid literal in the
-  * expression tree (a 10^7-centroid literal argmin would kill plan
-  * serialization and codegen long before 100 TB).
-  * Query: rank centroids by distance to the query (a tiny distributed top-k;
-  * only `nprobe` ids reach the driver), scan only the `nprobe` nearest
-  * buckets (co-partitioned by centroid id), then exact top-k within them.
+  * Build: every vector whose id divides by `stride` is a centroid
+  * (deterministic — no k-means rounds needed for a correctness-first
+  * index; [[AnnIndex.buildKMeans]] refines them), and each vector is filed
+  * under its nearest centroid by ONE codegen'd `cosine_argmin` against the
+  * whole centroid table as one row: no shuffle and no aggregate, and the
+  * same kernel serves build, append, delete and the IVF-PQ replay.
+  * Query: rank centroids by distance to the query, scan only the `nprobe`
+  * nearest buckets, then exact top-k within them. A materialized store
+  * ([[AnnIndex.materialize]]) keeps its centroid table and schema beside
+  * its buckets, so an opened store ranks on the driver and lists only the
+  * ranked bucket directories: a probe is one Spark job.
   */
 final class AnnIndex private (
-    private val assigned: DataFrame, // (id, vec, __centroid) — partitioned by __centroid
-    private val centroids: DataFrame, // (__cid, __cvec)
+    assignedOf: () => DataFrame, // (id, vec, __centroid): every bucket
+    cents: AnnIndex.Centroids,
+    store: Option[AnnIndex.Store],
     idCol: String, vecCol: String) extends Serializable {
+
+  private lazy val assigned = assignedOf()
 
   /** Exact brute-force top-k — the reference's semantics
     * (ORDER BY distance LIMIT k -> TakeOrderedAndProject).
@@ -550,11 +536,9 @@ final class AnnIndex private (
       .limit(k)
 
   /** IVF probe: top-k among the `nprobe` buckets nearest to the query.
-    * Fully lazy — the nprobe nearest centroids are a ranked k-row frame
-    * broadcast into a semi-join against the assignment, not a driver
-    * `.collect()` (no driver round-trip of centroid ids on the query path).
-    * Executing a probe still runs TWO Spark jobs: the broadcast of the
-    * centroid ranking is its own job, then the bucket-pruned top-k scan.
+    * On an opened store it is ONE Spark job (two above
+    * [[SizeRoute.IvfCentroidBytes]], where the ranking is distributed); an
+    * in-memory index ([[AnnIndex.build]]) ranks inside its lazy plan.
     */
   def probeTopK(qvec: Array[Double], k: Int, nprobe: Int = 4): DataFrame =
     probedRows(qvec, nprobe)
@@ -566,15 +550,18 @@ final class AnnIndex private (
   /** The bucket-pruned `(id, vec)` rows a probe scans — exposed for tier
     * composition: IVF-PQ is
     * `ProductQuantizer.adcRerankTopK(index.probedRows(q, nprobe), ...)`,
-    * so partition pruning cuts the scan to nprobe bucket directories, PQ
-    * codes cut the per-row cost inside them, and only the rerank overfetch
-    * touches full-precision vectors.
+    * so the scan is cut to nprobe bucket directories, PQ codes cut the
+    * per-row cost inside them, and only the rerank overfetch touches
+    * full-precision vectors.
     */
-  def probedRows(qvec: Array[Double], nprobe: Int): DataFrame =
-    assigned
-      .join(broadcast(probedCentroids(qvec, nprobe)),
-        col("__centroid") === col("__probe_cid"), "left_semi")
-      .select(col(idCol), col(vecCol))
+  def probedRows(qvec: Array[Double], nprobe: Int): DataFrame = store match {
+    case Some(s) => s.buckets(cents.ranked(qvec, nprobe)).select(col(idCol), col(vecCol))
+    case None =>
+      assigned
+        .join(broadcast(probedCentroids(qvec, nprobe)),
+          col("__centroid") === col("__probe_cid"), "left_semi")
+        .select(col(idCol), col(vecCol))
+  }
 
   /** The `nprobe` centroid ids nearest the query, as a `(__probe_cid)`
     * frame — the bucket-selection half of a probe, exposed so sibling
@@ -582,13 +569,9 @@ final class AnnIndex private (
     * [[ProductQuantizer.probeIvfPqTopK]]'s centroid-partitioned code
     * table) can partition-prune with the identical selection.
     */
-  def probedCentroids(qvec: Array[Double], nprobe: Int): DataFrame = {
-    val q = typedLit(qvec.toSeq)
-    centroids
-      .select(col("__cid"), array_cosine_distance(col("__cvec"), q).as("__d"))
-      .orderBy(col("__d").asc_nulls_last, col("__cid").asc)
-      .limit(nprobe)
-      .select(col("__cid").as("__probe_cid"))
+  def probedCentroids(qvec: Array[Double], nprobe: Int): DataFrame = store match {
+    case Some(s) => s.idFrame(cents.ranked(qvec, nprobe))
+    case None => AnnIndex.ranked(cents.frame(), qvec, nprobe)
   }
 
   /** Batched IVF probe: ONE pass over the index serving a whole
@@ -620,7 +603,7 @@ final class AnnIndex private (
       col(qvecCol).as("__qvec")))
     val w = Window.partitionBy(col("__qid"))
       .orderBy(col("__d").asc_nulls_last, col("__cid").asc)
-    val probed = centroids.crossJoin(q)
+    val probed = cents.frame().crossJoin(q)
       .select(col("__qid"), col("__cid"),
         array_cosine_distance(col("__cvec"), col("__qvec")).as("__d"))
       .withColumn("__rn", row_number().over(w))
@@ -668,68 +651,56 @@ final class AnnIndex private (
 object AnnIndex {
 
   /** Materialize the IVF index as parquet PARTITIONED BY centroid bucket —
-    * the build-once / probe-many shape IVF exists for. Each probe's
-    * centroid ranking broadcasts into the semi-join and dynamic partition
-    * pruning cuts the scan to the `nprobe` bucket directories; the other
-    * buckets are never read. `stride` doubles as the file-granularity knob:
-    * pick it so a bucket is a healthy parquet file (hundreds of MB), since
-    * each bucket is one output directory holding one file. The write goes
-    * through [[IndexManifests.writeBuckets]], so every core writes buckets
-    * (a `repartition(__centroid)` alone is coalesced to one task on a small
-    * store).
+    * the build-once / probe-many shape IVF exists for — plus the store's
+    * centroid file ([[CentroidFile]]: stride, bucket schema, centroid
+    * table), so every later open, append and delete reads the centroids
+    * from the store, never from a caller frame. The centroid table (n/stride
+    * vectors, model-artifact-sized like PQ codebooks) is collected once.
+    * `stride` doubles as the file-granularity knob: each bucket is one
+    * directory holding one file ([[IndexManifests.writeBuckets]]). Ids must
+    * be unique: each input row is one stored row.
     */
   def materialize(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, path: String): Unit = {
-    // materializing is already an action — fail fast on an empty centroid
-    // set here instead of leaving a part-less parquet dir that makes a
-    // later read die with an unrelated schema-inference error
-    require(!centroidsOf(df, idCol, vecCol, stride).isEmpty,
-      s"no centroids: no $idCol divisible by stride $stride")
-    IndexManifests.writeBuckets(build(df, idCol, vecCol, stride).assigned,
+    val spark = df.sparkSession
+    val rows = centroidsOf(df, idCol, vecCol, stride).collect()
+    require(rows.nonEmpty, s"no centroids: no $idCol divisible by stride $stride")
+    val schema = StructType(df.select(col(idCol), col(vecCol)).schema
+      .map(_.copy(nullable = true)) :+ StructField("__centroid", LongType))
+    val text = Store.render(stride, schema, rows)
+    val cents = new Centroids(() => centroidsOf(df, idCol, vecCol, stride),
+      Store.held(text.getBytes(UTF_8).length, text.linesIterator.drop(Store.HeaderLines),
+        Store.elemType(schema, vecCol)))
+    IndexManifests.writeBuckets(assignedTo(df, idCol, vecCol, cents, widen = true),
       path, "__centroid")
-    IndexFiles.writeString(df.sparkSession, s"$path/$StrideMarker",
-      stride.toString)
+    // after the buckets: their overwrite clears the store directory
+    IndexFiles.writeString(spark, s"$path/$CentroidFile", text)
   }
 
-  /** Assert the caller's stride against the on-disk marker when one exists
-    * (legacy stores have none), via the store's Hadoop FileSystem — a
-    * mismatched stride would rank centroids that don't exist as buckets.
-    */
-  private def checkStride(spark: org.apache.spark.sql.SparkSession,
-      path: String, stride: Int, verb: String): Unit =
-    IndexFiles.readStringOpt(spark, s"$path/$StrideMarker").foreach { s =>
-      require(s.trim == stride.toString,
-        s"index at $path was materialized with stride ${s.trim}, $verb with $stride")
-    }
-
-  /** Open a [[materialize]]d index. `df` must be the same source frame (the
-    * centroid table is re-derived from it — a tiny lazy filter, never
-    * materialized at open time); `stride` must match the one materialized,
-    * which is checked against the on-disk marker when it is readable (a
-    * mismatched stride would rank centroids that don't exist as buckets).
+  /** Open a [[materialize]]d index from its path: the centroid file is
+    * read once into the handle (no Spark job) and `stride` must match it.
+    * `df` is not read. A store without the file must be re-materialized.
     */
   def fromMaterialized(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, path: String): AnnIndex = {
-    checkStride(df.sparkSession, path, stride, "opened")
-    new AnnIndex(df.sparkSession.read.parquet(path),
-      centroidsOf(df, idCol, vecCol, stride), idCol, vecCol)
+    val s = Store.open(df.sparkSession, path, vecCol, stride, "opened")
+    new AnnIndex(() => s.all, s.centroids, Some(s), idCol, vecCol)
   }
 
   /** Append a NEW vector batch to a [[materialize]]d index: the batch is
-    * assigned against the index's EXISTING centroids (derived from `base`,
-    * the frame the index was built over), and only the batch's rows are
-    * appended to the affected bucket directories. This is the ingest path
-    * at scale — the already-assigned corpus is never re-read or rewritten,
-    * bucket geometry is untouched, and probes see old + new immediately.
-    * Appended vectors never become centroids (the standard IVF contract);
-    * re-materialize to re-balance after heavy growth.
+    * assigned against the store's centroid table and appended to the
+    * affected bucket directories, one file each ([[IndexManifests.byBucket]]).
+    * The assigned corpus is never re-read or rewritten, and probes see old
+    * + new immediately. Appended vectors never become centroids (the
+    * standard IVF contract); re-materialize to re-balance after heavy
+    * growth. `base` is not read.
     */
   def appendToMaterialized(batch: DataFrame, base: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "ann-append") {
-    checkStride(batch.sparkSession, path, stride, "appending")
-    buildWith(batch, idCol, vecCol, centroidsOf(base, idCol, vecCol, stride))
-      .assigned
+    val s = Store.open(batch.sparkSession, path, vecCol, stride, "appending")
+    IndexManifests.byBucket(assignedTo(batch, idCol, vecCol, s.centroids, widen = false),
+        "__centroid")
       .write.mode("append").partitionBy("__centroid").parquet(path)
     // refresh so the next maintenance read's manifest sees any bucket
     // directory this batch created
@@ -742,49 +713,27 @@ object AnnIndex {
     * EXACT, and trivially so for IVF: the index stores only assigned rows,
     * so deletion = rewriting the touched bucket partitions without the
     * deleted ids — row-identical to materializing over the reduced corpus.
-    * The deleted rows' buckets are recovered by REPLAYING the frozen
-    * deterministic assignment on the batch (no corpus-sized lookup by a
-    * non-partition key); untouched buckets are never read or written
-    * (partition-pruned read + dynamic partition overwrite). Deleting
-    * centroid-level ids is refused: the centroid table re-derives from the
-    * caller's frame at open time, so removing one changes bucket geometry —
-    * re-materialize instead. Same single-writer contract as every
-    * materialized-index mutation.
+    * One job REPLAYS the assignment against the stored centroid table and
+    * collects the batch's `(id, bucket)` pairs, then
+    * [[IndexManifests.deleteRows]] rewrites only the touched buckets.
+    * Deleting centroid-level ids is refused: it changes bucket geometry —
+    * re-materialize instead. Single-writer, like every materialized-index
+    * mutation; `base` is not read.
     */
   def deleteFromMaterialized(batch: DataFrame, base: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "ann-delete") {
     val spark = batch.sparkSession
-    checkStride(spark, path, stride, "deleting")
-    require(batch.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
+    val s = Store.open(spark, path, vecCol, stride, "deleting")
+    val pairs = assignedTo(batch.where(col(idCol).isNotNull), idCol, vecCol,
+        s.centroids, widen = false)
+      .select(col(idCol).cast("long"), col("__centroid"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    require(!pairs.exists(_._1 % stride == 0),
       s"batch contains centroid-level ids ($idCol divisible by $stride): " +
         "deleting centroids changes the bucket geometry — re-materialize instead")
-    val delAssigned = buildWith(batch, idCol, vecCol,
-      centroidsOf(base, idCol, vecCol, stride)).assigned.localCheckpoint()
-    val touched = delAssigned.select(col("__centroid")).distinct()
-      .collect().map(_.getLong(0)) // bounded by the batch size
-    if (touched.isEmpty) return
-    // manifest-listed bucket-pruned read (typed-isin legacy fallback
-    // inside) — the graph tier's mechanism, shared via IndexManifests
-    val remaining = IndexManifests
-      .readBuckets(spark, path, "__centroid", touched.toSeq)
-      .join(broadcast(delAssigned.select(col(idCol))), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    remaining.repartition(col("__centroid"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__centroid").parquet(path)
-    // a dynamic overwrite cannot CLEAR partitions it has no rows for —
-    // explicitly drop touched buckets whose membership emptied (only
-    // possible when a bucket's centroid row itself lives elsewhere, a
-    // duplicate-vector corner; cheap to handle exactly)
-    val live = remaining.select(col("__centroid").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(live).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, s"__centroid=$b"), true)
-    }
-    IndexManifests.write(spark, path, "__centroid")
+    IndexManifests.deleteRows(spark, path, "__centroid", idCol,
+      pairs.map(_._2).distinct.sorted, pairs.map(_._1), Some(s.schema))
   }
 
   /** Compact a [[materialize]]d index's over-fragmented buckets — the
@@ -811,32 +760,28 @@ object AnnIndex {
     * Returns the compacted bucket ids (empty = nothing exceeded the
     * threshold — the call is a cheap no-op, safe on a maintenance timer).
     */
-  def compactBuckets(spark: org.apache.spark.sql.SparkSession, path: String,
+  def compactBuckets(spark: SparkSession, path: String,
       maxFilesPerBucket: Int = 8, targetBytes: Long = 128L << 20): Seq[Long] =
     IndexFiles.withWriterLease(spark, path, "ann-compact") {
       IndexManifests.compactTable(spark, path, "__centroid",
         maxFilesPerBucket, targetBytes)
     }
 
-  private val StrideMarker = "_graft_ann_stride"
+  /** A store's self-description, written by [[materialize]]: the `_`
+    * directory hides it from parquet reads; Hadoop's text input reads the
+    * un-prefixed file.
+    */
+  private val CentroidFile = "_graft_ivf/centroids"
 
   private def centroidsOf(df: DataFrame, idCol: String, vecCol: String,
       stride: Int): DataFrame =
     df.where(pmod(col(idCol), lit(stride)) === 0)
       .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
 
-  // the assignment's per-row parallelism must not inherit the INPUT's file
-  // layout (caught on the r18 100×-sf0.1 rung: the ann_ivf_delete spool's
-  // 200k-vector build sat in one SortAggregate task for 25+ min computing
-  // 625M dot products on one core) — shared rationale in
-  // [[graft.util.Partitions.widenNarrowScan]]
-  private def widened(df: DataFrame): DataFrame =
-    graft.util.Partitions.widenNarrowScan(df)
-
   /** Lloyd-refined centroids: start from the deterministic stride sample,
     * run `iters` rounds of (argmin assignment → per-cluster mean). Each
-    * round is one broadcast join + two aggregates — the same scale shape as
-    * the index build itself; k-means|| would only change the INIT step.
+    * round is the index build's assignment kernel + two aggregates;
+    * k-means|| would only change the INIT step.
     *
     * Deterministic and oracle-replicable by construction: fixed init, fixed
     * iteration count, empty clusters keep their previous centroid, and
@@ -846,18 +791,17 @@ object AnnIndex {
     */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
       stride: Int = 64, iters: Int = 2): DataFrame = {
-    val vecs = widened(
+    // the assignment's per-row parallelism must not inherit the INPUT's
+    // file layout — shared rationale in
+    // [[graft.util.Partitions.widenNarrowScan]]
+    val vecs = graft.util.Partitions.widenNarrowScan(
       df.select(col(idCol), col(vecCol).cast("array<double>").as("__v")))
     var cents = centroidsOf(df, idCol, vecCol, stride)
       .select(col("__cid"), col("__cvec").cast("array<double>").as("__cvec"))
     for (_ <- 1 to iters) {
-      val assigned = vecs
-        .crossJoin(broadcast(cents))
-        .select(col(idCol), col("__v"),
-          struct(array_cosine_distance(col("__v"), col("__cvec")).as("d"),
-            col("__cid").as("cid")).as("__dc"))
-        .groupBy(col(idCol))
-        .agg(first(col("__v")).as("__v"), min(col("__dc")).getField("cid").as("__cid"))
+      val current = cents
+      val assigned = assignedTo(vecs, idCol, "__v", new Centroids(() => current, None),
+        widen = false).withColumnRenamed("__centroid", "__cid")
       // vector_sum: ONE shuffle of dim-length buffers; the posexplode
       // formulation this replaces shuffled |vectors|·dim rows twice and
       // sorted them back into arrays. round-to-1e-6 absorbs the same
@@ -886,7 +830,7 @@ object AnnIndex {
     */
   def buildKMeans(df: DataFrame, idCol: String, vecCol: String,
       stride: Int = 64, iters: Int = 2): AnnIndex =
-    buildWith(df, idCol, vecCol, kmeansCentroids(df, idCol, vecCol, stride, iters))
+    inMemory(df, idCol, vecCol, kmeansCentroids(df, idCol, vecCol, stride, iters))
 
   /** Build the IVF index. `stride` controls centroid count (~n/stride). */
   def build(df: DataFrame, idCol: String, vecCol: String,
@@ -894,36 +838,215 @@ object AnnIndex {
     // fully lazy: no Spark job at build time. An empty centroid set (no id
     // divisible by `stride`) makes every probe return empty — pick a stride
     // <= max id, or validate eagerly at the call site if that risk is live.
-    buildWith(df, idCol, vecCol, centroidsOf(df, idCol, vecCol, stride))
+    inMemory(df, idCol, vecCol, centroidsOf(df, idCol, vecCol, stride))
 
-  /** Replay the IVF assignment rule for a batch against `base`'s frozen
-    * stride centroids — `(idCol, __centroid)`, exactly the rows
-    * [[materialize]] stored for those ids (deterministic argmin + tie-break,
-    * frozen centroid set). The delete/append paths of the composed IVF-PQ
-    * store use this instead of trusting a caller-supplied assignment frame
-    * (whose staleness — e.g. the companion index read back AFTER its own
-    * delete — would silently skip rows).
+  private def inMemory(df: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame): AnnIndex = {
+    val cents = new Centroids(() => centroids, None)
+    new AnnIndex(() => assignedTo(df, idCol, vecCol, cents, widen = true),
+      cents, None, idCol, vecCol)
+  }
+
+  /** The assignment rule replayed on a batch against `base`'s stride
+    * centroids: `(idCol, __centroid)`, the rows [[materialize]] stores for
+    * those ids over `base` — what IVF-PQ maintenance uses instead of
+    * trusting a caller-supplied (possibly stale) assignment frame.
     */
   private[graft] def replayedAssignment(batch: DataFrame, idCol: String,
       vecCol: String, base: DataFrame, stride: Int): DataFrame =
-    buildWith(batch, idCol, vecCol, centroidsOf(base, idCol, vecCol, stride))
-      .assigned.select(col(idCol), col("__centroid"))
+    assignedTo(batch, idCol, vecCol,
+      new Centroids(() => centroidsOf(base, idCol, vecCol, stride), None), widen = false)
+      .select(col(idCol), col("__centroid"))
 
-  private def buildWith(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame): AnnIndex = {
-    // nearest centroid per vector: broadcast the centroid table into the
-    // scan, partial-aggregate the argmin map-side — each partition ships one
-    // row per vector to the shuffle regardless of centroid count. Ties on
-    // distance break by centroid id (struct ordering: d, then cid).
-    val assigned = widened(df.select(col(idCol), col(vecCol)))
-      .crossJoin(broadcast(centroids))
-      .select(col(idCol), col(vecCol),
-        struct(array_cosine_distance(col(vecCol), col("__cvec")).as("d"),
-          col("__cid").as("cid")).as("__dc"))
-      .groupBy(col(idCol))
-      .agg(first(col(vecCol)).as(vecCol),
-        min(col("__dc")).getField("cid").as("__centroid"))
-      .repartition(col("__centroid"))
-    new AnnIndex(assigned, centroids, idCol, vecCol)
+  /** [[replayedAssignment]] against the IVF store at `path`: streaming
+    * ingest keeps an IVF-PQ code table bucket-consistent with it.
+    */
+  private[graft] def storedAssignment(batch: DataFrame, idCol: String,
+      vecCol: String, stride: Int, path: String): DataFrame =
+    assignedTo(batch, idCol, vecCol,
+      Store.open(batch.sparkSession, path, vecCol, stride, "assigning").centroids,
+      widen = false)
+      .select(col(idCol), col("__centroid"))
+
+  /** The `nprobe` centroids of `cents` nearest the query, `(__probe_cid)`,
+    * ranked `(d asc_nulls_last, cid asc)`.
+    */
+  private def ranked(cents: DataFrame, qvec: Array[Double], nprobe: Int): DataFrame =
+    cents
+      .select(col("__cid"), array_cosine_distance(col("__cvec"), typedLit(qvec.toSeq)).as("__d"))
+      .orderBy(col("__d").asc_nulls_last, col("__cid").asc)
+      .limit(nprobe)
+      .select(col("__cid").as("__probe_cid"))
+
+  private def nullBearing(v: Column): Column = v.isNull || exists(v, _.isNull)
+
+  /** The assignment rule over candidate `ids`/`vecs` arrays: the centroid
+    * minimizing `struct(d, cid)` with Spark's struct ordering, `d` the
+    * cosine distance. A NULL `d` ranks FIRST there, so a vector that is
+    * NULL or holds a NULL element (every `d` NULL) files under the lowest
+    * id `minAll`, and otherwise a centroid whose own vector carries a NULL
+    * takes every row (`nullMin`, the lowest such id); NaN ranks after every
+    * number, so an all-NaN row also files under `minAll`. `cosine_argmin`
+    * covers the all-numbers case and is NULL in exactly the others.
+    */
+  private def nearest(v: Column, ids: Column, vecs: Column, minAll: Column,
+      nullMin: Column): Column =
+    coalesce(graft.functions.cosine_argmin(v, ids, vecs),
+      when(nullBearing(v), minAll).otherwise(coalesce(nullMin, minAll)))
+
+  /** `df`'s `(id, vec)` rows with their bucket `__centroid` — the one
+    * assignment kernel, with no shuffle; `widen` (corpus-sized inputs)
+    * decouples its parallelism from a narrow scan. One row per input row.
+    */
+  private def assignedTo(df: DataFrame, idCol: String, vecCol: String,
+      cents: Centroids, widen: Boolean): DataFrame = {
+    val rows = df.select(col(idCol), col(vecCol))
+    val (in, c) = cents.assigning(
+      if (widen) graft.util.Partitions.widenNarrowScan(rows) else rows, col(vecCol))
+    in.select(col(idCol), col(vecCol), c.as("__centroid"))
+  }
+
+  /** A centroid table `(__cid, __cvec)` as a frame, with its driver copy
+    * when one is held: ids and double vectors index-aligned, a vector that
+    * is NULL or holds a NULL element kept as NULL (its distance is NULL
+    * either way).
+    */
+  private final class Centroids(val frame: () => DataFrame,
+      held: Option[(Array[Long], Array[Array[Double]])]) extends Serializable {
+
+    /** The `n` ids nearest `q`. Held: on the driver, in the distributed
+      * ranking's order — `(d asc_nulls_last, cid asc)`, NaN after every
+      * number — with `d` from [[VectorLoop]], as `array_cosine_distance`.
+      * Otherwise one distributed top-`n` job.
+      */
+    def ranked(q: Array[Double], n: Int): Seq[Long] = held match {
+      case None => AnnIndex.ranked(frame(), q, n).collect().map(_.getLong(0)).toSeq
+      case Some((ids, vecs)) =>
+        val d = vecs.map(v => if (v == null) null else VectorLoop.cosine(v, q))
+        def cmp(i: Int, j: Int): Int = (d(i), d(j)) match {
+          case (null, null) => 0
+          case (null, _) => 1
+          case (_, null) => -1
+          case (a: Double, b: Double) => if (a == b) 0 else java.lang.Double.compare(a, b)
+        }
+        ids.indices.sortWith { (i, j) =>
+          val c = cmp(i, j)
+          if (c != 0) c < 0 else ids(i) < ids(j)
+        }.take(n).map(ids(_))
+    }
+
+    /** `rows` joined to the table as one broadcast candidate row, and the
+      * [[nearest]] column for `v`. A held table is that row already (a
+      * local relation: the plan carries no centroid values); otherwise the
+      * frame is aggregated into it.
+      */
+    def assigning(rows: DataFrame, v: Column): (DataFrame, Column) = {
+      val row = held match {
+        case Some((ids, vecs)) =>
+          val nulls = ids.indices.filter(vecs(_) == null).map(ids(_))
+          rows.sparkSession.createDataFrame(java.util.List.of(Row(ids.toSeq,
+              vecs.toSeq.map(x => if (x == null) null else x.toSeq), ids.min,
+              nulls.minOption.map(Long.box).orNull)),
+            StructType(Seq(StructField("__ids", ArrayType(LongType)),
+              StructField("__vecs", ArrayType(ArrayType(DoubleType))),
+              StructField("__minall", LongType), StructField("__nullmin", LongType))))
+        case None =>
+          val cid = col("__cid").cast("long")
+          frame().agg(collect_list(struct(cid.as("c"), col("__cvec").as("v"))).as("__m"),
+              min(cid).as("__minall"), min(when(nullBearing(col("__cvec")), cid)).as("__nullmin"))
+            .select(col("__m.c").as("__ids"), col("__m.v").as("__vecs"), col("__minall"),
+              col("__nullmin"))
+      }
+      (rows.crossJoin(broadcast(row)),
+        nearest(v, col("__ids"), col("__vecs"), col("__minall"), col("__nullmin")))
+    }
+  }
+
+  /** A materialized store as its centroid file describes it. */
+  private final class Store(@transient spark: SparkSession, path: String,
+      val schema: StructType, val centroids: Centroids) extends Serializable {
+
+    /** Every bucket (a full listing when executed). */
+    def all: DataFrame = spark.read.schema(schema).parquet(path)
+
+    /** The named buckets, listed from the manifest and read with the
+      * stored schema: no schema inference, no listing job.
+      */
+    def buckets(ids: Seq[Long]): DataFrame =
+      IndexManifests.readBuckets(spark, path, "__centroid", ids, Some(schema))
+
+    def idFrame(ids: Seq[Long]): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(ids.map(Row(_)): _*),
+      StructType(Seq(StructField("__probe_cid", LongType))))
+  }
+
+  private object Store {
+    val HeaderLines = 3
+
+    /** The centroid file: `# graft-ivf 1`, `# stride <n>`, `# schema
+      * <json>`, then one `<cid>TAB<elements>` line per centroid in Java's
+      * round-trip decimal form (`null` for a vector that is NULL or holds a
+      * NULL element). Text: the driver parses it with no job, Spark splits
+      * it for the distributed ranking.
+      */
+    def render(stride: Int, schema: StructType, rows: Array[Row]): String = {
+      val sb = new StringBuilder(s"# graft-ivf 1\n# stride $stride\n# schema ${schema.json}\n")
+      rows.foreach { r =>
+        val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
+        sb.append(r.getLong(0)).append('\t')
+          .append(if (v == null || v.contains(null)) "null" else v.mkString(",")).append('\n')
+      }
+      sb.toString
+    }
+
+    def elemType(schema: StructType, vecCol: String): DataType =
+      schema(vecCol).dataType.asInstanceOf[ArrayType].elementType
+
+    /** The driver copy of a `bytes`-long file's centroid lines, when it is
+      * within [[SizeRoute.IvfCentroidBytes]]; float elements parse as
+      * floats, so they widen exactly.
+      */
+    def held(bytes: Long, lines: Iterator[String], elem: DataType)
+        : Option[(Array[Long], Array[Array[Double]])] =
+      if (bytes > SizeRoute(SizeRoute.IvfCentroidBytes)) None
+      else Some(lines.map { line =>
+        val Array(cid, v) = line.split("\t", 2)
+        cid.toLong -> (if (v == "null") null else v.split(",").map(x =>
+          if (elem == FloatType) x.toFloat.toDouble else x.toDouble))
+      }.toArray.unzip)
+
+    /** The centroid lines as a `(__cid, __cvec)` frame, split by Spark. */
+    def frame(spark: SparkSession, file: String, elem: DataType): DataFrame = {
+      val parts = split(col("value"), "\t", 2)
+      spark.createDataset(spark.sparkContext.textFile(file))(Encoders.STRING).toDF("value")
+        .where(!col("value").startsWith("#"))
+        .select(parts(0).cast("long").as("__cid"),
+          when(parts(1) =!= "null", split(parts(1), ",").cast(ArrayType(elem))).as("__cvec"))
+    }
+
+    /** Read the store's header, check its stride, hold its table when
+      * within the bound.
+      */
+    def open(spark: SparkSession, path: String, vecCol: String, stride: Int,
+        verb: String): Store = {
+      val file = new org.apache.hadoop.fs.Path(path, CentroidFile)
+      val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      require(fs.exists(file), s"no centroid file at $file: the IVF store was " +
+        "written before stores carried their centroids — re-materialize it")
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(file), UTF_8))
+      try {
+        val header = Seq.fill(HeaderLines)(in.readLine())
+        require(header.head == "# graft-ivf 1", s"$file is not an IVF centroid file")
+        val stored = header(1).stripPrefix("# stride ").toInt
+        require(stored == stride,
+          s"index at $path was materialized with stride $stored, $verb with $stride")
+        val schema = DataType.fromJson(header(2).stripPrefix("# schema ")).asInstanceOf[StructType]
+        val elem = elemType(schema, vecCol)
+        val held = Store.held(fs.getFileStatus(file).getLen,
+          Iterator.continually(in.readLine()).takeWhile(_ != null), elem)
+        new Store(spark, path, schema,
+          new Centroids(() => frame(spark, file.toString, elem), held))
+      } finally in.close()
+    }
   }
 }

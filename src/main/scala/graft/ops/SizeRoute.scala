@@ -82,9 +82,21 @@ private[graft] object SizeRoute {
     */
   val IngestBatchBytes = Bound("ingest-batch-bytes", 1 << 24)
 
+  /** Bytes of an IVF store's centroid file (`AnnIndex.materialize`) up
+    * to which an opened store holds its centroid table on the driver: a
+    * probe then ranks the centroids with no Spark job, and append and
+    * delete broadcast the held table as one local row. Above it, each
+    * probe ranks with one distributed top-`nprobe` job over the stored
+    * file, and assignment aggregates the file into that row first. Every
+    * open parses the held copy (a fresh-read probe pays it each time), so
+    * the bound is kept small: 4 MiB is about 6,000 64-dim or 500 768-dim
+    * float centroids.
+    */
+  val IvfCentroidBytes = Bound("ivf-centroid-bytes", 1 << 22)
+
   val Registry: Seq[Bound] =
     Seq(GraphLabelEdges, PageRankRows, EmbedAllPairsRows, BpeWords,
-      GraphProbeQueries, IngestBatchBytes)
+      GraphProbeQueries, IngestBatchBytes, IvfCentroidBytes)
 
   private val forced = new DynamicVariable(Map.empty[Bound, Int])
 

@@ -364,12 +364,13 @@ object CorpusIngest {
 
   /** One vector micro-batch into the materialized ANN stores: append to
     * the IVF index at `annPath` ([[AnnIndex.appendToMaterialized]] — the
-    * batch assigns against the EXISTING centroids, only affected bucket
-    * directories grow) and, when present, encode against the STORED
-    * codebooks into the PQ codes at `pqPath`
+    * batch assigns against the centroid table that store holds, only
+    * affected bucket directories grow) and, when present, encode against
+    * the STORED codebooks into the PQ codes at `pqPath`
     * ([[ProductQuantizer.appendToMaterialized]]). Pure batch function;
     * epoch-guarded per store so a replayed epoch cannot double-append.
-    * Returns the stores that actually absorbed this epoch.
+    * `base` is not read: every store describes itself. Returns the stores
+    * that actually absorbed this epoch.
     */
   def appendVectorEpoch(batch: DataFrame, base: DataFrame, idCol: String,
       vecCol: String, stride: Int, annPath: String,
@@ -384,15 +385,16 @@ object CorpusIngest {
         AnnIndex.appendToMaterialized(rows, base, idCol, vecCol, stride, annPath)
       }
       // layout dispatch: a bucket-partitioned (IVF-PQ) code table takes the
-      // partition-aware append (replayed assignment — same frozen-centroid
-      // rule as the IVF store above, so the two stores stay
-      // bucket-consistent); the flat append would write bucket-less rows
-      // invisible to manifest-pruned reads (and now refuses to). The key
+      // partition-aware append (assignment replayed against the IVF store's
+      // own centroid table, so the two stores stay bucket-consistent); the
+      // flat append would write bucket-less rows invisible to
+      // manifest-pruned reads (and now refuses to). The key
       // comes from the stored schema (layoutIsIvfPq), not a local-FS
       // directory probe — this loop must run wherever the store lives.
       def appendPq(p: String): Unit =
         if (ProductQuantizer.layoutIsIvfPq(spark, p))
-          ProductQuantizer.appendToIvfPq(rows, idCol, vecCol, base, stride, p)
+          ProductQuantizer.appendAssigned(rows, idCol, vecCol,
+            AnnIndex.storedAssignment(rows, idCol, vecCol, stride, annPath), stride, p)
         else ProductQuantizer.appendToMaterialized(rows, idCol, vecCol, p)
       val pqDone = pqPath.filter(p =>
         epochOnce(spark, p, epochId, EpochMarker, "stream-ingest-epoch")(appendPq(p)))
@@ -403,10 +405,9 @@ object CorpusIngest {
   /** Continuous ANN index maintenance — the ingest loop closed over the
     * index stores: every micro-batch of `(idCol, vecCol)` rows appends to
     * the materialized IVF index (and PQ codes, when `pqPath` is set), so
-    * probes see new vectors as soon as their epoch commits. `base` is the
-    * frame the index was built over (centroid source — appended vectors
-    * never become centroids, the standard IVF contract; re-materialize to
-    * re-balance after heavy growth).
+    * probes see new vectors as soon as their epoch commits. Appended
+    * vectors never become centroids (the standard IVF contract;
+    * re-materialize to re-balance after heavy growth); `base` is not read.
     *
     * `compactEvery > 0` folds the small-files maintenance into the loop:
     * after every `compactEvery`-th absorbed epoch,
@@ -452,8 +453,9 @@ object CorpusIngest {
 
   /** One takedown micro-batch against the materialized vector stores — the
     * delete twin of [[appendVectorEpoch]]: the batch's rows (ids AND
-    * vectors — the assignment is REPLAYED from `base`'s frozen centroids,
-    * never trusted from a caller frame) leave the IVF index at `annPath`
+    * vectors — the assignment is REPLAYED against the centroid table the
+    * IVF store holds, never trusted from a caller frame; `base` is not
+    * read) leave the IVF index at `annPath`
     * ([[AnnIndex.deleteFromMaterialized]] — touched bucket partitions
     * only) and, when present, the PQ store at `pqPath` (layout-routed:
     * bucket-pruned rewrite for IVF-PQ, tombstone sidecar for flat). Pure
@@ -473,7 +475,8 @@ object CorpusIngest {
       }
       def delPq(p: String): Unit =
         if (ProductQuantizer.layoutIsIvfPq(spark, p))
-          ProductQuantizer.deleteFromIvfPq(rows, idCol, vecCol, base, stride, p)
+          ProductQuantizer.deleteFromMaterialized(rows, idCol, p, Some(
+            AnnIndex.storedAssignment(rows, idCol, vecCol, stride, annPath)))
         else ProductQuantizer.deleteFromMaterialized(rows, idCol, p)
       val pqDone = pqPath.filter(p =>
         epochOnce(spark, p, epochId, TakedownMarker, "stream-takedown-epoch")(delPq(p)))

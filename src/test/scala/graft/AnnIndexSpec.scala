@@ -55,14 +55,13 @@ class AnnIndexSpec extends SparkTestBase {
     val want = plan.probeTopK(qvec(3), 10, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == want)
-    // the probe must not scan every bucket: the partitioned scan carries a
-    // runtime partition filter on __centroid (dynamic partition pruning)
+    // the probe must not scan every bucket: its scan lists only the two
+    // ranked bucket directories
     val df = mat.probeTopK(qvec(3), 10, nprobe = 2)
     df.collect()
-    val executed = df.queryExecution.executedPlan.toString
-    assert(executed.contains("dynamicpruning") ||
-      executed.contains("PartitionFilters: [isnotnull(__centroid"),
-      s"no partition pruning on the materialized probe:\n$executed")
+    val roots = AnnIndexSpec.scanRoots(df)
+    assert(roots.size == 2 && roots.forall(_.startsWith("__centroid=")),
+      s"the materialized probe lists $roots:\n${df.queryExecution.executedPlan}")
   }
 
   test("appendToMaterialized: incremental growth equals a full materialize") {
@@ -190,6 +189,149 @@ class AnnIndexSpec extends SparkTestBase {
       // ranks are 1-based and dense
       assert(batch(qid).map(_._2).sorted.toSeq == (1L to single.length))
     }
+  }
+
+  private def tmp(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).toString
+
+  private def probed(idx: AnnIndex, q: Array[Double], nprobe: Int = 4): Seq[(Long, Double)] =
+    idx.probeTopK(q, 10, nprobe).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  private def storedAssignment(path: String): Set[(Long, Long)] =
+    spark.read.parquet(path).select(col("vec_id"), col("__centroid").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("store job budget: a reopened or held-open probe is one job, append and delete batch-sized") {
+    val path = tmp("ann_jobs_test")
+    val batch = emb.where(col("vec_id") >= 400 && pmod(col("vec_id"), lit(2)) === 1)
+    AnnIndex.materialize(emb.where(col("vec_id") < 400 || pmod(col("vec_id"), lit(2)) === 0),
+      "vec_id", "embedding", 64, path)
+    val q = qvec(3)
+    val base = emb // opening a parquet frame infers its schema in a job
+    val (_, reopened) = JobCount(spark.sparkContext) {
+      AnnIndex.fromMaterialized(base, "vec_id", "embedding", 64, path).probeTopK(q, 10).collect()
+    }
+    assert(reopened == 1, s"reopened-store probe ran $reopened jobs")
+    val held = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, path)
+    val q5 = qvec(5)
+    val (_, heldJobs) = JobCount(spark.sparkContext)(held.probeTopK(q5, 10).collect())
+    assert(heldJobs == 1, s"held-open probe ran $heldJobs jobs")
+    val app = batch.orderBy("vec_id").limit(40).localCheckpoint()
+    assert(app.count() == 40)
+    val (_, append) = JobCount(spark.sparkContext) {
+      AnnIndex.appendToMaterialized(app, base, "vec_id", "embedding", 64, path)
+    }
+    assert(append <= 3, s"a 40-row append ran $append jobs")
+    val del = emb.where(pmod(col("vec_id"), lit(4)) === 3).orderBy("vec_id").limit(20)
+      .localCheckpoint()
+    val (_, delete) = JobCount(spark.sparkContext) {
+      AnnIndex.deleteFromMaterialized(del, base, "vec_id", "embedding", 64, path)
+    }
+    assert(delete <= 5, s"a 20-row delete ran $delete jobs")
+    // and the maintained store is the one a fresh materialize builds
+    val live = emb.where(col("vec_id") < 400 || pmod(col("vec_id"), lit(2)) === 0)
+      .union(app)
+      .join(del.select("vec_id"), Seq("vec_id"), "left_anti")
+    val fresh = tmp("ann_jobs_fresh")
+    AnnIndex.materialize(live, "vec_id", "embedding", 64, fresh)
+    assert(storedAssignment(path) == storedAssignment(fresh))
+  }
+
+  test("assignment equals the struct-min rule on NULL, NaN, zero and tied vectors, on every route") {
+    val sp = spark
+    import sp.implicits._
+    val nan = Float.NaN
+    def vecs(centroidNull: Boolean) = Seq[(Long, Seq[java.lang.Float])](
+      (0L, Seq(1f, 0f)), (4L, Seq(0f, 1f)), (8L, Seq(-1f, 0f)),
+      (12L, if (centroidNull) Seq(0.5f, null) else Seq(0.5f, 0.5f)),
+      (1L, Seq(1f, 1f)), // equidistant from 0 and 4: the lowest cid
+      (2L, null), (3L, Seq(null, 1f)), (5L, Seq(nan, 1f)), (6L, Seq(0f, 0f)),
+      (7L, Seq(0.9f, 0.1f)), (9L, Seq(-0.2f, 1f)), (10L, Seq(nan, nan)))
+    for (centroidNull <- Seq(false, true)) {
+      val df = vecs(centroidNull).toDF("vec_id", "embedding")
+        .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
+      val want = AnnIndexSpec.structMin(df, "vec_id", "embedding", 4)
+      val replayed = AnnIndex.replayedAssignment(df, "vec_id", "embedding", df, 4)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(replayed == want, s"centroid NULL element: $centroidNull")
+      for (bound <- Seq(0, Int.MaxValue)) {
+        val path = tmp("ann_rule_test")
+        graft.ops.SizeRoute.withBounds(graft.ops.SizeRoute.IvfCentroidBytes -> bound) {
+          AnnIndex.materialize(df, "vec_id", "embedding", 4, path)
+        }
+        assert(storedAssignment(path) == want, s"bound $bound, centroid NULL: $centroidNull")
+      }
+    }
+  }
+
+  test("a store opens from its path: any base frame gives the same rows; a store without its centroid file is refused") {
+    val path = tmp("ann_base_test")
+    AnnIndex.materialize(emb, "vec_id", "embedding", 64, path)
+    val other = emb.where(col("vec_id") === 7)
+    for (q <- Seq(qvec(3), qvec(77)))
+      assert(probed(AnnIndex.fromMaterialized(other, "vec_id", "embedding", 64, path), q) ==
+        probed(AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, path), q))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_graft_ivf", "centroids"))
+    val err = intercept[IllegalArgumentException] {
+      AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, path)
+    }
+    assert(err.getMessage.contains("re-materialize"), err.getMessage)
+  }
+
+  test("unique-id contract: a duplicated id is one stored row per input row; centroid deletes refused") {
+    val path = tmp("ann_dup_test")
+    val dup = emb.union(emb.where(col("vec_id") === 5))
+    AnnIndex.materialize(dup, "vec_id", "embedding", 64, path)
+    assert(spark.read.parquet(path).where(col("vec_id") === 5).count() == 2)
+    assert(spark.read.parquet(path).count() == 501)
+    val err = intercept[IllegalArgumentException] {
+      AnnIndex.deleteFromMaterialized(emb.where(col("vec_id").isin(5, 192)), emb,
+        "vec_id", "embedding", 64, path)
+    }
+    assert(err.getMessage.contains("centroid-level"), err.getMessage)
+    assert(spark.read.parquet(path).count() == 501, "a refused delete removed rows")
+  }
+
+  test("4 threads probing one store handle equal a serial run") {
+    val path = tmp("ann_threads_test")
+    AnnIndex.materialize(emb, "vec_id", "embedding", 64, path)
+    val idx = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, path)
+    val qs = Seq(1L, 7L, 42L, 99L, 250L, 333L, 401L, 499L).map(qvec)
+    val serial = qs.map(probed(idx, _))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val running = qs.map(q => pool.submit(
+        new java.util.concurrent.Callable[Seq[(Long, Double)]] { def call() = probed(idx, q) }))
+      assert(running.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES)) == serial)
+    } finally pool.shutdown()
+  }
+}
+
+object AnnIndexSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** Names of the directories the file scans of `df`'s executed plan list. */
+  def scanRoots(df: DataFrame): Seq[String] = {
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.getName)
+    }.flatten
+  }
+
+  /** The assignment rule as the IVF build first wrote it, kept as the
+    * reference: a cross join against the stride centroids and a
+    * `min(struct(d, cid))` per id.
+    */
+  def structMin(df: DataFrame, idCol: String, vecCol: String, stride: Int): Set[(Long, Long)] = {
+    val cents = df.where(pmod(col(idCol), lit(stride)) === 0)
+      .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
+    df.crossJoin(broadcast(cents))
+      .select(col(idCol), struct(
+        graft.functions.array_cosine_distance(col(vecCol), col("__cvec")).as("d"),
+        col("__cid").as("cid")).as("__dc"))
+      .groupBy(col(idCol)).agg(min(col("__dc")).getField("cid").as("__centroid"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 }
 

@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalacheck.{Gen, Prop, Test}
 
-import graft.ops.{BatchPostings, Centrality, Dedup, GraphAnn, SizeRoute, Subword}
+import graft.ops.{AnnIndex, BatchPostings, Centrality, Dedup, GraphAnn, SizeRoute, Subword}
 import graft.ops.SizeRoute.Bound
 
 /** One differential over the size-route registry: for every registered
@@ -129,6 +130,36 @@ class SizeRouteSpec extends SparkTestBase {
         val out = batch(GraphAnn.DefaultRounds).collect().map(_.toSeq).toSet
         val (_, entries) = JobCount(sp.sparkContext)(batch(0))
         Run(out, entries > 1)
+      })
+    },
+    SizeRoute.IvfCentroidBytes -> { seed =>
+      val sp = spark
+      import sp.implicits._
+      val rnd = new scala.util.Random(seed)
+      def vec = Seq.fill(4)(rnd.nextFloat() * 2f - 1f)
+      val rows = (0L until 40L).map(_ -> vec)
+      def frame(ids: Long => Boolean) =
+        sp.sparkContext.parallelize(rows.filter(r => ids(r._1)), 2).toDF("id", "v")
+      val corpus = frame(_ < 30)
+      val queries = Seq.fill(3)(vec.map(_.toDouble).toArray)
+      def materialized(): String = {
+        val p = graft.util.TempDirs.create("route_ivf")
+        AnnIndex.materialize(corpus, "id", "v", 5, p)
+        p
+      }
+      // the route measures the store's centroid file; the distributed
+      // ranking adds a job to each probe
+      Fixture(new java.io.File(materialized(), "_graft_ivf/centroids").length.toInt, () => {
+        val p = materialized()
+        AnnIndex.appendToMaterialized(frame(_ >= 30), corpus, "id", "v", 5, p)
+        AnnIndex.deleteFromMaterialized(frame(i => i % 5 == 3), corpus, "id", "v", 5, p)
+        val idx = AnnIndex.fromMaterialized(corpus, "id", "v", 5, p)
+        val stored = sp.read.parquet(p).select(col("id"), col("__centroid").cast("long"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val probes = queries.map(q =>
+          idx.probeTopK(q, 5, 2).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+        val (_, jobs) = JobCount(sp.sparkContext)(idx.probeTopK(queries.head, 5, 2).collect())
+        Run((stored, probes), jobs)
       })
     })
 

@@ -112,13 +112,13 @@ class StreamedPartitionSpec extends SparkTestBase {
     // the SAME logical store with every bucket split across multiple
     // files (the at-scale layout after many append epochs): repartition
     // before the partitioned write, refresh the manifest, copy the
-    // stride marker
+    // centroid file
     val p8 = graft.util.TempDirs.create("streamed_part_ann8")
     s.read.parquet(p).repartition(8)
       .write.mode("overwrite").partitionBy("__centroid").parquet(p8)
     graft.ops.IndexManifests.write(s, p8, "__centroid")
-    graft.ops.IndexFiles.writeString(s, s"$p8/_graft_ann_stride",
-      graft.ops.IndexFiles.readString(s, s"$p/_graft_ann_stride"))
+    graft.ops.IndexFiles.writeString(s, s"$p8/_graft_ivf/centroids",
+      graft.ops.IndexFiles.readString(s, s"$p/_graft_ivf/centroids"))
     val multi = probe(p8)
     PartitionInvariance.assertSame(single, multi)
   }
