@@ -159,19 +159,34 @@ private[graft] object IndexManifests {
     write(spark, table, partCol)
   }
 
-  /** Remove the rows whose `idCol` is among `ids` from the `touched`
-    * buckets ([[replaceBuckets]] over a manifest-listed read of them);
-    * untouched buckets are never read or written. NULL ids are never
-    * removed. `ids` are batch-sized: they ride in the plan as one sorted
-    * array ([[NotAmong]]).
+  /** Remove `pairs` — each deleted id and the bucket holding it, as two
+    * long columns — from a bucket-partitioned table, rewriting only the
+    * touched buckets ([[replaceBuckets]] over a manifest-listed read of
+    * them). NULL ids are never removed, and ids divisible by `refuseStride`
+    * fail the delete, with `why`, before anything is written. The job that
+    * pins the pairs also collects them when they are at most
+    * [[SizeRoute.DeleteIds]]: the ids then ride in the plan as one sorted
+    * array ([[NotAmong]]). Above it, the touched buckets are collected from
+    * the pin and the rewrite anti-joins it.
     */
   def deleteRows(spark: SparkSession, table: String, partCol: String,
-      idCol: String, touched: Seq[Long], ids: Seq[Long],
-      schema: Option[StructType] = None): Unit =
-    if (touched.nonEmpty) replaceBuckets(spark, table, partCol, touched,
-      readBuckets(spark, table, partCol, touched, schema)
-        .where(coalesce(SparkShims.column(NotAmong(SparkShims.expression(
-          col(idCol).cast("long")), ids.distinct.sorted.toArray)), lit(true))))
+      idCol: String, pairs: DataFrame, schema: Option[StructType],
+      refuseStride: Int, why: String): Unit = {
+    val pinned = pairs.toDF("__del", "__b").localCheckpoint(eager = false)
+    val held = SizeRoute.collectWithin(pinned, SizeRoute(SizeRoute.DeleteIds), _ => 1L)
+    require(held.fold(pinned.where(pmod(col("__del"), lit(refuseStride)) === 0).isEmpty)(
+      !_.exists(_.getLong(0) % refuseStride == 0)), why)
+    val touched = held.fold(pinned.select("__b").distinct().collect().map(_.getLong(0)))(
+      _.map(_.getLong(1))).distinct.sorted.toSeq
+    if (touched.isEmpty) return
+    val read = readBuckets(spark, table, partCol, touched, schema)
+    val id = col(idCol).cast("long")
+    replaceBuckets(spark, table, partCol, touched, held match {
+      case Some(rows) => read.where(coalesce(SparkShims.column(NotAmong(SparkShims.expression(id),
+        rows.map(_.getLong(0)).distinct.sorted)), lit(true)))
+      case None => read.join(pinned, id === col("__del"), "left_anti")
+    })
+  }
 
   /** Compact a partitioned index table's over-fragmented bucket
     * directories — shared by the IVF store (`AnnIndex.compactBuckets`),

@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.SparkShims
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.{array_cosine_distance, array_distance}
 
@@ -573,10 +571,10 @@ object ProductQuantizer {
       spark: Option[org.apache.spark.sql.SparkSession] = None): DataFrame = {
     val session = spark.getOrElse(org.apache.spark.sql.SparkSession.active)
     val (spec, (cb, codes)) = fromMaterialized(session, path)
-    val pruned = codes.join(
-      org.apache.spark.sql.functions.broadcast(index.probedCentroids(qvec, nprobe)),
+    val (rows, cids) = index.probed(qvec, nprobe)
+    val pruned = codes.join(org.apache.spark.sql.functions.broadcast(cids),
       col("__centroid") === col("__probe_cid"), "left_semi")
-    adcRerankTopK(index.probedRows(qvec, nprobe), idCol, vecCol, qvec, k,
+    adcRerankTopK(rows, idCol, vecCol, qvec, k,
       spec, overfetch, precomputed = Some((cb, pruned)))
   }
 
@@ -693,48 +691,44 @@ object ProductQuantizer {
       IndexFiles.withWriterLease(ids.sparkSession, path, "pq-delete") {
     val spark = ids.sparkSession
     val (spec, (_, codes)) = fromMaterialized(spark, path)
-    // batch-sized: one collect feeds the refusal, the coverage check and
-    // the id filters as driver values
-    val delIds = ids.where(col(idCol).isNotNull).select(col(idCol).cast("long"))
-      .collect().map(_.getLong(0)).distinct.sorted
-    // an empty takedown batch must not leave a zero-row sidecar: any
-    // sidecar presence makes every read pay the anti-join and forces the
-    // next compactCodes into a full rewrite
-    if (delIds.isEmpty) return
-    require(!delIds.exists(_ % spec.stride == 0),
-      s"batch contains codebook-entry ids ($idCol divisible by " +
-        s"${spec.stride}): deleting them orphans every code that references " +
-        "their entries — re-materialize instead")
+    val delIds = ids.where(col(idCol).isNotNull)
+      .select(col(idCol).cast("long").as("__id")).distinct()
+    val refusal = s"batch contains codebook-entry ids ($idCol divisible by " +
+      s"${spec.stride}): deleting them orphans every code that references " +
+      "their entries — re-materialize instead"
     if (codes.columns.contains("__centroid")) {
       val asg = assignment.getOrElse(throw new IllegalArgumentException(
         "IVF-PQ layout: pass the deleted rows' IVF assignment " +
           s"(($idCol, __centroid) frame covering the batch), or use " +
           "deleteFromIvfPq to replay the assignment rule"))
-      val pairs = asg.select(col(idCol).cast("long").as("__id"),
-          col("__centroid").cast("long"))
-        .where(!SparkShims.column(NotAmong(SparkShims.expression(col("__id")), delIds)))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val asgIds = asg.select(col(idCol).cast("long").as("__id"),
+        col("__centroid").cast("long"))
       // coverage check: an id missing from the frame would silently keep
       // its code rows (the post-delete-read-back ordering footgun)
-      val uncovered = delIds.filterNot(pairs.map(_._1).toSet)
+      val uncovered = delIds.join(asgIds, Seq("__id"), "left_anti")
+        .limit(3).collect().map(_.getLong(0))
       require(uncovered.isEmpty,
         "IVF-PQ delete: the assignment frame does not cover every deleted " +
-          s"id (e.g. ${uncovered.take(3).mkString(", ")}) — " +
+          s"id (e.g. ${uncovered.mkString(", ")}) — " +
           "pass an assignment taken BEFORE the companion index's own " +
           "delete, or use deleteFromIvfPq")
       IndexManifests.deleteRows(spark, s"$path/codes", "__centroid", "__id",
-        pairs.map(_._2).distinct.sorted, delIds)
+        asgIds.join(delIds, Seq("__id"), "left_semi"), None, spec.stride, refusal)
     } else {
+      val pinned = delIds.localCheckpoint() // batch-sized; feeds a require + the write
+      // an empty takedown batch must not leave a zero-row sidecar: any
+      // sidecar presence makes every read pay the anti-join and forces the
+      // next compactCodes into a full rewrite
+      if (pinned.isEmpty) return
+      require(pinned.where(pmod(col("__id"), lit(spec.stride)) === 0).isEmpty, refusal)
       // TOMBSTONE delete: append the ids to the sidecar and stop — one
       // batch-sized parquet write, never a corpus-sized codes rewrite
       // (the r14 shape rewrote all M-byte code rows per delete batch).
       // Every read path anti-joins the sidecar (fromMaterialized), and
       // compactCodes folds it into the files under the store's
-      // single-writer contract. One file per delete epoch keeps the
-      // sidecar's own listing trivial.
-      spark.createDataFrame(java.util.Arrays.asList(delIds.map(Row(_)): _*),
-          StructType(Seq(StructField("__id", LongType))))
-        .coalesce(1).write.mode("append").parquet(s"$path/$TombstoneDir")
+      // single-writer contract. coalesce(1): the sidecar is batch-sized,
+      // one file per delete epoch keeps its own listing trivial.
+      pinned.coalesce(1).write.mode("append").parquet(s"$path/$TombstoneDir")
     }
   }
 

@@ -1,11 +1,13 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.graftshim.SparkShims
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
 import graft.functions.{VectorLoop, array_cosine_distance, array_inner_product, array_l2_norm}
 
@@ -536,9 +538,10 @@ final class AnnIndex private (
       .limit(k)
 
   /** IVF probe: top-k among the `nprobe` buckets nearest to the query.
-    * On an opened store it is ONE Spark job (two above
-    * [[SizeRoute.IvfCentroidBytes]], where the ranking is distributed); an
-    * in-memory index ([[AnnIndex.build]]) ranks inside its lazy plan.
+    * On an opened store it is ONE Spark job while the store's centroid
+    * table is driver-held ([[SizeRoute.IvfCentroidBytes]]; above it the
+    * ranking is one job more); an in-memory index ([[AnnIndex.build]])
+    * ranks inside its lazy plan.
     */
   def probeTopK(qvec: Array[Double], k: Int, nprobe: Int = 4): DataFrame =
     probedRows(qvec, nprobe)
@@ -554,14 +557,7 @@ final class AnnIndex private (
     * per-row cost inside them, and only the rerank overfetch touches
     * full-precision vectors.
     */
-  def probedRows(qvec: Array[Double], nprobe: Int): DataFrame = store match {
-    case Some(s) => s.buckets(cents.ranked(qvec, nprobe)).select(col(idCol), col(vecCol))
-    case None =>
-      assigned
-        .join(broadcast(probedCentroids(qvec, nprobe)),
-          col("__centroid") === col("__probe_cid"), "left_semi")
-        .select(col(idCol), col(vecCol))
-  }
+  def probedRows(qvec: Array[Double], nprobe: Int): DataFrame = probed(qvec, nprobe)._1
 
   /** The `nprobe` centroid ids nearest the query, as a `(__probe_cid)`
     * frame — the bucket-selection half of a probe, exposed so sibling
@@ -569,10 +565,20 @@ final class AnnIndex private (
     * [[ProductQuantizer.probeIvfPqTopK]]'s centroid-partitioned code
     * table) can partition-prune with the identical selection.
     */
-  def probedCentroids(qvec: Array[Double], nprobe: Int): DataFrame = store match {
-    case Some(s) => s.idFrame(cents.ranked(qvec, nprobe))
-    case None => AnnIndex.ranked(cents.frame(), qvec, nprobe)
-  }
+  def probedCentroids(qvec: Array[Double], nprobe: Int): DataFrame = probed(qvec, nprobe)._2
+
+  /** [[probedRows]] and [[probedCentroids]] from one ranking. */
+  private[graft] def probed(qvec: Array[Double], nprobe: Int): (DataFrame, DataFrame) =
+    store match {
+      case Some(s) =>
+        val ids = cents.ranked(qvec, nprobe)
+        (s.buckets(ids).select(col(idCol), col(vecCol)),
+          s.spark.createDataFrame(ids.map(Tuple1(_))).toDF("__probe_cid"))
+      case None =>
+        val c = AnnIndex.ranked(cents.frame, qvec, nprobe)
+        (assigned.join(broadcast(c), col("__centroid") === col("__probe_cid"), "left_semi")
+          .select(col(idCol), col(vecCol)), c)
+    }
 
   /** Batched IVF probe: ONE pass over the index serving a whole
     * query-vector table — the offline-batch shape (embed a day's queries,
@@ -603,7 +609,7 @@ final class AnnIndex private (
       col(qvecCol).as("__qvec")))
     val w = Window.partitionBy(col("__qid"))
       .orderBy(col("__d").asc_nulls_last, col("__cid").asc)
-    val probed = cents.frame().crossJoin(q)
+    val probed = cents.frame.crossJoin(q)
       .select(col("__qid"), col("__cid"),
         array_cosine_distance(col("__cvec"), col("__qvec")).as("__d"))
       .withColumn("__rn", row_number().over(w))
@@ -651,35 +657,33 @@ final class AnnIndex private (
 object AnnIndex {
 
   /** Materialize the IVF index as parquet PARTITIONED BY centroid bucket —
-    * the build-once / probe-many shape IVF exists for — plus the store's
-    * centroid file ([[CentroidFile]]: stride, bucket schema, centroid
-    * table), so every later open, append and delete reads the centroids
-    * from the store, never from a caller frame. The centroid table (n/stride
-    * vectors, model-artifact-sized like PQ codebooks) is collected once.
-    * `stride` doubles as the file-granularity knob: each bucket is one
-    * directory holding one file ([[IndexManifests.writeBuckets]]). Ids must
-    * be unique: each input row is one stored row.
+    * the build-once / probe-many shape IVF exists for. The store's
+    * self-description is written first ([[Store]]: the centroid table,
+    * written by Spark, and a header naming the stride and the bucket
+    * schema); the store is then opened as every later open, append and
+    * delete opens it, and `df` is appended to it as one batch. Each bucket
+    * is one directory holding one file ([[IndexManifests.byBucket]]), so
+    * `stride` doubles as the file-granularity knob. Ids must be unique:
+    * each input row is one stored row.
     */
   def materialize(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, path: String): Unit = {
     val spark = df.sparkSession
-    val rows = centroidsOf(df, idCol, vecCol, stride).collect()
-    require(rows.nonEmpty, s"no centroids: no $idCol divisible by stride $stride")
+    IndexFiles.deleteRecursive(spark, path)
     val schema = StructType(df.select(col(idCol), col(vecCol)).schema
       .map(_.copy(nullable = true)) :+ StructField("__centroid", LongType))
-    val text = Store.render(stride, schema, rows)
-    val cents = new Centroids(() => centroidsOf(df, idCol, vecCol, stride),
-      Store.held(text.getBytes(UTF_8).length, text.linesIterator.drop(Store.HeaderLines),
-        Store.elemType(schema, vecCol)))
-    IndexManifests.writeBuckets(assignedTo(df, idCol, vecCol, cents, widen = true),
-      path, "__centroid")
-    // after the buckets: their overwrite clears the store directory
-    IndexFiles.writeString(spark, s"$path/$CentroidFile", text)
+    val s = Store.write(centroidsOf(df, idCol, vecCol, stride), stride, schema, vecCol, path)
+    // fail before any bucket is written: a store of NULL buckets
+    if (s.bytes == 0) IndexFiles.deleteRecursive(spark, path)
+    require(s.bytes > 0, s"no centroids: no $idCol divisible by stride $stride")
+    append(s, df, idCol, vecCol, path)
   }
 
-  /** Open a [[materialize]]d index from its path: the centroid file is
-    * read once into the handle (no Spark job) and `stride` must match it.
-    * `df` is not read. A store without the file must be re-materialized.
+  /** Open a [[materialize]]d index from its path: the store's header and
+    * (within [[SizeRoute.IvfCentroidBytes]]) its centroid table are read
+    * once into the handle, with no Spark job, and `stride` must match the
+    * header. `df` is not read. A store without the header must be
+    * re-materialized.
     */
   def fromMaterialized(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, path: String): AnnIndex = {
@@ -698,9 +702,13 @@ object AnnIndex {
   def appendToMaterialized(batch: DataFrame, base: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "ann-append") {
-    val s = Store.open(batch.sparkSession, path, vecCol, stride, "appending")
-    IndexManifests.byBucket(assignedTo(batch, idCol, vecCol, s.centroids, widen = false),
-        "__centroid")
+    append(Store.open(batch.sparkSession, path, vecCol, stride, "appending"),
+      batch, idCol, vecCol, path)
+  }
+
+  private def append(s: Store, batch: DataFrame, idCol: String, vecCol: String,
+      path: String): Unit = {
+    IndexManifests.byBucket(assignedTo(batch, idCol, vecCol, s.centroids), "__centroid")
       .write.mode("append").partitionBy("__centroid").parquet(path)
     // refresh so the next maintenance read's manifest sees any bucket
     // directory this batch created
@@ -713,27 +721,22 @@ object AnnIndex {
     * EXACT, and trivially so for IVF: the index stores only assigned rows,
     * so deletion = rewriting the touched bucket partitions without the
     * deleted ids — row-identical to materializing over the reduced corpus.
-    * One job REPLAYS the assignment against the stored centroid table and
-    * collects the batch's `(id, bucket)` pairs, then
-    * [[IndexManifests.deleteRows]] rewrites only the touched buckets.
-    * Deleting centroid-level ids is refused: it changes bucket geometry —
-    * re-materialize instead. Single-writer, like every materialized-index
-    * mutation; `base` is not read.
+    * The batch's buckets are recovered by REPLAYING the assignment against
+    * the stored centroid table, and [[IndexManifests.deleteRows]] rewrites
+    * only the touched buckets. Deleting centroid-level ids is refused: it
+    * changes bucket geometry — re-materialize instead. Single-writer, like
+    * every materialized-index mutation; `base` is not read.
     */
   def deleteFromMaterialized(batch: DataFrame, base: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "ann-delete") {
-    val spark = batch.sparkSession
-    val s = Store.open(spark, path, vecCol, stride, "deleting")
-    val pairs = assignedTo(batch.where(col(idCol).isNotNull), idCol, vecCol,
-        s.centroids, widen = false)
-      .select(col(idCol).cast("long"), col("__centroid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    require(!pairs.exists(_._1 % stride == 0),
+    val s = Store.open(batch.sparkSession, path, vecCol, stride, "deleting")
+    IndexManifests.deleteRows(batch.sparkSession, path, "__centroid", idCol,
+      assignedTo(batch.where(col(idCol).isNotNull), idCol, vecCol, s.centroids)
+        .select(col(idCol).cast("long"), col("__centroid")),
+      Some(s.schema), stride,
       s"batch contains centroid-level ids ($idCol divisible by $stride): " +
         "deleting centroids changes the bucket geometry — re-materialize instead")
-    IndexManifests.deleteRows(spark, path, "__centroid", idCol,
-      pairs.map(_._2).distinct.sorted, pairs.map(_._1), Some(s.schema))
   }
 
   /** Compact a [[materialize]]d index's over-fragmented buckets — the
@@ -767,12 +770,6 @@ object AnnIndex {
         maxFilesPerBucket, targetBytes)
     }
 
-  /** A store's self-description, written by [[materialize]]: the `_`
-    * directory hides it from parquet reads; Hadoop's text input reads the
-    * un-prefixed file.
-    */
-  private val CentroidFile = "_graft_ivf/centroids"
-
   private def centroidsOf(df: DataFrame, idCol: String, vecCol: String,
       stride: Int): DataFrame =
     df.where(pmod(col(idCol), lit(stride)) === 0)
@@ -800,8 +797,8 @@ object AnnIndex {
       .select(col("__cid"), col("__cvec").cast("array<double>").as("__cvec"))
     for (_ <- 1 to iters) {
       val current = cents
-      val assigned = assignedTo(vecs, idCol, "__v", new Centroids(() => current, None),
-        widen = false).withColumnRenamed("__centroid", "__cid")
+      val assigned = assignedTo(vecs, idCol, "__v", new Centroids(() => current, None))
+        .withColumnRenamed("__centroid", "__cid")
       // vector_sum: ONE shuffle of dim-length buffers; the posexplode
       // formulation this replaces shuffled |vectors|·dim rows twice and
       // sorted them back into arrays. round-to-1e-6 absorbs the same
@@ -843,7 +840,7 @@ object AnnIndex {
   private def inMemory(df: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame): AnnIndex = {
     val cents = new Centroids(() => centroids, None)
-    new AnnIndex(() => assignedTo(df, idCol, vecCol, cents, widen = true),
+    new AnnIndex(() => assignedTo(df, idCol, vecCol, cents),
       cents, None, idCol, vecCol)
   }
 
@@ -855,7 +852,7 @@ object AnnIndex {
   private[graft] def replayedAssignment(batch: DataFrame, idCol: String,
       vecCol: String, base: DataFrame, stride: Int): DataFrame =
     assignedTo(batch, idCol, vecCol,
-      new Centroids(() => centroidsOf(base, idCol, vecCol, stride), None), widen = false)
+      new Centroids(() => centroidsOf(base, idCol, vecCol, stride), None))
       .select(col(idCol), col("__centroid"))
 
   /** [[replayedAssignment]] against the IVF store at `path`: streaming
@@ -864,8 +861,7 @@ object AnnIndex {
   private[graft] def storedAssignment(batch: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): DataFrame =
     assignedTo(batch, idCol, vecCol,
-      Store.open(batch.sparkSession, path, vecCol, stride, "assigning").centroids,
-      widen = false)
+      Store.open(batch.sparkSession, path, vecCol, stride, "assigning").centroids)
       .select(col(idCol), col("__centroid"))
 
   /** The `nprobe` centroids of `cents` nearest the query, `(__probe_cid)`,
@@ -895,76 +891,75 @@ object AnnIndex {
       when(nullBearing(v), minAll).otherwise(coalesce(nullMin, minAll)))
 
   /** `df`'s `(id, vec)` rows with their bucket `__centroid` — the one
-    * assignment kernel, with no shuffle; `widen` (corpus-sized inputs)
-    * decouples its parallelism from a narrow scan. One row per input row.
+    * assignment kernel, with no shuffle of its own. One row per input row.
+    * Its per-row parallelism must not inherit a narrow input's file layout
+    * (the r18 100× rung filed a 200k-vector delete spool in one task):
+    * [[graft.util.Partitions.widenNarrowScan]].
     */
   private def assignedTo(df: DataFrame, idCol: String, vecCol: String,
-      cents: Centroids, widen: Boolean): DataFrame = {
-    val rows = df.select(col(idCol), col(vecCol))
+      cents: Centroids): DataFrame = {
     val (in, c) = cents.assigning(
-      if (widen) graft.util.Partitions.widenNarrowScan(rows) else rows, col(vecCol))
+      graft.util.Partitions.widenNarrowScan(df.select(col(idCol), col(vecCol))), col(vecCol))
     in.select(col(idCol), col(vecCol), c.as("__centroid"))
   }
 
   /** A centroid table `(__cid, __cvec)` as a frame, with its driver copy
-    * when one is held: ids and double vectors index-aligned, a vector that
-    * is NULL or holds a NULL element kept as NULL (its distance is NULL
+    * when one is held: ids and double vectors index-aligned, NULL for a
+    * vector that is NULL or holds a NULL element (its distance is NULL
     * either way).
     */
-  private final class Centroids(val frame: () => DataFrame,
+  private final class Centroids(frameOf: () => DataFrame,
       held: Option[(Array[Long], Array[Array[Double]])]) extends Serializable {
+
+    @transient lazy val frame: DataFrame = frameOf()
 
     /** The `n` ids nearest `q`. Held: on the driver, in the distributed
       * ranking's order — `(d asc_nulls_last, cid asc)`, NaN after every
-      * number — with `d` from [[VectorLoop]], as `array_cosine_distance`.
-      * Otherwise one distributed top-`n` job.
+      * number and -0.0 equal to 0.0, as Spark sorts — with `d` from
+      * [[VectorLoop]], as `array_cosine_distance`. Otherwise one
+      * distributed top-`n` job.
       */
     def ranked(q: Array[Double], n: Int): Seq[Long] = held match {
-      case None => AnnIndex.ranked(frame(), q, n).collect().map(_.getLong(0)).toSeq
+      case None => AnnIndex.ranked(frame, q, n).collect().map(_.getLong(0)).toSeq
       case Some((ids, vecs)) =>
-        val d = vecs.map(v => if (v == null) null else VectorLoop.cosine(v, q))
-        def cmp(i: Int, j: Int): Int = (d(i), d(j)) match {
-          case (null, null) => 0
-          case (null, _) => 1
-          case (_, null) => -1
-          case (a: Double, b: Double) => if (a == b) 0 else java.lang.Double.compare(a, b)
-        }
-        ids.indices.sortWith { (i, j) =>
-          val c = cmp(i, j)
-          if (c != 0) c < 0 else ids(i) < ids(j)
-        }.take(n).map(ids(_))
+        ids.indices.map { i =>
+          val d = if (vecs(i) == null) Double.NaN else VectorLoop.cosine(vecs(i), q)
+          ((if (vecs(i) == null) 2 else if (d.isNaN) 1 else 0, if (d.isNaN) 0.0 else d + 0.0),
+            ids(i))
+        }.sorted(Ordering.Tuple2(Ordering.Tuple2(Ordering.Int, Ordering.Double.TotalOrdering),
+          Ordering.Long)).take(n).map(_._2)
     }
 
-    /** `rows` joined to the table as one broadcast candidate row, and the
-      * [[nearest]] column for `v`. A held table is that row already (a
-      * local relation: the plan carries no centroid values); otherwise the
-      * frame is aggregated into it.
+    /** `rows` with the candidate row to assign against, and the
+      * [[nearest]] column for `v`. A held table is that row as two compact
+      * literals (`UnsafeArrayData`: one buffer each, printed without its
+      * elements), so the tasks get it with the plan and no job broadcasts
+      * it; otherwise the frame is aggregated into one row and broadcast.
       */
-    def assigning(rows: DataFrame, v: Column): (DataFrame, Column) = {
-      val row = held match {
-        case Some((ids, vecs)) =>
-          val nulls = ids.indices.filter(vecs(_) == null).map(ids(_))
-          rows.sparkSession.createDataFrame(java.util.List.of(Row(ids.toSeq,
-              vecs.toSeq.map(x => if (x == null) null else x.toSeq), ids.min,
-              nulls.minOption.map(Long.box).orNull)),
-            StructType(Seq(StructField("__ids", ArrayType(LongType)),
-              StructField("__vecs", ArrayType(ArrayType(DoubleType))),
-              StructField("__minall", LongType), StructField("__nullmin", LongType))))
-        case None =>
-          val cid = col("__cid").cast("long")
-          frame().agg(collect_list(struct(cid.as("c"), col("__cvec").as("v"))).as("__m"),
-              min(cid).as("__minall"), min(when(nullBearing(col("__cvec")), cid)).as("__nullmin"))
-            .select(col("__m.c").as("__ids"), col("__m.v").as("__vecs"), col("__minall"),
-              col("__nullmin"))
-      }
-      (rows.crossJoin(broadcast(row)),
-        nearest(v, col("__ids"), col("__vecs"), col("__minall"), col("__nullmin")))
+    def assigning(rows: DataFrame, v: Column): (DataFrame, Column) = held match {
+      case Some((ids, vecs)) =>
+        val nullMin = ids.indices.filter(vecs(_) == null).map(ids(_)).minOption
+        val table = ArrayType(ArrayType(DoubleType))
+        def literal(value: Any, t: DataType) = SparkShims.column(Literal(value, t))
+        (rows, nearest(v, literal(UnsafeArrayData.fromPrimitiveArray(ids), ArrayType(LongType)),
+          literal(UnsafeProjection.create(Array[DataType](table)).apply(InternalRow(
+            new GenericArrayData(vecs.map[Any](x => if (x == null) null
+              else UnsafeArrayData.fromPrimitiveArray(x))))).getArray(0).copy(), table),
+          lit(ids.min), nullMin.fold(lit(null).cast(LongType))(lit(_))))
+      case None =>
+        val cid = col("__cid").cast("long")
+        (rows.crossJoin(broadcast(frame.agg(
+            collect_list(struct(cid.as("c"), col("__cvec").as("v"))).as("__m"),
+            min(cid).as("__minall"), min(when(nullBearing(col("__cvec")), cid)).as("__nullmin")))),
+          nearest(v, col("__m.c"), col("__m.v"), col("__minall"), col("__nullmin")))
     }
   }
 
-  /** A materialized store as its centroid file describes it. */
-  private final class Store(@transient spark: SparkSession, path: String,
-      val schema: StructType, val centroids: Centroids) extends Serializable {
+  /** A materialized store as its header describes it; `bytes` is the size
+    * of its centroid table's files.
+    */
+  private final class Store(@transient val spark: SparkSession, path: String,
+      val schema: StructType, val centroids: Centroids, val bytes: Long) extends Serializable {
 
     /** Every bucket (a full listing when executed). */
     def all: DataFrame = spark.read.schema(schema).parquet(path)
@@ -974,79 +969,77 @@ object AnnIndex {
       */
     def buckets(ids: Seq[Long]): DataFrame =
       IndexManifests.readBuckets(spark, path, "__centroid", ids, Some(schema))
-
-    def idFrame(ids: Seq[Long]): DataFrame = spark.createDataFrame(
-      java.util.Arrays.asList(ids.map(Row(_)): _*),
-      StructType(Seq(StructField("__probe_cid", LongType))))
   }
 
+  /** A store's self-description lives in `_graft_ivf/` (the `_` hides it
+    * from parquet reads): `header`, the lines `# graft-ivf 1`,
+    * `# stride <n>` and `# schema <json>`; and `centroids/`, the centroid
+    * table as text written by Spark, one `<cid>TAB<elements>` line per
+    * centroid in Java's round-trip decimal form (`null` for a vector that
+    * is NULL or holds a NULL element). The table has one reader,
+    * [[Store.parse]]: an open holds its result on the driver when the
+    * table's files total at most [[SizeRoute.IvfCentroidBytes]], and
+    * otherwise leaves the table to Spark.
+    */
   private object Store {
-    val HeaderLines = 3
+    private val Dir = "_graft_ivf"
 
-    /** The centroid file: `# graft-ivf 1`, `# stride <n>`, `# schema
-      * <json>`, then one `<cid>TAB<elements>` line per centroid in Java's
-      * round-trip decimal form (`null` for a vector that is NULL or holds a
-      * NULL element). Text: the driver parses it with no job, Spark splits
-      * it for the distributed ranking.
-      */
-    def render(stride: Int, schema: StructType, rows: Array[Row]): String = {
-      val sb = new StringBuilder(s"# graft-ivf 1\n# stride $stride\n# schema ${schema.json}\n")
-      rows.foreach { r =>
+    /** Write `cents`'s table, then the header, and open the store. */
+    def write(cents: DataFrame, stride: Int, schema: StructType, vecCol: String,
+        path: String): Store = {
+      // one file: the driver route reads it whole, and Spark splits it
+      cents.repartition(1).map { r =>
         val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
-        sb.append(r.getLong(0)).append('\t')
-          .append(if (v == null || v.contains(null)) "null" else v.mkString(",")).append('\n')
-      }
-      sb.toString
+        s"${r.getLong(0)}\t${if (v == null || v.contains(null)) "null" else v.mkString(",")}"
+      }(Encoders.STRING).write.text(s"$path/$Dir/centroids")
+      IndexFiles.writeString(cents.sparkSession, s"$path/$Dir/header",
+        s"# graft-ivf 1\n# stride $stride\n# schema ${schema.json}\n")
+      open(cents.sparkSession, path, vecCol, stride, "materialized")
     }
 
-    def elemType(schema: StructType, vecCol: String): DataType =
-      schema(vecCol).dataType.asInstanceOf[ArrayType].elementType
-
-    /** The driver copy of a `bytes`-long file's centroid lines, when it is
-      * within [[SizeRoute.IvfCentroidBytes]]; float elements parse as
-      * floats, so they widen exactly.
-      */
-    def held(bytes: Long, lines: Iterator[String], elem: DataType)
-        : Option[(Array[Long], Array[Array[Double]])] =
-      if (bytes > SizeRoute(SizeRoute.IvfCentroidBytes)) None
-      else Some(lines.map { line =>
-        val Array(cid, v) = line.split("\t", 2)
-        cid.toLong -> (if (v == "null") null else v.split(",").map(x =>
-          if (elem == FloatType) x.toFloat.toDouble else x.toDouble))
-      }.toArray.unzip)
-
-    /** The centroid lines as a `(__cid, __cvec)` frame, split by Spark. */
-    def frame(spark: SparkSession, file: String, elem: DataType): DataFrame = {
+    /** Centroid lines (`value`) as a `(__cid, __cvec)` frame. */
+    def parse(lines: DataFrame, elem: DataType): DataFrame = {
       val parts = split(col("value"), "\t", 2)
-      spark.createDataset(spark.sparkContext.textFile(file))(Encoders.STRING).toDF("value")
-        .where(!col("value").startsWith("#"))
-        .select(parts(0).cast("long").as("__cid"),
-          when(parts(1) =!= "null", split(parts(1), ",").cast(ArrayType(elem))).as("__cvec"))
+      lines.select(parts(0).cast("long").as("__cid"),
+        when(parts(1) =!= "null", split(parts(1), ",").cast(ArrayType(elem))).as("__cvec"))
     }
 
-    /** Read the store's header, check its stride, hold its table when
-      * within the bound.
+    /** Read the header, check its stride, and hold the table when within
+      * the bound: parsed from a local relation, so collected with no job.
       */
     def open(spark: SparkSession, path: String, vecCol: String, stride: Int,
         verb: String): Store = {
-      val file = new org.apache.hadoop.fs.Path(path, CentroidFile)
-      val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(file), s"no centroid file at $file: the IVF store was " +
-        "written before stores carried their centroids — re-materialize it")
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(file), UTF_8))
-      try {
-        val header = Seq.fill(HeaderLines)(in.readLine())
-        require(header.head == "# graft-ivf 1", s"$file is not an IVF centroid file")
-        val stored = header(1).stripPrefix("# stride ").toInt
-        require(stored == stride,
-          s"index at $path was materialized with stride $stored, $verb with $stride")
-        val schema = DataType.fromJson(header(2).stripPrefix("# schema ")).asInstanceOf[StructType]
-        val elem = elemType(schema, vecCol)
-        val held = Store.held(fs.getFileStatus(file).getLen,
-          Iterator.continually(in.readLine()).takeWhile(_ != null), elem)
-        new Store(spark, path, schema,
-          new Centroids(() => frame(spark, file.toString, elem), held))
-      } finally in.close()
+      val dir = s"$path/$Dir"
+      val header = IndexFiles.readStringOpt(spark, s"$dir/header").getOrElse(
+        throw new IllegalArgumentException(s"no centroid table at $dir: the IVF store was " +
+          "written before stores carried their centroids — re-materialize it"))
+        .split("\n")
+      require(header.headOption.contains("# graft-ivf 1"), s"$dir/header is not an IVF store header")
+      val stored = header(1).stripPrefix("# stride ").toInt
+      require(stored == stride,
+        s"index at $path was materialized with stride $stored, $verb with $stride")
+      val schema = DataType.fromJson(header(2).stripPrefix("# schema ")).asInstanceOf[StructType]
+      val elem = schema(vecCol).dataType.asInstanceOf[ArrayType].elementType
+      val fs = IndexFiles.fs(spark, dir)
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/centroids")).toSeq
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      val bytes = files.map(_.getLen).sum
+      val cents =
+        if (bytes > SizeRoute(SizeRoute.IvfCentroidBytes))
+          new Centroids(() => parse(spark.read.text(s"$dir/centroids"), elem), None)
+        else {
+          val lines = files.flatMap { f =>
+            val in = fs.open(f.getPath)
+            try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector finally in.close()
+          }
+          val rows = parse(spark.createDataset(lines)(Encoders.STRING).toDF("value"), elem).collect()
+          val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+            StructType(Seq(StructField("__cid", LongType), StructField("__cvec", ArrayType(elem)))))
+          new Centroids(() => local, Some((rows.map(_.getLong(0)), rows.map(r =>
+            if (r.isNullAt(1)) null
+            else r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray))))
+        }
+      new Store(spark, path, schema, cents, bytes)
     }
   }
 }

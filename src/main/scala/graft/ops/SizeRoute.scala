@@ -82,21 +82,40 @@ private[graft] object SizeRoute {
     */
   val IngestBatchBytes = Bound("ingest-batch-bytes", 1 << 24)
 
-  /** Bytes of an IVF store's centroid file (`AnnIndex.materialize`) up
-    * to which an opened store holds its centroid table on the driver: a
-    * probe then ranks the centroids with no Spark job, and append and
-    * delete broadcast the held table as one local row. Above it, each
-    * probe ranks with one distributed top-`nprobe` job over the stored
-    * file, and assignment aggregates the file into that row first. Every
-    * open parses the held copy (a fresh-read probe pays it each time), so
-    * the bound is kept small: 4 MiB is about 6,000 64-dim or 500 768-dim
-    * float centroids.
+  /** Bytes of an IVF store's centroid table (`AnnIndex.materialize`
+    * writes it as text) up to which an open holds the table on the
+    * driver: a probe then ranks the centroids with no Spark job, and
+    * append and delete carry the table in the plan as two compact
+    * literals. Above it, each probe ranks with one distributed
+    * top-`nprobe` job over the stored table, and assignment aggregates the
+    * table into one broadcast row (two jobs more). The bound is the
+    * measured crossover (`graft.tools.IvfRouteSweep`,
+    * `plans/r24/ivf_store_ab.md` §6): a fresh open plus probe and a
+    * 40-vector append ran faster held at every table size up to 1.7 MB,
+    * the routes tied at 4.6 MB (64-dim centroids), and the Spark-read
+    * table won at 6.8 MB (768-dim). 4 MiB is about 6,000 64-dim or 500
+    * 768-dim float centroids.
     */
   val IvfCentroidBytes = Bound("ivf-centroid-bytes", 1 << 22)
 
+  /** Deleted ids up to which a bucket-table delete
+    * ([[IndexManifests.deleteRows]]: the IVF store and the IVF-PQ code
+    * table) collects its `(id, bucket)` pairs in the job that pins them and
+    * filters the touched buckets by the ids as one sorted array in the plan;
+    * above it, the touched buckets come from the pin in a job of their own
+    * and the rewrite anti-joins the pin. The driver route ran as fast or
+    * faster at every measured size (`graft.tools.IvfRouteSweep deletes`,
+    * `plans/r24/ivf_store_ab.md` §7: 100 to 8,000 ids against 64,000 and
+    * 96,000 64-dim vectors, where rewriting the touched buckets dominates
+    * both), so the bound is a memory bound: 65,536 pairs are about 5 MB of
+    * collected rows on the driver and a 512 KB id array in each rewrite
+    * task.
+    */
+  val DeleteIds = Bound("delete-ids", 1 << 16)
+
   val Registry: Seq[Bound] =
     Seq(GraphLabelEdges, PageRankRows, EmbedAllPairsRows, BpeWords,
-      GraphProbeQueries, IngestBatchBytes, IvfCentroidBytes)
+      GraphProbeQueries, IngestBatchBytes, IvfCentroidBytes, DeleteIds)
 
   private val forced = new DynamicVariable(Map.empty[Bound, Int])
 

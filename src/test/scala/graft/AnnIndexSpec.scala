@@ -237,6 +237,30 @@ class AnnIndexSpec extends SparkTestBase {
     assert(storedAssignment(path) == storedAssignment(fresh))
   }
 
+  test("above the size bounds: a store built, maintained and probed through Spark equals the held route") {
+    import graft.ops.SizeRoute
+    val gone = emb.where(pmod(col("vec_id"), lit(4)) === 3)
+    val qs = Seq(qvec(3), qvec(77), qvec(250))
+    def run(bounds: (SizeRoute.Bound, Int)*): (Set[(Long, Long)], Seq[Seq[(Long, Double)]], Int) = {
+      val path = tmp("ann_bounds_test")
+      SizeRoute.withBounds(bounds: _*) {
+        AnnIndex.materialize(emb.where(col("vec_id") < 300), "vec_id", "embedding", 32, path)
+        AnnIndex.appendToMaterialized(emb.where(col("vec_id") >= 300 && pmod(col("vec_id"), lit(32)) =!= 0),
+          emb, "vec_id", "embedding", 32, path)
+        AnnIndex.deleteFromMaterialized(gone, emb, "vec_id", "embedding", 32, path)
+        val idx = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 32, path)
+        val (_, jobs) = JobCount(spark.sparkContext)(idx.probeTopK(qs.head, 10).collect())
+        (storedAssignment(path), qs.map(probed(idx, _)), jobs)
+      }
+    }
+    val (heldRows, heldProbes, heldJobs) = run()
+    val (rows, probes, jobs) = run(SizeRoute.IvfCentroidBytes -> 0, SizeRoute.DeleteIds -> 0)
+    assert(rows == heldRows && probes == heldProbes)
+    assert(heldJobs == 1 && jobs == 2, s"probe jobs held $heldJobs, distributed $jobs")
+    // 500 ids, less the 6 centroid-level ids the append skips and the 125 deleted
+    assert(!rows.exists(r => r._1 % 4 == 3) && rows.size == 500 - 6 - 125)
+  }
+
   test("assignment equals the struct-min rule on NULL, NaN, zero and tied vectors, on every route") {
     val sp = spark
     import sp.implicits._
@@ -271,7 +295,7 @@ class AnnIndexSpec extends SparkTestBase {
     for (q <- Seq(qvec(3), qvec(77)))
       assert(probed(AnnIndex.fromMaterialized(other, "vec_id", "embedding", 64, path), q) ==
         probed(AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, path), q))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_graft_ivf", "centroids"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_graft_ivf", "header"))
     val err = intercept[IllegalArgumentException] {
       AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, path)
     }

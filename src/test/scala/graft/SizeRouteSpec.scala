@@ -147,9 +147,11 @@ class SizeRouteSpec extends SparkTestBase {
         AnnIndex.materialize(corpus, "id", "v", 5, p)
         p
       }
-      // the route measures the store's centroid file; the distributed
-      // ranking adds a job to each probe
-      Fixture(new java.io.File(materialized(), "_graft_ivf/centroids").length.toInt, () => {
+      // the route measures the store's centroid table files; the
+      // distributed ranking adds a job to each probe
+      val table = new java.io.File(materialized(), "_graft_ivf/centroids")
+      val n = table.listFiles().filter(f => !f.getName.matches("[._].*")).map(_.length).sum
+      Fixture(n.toInt, () => {
         val p = materialized()
         AnnIndex.appendToMaterialized(frame(_ >= 30), corpus, "id", "v", 5, p)
         AnnIndex.deleteFromMaterialized(frame(i => i % 5 == 3), corpus, "id", "v", 5, p)
@@ -160,6 +162,24 @@ class SizeRouteSpec extends SparkTestBase {
           idx.probeTopK(q, 5, 2).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
         val (_, jobs) = JobCount(sp.sparkContext)(idx.probeTopK(queries.head, 5, 2).collect())
         Run((stored, probes), jobs)
+      })
+    },
+    SizeRoute.DeleteIds -> { seed =>
+      val sp = spark
+      import sp.implicits._
+      val rnd = new scala.util.Random(seed)
+      def vec = Seq.fill(4)(rnd.nextFloat() * 2f - 1f)
+      val corpus = sp.sparkContext.parallelize((0L until 40L).map(_ -> vec), 2).toDF("id", "v")
+      val gone = rnd.shuffle((0L until 40L).filter(_ % 5 != 0)).take(2 + rnd.nextInt(8))
+      // the route measures the deleted (id, bucket) pairs; the distributed
+      // route collects the touched buckets in a job of its own
+      Fixture(gone.size, () => {
+        val p = graft.util.TempDirs.create("route_delete")
+        AnnIndex.materialize(corpus, "id", "v", 5, p)
+        val (_, jobs) = JobCount(sp.sparkContext)(AnnIndex.deleteFromMaterialized(
+          corpus.where(col("id").isin(gone: _*)), corpus, "id", "v", 5, p))
+        Run(sp.read.parquet(p).select(col("id"), col("__centroid").cast("long"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet, jobs)
       })
     })
 

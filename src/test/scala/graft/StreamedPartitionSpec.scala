@@ -112,13 +112,14 @@ class StreamedPartitionSpec extends SparkTestBase {
     // the SAME logical store with every bucket split across multiple
     // files (the at-scale layout after many append epochs): repartition
     // before the partitioned write, refresh the manifest, copy the
-    // centroid file
+    // store's centroid files
     val p8 = graft.util.TempDirs.create("streamed_part_ann8")
     s.read.parquet(p).repartition(8)
       .write.mode("overwrite").partitionBy("__centroid").parquet(p8)
     graft.ops.IndexManifests.write(s, p8, "__centroid")
-    graft.ops.IndexFiles.writeString(s, s"$p8/_graft_ivf/centroids",
-      graft.ops.IndexFiles.readString(s, s"$p/_graft_ivf/centroids"))
+    val fs = graft.ops.IndexFiles.fs(s, p)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$p/_graft_ivf"), fs,
+      new org.apache.hadoop.fs.Path(s"$p8/_graft_ivf"), false, s.sparkContext.hadoopConfiguration)
     val multi = probe(p8)
     PartitionInvariance.assertSame(single, multi)
   }

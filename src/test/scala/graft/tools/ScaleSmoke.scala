@@ -854,6 +854,30 @@ object ScaleSmoke {
           System.nanoTime() - t0
         }.min / 1000000L // report min millis as `out`
       }
+      // corpus-sized maintenance read from ONE parquet file (a narrow
+      // scan), the ann_incremental_topk and ann_ivf_delete_topk shapes:
+      // half the corpus appended to a store of the other half, a quarter
+      // deleted from a full store (stores built unreported)
+      if (on("ann_inc_half") || on("ann_del_qtr")) {
+        val one = graft.util.TempDirs.create(s"scale_ann_one_$k")
+        emb.coalesce(1).write.mode("overwrite").parquet(one)
+        val narrow = spark.read.parquet(one)
+        val inc = graft.util.TempDirs.create(s"scale_ann_inc_$k")
+        graft.ops.AnnIndex.materialize(narrow.where(pmod(col("vec_id"), lit(2)) === 0),
+          "vec_id", "embedding", 64, inc)
+        timed("ann_inc_half", k, nVec) {
+          graft.ops.AnnIndex.appendToMaterialized(narrow.where(pmod(col("vec_id"), lit(2)) === 1),
+            narrow, "vec_id", "embedding", 64, inc)
+          spark.read.parquet(inc).count()
+        }
+        val del = graft.util.TempDirs.create(s"scale_ann_del_$k")
+        graft.ops.AnnIndex.materialize(narrow, "vec_id", "embedding", 64, del)
+        timed("ann_del_qtr", k, nVec) {
+          graft.ops.AnnIndex.deleteFromMaterialized(narrow.where(pmod(col("vec_id"), lit(4)) === 3),
+            narrow, "vec_id", "embedding", 64, del)
+          spark.read.parquet(del).count()
+        }
+      }
       timed("brute_force", k, nVec) {
         emb.select(col("vec_id"),
             graft.functions.array_cosine_distance(col("embedding"),
