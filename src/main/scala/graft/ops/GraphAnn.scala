@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
 import graft.functions.{array_cosine_distance, cosine_distances}
 
@@ -18,8 +18,10 @@ import graft.functions.{array_cosine_distance, cosine_distances}
   * same capability re-derived for Spark's execution model:
   *
   *  - **Build** (once, corpus-sized, all DataFrame plans): assign vectors
-  *    to their nearest stride centroid (`cosine_argmin` against one
-  *    broadcast row of every centroid — no shuffle), then take each
+  *    to their nearest stride centroid by the IVF store's rule
+  *    ([[CentroidStore.assignedTo]]: `cosine_argmin` against one row of
+  *    every centroid — no shuffle; a materialized graph assigns against
+  *    the centroid table its `assign/` store holds), then take each
   *    vector's `degree` nearest bucket-mates as its out-edges plus each
   *    centroid's `degree` nearest centroids. Both levels run ONE codegen'd
   *    kernel, `cosine_topk`: a node scores its candidates from a row of
@@ -52,6 +54,7 @@ import graft.functions.{array_cosine_distance, cosine_distances}
   * under the DuckDB hash gate (`ann_graph_topk`), not just a recall spec.
   */
 object GraphAnn {
+  import CentroidStore.{Centroids, Store, assignedTo, candidates, centroidsOf, nearestIn}
 
   /** Shared probe defaults — interpolated into the SQL oracle so the two
     * engines can never drift. beam·degree·rounds ≈ the number of vectors a
@@ -61,11 +64,6 @@ object GraphAnn {
   val DefaultDegree = 8
   val DefaultBeam = 16
   val DefaultRounds = 4
-
-  private def centroidsOf(df: DataFrame, idCol: String, vecCol: String,
-      stride: Int): DataFrame =
-    df.where(pmod(col(idCol), lit(stride)) === 0)
-      .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
 
   /** Index-aligned candidate arrays `(__ids, __vecs)` over the nodes
     * `(__nid, __nv)`: one row per `key` value, or one row of every node
@@ -80,32 +78,52 @@ object GraphAnn {
         :+ col("__m.__nv").as("__vecs"): _*)
   }
 
-  /** `__nv`'s nearest candidate in `(__ids, __vecs)` (ties → lowest id).
-    * A row with none — a NULL vector, a NULL element (its own or a
-    * candidate's), or only NaN distances — is filed under the LOWEST
-    * candidate id. Build, insert and delete share this rule, so a delete
-    * finds such a row's bucket again.
+  /** The member assignment `(__nid, __nv, __centroid)` of `df`'s rows
+    * against `cents` by the struct-min rule ([[CentroidStore.assignedTo]]).
+    * Flat (`superStride <= 0`): the nearest centroid, every row scoring
+    * every centroid. Tiered: the nearest super-centroid (a centroid whose
+    * id divides by `superStride`), then the same rule among the centroids
+    * that themselves file under that super. The bucket's centroids ride as
+    * one broadcast candidate row per super ([[CentroidStore.candidates]]),
+    * so the join never explodes members × candidates; broadcast is
+    * load-bearing, since a sort-merge fallback would route every member of
+    * a super bucket into ONE task. Build, append and delete all assign
+    * here. One row per input row.
     */
-  private def nearest: Column =
-    coalesce(graft.functions.cosine_argmin(col("__nv"), col("__ids"), col("__vecs")),
-      array_min(col("__ids")))
+  private def assigned(df: DataFrame, idCol: String, vecCol: String,
+      cents: Centroids, superStride: Int): DataFrame = {
+    val rows = df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv"))
+    if (superStride <= 0) assignedTo(rows, "__nid", "__nv", cents)
+    else {
+      val supers = cents.every(superStride)
+      val buckets = candidates(assignedTo(cents.frame, "__cid", "__cvec", supers)
+        .withColumnRenamed("__centroid", "__s"), "__s")
+      assignedTo(rows, "__nid", "__nv", supers)
+        .withColumnRenamed("__centroid", "__s")
+        .join(broadcast(buckets), Seq("__s"))
+        .select(col("__nid"), col("__nv"), nearestIn(col("__nv")).as("__centroid"))
+    }
+  }
 
-  /** Assignment `(__nid, __nv, __centroid)` against an EXPLICIT centroid
-    * frame `(__cid, __cvec)` — also the seam [[appendToMaterialized]]
-    * needs: an appended batch must score the same centroid set the at-rest
-    * index was built over, not centroids derived from the batch itself.
-    * Every row scores all centroids from ONE broadcast row through the
-    * codegen'd `cosine_argmin` — no shuffle, so the input's partitions
-    * (widened to the core count when narrower) carry through. One row per
-    * input row: ids must be unique.
+  /** Centroid nodes `(__nid, __nv)` of a `(__cid, __cvec)` frame. */
+  private def nodes(cents: DataFrame): DataFrame =
+    cents.select(col("__cid").as("__nid"), col("__cvec").as("__nv"))
+
+  /** An append's or a delete's first step: the store at `path`, and
+    * `batch`'s member assignment against it — the rule the build filed its
+    * rows by, batch-sized and pinned — with the buckets it touches
+    * (bounded by the batch size). Centroid-level ids are refused: they
+    * would change the bucket geometry.
     */
-  private def assignedTo(df: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame): DataFrame =
-    graft.util.Partitions.widenNarrowScan(
-        df.select(col(idCol).cast("long").as("__nid"), col(vecCol).as("__nv")))
-      .crossJoin(broadcast(candidateArrays(
-        cents.select(col("__cid").as("__nid"), col("__cvec").as("__nv")))))
-      .select(col("__nid"), col("__nv"), nearest.as("__centroid"))
+  private def replayed(batch: DataFrame, idCol: String, vecCol: String, stride: Int,
+      degree: Int, path: String, superStride: Int, verb: String): (Store, DataFrame, Seq[Long]) = {
+    val s = open(batch.sparkSession, path, stride, degree, superStride, verb)
+    require(batch.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
+      s"batch contains centroid-level ids ($idCol divisible by $stride): " +
+        s"$verb centroids changes the bucket geometry — re-materialize instead")
+    val members = assigned(batch, idCol, vecCol, s.centroids, superStride).localCheckpoint()
+    (s, members, members.select(col("__centroid")).distinct().collect().map(_.getLong(0)).toSeq)
+  }
 
   /** The one kNN kernel of the build: each row's node `(__nid, __nv)`
     * keeps its `degree` nearest candidates of `(__ids, __vecs)` (itself
@@ -147,8 +165,8 @@ object GraphAnn {
     * applied to a layer whose size the caller bounds (all centroids in the
     * flat build; super-centroids in the tiered build).
     */
-  private def exactKnnEdges(nodes: DataFrame, degree: Int): DataFrame = {
-    val n = nodes.select(col("__cid").as("__nid"), col("__cvec").as("__nv"))
+  private def exactKnnEdges(cents: DataFrame, degree: Int): DataFrame = {
+    val n = nodes(cents)
     knnEdges(n.crossJoin(broadcast(candidateArrays(n))), degree)
   }
 
@@ -179,115 +197,72 @@ object GraphAnn {
     *
     * Input contract: ids are unique. A duplicated id is one node per row
     * (each row assigned and ranked on its own, never linked to a row of
-    * the same id). A row with no nearest centroid (a NULL vector, a NULL
-    * element, or only NaN distances) is filed under the lowest candidate
-    * centroid id: the lowest centroid in the flat build, the lowest
-    * centroid of the lowest super in the tiered one. A centroid with a
-    * NULL vector or element leaves every row without a nearest centroid,
-    * so all land in the lowest centroid. Inserts and deletes replay the
-    * same rule.
+    * the same id). Every level assigns by the IVF store's struct-min rule
+    * ([[CentroidStore.assignedTo]]): a row whose vector is NULL or holds a
+    * NULL element, or whose every distance is NaN, files under the lowest
+    * candidate id — the lowest centroid flat, the lowest super and then
+    * the lowest centroid of its bucket tiered — and a candidate whose
+    * vector is NULL or holds a NULL element takes every other row (the
+    * lowest such candidate). Inserts and deletes replay the same rule.
     */
   def buildEdges(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, degree: Int = DefaultDegree,
       superStride: Int = 0): DataFrame = {
-    val (member, upper, _) =
-      levels(df, idCol, vecCol, stride, degree, superStride)(identity)
+    requireTiers(stride, superStride)
+    val (member, upper, _) = levels(df, idCol, vecCol, stride, degree, superStride,
+      new Centroids(() => centroidsOf(df, idCol, vecCol, stride), None))(identity)
     member.select(col("src"), col("dst"))
       .union(upper.select(col("src"), col("dst")))
   }
 
   /** The build decomposed by level — member edges `(src, dst, __dstv,
     * __bucket)`, the upper (centroid/super) levels `(src, dst, __dstv)`,
-    * and the member assignment, which `pin` pins once before it feeds the
-    * bucket arrays, the kernel and the caller — so [[materialize]] can lay
-    * the artifact out for incremental maintenance while [[buildEdges]]
-    * keeps its flat union shape.
+    * and the member assignment against `cents` (the stride centroids),
+    * which `pin` pins once before it feeds the bucket arrays, the kernel
+    * and the caller — so [[materialize]] can lay the artifact out for
+    * incremental maintenance while [[buildEdges]] keeps its flat union
+    * shape. The upper levels' nodes are `df`'s own rows, so their stored
+    * vectors are verbatim.
     */
   private def levels(df: DataFrame, idCol: String, vecCol: String,
-      stride: Int, degree: Int, superStride: Int)(
+      stride: Int, degree: Int, superStride: Int, cents: Centroids)(
       pin: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val cents = centroidsOf(df, idCol, vecCol, stride)
-    if (superStride <= 0) {
-      val assigned = pin(assignedTo(df, idCol, vecCol, cents))
-      (bucketKnnEdges(assigned, degree), exactKnnEdges(cents, degree), assigned)
-    } else {
-      require(superStride > stride && superStride % stride == 0,
-        s"superStride $superStride must be a multiple of stride $stride above it")
-      // fail-fast mirror of materialize's stride-centroid check: with no id
-      // divisible by superStride the hierarchical assignment would be empty
-      // and the build would silently emit NO member-level edges — a
-      // degenerate index, not an error (r8 ADVICE)
-      require(!df.where(pmod(col(idCol), lit(superStride)) === 0).isEmpty,
-        s"no super-centroids: no $idCol divisible by superStride $superStride")
-      val supers = centroidsOf(df, idCol, vecCol, superStride)
-      // centroids carry their super assignment (centroids × supers — the
-      // small side of the hierarchy)
-      val centAssigned = assignedTo(cents, "__cid", "__cvec", supers)
-      val assigned =
-        pin(hierarchicalAssign(df, idCol, vecCol, supers, centAssigned))
+    // with no id divisible by superStride the hierarchical assignment
+    // would be empty and the build would silently emit NO member-level
+    // edges — a degenerate index, not an error (r8 ADVICE)
+    require(superStride <= 0 || !cents.every(superStride).frame.isEmpty,
+      s"no super-centroids: no $idCol divisible by superStride $superStride")
+    val centNodes = centroidsOf(df, idCol, vecCol, stride)
+    val members = pin(assigned(df, idCol, vecCol, cents, superStride))
+    if (superStride <= 0)
+      (bucketKnnEdges(members, degree), exactKnnEdges(centNodes, degree), members)
+    else {
+      // the centroid level's kNN runs within each super's bucket
+      // (centroids × supers — the small side of the hierarchy)
+      val centSupers = assignedTo(nodes(centNodes), "__nid", "__nv", cents.every(superStride))
       // the families are disjoint (a node of each level is its own
       // bucket's centroid at that level), so plain unions need no
       // distinct() exchange
-      (bucketKnnEdges(assigned, degree),
-        bucketKnnEdges(centAssigned, degree).drop(BucketCol)
-          .union(exactKnnEdges(supers, degree)),
-        assigned)
+      (bucketKnnEdges(members, degree),
+        bucketKnnEdges(centSupers, degree).drop(BucketCol)
+          .union(exactKnnEdges(centroidsOf(df, idCol, vecCol, superStride), degree)),
+        members)
     }
   }
 
-  /** The tiered build's MEMBER assignment rule against EXPLICIT frozen
-    * frames: nearest super (n × supers, broadcast), then argmin over only
-    * that super bucket's centroids. Factored out so
-    * [[appendToMaterialized]] replays the exact build rule for a batch
-    * against the at-rest geometry (frozen `supers` + the centroid→super
-    * map `centAssigned`).
-    *
-    * The bucket's centroids ride as index-aligned array columns in ONE
-    * row per super ([[candidateArrays]]), so the join never explodes
-    * members × candidates, and the codegen'd `cosine_argmin` replaces both
-    * the SortAggregate-over-wide-rows shape (min(struct) after explosion)
-    * and the interpreted higher-order array_min(transform(...)) — each
-    * measured ~4× the FLAT build's cost at the 50× ScaleSmoke rung.
-    * `cosine_argmin` tie-breaks on the lowest cid independent of array
-    * order, so the collect_list row order is immaterial to the result.
+  private def requireTiers(stride: Int, superStride: Int): Unit =
+    require(superStride <= 0 || (superStride > stride && superStride % stride == 0),
+      s"superStride $superStride must be a multiple of stride $stride above it")
+
+  /** The stored shape of the edge table, so its pruned reads infer no
+    * schema — also the shape of a table whose every bucket was dropped or
+    * never written (zero parquet files, nothing to infer from). `vecType`
+    * is the corpus vector column's type, which the stored `__dstv` column
+    * carries verbatim.
     */
-  private def hierarchicalAssign(df: DataFrame, idCol: String, vecCol: String,
-      supers: DataFrame, centAssigned: DataFrame): DataFrame =
-    // broadcast is load-bearing: the arrays' post-aggregation size estimate
-    // is unknown to the planner, and a sort-merge fallback would route
-    // every member of a super bucket into ONE task's argmin loop. Their
-    // real size is all centroid vectors
-    assignedTo(df, idCol, vecCol, supers)
-      .withColumnRenamed("__centroid", "__s")
-      .join(broadcast(candidateArrays(
-        centAssigned.withColumnRenamed("__centroid", "__s"), "__s")), Seq("__s"))
-      .select(col("__nid"), col("__nv"), nearest.as("__centroid"))
-
-  private val SpecMarker = "_graft_graph_spec"
-
-  /** The stored shapes of the bucket tables, so their pruned reads infer
-    * no schema — also the shape of a table whose every bucket was dropped
-    * or never written (zero parquet files, nothing to infer from).
-    * `vecType` is the corpus vector column's type, which the stored
-    * `__nv`/`__dstv` columns carry verbatim.
-    */
-  private def assignSchema(vecType: org.apache.spark.sql.types.DataType) =
-    Some(org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__nid",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("__nv", vecType),
-      org.apache.spark.sql.types.StructField("__centroid",
-        org.apache.spark.sql.types.LongType))))
-
-  private def edgesSchema(vecType: org.apache.spark.sql.types.DataType) =
-    Some(org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("src",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("dst",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(DstVecCol, vecType),
-      org.apache.spark.sql.types.StructField("__bucket",
-        org.apache.spark.sql.types.LongType))))
+  private def edgesSchema(vecType: DataType) = Some(StructType(Seq(
+    StructField("src", LongType), StructField("dst", LongType),
+    StructField(DstVecCol, vecType), StructField("__bucket", LongType))))
 
   /** Neighbor-vector column of a VECTOR-ADJACENT materialized edge table
     * (see [[materialize]]); [[bucketExpansion]] scores it per query.
@@ -299,29 +274,40 @@ object GraphAnn {
     */
   private[graft] val BucketCol = "__bucket"
 
-  /** Materialize the edge table as parquet (build once / probe many), with
-    * a geometry marker so a reopen with different (stride, degree) fails
-    * fast. Edges are stored VECTOR-ADJACENT — each (src, dst) row carries
-    * dst's vector, the classic HNSW memory layout (neighbor vectors live
-    * with the links): a probe reads the reached neighbors AND their query
-    * distances off the edge artifact, never touching the corpus table
-    * after the entry beam. Member-level edges are partitioned by src's
-    * bucket and never leave it, so [[pointProbeTopK]] loads whole bucket
-    * partitions by partition pruning on `__bucket` — a `src IN (frontier)`
-    * predicate prunes nothing here, since a bucket's src ids are scattered
-    * over the id range of every file. Storage is degree·(n + n/stride)
-    * rows × (2 longs + one vector): the artifact trades `degree` copies of
-    * each vector for locality, exactly as an in-process HNSW trades memory
-    * for it. The input contract is [[buildEdges]]'s.
+  /** Materialize the edge table as parquet (build once / probe many). The
+    * member assignment `assign/` is a self-describing store
+    * ([[CentroidStore.Store]], written first): its header carries the
+    * geometry (stride, degree, superStride), so a reopen with a different one
+    * fails fast, and its centroid table is what the build, append and delete
+    * assign against. Edges are stored VECTOR-ADJACENT — each (src, dst) row
+    * carries dst's vector, the classic HNSW memory layout (neighbor vectors
+    * live with the links): a probe reads the reached neighbors AND their
+    * query distances off the edge artifact, never touching the corpus table
+    * after the entry beam. Member-level edges are partitioned by src's bucket
+    * and never leave it, so [[pointProbeTopK]] loads whole bucket partitions
+    * by partition pruning on `__bucket` — a `src IN (frontier)` predicate
+    * prunes nothing here, since a bucket's src ids are scattered over the id
+    * range of every file. Storage is degree·(n + n/stride) rows × (2 longs +
+    * one vector): the artifact trades `degree` copies of each vector for
+    * locality, exactly as an in-process HNSW trades memory for it. The input
+    * contract is [[buildEdges]]'s.
     */
   def materialize(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, degree: Int, path: String, superStride: Int = 0): Unit = {
-    require(!df.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
-      s"no centroids: no $idCol divisible by stride $stride")
+    requireTiers(stride, superStride)
+    val spark = df.sparkSession
+    val assign = s"$path/assign"
+    IndexFiles.deleteRecursive(spark, assign)
+    val s = Store.write(centroidsOf(df, idCol, vecCol, stride),
+      geometry(stride, degree, superStride), StructType(Seq(StructField("__nid", LongType),
+        StructField("__nv", df.schema(vecCol).dataType), StructField("__centroid", LongType))),
+      "__nv", assign)
+    if (s.bytes == 0) IndexFiles.deleteRecursive(spark, assign)
+    require(s.bytes > 0, s"no centroids: no $idCol divisible by stride $stride")
     // the assignment is pinned once: it feeds the bucket arrays, the
     // kernel and the assign/ write
     val (member, upper, assigned) =
-      levels(df, idCol, vecCol, stride, degree, superStride)(_.persist())
+      levels(df, idCol, vecCol, stride, degree, superStride, s.centroids)(_.persist())
     try {
       // Member-level edges are PARTITIONED BY SRC'S BUCKET: an incremental
       // insert ([[appendToMaterialized]]) touches only the buckets the
@@ -334,28 +320,24 @@ object GraphAnn {
       // of the probes) stays proportional to bucket count.
       IndexManifests.writeBuckets(member, s"$path/edges", "__bucket")
       upper.write.mode("overwrite").parquet(s"$path/cedges")
-      // the member ASSIGNMENT rides along, bucket-partitioned (the IVF
-      // layout): an insert must see a touched bucket's existing members
-      // (vectors included) without scanning the corpus — a bucket-pruned
-      // read of this table is exactly that
-      IndexManifests.writeBuckets(assigned, s"$path/assign", "__centroid")
+      // the member ASSIGNMENT rides along in the store, bucket-partitioned
+      // (the IVF layout): an insert must see a touched bucket's existing
+      // members (vectors included) without scanning the corpus — a
+      // bucket-pruned read of this table is exactly that
+      IndexManifests.appendBuckets(assigned, assign, "__centroid")
     } finally assigned.unpersist()
-    IndexFiles.writeString(df.sparkSession, s"$path/$SpecMarker",
-      if (superStride > 0) s"$stride $degree $superStride"
-      else s"$stride $degree")
   }
 
-  /** Stored geometry `(stride, degree, superStride)`, read through the
-    * store's Hadoop FileSystem (the marker lives beside the data — HDFS/S3/
-    * local alike, not only a local disk).
+  private def geometry(stride: Int, degree: Int, superStride: Int): Seq[(String, Int)] =
+    Seq("stride" -> stride, "degree" -> degree, "superStride" -> math.max(superStride, 0))
+
+  /** The graph store at `path`: its `assign/` table, whose header geometry
+    * must be the caller's. A graph written before the header existed must
+    * be re-materialized.
     */
-  private def readSpec(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int, Int) = {
-    val parts = IndexFiles.readString(spark, s"$path/$SpecMarker")
-      .trim.split(" ")
-    (parts(0).toInt, parts(1).toInt,
-      if (parts.length > 2) parts(2).toInt else 0)
-  }
+  private def open(spark: SparkSession, path: String, stride: Int, degree: Int,
+      superStride: Int, verb: String): Store =
+    Store.open(spark, s"$path/assign", "__nv", geometry(stride, degree, superStride), verb)
 
   /** Open a [[materialize]]d edge table; the stored geometry is
     * authoritative and checked against the caller's expectation. Probes
@@ -365,14 +347,9 @@ object GraphAnn {
     * bucket. The probe loop ([[pointProbeTopK]], [[beamSearchTopKBatch]])
     * routes on that column and expands the store bucket by bucket.
     */
-  def fromMaterialized(spark: org.apache.spark.sql.SparkSession, path: String,
+  def fromMaterialized(spark: SparkSession, path: String,
       stride: Int, degree: Int, superStride: Int = 0): DataFrame = {
-    val (storedStride, storedDegree, storedSuper) = readSpec(spark, path)
-    require(storedStride == stride && storedDegree == degree
-        && storedSuper == superStride,
-      s"graph at $path was materialized with (stride, degree, superStride) = " +
-        s"($storedStride, $storedDegree, $storedSuper), opened expecting " +
-        s"($stride, $degree, $superStride)")
+    open(spark, path, stride, degree, superStride, "opened")
     val cedges = spark.read.parquet(s"$path/cedges")
       .select(col("src"), col("dst"), col(DstVecCol),
         lit(null).cast("long").as(BucketCol))
@@ -398,12 +375,11 @@ object GraphAnn {
     * rebuild). EXACT: the updated artifact is row-identical to
     * re-materializing over the union corpus, because
     *
-    *  - the batch is assigned against the centroids of `base` (the same
-    *    frozen-centroid contract as [[AnnIndex.appendToMaterialized]] —
-    *    and the batch must not itself contain centroid-level ids, checked
-    *    below), so assignments match the full rebuild's (a row with no
-    *    nearest centroid, e.g. a NULL vector, lands in the lowest centroid's
-    *    bucket, the [[buildEdges]] rule);
+    *  - the batch is assigned against the centroid table the store holds
+    *    (the same frozen-centroid contract as
+    *    [[AnnIndex.appendToMaterialized]] — and the batch must not itself
+    *    contain centroid-level ids, checked below), so assignments match
+    *    the full rebuild's, under the [[buildEdges]] rule;
     *  - a full rebuild changes member edges ONLY inside buckets the batch
     *    lands in, and within a touched bucket an old node's new top-degree
     *    neighbors are a subset of {its stored top-degree neighbors} ∪
@@ -422,55 +398,30 @@ object GraphAnn {
     * overwrite). Single-writer per artifact, like every materialized-index
     * mutation here.
     *
-    * TIERED geometry (`superStride > 0`, matching the stored spec) splices
-    * the same way: the upper (centroid-within-super + super-exact) levels
-    * depend only on the centroid and super sets — both frozen, since the
-    * batch may not contain ids divisible by `stride` (which covers
-    * `superStride` multiples) — so `cedges/` is untouched, and the batch's
-    * member assignment replays the build's exact hierarchical rule
-    * ([[hierarchicalAssign]]: nearest frozen super, then `cosine_argmin`
-    * over that super bucket's frozen centroids). A full tiered rebuild
+    * TIERED geometry (`superStride > 0`, matching the stored header)
+    * splices the same way: the upper (centroid-within-super + super-exact)
+    * levels depend only on the centroid and super sets — both frozen, since
+    * the batch may not contain ids divisible by `stride` (which covers
+    * `superStride` multiples, a build-time invariant) — so `cedges/` is
+    * untouched, and the batch's member assignment replays the build's
+    * hierarchical rule against the stored centroids (nearest super, then
+    * the nearest centroid of that super's bucket). A full tiered rebuild
     * over the union corpus computes the identical assignment for every old
-    * row (frozen sets + order-independent argmin tie-break), so the
+    * row (frozen sets + order-independent tie-break), so the
     * per-touched-bucket subset argument above carries over verbatim.
     */
-  def appendToMaterialized(batch: DataFrame, base: DataFrame, idCol: String,
+  def appendToMaterialized(batch: DataFrame, idCol: String,
       vecCol: String, stride: Int, degree: Int, path: String,
       superStride: Int = 0): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "graph-append") {
     val spark = batch.sparkSession
-    val (storedStride, storedDegree, storedSuper) = readSpec(spark, path)
-    require(storedStride == stride && storedDegree == degree
-        && storedSuper == superStride,
-      s"graph at $path was materialized with (stride, degree, superStride) = " +
-        s"($storedStride, $storedDegree, $storedSuper), append expects " +
-        s"($stride, $degree, $superStride)")
-    // the frozen-supers argument below relies on supers ⊆ centroids: the
-    // no-centroid batch check covers superStride multiples ONLY because
-    // superStride is a multiple of stride. levels() enforces that at build
-    // time; re-assert it here so the invariant is locally checkable rather
-    // than enforced at a distance.
-    require(superStride <= 0 || superStride % stride == 0,
-      s"superStride $superStride must be a multiple of stride $stride")
-    require(batch.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
-      s"batch contains centroid-level ids ($idCol divisible by $stride): " +
-        "inserting centroids changes the bucket geometry — re-materialize instead")
-    val cents = centroidsOf(base, idCol, vecCol, stride)
-    // batch-sized; pinned — consumed by the touched-list collect, both
-    // candidate joins, and the assign append
-    val newMembers = (if (superStride > 0) {
-      val supers = centroidsOf(base, idCol, vecCol, superStride)
-      hierarchicalAssign(batch, idCol, vecCol, supers,
-        assignedTo(cents, "__cid", "__cvec", supers))
-    } else assignedTo(batch, idCol, vecCol, cents)).localCheckpoint()
-    val touched = newMembers.select(col("__centroid")).distinct()
-      .collect().map(_.getLong(0)) // bounded by the batch size
+    // the pinned batch feeds both candidate joins and the assign append
+    val (s, newMembers, touched) =
+      replayed(batch, idCol, vecCol, stride, degree, path, superStride, "appending")
     if (touched.isEmpty) return
     // old members of touched buckets only: a bucket-PRUNED read of the
     // assignment table (manifest-listed directories), never a corpus scan
-    val vecType = base.schema(vecCol).dataType
-    val oldTouched = IndexManifests.readBuckets(spark, s"$path/assign", "__centroid",
-        touched, assignSchema(vecType))
+    val oldTouched = s.buckets(touched)
       .select(col("__nid"), col("__nv"), col("__centroid").cast("long"))
       .localCheckpoint()
     val newSide = newMembers.select(col("__centroid"),
@@ -494,7 +445,7 @@ object GraphAnn {
     // ... merged with their STORED top-degree edges (bucket-pruned read;
     // the stored __dstv recomputes the identical distance expression)
     val storedCand = IndexManifests.readBuckets(spark, s"$path/edges", "__bucket",
-        touched, edgesSchema(vecType))
+        touched, edgesSchema(s.schema("__nv").dataType))
       .select(col("src"), col("dst"), col(DstVecCol),
         col("__bucket").cast("long"))
       .join(oldSrc.select(col("src"), col("__vl")), Seq("src"))
@@ -508,15 +459,11 @@ object GraphAnn {
       .where(col("__rn") <= degree)
       .select(col("src"), col("dst"), col(DstVecCol), col("__bucket"))
     // replace exactly the touched bucket partitions; append the batch's
-    // assignment rows (existing assignment rows never change). Same
-    // one-file-per-bucket repartition discipline as the build. Both
+    // assignment rows (existing assignment rows never change). Both
     // manifests refresh so the NEXT mutation's pruned reads see any bucket
     // directory this one created.
     IndexManifests.replaceBuckets(spark, s"$path/edges", "__bucket", touched, updated)
-    newMembers.repartition(col("__centroid"))
-      .write.mode("append").partitionBy("__centroid")
-      .parquet(s"$path/assign")
-    IndexManifests.write(spark, s"$path/assign", "__centroid")
+    IndexManifests.appendBuckets(newMembers, s"$path/assign", "__centroid")
   }
 
   /** Batch DELETE from a materialized graph — the other half of index
@@ -542,47 +489,28 @@ object GraphAnn {
     *
     * The deleted rows' buckets are recovered by REPLAYING the (frozen,
     * deterministic) assignment rule on the batch — no corpus-sized lookup
-    * of the assignment table by a non-partition key; a row with no
-    * nearest centroid (a NULL vector) replays to the lowest centroid's
-    * bucket, where [[buildEdges]] filed it. Storage mutation is
+    * of the assignment table by a non-partition key; the replay runs
+    * against the store's own centroid table, so every row (a NULL vector
+    * included) lands where [[buildEdges]] filed it. Storage mutation is
     * two dynamic partition overwrites plus explicit directory removal for
     * touched buckets whose edge/member sets become empty (a dynamic
     * overwrite only replaces partitions it has rows for). Deleting an id
     * that was never inserted is a harmless no-op (its bucket recomputes to
     * its current state). Works on both geometries like the insert.
     */
-  def deleteFromMaterialized(batch: DataFrame, base: DataFrame, idCol: String,
+  def deleteFromMaterialized(batch: DataFrame, idCol: String,
       vecCol: String, stride: Int, degree: Int, path: String,
       superStride: Int = 0): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "graph-delete") {
     val spark = batch.sparkSession
-    val (storedStride, storedDegree, storedSuper) = readSpec(spark, path)
-    require(storedStride == stride && storedDegree == degree
-        && storedSuper == superStride,
-      s"graph at $path was materialized with (stride, degree, superStride) = " +
-        s"($storedStride, $storedDegree, $storedSuper), delete expects " +
-        s"($stride, $degree, $superStride)")
-    // same locally-checkable frozen-supers invariant as the append path
-    require(superStride <= 0 || superStride % stride == 0,
-      s"superStride $superStride must be a multiple of stride $stride")
-    require(batch.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
-      s"batch contains centroid-level ids ($idCol divisible by $stride): " +
-        "deleting centroids changes the bucket geometry — re-materialize instead")
-    val cents = centroidsOf(base, idCol, vecCol, stride)
-    // replay the build's assignment rule on the deleted rows — recovers
-    // their stored buckets exactly (frozen sets, deterministic tie-break)
-    val delAssigned = (if (superStride > 0) {
-      val supers = centroidsOf(base, idCol, vecCol, superStride)
-      hierarchicalAssign(batch, idCol, vecCol, supers,
-        assignedTo(cents, "__cid", "__cvec", supers))
-    } else assignedTo(batch, idCol, vecCol, cents)).localCheckpoint()
-    val touched = delAssigned.select(col("__centroid")).distinct()
-      .collect().map(_.getLong(0)) // bounded by the batch size
+    // the replay recovers the deleted rows' stored buckets exactly
+    // (frozen sets, deterministic tie-break)
+    val (s, delAssigned, touched) =
+      replayed(batch, idCol, vecCol, stride, degree, path, superStride, "deleting")
     if (touched.isEmpty) return
     // surviving members of touched buckets: bucket-pruned read minus the
     // batch (anti-join, batch-sized broadcast side — no id-list literals)
-    val remaining = IndexManifests.readBuckets(spark, s"$path/assign", "__centroid",
-        touched, assignSchema(base.schema(vecCol).dataType))
+    val remaining = s.buckets(touched)
       .select(col("__nid"), col("__nv"), col("__centroid").cast("long"))
       .join(broadcast(delAssigned.select(col("__nid"))), Seq("__nid"),
         "left_anti")

@@ -71,11 +71,22 @@ private[graft] object IndexManifests {
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(partCol))
 
   /** Full-store write of a bucket-partitioned table ([[byBucket]]), then
-    * its manifest. Shared by every index build (`AnnIndex`, `GraphAnn`,
-    * `ProductQuantizer`).
+    * its manifest. Shared by the index builds (`GraphAnn`'s edges,
+    * `ProductQuantizer`'s codes).
     */
   def writeBuckets(df: DataFrame, table: String, partCol: String): Unit = {
     byBucket(df, partCol).write.mode("overwrite").partitionBy(partCol).parquet(table)
+    write(df.sparkSession, table, partCol)
+  }
+
+  /** [[writeBuckets]]' append counterpart: `df` appended to the bucket
+    * directories it lands in ([[byBucket]]), then the manifest refreshed so
+    * the next pruned read sees any directory the append created. Shared by
+    * every store append (the IVF store, the graph's `assign/`, the IVF-PQ
+    * code table).
+    */
+  def appendBuckets(df: DataFrame, table: String, partCol: String): Unit = {
+    byBucket(df, partCol).write.mode("append").partitionBy(partCol).parquet(table)
     write(df.sparkSession, table, partCol)
   }
 

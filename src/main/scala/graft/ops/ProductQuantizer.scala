@@ -620,26 +620,15 @@ object ProductQuantizer {
 
   /** Append a NEW vector batch to a [[materializeIvfPq]]'d (bucket-
     * partitioned) store: the batch encodes against the STORED codebooks
-    * and lands in its buckets under the REPLAYED IVF assignment rule
-    * against `base`'s stride centroids ([[AnnIndex.replayedAssignment]] —
+    * and lands in its buckets under the IVF assignment REPLAYED against
+    * the companion IVF store at `ivfPath` ([[AnnIndex.storedAssignment]] —
     * the rule `AnnIndex.materialize` files rows by, so the code table and
-    * the companion float index stay bucket-consistent by construction).
-    * Only the batch's rows write (parquet append into their partition
-    * directories); the manifest refreshes so the next pruned read sees
-    * any bucket this append created.
+    * the float store stay bucket-consistent by construction). Only the
+    * batch's rows write ([[IndexManifests.appendBuckets]]: one file per
+    * touched bucket directory, manifest refreshed).
     */
   def appendToIvfPq(batch: DataFrame, idCol: String, vecCol: String,
-      base: DataFrame, stride: Int, path: String,
-      expect: Option[PqSpec] = None): Unit =
-    appendAssigned(batch, idCol, vecCol,
-      AnnIndex.replayedAssignment(batch, idCol, vecCol, base, stride), stride, path, expect)
-
-  /** [[appendToIvfPq]] with the batch's `(idCol, __centroid)` assignment
-    * given — streaming ingest replays it against the companion IVF store
-    * ([[AnnIndex.storedAssignment]]).
-    */
-  private[graft] def appendAssigned(batch: DataFrame, idCol: String, vecCol: String,
-      assignment: DataFrame, stride: Int, path: String,
+      ivfPath: String, stride: Int, path: String,
       expect: Option[PqSpec] = None): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "ivfpq-append") {
     val spark = batch.sparkSession
@@ -655,12 +644,10 @@ object ProductQuantizer {
     require(batch.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
       s"batch contains IVF centroid-level ids ($idCol divisible by " +
         s"$stride) — re-materialize instead")
-    encode(batch, idCol, vecCol, cb, spec)
-      .join(assignment.select(col(idCol).cast("long").as("__id"), col("__centroid")),
-        Seq("__id"))
-      .write.mode("append").partitionBy("__centroid")
-      .parquet(s"$path/codes")
-    IndexManifests.write(spark, s"$path/codes", "__centroid")
+    IndexManifests.appendBuckets(encode(batch, idCol, vecCol, cb, spec)
+      .join(AnnIndex.storedAssignment(batch, idCol, vecCol, stride, ivfPath)
+        .select(col(idCol).cast("long").as("__id"), col("__centroid")), Seq("__id")),
+      s"$path/codes", "__centroid")
   }
 
   /** Batch DELETE from a [[materialize]]d or [[materializeIvfPq]]'d index —
@@ -733,19 +720,19 @@ object ProductQuantizer {
   }
 
   /** [[deleteFromMaterialized]] for the IVF-PQ layout with the assignment
-    * REPLAYED from `base`'s stride centroids instead of trusted from a
-    * caller frame (`batch` carries the deleted rows' vectors — the caller
-    * has them: they are corpus rows). Exactly the stored buckets, since
-    * the replay is the rule the build filed them by
-    * ([[AnnIndex.replayedAssignment]]), so a stale or partial frame can
+    * REPLAYED against the companion IVF store at `ivfPath` instead of
+    * trusted from a caller frame (`batch` carries the deleted rows'
+    * vectors — the caller has them: they are corpus rows). Exactly the
+    * stored buckets, since the replay is the rule the build filed them by
+    * ([[AnnIndex.storedAssignment]]), so a stale or partial frame can
     * never turn the delete into a silent partial no-op — the same contract
     * as `AnnIndex.deleteFromMaterialized` and
     * `GraphAnn.deleteFromMaterialized`.
     */
   def deleteFromIvfPq(batch: DataFrame, idCol: String, vecCol: String,
-      base: DataFrame, stride: Int, path: String): Unit =
+      ivfPath: String, stride: Int, path: String): Unit =
     deleteFromMaterialized(batch, idCol, path, assignment = Some(
-      AnnIndex.replayedAssignment(batch, idCol, vecCol, base, stride)))
+      AnnIndex.storedAssignment(batch, idCol, vecCol, stride, ivfPath)))
 
   /** Compact a [[materialize]]d index's flat code table — the maintenance
     * half of [[appendToMaterialized]], which grows it by one+ file per

@@ -1,13 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData, UnsafeProjection}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.SparkShims
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.{VectorLoop, array_cosine_distance, array_inner_product, array_l2_norm}
 
@@ -521,8 +517,8 @@ object SimilarityJoin {
   */
 final class AnnIndex private (
     assignedOf: () => DataFrame, // (id, vec, __centroid): every bucket
-    cents: AnnIndex.Centroids,
-    store: Option[AnnIndex.Store],
+    cents: CentroidStore.Centroids,
+    store: Option[CentroidStore.Store],
     idCol: String, vecCol: String) extends Serializable {
 
   private lazy val assigned = assignedOf()
@@ -575,7 +571,7 @@ final class AnnIndex private (
         (s.buckets(ids).select(col(idCol), col(vecCol)),
           s.spark.createDataFrame(ids.map(Tuple1(_))).toDF("__probe_cid"))
       case None =>
-        val c = AnnIndex.ranked(cents.frame, qvec, nprobe)
+        val c = CentroidStore.ranked(cents.frame, qvec, nprobe)
         (assigned.join(broadcast(c), col("__centroid") === col("__probe_cid"), "left_semi")
           .select(col(idCol), col(vecCol)), c)
     }
@@ -655,6 +651,7 @@ final class AnnIndex private (
 }
 
 object AnnIndex {
+  import CentroidStore.{Centroids, Store, assignedTo, centroidsOf}
 
   /** Materialize the IVF index as parquet PARTITIONED BY centroid bucket —
     * the build-once / probe-many shape IVF exists for. The store's
@@ -662,7 +659,7 @@ object AnnIndex {
     * written by Spark, and a header naming the stride and the bucket
     * schema); the store is then opened as every later open, append and
     * delete opens it, and `df` is appended to it as one batch. Each bucket
-    * is one directory holding one file ([[IndexManifests.byBucket]]), so
+    * is one directory holding one file ([[IndexManifests.appendBuckets]]), so
     * `stride` doubles as the file-granularity knob. Ids must be unique:
     * each input row is one stored row.
     */
@@ -672,7 +669,8 @@ object AnnIndex {
     IndexFiles.deleteRecursive(spark, path)
     val schema = StructType(df.select(col(idCol), col(vecCol)).schema
       .map(_.copy(nullable = true)) :+ StructField("__centroid", LongType))
-    val s = Store.write(centroidsOf(df, idCol, vecCol, stride), stride, schema, vecCol, path)
+    val s = Store.write(centroidsOf(df, idCol, vecCol, stride), Seq("stride" -> stride),
+      schema, vecCol, path)
     // fail before any bucket is written: a store of NULL buckets
     if (s.bytes == 0) IndexFiles.deleteRecursive(spark, path)
     require(s.bytes > 0, s"no centroids: no $idCol divisible by stride $stride")
@@ -682,38 +680,34 @@ object AnnIndex {
   /** Open a [[materialize]]d index from its path: the store's header and
     * (within [[SizeRoute.IvfCentroidBytes]]) its centroid table are read
     * once into the handle, with no Spark job, and `stride` must match the
-    * header. `df` is not read. A store without the header must be
-    * re-materialized.
+    * header. A store without the header must be re-materialized. `df` is
+    * unread: it stays in the signature only because the `graftbench/`
+    * harness compiles against it, and leaves with a change to that harness.
     */
   def fromMaterialized(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, path: String): AnnIndex = {
-    val s = Store.open(df.sparkSession, path, vecCol, stride, "opened")
+    val s = open(df.sparkSession, path, vecCol, stride, "opened")
     new AnnIndex(() => s.all, s.centroids, Some(s), idCol, vecCol)
   }
 
   /** Append a NEW vector batch to a [[materialize]]d index: the batch is
     * assigned against the store's centroid table and appended to the
-    * affected bucket directories, one file each ([[IndexManifests.byBucket]]).
-    * The assigned corpus is never re-read or rewritten, and probes see old
-    * + new immediately. Appended vectors never become centroids (the
-    * standard IVF contract); re-materialize to re-balance after heavy
-    * growth. `base` is not read.
+    * affected bucket directories, one file each
+    * ([[IndexManifests.appendBuckets]]). The assigned corpus is never
+    * re-read or rewritten, and probes see old + new immediately. Appended
+    * vectors never become centroids (the standard IVF contract);
+    * re-materialize to re-balance after heavy growth.
     */
-  def appendToMaterialized(batch: DataFrame, base: DataFrame, idCol: String,
+  def appendToMaterialized(batch: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "ann-append") {
-    append(Store.open(batch.sparkSession, path, vecCol, stride, "appending"),
+    append(open(batch.sparkSession, path, vecCol, stride, "appending"),
       batch, idCol, vecCol, path)
   }
 
   private def append(s: Store, batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    IndexManifests.byBucket(assignedTo(batch, idCol, vecCol, s.centroids), "__centroid")
-      .write.mode("append").partitionBy("__centroid").parquet(path)
-    // refresh so the next maintenance read's manifest sees any bucket
-    // directory this batch created
-    IndexManifests.write(batch.sparkSession, path, "__centroid")
-  }
+      path: String): Unit =
+    IndexManifests.appendBuckets(assignedTo(batch, idCol, vecCol, s.centroids), path, "__centroid")
 
   /** Batch DELETE from a [[materialize]]d index — the removal half of the
     * maintenance trio (append grows, compact re-files, this removes;
@@ -725,12 +719,12 @@ object AnnIndex {
     * the stored centroid table, and [[IndexManifests.deleteRows]] rewrites
     * only the touched buckets. Deleting centroid-level ids is refused: it
     * changes bucket geometry — re-materialize instead. Single-writer, like
-    * every materialized-index mutation; `base` is not read.
+    * every materialized-index mutation.
     */
-  def deleteFromMaterialized(batch: DataFrame, base: DataFrame, idCol: String,
+  def deleteFromMaterialized(batch: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "ann-delete") {
-    val s = Store.open(batch.sparkSession, path, vecCol, stride, "deleting")
+    val s = open(batch.sparkSession, path, vecCol, stride, "deleting")
     IndexManifests.deleteRows(batch.sparkSession, path, "__centroid", idCol,
       assignedTo(batch.where(col(idCol).isNotNull), idCol, vecCol, s.centroids)
         .select(col(idCol).cast("long"), col("__centroid")),
@@ -769,11 +763,6 @@ object AnnIndex {
       IndexManifests.compactTable(spark, path, "__centroid",
         maxFilesPerBucket, targetBytes)
     }
-
-  private def centroidsOf(df: DataFrame, idCol: String, vecCol: String,
-      stride: Int): DataFrame =
-    df.where(pmod(col(idCol), lit(stride)) === 0)
-      .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
 
   /** Lloyd-refined centroids: start from the deterministic stride sample,
     * run `iters` rounds of (argmin assignment → per-cluster mean). Each
@@ -844,202 +833,17 @@ object AnnIndex {
       cents, None, idCol, vecCol)
   }
 
-  /** The assignment rule replayed on a batch against `base`'s stride
-    * centroids: `(idCol, __centroid)`, the rows [[materialize]] stores for
-    * those ids over `base` — what IVF-PQ maintenance uses instead of
-    * trusting a caller-supplied (possibly stale) assignment frame.
+  /** `batch`'s `(idCol, __centroid)` rows replayed against the IVF store at
+    * `path`: the rows [[materialize]] files there for those ids, so an
+    * IVF-PQ code table stays bucket-consistent with its companion store.
     */
-  private[graft] def replayedAssignment(batch: DataFrame, idCol: String,
-      vecCol: String, base: DataFrame, stride: Int): DataFrame =
-    assignedTo(batch, idCol, vecCol,
-      new Centroids(() => centroidsOf(base, idCol, vecCol, stride), None))
-      .select(col(idCol), col("__centroid"))
-
-  /** [[replayedAssignment]] against the IVF store at `path`: streaming
-    * ingest keeps an IVF-PQ code table bucket-consistent with it.
-    */
-  private[graft] def storedAssignment(batch: DataFrame, idCol: String,
+  private[ops] def storedAssignment(batch: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): DataFrame =
     assignedTo(batch, idCol, vecCol,
-      Store.open(batch.sparkSession, path, vecCol, stride, "assigning").centroids)
+      open(batch.sparkSession, path, vecCol, stride, "assigning").centroids)
       .select(col(idCol), col("__centroid"))
 
-  /** The `nprobe` centroids of `cents` nearest the query, `(__probe_cid)`,
-    * ranked `(d asc_nulls_last, cid asc)`.
-    */
-  private def ranked(cents: DataFrame, qvec: Array[Double], nprobe: Int): DataFrame =
-    cents
-      .select(col("__cid"), array_cosine_distance(col("__cvec"), typedLit(qvec.toSeq)).as("__d"))
-      .orderBy(col("__d").asc_nulls_last, col("__cid").asc)
-      .limit(nprobe)
-      .select(col("__cid").as("__probe_cid"))
-
-  private def nullBearing(v: Column): Column = v.isNull || exists(v, _.isNull)
-
-  /** The assignment rule over candidate `ids`/`vecs` arrays: the centroid
-    * minimizing `struct(d, cid)` with Spark's struct ordering, `d` the
-    * cosine distance. A NULL `d` ranks FIRST there, so a vector that is
-    * NULL or holds a NULL element (every `d` NULL) files under the lowest
-    * id `minAll`, and otherwise a centroid whose own vector carries a NULL
-    * takes every row (`nullMin`, the lowest such id); NaN ranks after every
-    * number, so an all-NaN row also files under `minAll`. `cosine_argmin`
-    * covers the all-numbers case and is NULL in exactly the others.
-    */
-  private def nearest(v: Column, ids: Column, vecs: Column, minAll: Column,
-      nullMin: Column): Column =
-    coalesce(graft.functions.cosine_argmin(v, ids, vecs),
-      when(nullBearing(v), minAll).otherwise(coalesce(nullMin, minAll)))
-
-  /** `df`'s `(id, vec)` rows with their bucket `__centroid` — the one
-    * assignment kernel, with no shuffle of its own. One row per input row.
-    * Its per-row parallelism must not inherit a narrow input's file layout
-    * (the r18 100× rung filed a 200k-vector delete spool in one task):
-    * [[graft.util.Partitions.widenNarrowScan]].
-    */
-  private def assignedTo(df: DataFrame, idCol: String, vecCol: String,
-      cents: Centroids): DataFrame = {
-    val (in, c) = cents.assigning(
-      graft.util.Partitions.widenNarrowScan(df.select(col(idCol), col(vecCol))), col(vecCol))
-    in.select(col(idCol), col(vecCol), c.as("__centroid"))
-  }
-
-  /** A centroid table `(__cid, __cvec)` as a frame, with its driver copy
-    * when one is held: ids and double vectors index-aligned, NULL for a
-    * vector that is NULL or holds a NULL element (its distance is NULL
-    * either way).
-    */
-  private final class Centroids(frameOf: () => DataFrame,
-      held: Option[(Array[Long], Array[Array[Double]])]) extends Serializable {
-
-    @transient lazy val frame: DataFrame = frameOf()
-
-    /** The `n` ids nearest `q`. Held: on the driver, in the distributed
-      * ranking's order — `(d asc_nulls_last, cid asc)`, NaN after every
-      * number and -0.0 equal to 0.0, as Spark sorts — with `d` from
-      * [[VectorLoop]], as `array_cosine_distance`. Otherwise one
-      * distributed top-`n` job.
-      */
-    def ranked(q: Array[Double], n: Int): Seq[Long] = held match {
-      case None => AnnIndex.ranked(frame, q, n).collect().map(_.getLong(0)).toSeq
-      case Some((ids, vecs)) =>
-        ids.indices.map { i =>
-          val d = if (vecs(i) == null) Double.NaN else VectorLoop.cosine(vecs(i), q)
-          ((if (vecs(i) == null) 2 else if (d.isNaN) 1 else 0, if (d.isNaN) 0.0 else d + 0.0),
-            ids(i))
-        }.sorted(Ordering.Tuple2(Ordering.Tuple2(Ordering.Int, Ordering.Double.TotalOrdering),
-          Ordering.Long)).take(n).map(_._2)
-    }
-
-    /** `rows` with the candidate row to assign against, and the
-      * [[nearest]] column for `v`. A held table is that row as two compact
-      * literals (`UnsafeArrayData`: one buffer each, printed without its
-      * elements), so the tasks get it with the plan and no job broadcasts
-      * it; otherwise the frame is aggregated into one row and broadcast.
-      */
-    def assigning(rows: DataFrame, v: Column): (DataFrame, Column) = held match {
-      case Some((ids, vecs)) =>
-        val nullMin = ids.indices.filter(vecs(_) == null).map(ids(_)).minOption
-        val table = ArrayType(ArrayType(DoubleType))
-        def literal(value: Any, t: DataType) = SparkShims.column(Literal(value, t))
-        (rows, nearest(v, literal(UnsafeArrayData.fromPrimitiveArray(ids), ArrayType(LongType)),
-          literal(UnsafeProjection.create(Array[DataType](table)).apply(InternalRow(
-            new GenericArrayData(vecs.map[Any](x => if (x == null) null
-              else UnsafeArrayData.fromPrimitiveArray(x))))).getArray(0).copy(), table),
-          lit(ids.min), nullMin.fold(lit(null).cast(LongType))(lit(_))))
-      case None =>
-        val cid = col("__cid").cast("long")
-        (rows.crossJoin(broadcast(frame.agg(
-            collect_list(struct(cid.as("c"), col("__cvec").as("v"))).as("__m"),
-            min(cid).as("__minall"), min(when(nullBearing(col("__cvec")), cid)).as("__nullmin")))),
-          nearest(v, col("__m.c"), col("__m.v"), col("__minall"), col("__nullmin")))
-    }
-  }
-
-  /** A materialized store as its header describes it; `bytes` is the size
-    * of its centroid table's files.
-    */
-  private final class Store(@transient val spark: SparkSession, path: String,
-      val schema: StructType, val centroids: Centroids, val bytes: Long) extends Serializable {
-
-    /** Every bucket (a full listing when executed). */
-    def all: DataFrame = spark.read.schema(schema).parquet(path)
-
-    /** The named buckets, listed from the manifest and read with the
-      * stored schema: no schema inference, no listing job.
-      */
-    def buckets(ids: Seq[Long]): DataFrame =
-      IndexManifests.readBuckets(spark, path, "__centroid", ids, Some(schema))
-  }
-
-  /** A store's self-description lives in `_graft_ivf/` (the `_` hides it
-    * from parquet reads): `header`, the lines `# graft-ivf 1`,
-    * `# stride <n>` and `# schema <json>`; and `centroids/`, the centroid
-    * table as text written by Spark, one `<cid>TAB<elements>` line per
-    * centroid in Java's round-trip decimal form (`null` for a vector that
-    * is NULL or holds a NULL element). The table has one reader,
-    * [[Store.parse]]: an open holds its result on the driver when the
-    * table's files total at most [[SizeRoute.IvfCentroidBytes]], and
-    * otherwise leaves the table to Spark.
-    */
-  private object Store {
-    private val Dir = "_graft_ivf"
-
-    /** Write `cents`'s table, then the header, and open the store. */
-    def write(cents: DataFrame, stride: Int, schema: StructType, vecCol: String,
-        path: String): Store = {
-      // one file: the driver route reads it whole, and Spark splits it
-      cents.repartition(1).map { r =>
-        val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
-        s"${r.getLong(0)}\t${if (v == null || v.contains(null)) "null" else v.mkString(",")}"
-      }(Encoders.STRING).write.text(s"$path/$Dir/centroids")
-      IndexFiles.writeString(cents.sparkSession, s"$path/$Dir/header",
-        s"# graft-ivf 1\n# stride $stride\n# schema ${schema.json}\n")
-      open(cents.sparkSession, path, vecCol, stride, "materialized")
-    }
-
-    /** Centroid lines (`value`) as a `(__cid, __cvec)` frame. */
-    def parse(lines: DataFrame, elem: DataType): DataFrame = {
-      val parts = split(col("value"), "\t", 2)
-      lines.select(parts(0).cast("long").as("__cid"),
-        when(parts(1) =!= "null", split(parts(1), ",").cast(ArrayType(elem))).as("__cvec"))
-    }
-
-    /** Read the header, check its stride, and hold the table when within
-      * the bound: parsed from a local relation, so collected with no job.
-      */
-    def open(spark: SparkSession, path: String, vecCol: String, stride: Int,
-        verb: String): Store = {
-      val dir = s"$path/$Dir"
-      val header = IndexFiles.readStringOpt(spark, s"$dir/header").getOrElse(
-        throw new IllegalArgumentException(s"no centroid table at $dir: the IVF store was " +
-          "written before stores carried their centroids — re-materialize it"))
-        .split("\n")
-      require(header.headOption.contains("# graft-ivf 1"), s"$dir/header is not an IVF store header")
-      val stored = header(1).stripPrefix("# stride ").toInt
-      require(stored == stride,
-        s"index at $path was materialized with stride $stored, $verb with $stride")
-      val schema = DataType.fromJson(header(2).stripPrefix("# schema ")).asInstanceOf[StructType]
-      val elem = schema(vecCol).dataType.asInstanceOf[ArrayType].elementType
-      val fs = IndexFiles.fs(spark, dir)
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/centroids")).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-      val bytes = files.map(_.getLen).sum
-      val cents =
-        if (bytes > SizeRoute(SizeRoute.IvfCentroidBytes))
-          new Centroids(() => parse(spark.read.text(s"$dir/centroids"), elem), None)
-        else {
-          val lines = files.flatMap { f =>
-            val in = fs.open(f.getPath)
-            try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector finally in.close()
-          }
-          val rows = parse(spark.createDataset(lines)(Encoders.STRING).toDF("value"), elem).collect()
-          val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-            StructType(Seq(StructField("__cid", LongType), StructField("__cvec", ArrayType(elem)))))
-          new Centroids(() => local, Some((rows.map(_.getLong(0)), rows.map(r =>
-            if (r.isNullAt(1)) null
-            else r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray))))
-        }
-      new Store(spark, path, schema, cents, bytes)
-    }
-  }
+  private def open(spark: SparkSession, path: String, vecCol: String, stride: Int,
+      verb: String): Store =
+    Store.open(spark, path, vecCol, Seq("stride" -> stride), verb)
 }

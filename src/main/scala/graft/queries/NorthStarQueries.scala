@@ -762,8 +762,7 @@ object NorthStarQueries {
         AnnIndex.materialize(
           all.where(pmod(col("vec_id"), lit(2)) === 0), "vec_id", "embedding", 64, p)
         AnnIndex.appendToMaterialized(
-          all.where(pmod(col("vec_id"), lit(2)) === 1), all,
-          "vec_id", "embedding", 64, p)
+          all.where(pmod(col("vec_id"), lit(2)) === 1), "vec_id", "embedding", 64, p)
         p
       })
       val qvec = emb.where(col("vec_id") === 1).select(col("embedding"))
@@ -785,8 +784,7 @@ object NorthStarQueries {
         val all = t(s, d, "embeddings")
         AnnIndex.materialize(all, "vec_id", "embedding", 64, p)
         AnnIndex.deleteFromMaterialized(
-          all.where(pmod(col("vec_id"), lit(4)) === 3), all,
-          "vec_id", "embedding", 64, p)
+          all.where(pmod(col("vec_id"), lit(4)) === 3), "vec_id", "embedding", 64, p)
         p
       })
       val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
@@ -831,10 +829,10 @@ object NorthStarQueries {
         }
         epoch(all.where(pmod(col("vec_id"), lit(2)) === 1))(sdf =>
           graft.streaming.CorpusIngest.annIngest(
-            sdf, all, "vec_id", "embedding", 64, p)())
+            sdf, "vec_id", "embedding", 64, p)())
         epoch(all.where(pmod(col("vec_id"), lit(4)) === 3))(sdf =>
           graft.streaming.CorpusIngest.annDeletes(
-            sdf, all, "vec_id", "embedding", 64, p)())
+            sdf, "vec_id", "embedding", 64, p)())
         p
       })
       val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
@@ -976,7 +974,7 @@ object NorthStarQueries {
         GraphAnn.materialize(all.where(pmod(col("vec_id"), lit(2)) === 0),
           "vec_id", "embedding", 64, GraphAnn.DefaultDegree, p)
         GraphAnn.appendToMaterialized(
-          all.where(pmod(col("vec_id"), lit(2)) === 1), all,
+          all.where(pmod(col("vec_id"), lit(2)) === 1),
           "vec_id", "embedding", 64, GraphAnn.DefaultDegree, p)
         p
       })
@@ -1048,7 +1046,7 @@ object NorthStarQueries {
         GraphAnn.materialize(all, "vec_id", "embedding",
           64, GraphAnn.DefaultDegree, p)
         GraphAnn.deleteFromMaterialized(
-          all.where(pmod(col("vec_id"), lit(4)) === 3), all,
+          all.where(pmod(col("vec_id"), lit(4)) === 3),
           "vec_id", "embedding", 64, GraphAnn.DefaultDegree, p)
         p
       })
@@ -1076,7 +1074,7 @@ object NorthStarQueries {
           "vec_id", "embedding", 64, GraphAnn.DefaultDegree, p,
           superStride = 128)
         GraphAnn.appendToMaterialized(
-          all.where(pmod(col("vec_id"), lit(2)) === 1), all,
+          all.where(pmod(col("vec_id"), lit(2)) === 1),
           "vec_id", "embedding", 64, GraphAnn.DefaultDegree, p,
           superStride = 128)
         p

@@ -369,12 +369,18 @@ object CorpusIngest {
     * the STORED codebooks into the PQ codes at `pqPath`
     * ([[ProductQuantizer.appendToMaterialized]]). Pure batch function;
     * epoch-guarded per store so a replayed epoch cannot double-append.
-    * `base` is not read: every store describes itself. Returns the stores
-    * that actually absorbed this epoch.
+    * Returns the stores that actually absorbed this epoch. `base` is
+    * unread, since every store describes itself: it stays in the signature
+    * only because the `graftbench/` harness compiles against it, and leaves
+    * with a change to that harness.
     */
   def appendVectorEpoch(batch: DataFrame, base: DataFrame, idCol: String,
       vecCol: String, stride: Int, annPath: String,
-      pqPath: Option[String], epochId: Long): Seq[String] = {
+      pqPath: Option[String], epochId: Long): Seq[String] =
+    appendEpoch(batch, idCol, vecCol, stride, annPath, pqPath, epochId)
+
+  private def appendEpoch(batch: DataFrame, idCol: String, vecCol: String,
+      stride: Int, annPath: String, pqPath: Option[String], epochId: Long): Seq[String] = {
     // materialize the micro-batch once: both stores encode the same rows,
     // and a streaming source frame must not be recomputed per consumer
     val rows = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -382,7 +388,7 @@ object CorpusIngest {
     try {
       val annDone = epochOnce(spark, annPath, epochId, EpochMarker,
           "stream-ingest-epoch") {
-        AnnIndex.appendToMaterialized(rows, base, idCol, vecCol, stride, annPath)
+        AnnIndex.appendToMaterialized(rows, idCol, vecCol, stride, annPath)
       }
       // layout dispatch: a bucket-partitioned (IVF-PQ) code table takes the
       // partition-aware append (assignment replayed against the IVF store's
@@ -393,8 +399,7 @@ object CorpusIngest {
       // directory probe — this loop must run wherever the store lives.
       def appendPq(p: String): Unit =
         if (ProductQuantizer.layoutIsIvfPq(spark, p))
-          ProductQuantizer.appendAssigned(rows, idCol, vecCol,
-            AnnIndex.storedAssignment(rows, idCol, vecCol, stride, annPath), stride, p)
+          ProductQuantizer.appendToIvfPq(rows, idCol, vecCol, annPath, stride, p)
         else ProductQuantizer.appendToMaterialized(rows, idCol, vecCol, p)
       val pqDone = pqPath.filter(p =>
         epochOnce(spark, p, epochId, EpochMarker, "stream-ingest-epoch")(appendPq(p)))
@@ -407,7 +412,7 @@ object CorpusIngest {
     * the materialized IVF index (and PQ codes, when `pqPath` is set), so
     * probes see new vectors as soon as their epoch commits. Appended
     * vectors never become centroids (the standard IVF contract;
-    * re-materialize to re-balance after heavy growth); `base` is not read.
+    * re-materialize to re-balance after heavy growth).
     *
     * `compactEvery > 0` folds the small-files maintenance into the loop:
     * after every `compactEvery`-th absorbed epoch,
@@ -416,7 +421,7 @@ object CorpusIngest {
     * Running it inside foreachBatch keeps the single-writer contract —
     * compaction and appends never race, with no external scheduler.
     */
-  def annIngest(newVectors: DataFrame, base: DataFrame, idCol: String,
+  def annIngest(newVectors: DataFrame, idCol: String,
       vecCol: String, stride: Int, annPath: String,
       pqPath: Option[String] = None, compactEvery: Int = 0,
       maxFilesPerBucket: Int = 8)
@@ -424,7 +429,7 @@ object CorpusIngest {
     newVectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val absorbed = appendVectorEpoch(batch, base, idCol, vecCol,
+        val absorbed = appendEpoch(batch, idCol, vecCol,
           stride, annPath, pqPath, epochId)
         if (compactEvery > 0 && epochId > 0 && epochId % compactEvery == 0) {
           if (absorbed.contains(annPath))
@@ -454,29 +459,32 @@ object CorpusIngest {
   /** One takedown micro-batch against the materialized vector stores — the
     * delete twin of [[appendVectorEpoch]]: the batch's rows (ids AND
     * vectors — the assignment is REPLAYED against the centroid table the
-    * IVF store holds, never trusted from a caller frame; `base` is not
-    * read) leave the IVF index at `annPath`
-    * ([[AnnIndex.deleteFromMaterialized]] — touched bucket partitions
-    * only) and, when present, the PQ store at `pqPath` (layout-routed:
-    * bucket-pruned rewrite for IVF-PQ, tombstone sidecar for flat). Pure
-    * batch function; epoch-guarded per store so a replayed epoch is a
-    * no-op. Returns the stores that actually absorbed this epoch.
+    * IVF store holds, never trusted from a caller frame) leave the IVF
+    * index at `annPath` ([[AnnIndex.deleteFromMaterialized]] — touched
+    * bucket partitions only) and, when present, the PQ store at `pqPath`
+    * (layout-routed: bucket-pruned rewrite for IVF-PQ, tombstone sidecar
+    * for flat). Pure batch function; epoch-guarded per store so a replayed
+    * epoch is a no-op. Returns the stores that actually absorbed this
+    * epoch. `base` is unread, as in [[appendVectorEpoch]], and stays in
+    * the signature only for the `graftbench/` harness.
     */
   def deleteVectorEpoch(batch: DataFrame, base: DataFrame, idCol: String,
       vecCol: String, stride: Int, annPath: String,
-      pqPath: Option[String], epochId: Long): Seq[String] = {
+      pqPath: Option[String], epochId: Long): Seq[String] =
+    deleteEpoch(batch, idCol, vecCol, stride, annPath, pqPath, epochId)
+
+  private def deleteEpoch(batch: DataFrame, idCol: String, vecCol: String,
+      stride: Int, annPath: String, pqPath: Option[String], epochId: Long): Seq[String] = {
     val rows = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val spark = batch.sparkSession
     try {
       val annDone = epochOnce(spark, annPath, epochId, TakedownMarker,
           "stream-takedown-epoch") {
-        AnnIndex.deleteFromMaterialized(rows, base, idCol, vecCol, stride,
-          annPath)
+        AnnIndex.deleteFromMaterialized(rows, idCol, vecCol, stride, annPath)
       }
       def delPq(p: String): Unit =
         if (ProductQuantizer.layoutIsIvfPq(spark, p))
-          ProductQuantizer.deleteFromMaterialized(rows, idCol, p, Some(
-            AnnIndex.storedAssignment(rows, idCol, vecCol, stride, annPath)))
+          ProductQuantizer.deleteFromIvfPq(rows, idCol, vecCol, annPath, stride, p)
         else ProductQuantizer.deleteFromMaterialized(rows, idCol, p)
       val pqDone = pqPath.filter(p =>
         epochOnce(spark, p, epochId, TakedownMarker, "stream-takedown-epoch")(delPq(p)))
@@ -494,14 +502,14 @@ object CorpusIngest {
     * delete refuses them — re-materialize for those). `onEpoch` receives
     * (epochId, absorbed stores).
     */
-  def annDeletes(delVectors: DataFrame, base: DataFrame, idCol: String,
+  def annDeletes(delVectors: DataFrame, idCol: String,
       vecCol: String, stride: Int, annPath: String,
       pqPath: Option[String] = None)
       (onEpoch: (Long, Seq[String]) => Unit = (_, _) => ()): StreamingQuery =
     delVectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        onEpoch(epochId, deleteVectorEpoch(batch, base, idCol, vecCol,
+        onEpoch(epochId, deleteEpoch(batch, idCol, vecCol,
           stride, annPath, pqPath, epochId))
       }
       .start()
@@ -515,7 +523,7 @@ object CorpusIngest {
     * bucket, where the build and [[graphIngest]] file it. `onEpoch`
     * receives (epochId, absorbed).
     */
-  def graphDeletes(delVectors: DataFrame, base: DataFrame, idCol: String,
+  def graphDeletes(delVectors: DataFrame, idCol: String,
       vecCol: String, stride: Int, degree: Int, path: String,
       superStride: Int = 0)
       (onEpoch: (Long, Boolean) => Unit = (_, _) => ()): StreamingQuery =
@@ -527,7 +535,7 @@ object CorpusIngest {
         try {
           val absorbed = epochOnce(batch.sparkSession, path, epochId,
               TakedownMarker, "stream-takedown-epoch") {
-            graft.ops.GraphAnn.deleteFromMaterialized(rows, base, idCol,
+            graft.ops.GraphAnn.deleteFromMaterialized(rows, idCol,
               vecCol, stride, degree, path, superStride)
           }
           onEpoch(epochId, absorbed)
@@ -547,7 +555,7 @@ object CorpusIngest {
     * touched bucket), inside foreachBatch so compaction and appends never
     * race (single-writer). `onEpoch` receives (epochId, absorbed).
     */
-  def graphIngest(newVectors: DataFrame, base: DataFrame, idCol: String,
+  def graphIngest(newVectors: DataFrame, idCol: String,
       vecCol: String, stride: Int, degree: Int, path: String,
       superStride: Int = 0, compactEvery: Int = 0,
       maxFilesPerBucket: Int = 8)
@@ -560,7 +568,7 @@ object CorpusIngest {
         try {
           val absorbed = epochOnce(batch.sparkSession, path, epochId,
               EpochMarker, "stream-ingest-epoch") {
-            graft.ops.GraphAnn.appendToMaterialized(rows, base, idCol,
+            graft.ops.GraphAnn.appendToMaterialized(rows, idCol,
               vecCol, stride, degree, path, superStride)
           }
           if (absorbed && compactEvery > 0 && epochId > 0 &&

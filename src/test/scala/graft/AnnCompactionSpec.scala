@@ -37,8 +37,7 @@ class AnnCompactionSpec extends SparkTestBase {
       emb.where(pmod(col("vec_id"), lit(2)) === 0), "vec_id", "embedding", 64, path)
     (0 until 5).foreach { b =>
       AnnIndex.appendToMaterialized(
-        emb.where(pmod(col("vec_id"), lit(10)) === 2 * b + 1), emb,
-        "vec_id", "embedding", 64, path)
+        emb.where(pmod(col("vec_id"), lit(10)) === 2 * b + 1), "vec_id", "embedding", 64, path)
     }
     val before = bucketFiles(path)
     assert(before.values.exists(_.length > 2), "fixture failed to fragment any bucket")

@@ -70,7 +70,7 @@ class AnnIndexSpec extends SparkTestBase {
     val even = emb.where(pmod(col("vec_id"), lit(2)) === 0)
     val odd = emb.where(pmod(col("vec_id"), lit(2)) === 1)
     AnnIndex.materialize(even, "vec_id", "embedding", 64, path)
-    AnnIndex.appendToMaterialized(odd, emb, "vec_id", "embedding", 64, path)
+    AnnIndex.appendToMaterialized(odd, "vec_id", "embedding", 64, path)
     val inc = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, path)
     val full = AnnIndex.build(emb, "vec_id", "embedding", stride = 64)
     for (nprobe <- Seq(2, 8)) {
@@ -82,7 +82,7 @@ class AnnIndexSpec extends SparkTestBase {
     }
     // a stride mismatch on append is rejected like on open
     intercept[IllegalArgumentException] {
-      AnnIndex.appendToMaterialized(odd, emb, "vec_id", "embedding", 32, path)
+      AnnIndex.appendToMaterialized(odd, "vec_id", "embedding", 32, path)
     }
   }
 
@@ -91,7 +91,7 @@ class AnnIndexSpec extends SparkTestBase {
     val path = java.nio.file.Files.createTempDirectory("ann_del_test").toString
     AnnIndex.materialize(emb, "vec_id", "embedding", 64, path)
     AnnIndex.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(4)) === 3),
-      emb, "vec_id", "embedding", 64, path)
+      "vec_id", "embedding", 64, path)
     val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
     // the stored artifact is row-identical to a reduced-corpus build:
     // same (id, bucket) set, no deleted id survives
@@ -117,7 +117,7 @@ class AnnIndexSpec extends SparkTestBase {
     // deleting a centroid-level id is refused (geometry frozen)
     intercept[IllegalArgumentException] {
       AnnIndex.deleteFromMaterialized(emb.where(col("vec_id") === 128),
-        emb, "vec_id", "embedding", 64, path)
+        "vec_id", "embedding", 64, path)
     }
     // the IVF store's bucket manifest tracks the directory truth through
     // materialize + delete (IndexManifests, shared with the graph tier)
@@ -219,13 +219,13 @@ class AnnIndexSpec extends SparkTestBase {
     val app = batch.orderBy("vec_id").limit(40).localCheckpoint()
     assert(app.count() == 40)
     val (_, append) = JobCount(spark.sparkContext) {
-      AnnIndex.appendToMaterialized(app, base, "vec_id", "embedding", 64, path)
+      AnnIndex.appendToMaterialized(app, "vec_id", "embedding", 64, path)
     }
     assert(append <= 3, s"a 40-row append ran $append jobs")
     val del = emb.where(pmod(col("vec_id"), lit(4)) === 3).orderBy("vec_id").limit(20)
       .localCheckpoint()
     val (_, delete) = JobCount(spark.sparkContext) {
-      AnnIndex.deleteFromMaterialized(del, base, "vec_id", "embedding", 64, path)
+      AnnIndex.deleteFromMaterialized(del, "vec_id", "embedding", 64, path)
     }
     assert(delete <= 5, s"a 20-row delete ran $delete jobs")
     // and the maintained store is the one a fresh materialize builds
@@ -246,8 +246,8 @@ class AnnIndexSpec extends SparkTestBase {
       SizeRoute.withBounds(bounds: _*) {
         AnnIndex.materialize(emb.where(col("vec_id") < 300), "vec_id", "embedding", 32, path)
         AnnIndex.appendToMaterialized(emb.where(col("vec_id") >= 300 && pmod(col("vec_id"), lit(32)) =!= 0),
-          emb, "vec_id", "embedding", 32, path)
-        AnnIndex.deleteFromMaterialized(gone, emb, "vec_id", "embedding", 32, path)
+          "vec_id", "embedding", 32, path)
+        AnnIndex.deleteFromMaterialized(gone, "vec_id", "embedding", 32, path)
         val idx = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 32, path)
         val (_, jobs) = JobCount(spark.sparkContext)(idx.probeTopK(qs.head, 10).collect())
         (storedAssignment(path), qs.map(probed(idx, _)), jobs)
@@ -275,20 +275,30 @@ class AnnIndexSpec extends SparkTestBase {
       val df = vecs(centroidNull).toDF("vec_id", "embedding")
         .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
       val want = AnnIndexSpec.structMin(df, "vec_id", "embedding", 4)
-      val replayed = AnnIndex.replayedAssignment(df, "vec_id", "embedding", df, 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(replayed == want, s"centroid NULL element: $centroidNull")
       for (bound <- Seq(0, Int.MaxValue)) {
         val path = tmp("ann_rule_test")
         graft.ops.SizeRoute.withBounds(graft.ops.SizeRoute.IvfCentroidBytes -> bound) {
           AnnIndex.materialize(df, "vec_id", "embedding", 4, path)
         }
         assert(storedAssignment(path) == want, s"bound $bound, centroid NULL: $centroidNull")
+        // the graph store's assign/ follows the same rule, per level when tiered
+        for (superStride <- Seq(0, 8)) {
+          val graph = tmp("graph_rule_test")
+          graft.ops.SizeRoute.withBounds(graft.ops.SizeRoute.IvfCentroidBytes -> bound) {
+            graft.ops.GraphAnn.materialize(df, "vec_id", "embedding", 4, 2, graph, superStride)
+          }
+          val got = spark.read.parquet(s"$graph/assign")
+            .select(col("__nid"), col("__centroid").cast("long"))
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          assert(got == AnnIndexSpec.structMin(df, "vec_id", "embedding", 4, superStride),
+            s"graph superStride $superStride, bound $bound, centroid NULL: $centroidNull")
+        }
       }
     }
   }
 
   test("a store opens from its path: any base frame gives the same rows; a store without its centroid file is refused") {
+    import graft.ops.GraphAnn
     val path = tmp("ann_base_test")
     AnnIndex.materialize(emb, "vec_id", "embedding", 64, path)
     val other = emb.where(col("vec_id") === 7)
@@ -300,6 +310,35 @@ class AnnIndexSpec extends SparkTestBase {
       AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, path)
     }
     assert(err.getMessage.contains("re-materialize"), err.getMessage)
+    // the graph store too: append and delete read only the store
+    def graph(p: String): (Set[(Long, Long, Long)], Set[(Long, Long)]) = (
+      GraphAnn.fromMaterialized(spark, p, 64, 4).where(col("__bucket").isNotNull)
+        .select("src", "dst", "__bucket").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet,
+      spark.read.parquet(s"$p/assign").select(col("__nid"), col("__centroid").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    def built(df: org.apache.spark.sql.DataFrame) = {
+      val p = tmp("graph_base_ref")
+      GraphAnn.materialize(df, "vec_id", "embedding", 64, 4, p)
+      graph(p)
+    }
+    val g = tmp("graph_base_test")
+    GraphAnn.materialize(emb.where(col("vec_id") < 250), "vec_id", "embedding", 64, 4, g)
+    GraphAnn.appendToMaterialized(
+      emb.where(col("vec_id") >= 250 && pmod(col("vec_id"), lit(64)) =!= 0),
+      "vec_id", "embedding", 64, 4, g)
+    val grown = emb.where(col("vec_id") < 250 || pmod(col("vec_id"), lit(64)) =!= 0)
+    assert(graph(g) == built(grown), "append != rebuild")
+    GraphAnn.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(4)) === 3),
+      "vec_id", "embedding", 64, 4, g)
+    assert(graph(g) == built(grown.where(pmod(col("vec_id"), lit(4)) =!= 3)), "delete != rebuild")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(g, "assign", "_graft_ivf", "header"))
+    for (open <- Seq[() => Any](() => GraphAnn.fromMaterialized(spark, g, 64, 4),
+        () => GraphAnn.appendToMaterialized(emb.where(col("vec_id") === 1),
+          "vec_id", "embedding", 64, 4, g))) {
+      val refused = intercept[IllegalArgumentException](open())
+      assert(refused.getMessage.contains("re-materialize"), refused.getMessage)
+    }
   }
 
   test("unique-id contract: a duplicated id is one stored row per input row; centroid deletes refused") {
@@ -309,7 +348,7 @@ class AnnIndexSpec extends SparkTestBase {
     assert(spark.read.parquet(path).where(col("vec_id") === 5).count() == 2)
     assert(spark.read.parquet(path).count() == 501)
     val err = intercept[IllegalArgumentException] {
-      AnnIndex.deleteFromMaterialized(emb.where(col("vec_id").isin(5, 192)), emb,
+      AnnIndex.deleteFromMaterialized(emb.where(col("vec_id").isin(5, 192)),
         "vec_id", "embedding", 64, path)
     }
     assert(err.getMessage.contains("centroid-level"), err.getMessage)
@@ -344,18 +383,31 @@ object AnnIndexSpec {
   }
 
   /** The assignment rule as the IVF build first wrote it, kept as the
-    * reference: a cross join against the stride centroids and a
-    * `min(struct(d, cid))` per id.
+    * reference: a join against the stride centroids and a
+    * `min(struct(d, cid))` per id. With `superStride > 0`, the graph's
+    * tiered rule: the same per level, first against the super-centroids
+    * (ids divisible by `superStride`), then against the centroids that
+    * themselves file under the row's super.
     */
-  def structMin(df: DataFrame, idCol: String, vecCol: String, stride: Int): Set[(Long, Long)] = {
+  def structMin(df: DataFrame, idCol: String, vecCol: String, stride: Int,
+      superStride: Int = 0): Set[(Long, Long)] = {
     val cents = df.where(pmod(col(idCol), lit(stride)) === 0)
       .select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
-    df.crossJoin(broadcast(cents))
-      .select(col(idCol), struct(
-        graft.functions.array_cosine_distance(col(vecCol), col("__cvec")).as("d"),
-        col("__cid").as("cid")).as("__dc"))
-      .groupBy(col(idCol)).agg(min(col("__dc")).getField("cid").as("__centroid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def nearest(rows: DataFrame, cands: DataFrame, on: org.apache.spark.sql.Column) =
+      rows.join(broadcast(cands), on)
+        .select(col(idCol), struct(
+          graft.functions.array_cosine_distance(col(vecCol), col("__cvec")).as("d"),
+          col("__cid").as("cid")).as("__dc"))
+        .groupBy(col(idCol)).agg(min(col("__dc")).getField("cid").as("__centroid"))
+    val rows =
+      if (superStride <= 0) nearest(df, cents, lit(true))
+      else {
+        val supers = nearest(df, cents.where(pmod(col("__cid"), lit(superStride)) === 0), lit(true))
+        nearest(df.join(supers.withColumnRenamed("__centroid", "__s"), idCol),
+          cents.join(supers.select(col(idCol).cast("long").as("__cid"), col("__centroid").as("__cs")),
+            "__cid"), col("__s") === col("__cs"))
+      }
+    rows.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 }
 
@@ -605,13 +657,13 @@ class ProductQuantizerSpec extends SparkTestBase {
     ProductQuantizer.materializeIvfPq(evens, "vec_id", "embedding",
       spark.read.parquet(ivfHalf), spec, comp)
     ProductQuantizer.appendToIvfPq(odds, "vec_id", "embedding",
-      base = emb, stride = 64, path = comp)
+      ivfPath = ivfHalf, stride = 64, path = comp)
     assert(bucketedCodesOf(comp) == bucketedCodesOf(compFull),
       "replayed append must equal the full-corpus build")
     // DELETE via the replayed assignment (no trusted frame anywhere)
     ProductQuantizer.deleteFromIvfPq(
       emb.where(pmod(col("vec_id"), lit(4)) === 3), "vec_id", "embedding",
-      base = emb, stride = 64, path = comp)
+      ivfPath = ivfHalf, stride = 64, path = comp)
     val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
     val ivfRed = java.nio.file.Files.createTempDirectory("pq_rp_ivfr").toString
     AnnIndex.materialize(reduced, "vec_id", "embedding", 64, ivfRed)
@@ -623,11 +675,11 @@ class ProductQuantizerSpec extends SparkTestBase {
     // appending codebook-entry or centroid ids is refused (frozen sets)
     intercept[IllegalArgumentException] {
       ProductQuantizer.appendToIvfPq(emb.where(col("vec_id") === 16),
-        "vec_id", "embedding", base = emb, stride = 64, path = comp)
+        "vec_id", "embedding", ivfPath = ivfHalf, stride = 64, path = comp)
     }
     intercept[IllegalArgumentException] {
       ProductQuantizer.appendToIvfPq(emb.where(col("vec_id") === 64),
-        "vec_id", "embedding", base = emb, stride = 64, path = comp)
+        "vec_id", "embedding", ivfPath = ivfHalf, stride = 64, path = comp)
     }
   }
 
@@ -995,12 +1047,12 @@ class GraphAnnSpec extends SparkTestBase {
       val grown = tmpDir("null_grown")
       GraphAnn.materialize(withNull.where(col("v").isNotNull), "id", "v", 2, 2, grown,
         superStride)
-      GraphAnn.appendToMaterialized(nullRow, withNull, "id", "v", 2, 2, grown, superStride)
+      GraphAnn.appendToMaterialized(nullRow, "id", "v", 2, 2, grown, superStride)
       assert(store(grown) == store(full), s"superStride $superStride: insert != rebuild")
       val reduced = tmpDir("null_reduced")
       GraphAnn.materialize(withNull.where(col("v").isNotNull), "id", "v", 2, 2, reduced,
         superStride)
-      GraphAnn.deleteFromMaterialized(nullRow, withNull, "id", "v", 2, 2, full, superStride)
+      GraphAnn.deleteFromMaterialized(nullRow, "id", "v", 2, 2, full, superStride)
       assert(store(full) == store(reduced), s"superStride $superStride: delete != rebuild")
     }
   }
@@ -1255,7 +1307,7 @@ class GraphAnnSpec extends SparkTestBase {
         emb.where(pmod(col("vec_id"), lit(3)) =!= 0)
           .where(pmod(col("vec_id"), lit(64)) =!= 0)
           .where(pmod(col("vec_id"), lit(6)) === i),
-        emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, p)
+        "vec_id", "embedding", 64, GraphAnn.DefaultDegree, p)
     }
     def maxFiles(table: String): Int =
       new java.io.File(table).listFiles().toSeq.filter(_.isDirectory)
@@ -1311,7 +1363,7 @@ class GraphAnnSpec extends SparkTestBase {
     GraphAnn.materialize(emb.where(pmod(col("vec_id"), lit(2)) === 0),
       "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half)
     GraphAnn.appendToMaterialized(emb.where(pmod(col("vec_id"), lit(2)) === 1),
-      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half)
+      "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half)
     GraphAnn.materialize(emb, "vec_id", "embedding", 64,
       GraphAnn.DefaultDegree, full)
     def edgeSet(p: String): Set[(Long, Long)] =
@@ -1333,7 +1385,7 @@ class GraphAnnSpec extends SparkTestBase {
     // a batch that would add a centroid is rejected (bucket geometry frozen)
     intercept[IllegalArgumentException] {
       GraphAnn.appendToMaterialized(emb.where(col("vec_id") === 128),
-        emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half)
+        "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half)
     }
     // opening a tiered artifact for append with the wrong superStride
     // (here: the flat default) is refused — geometry is authoritative
@@ -1342,7 +1394,7 @@ class GraphAnnSpec extends SparkTestBase {
       GraphAnn.DefaultDegree, tiered, superStride = 128)
     intercept[IllegalArgumentException] {
       GraphAnn.appendToMaterialized(emb.where(col("vec_id") === 1),
-        emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, tiered)
+        "vec_id", "embedding", 64, GraphAnn.DefaultDegree, tiered)
     }
     // the bucket manifests exist and list exactly the partition dirs
     def manifest(table: String): Seq[Long] =
@@ -1366,7 +1418,7 @@ class GraphAnnSpec extends SparkTestBase {
     GraphAnn.materialize(emb, "vec_id", "embedding", 64,
       GraphAnn.DefaultDegree, del)
     GraphAnn.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(4)) === 3),
-      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, del)
+      "vec_id", "embedding", 64, GraphAnn.DefaultDegree, del)
     val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
     GraphAnn.materialize(reduced, "vec_id", "embedding", 64,
       GraphAnn.DefaultDegree, red)
@@ -1395,7 +1447,7 @@ class GraphAnnSpec extends SparkTestBase {
     // deleting a centroid-level id is refused (geometry frozen)
     intercept[IllegalArgumentException] {
       GraphAnn.deleteFromMaterialized(emb.where(col("vec_id") === 128),
-        emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, del)
+        "vec_id", "embedding", 64, GraphAnn.DefaultDegree, del)
     }
   }
 
@@ -1413,7 +1465,7 @@ class GraphAnnSpec extends SparkTestBase {
     val p = java.nio.file.Files.createTempDirectory("graph_del_tiny").toString
     GraphAnn.materialize(tiny, "vec_id", "embedding", 64, 2, p)
     GraphAnn.deleteFromMaterialized(tiny.where(col("vec_id") === 1),
-      tiny, "vec_id", "embedding", 64, 2, p)
+      "vec_id", "embedding", 64, 2, p)
     val red = java.nio.file.Files.createTempDirectory("graph_red_tiny").toString
     GraphAnn.materialize(tiny.where(col("vec_id") =!= 1),
       "vec_id", "embedding", 64, 2, red)
@@ -1441,7 +1493,7 @@ class GraphAnnSpec extends SparkTestBase {
       "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half,
       superStride = 128)
     GraphAnn.appendToMaterialized(emb.where(pmod(col("vec_id"), lit(2)) === 1),
-      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half,
+      "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half,
       superStride = 128)
     GraphAnn.materialize(emb, "vec_id", "embedding", 64,
       GraphAnn.DefaultDegree, full, superStride = 128)
@@ -1468,7 +1520,7 @@ class GraphAnnSpec extends SparkTestBase {
     // artifact equals a reduced-corpus tiered build (same frozen-geometry
     // replay, survivors-only bucket recompute)
     GraphAnn.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(4)) === 3),
-      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half,
+      "vec_id", "embedding", 64, GraphAnn.DefaultDegree, half,
       superStride = 128)
     val redT = java.nio.file.Files.createTempDirectory("graph_tred").toString
     GraphAnn.materialize(emb.where(pmod(col("vec_id"), lit(4)) =!= 3),
@@ -1554,7 +1606,7 @@ class GraphAnnSpec extends SparkTestBase {
     GraphAnn.materialize(emb.where(pmod(col("vec_id"), lit(2)) === 0),
       "vec_id", "embedding", 64, GraphAnn.DefaultDegree, appended)
     GraphAnn.appendToMaterialized(emb.where(pmod(col("vec_id"), lit(2)) === 1),
-      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, appended)
+      "vec_id", "embedding", 64, GraphAnn.DefaultDegree, appended)
     assertStoreProbes("appended", emb, "vec_id", "embedding",
       GraphAnn.fromMaterialized(spark, appended, 64, GraphAnn.DefaultDegree),
       GraphAnn.buildEdges(emb, "vec_id", "embedding", 64), qs, 64)
@@ -1563,7 +1615,7 @@ class GraphAnnSpec extends SparkTestBase {
     GraphAnn.materialize(emb, "vec_id", "embedding", 64,
       GraphAnn.DefaultDegree, deleted)
     GraphAnn.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(4)) === 3),
-      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, deleted)
+      "vec_id", "embedding", 64, GraphAnn.DefaultDegree, deleted)
     val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
     assertStoreProbes("deleted", reduced, "vec_id", "embedding",
       GraphAnn.fromMaterialized(spark, deleted, 64, GraphAnn.DefaultDegree),
@@ -1576,7 +1628,7 @@ class GraphAnnSpec extends SparkTestBase {
     GraphAnn.materialize(emb, "vec_id", "embedding", 64,
       GraphAnn.DefaultDegree, drained)
     GraphAnn.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(64)) =!= 0),
-      emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, drained)
+      "vec_id", "embedding", 64, GraphAnn.DefaultDegree, drained)
     assert(graft.ops.IndexFiles.listSubdirs(spark, s"$drained/edges",
       "__bucket=").isEmpty)
     assertStoreProbes("drained", centroids, "vec_id", "embedding",

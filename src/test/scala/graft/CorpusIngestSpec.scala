@@ -338,7 +338,7 @@ class CorpusIngestSpec extends SparkTestBase {
     val sdf = stream.toDF().toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
     val epochs = mutable.Buffer[(Long, Seq[String])]()
-    val q = graft.streaming.CorpusIngest.annIngest(sdf, emb, "vec_id",
+    val q = graft.streaming.CorpusIngest.annIngest(sdf, "vec_id",
       "embedding", 64, annPath, Some(pqPath)) { (id, stores) =>
       epochs.synchronized { epochs += ((id, stores)) }
     }
@@ -421,7 +421,7 @@ class CorpusIngestSpec extends SparkTestBase {
     val stream = MemoryStream[(Long, Seq[Float])](sp)
     val sdf = stream.toDF().toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val q = graft.streaming.CorpusIngest.annIngest(sdf, emb, "vec_id",
+    val q = graft.streaming.CorpusIngest.annIngest(sdf, "vec_id",
       "embedding", 64, annPath, pqPath = None,
       compactEvery = 2, maxFilesPerBucket = 1)()
     slices.foreach { s => stream.addData(s.toSeq); q.processAllAvailable() }
@@ -468,7 +468,7 @@ class CorpusIngestSpec extends SparkTestBase {
     val stream = MemoryStream[(Long, Seq[Float])](sp)
     val sdf = stream.toDF().toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val q = graft.streaming.CorpusIngest.annIngest(sdf, emb, "vec_id",
+    val q = graft.streaming.CorpusIngest.annIngest(sdf, "vec_id",
       "embedding", 64, annPath, Some(compPath))()
     stream.addData(odd.toSeq); q.processAllAvailable(); q.stop()
     // the streamed IVF-PQ store equals a full-corpus build (partitioned
@@ -504,7 +504,7 @@ class CorpusIngestSpec extends SparkTestBase {
     val sdf = stream.toDF().toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
     val seen = mutable.Buffer[(Long, Boolean)]()
-    val q = graft.streaming.CorpusIngest.graphIngest(sdf, emb, "vec_id",
+    val q = graft.streaming.CorpusIngest.graphIngest(sdf, "vec_id",
       "embedding", 64, GraphAnn.DefaultDegree, path,
       compactEvery = 1, maxFilesPerBucket = 4) { (id, absorbed) =>
       seen.synchronized { seen += ((id, absorbed)) }
@@ -526,7 +526,7 @@ class CorpusIngestSpec extends SparkTestBase {
     // query over the same un-checkpointed MemoryStream re-delivers both
     // batches as epochs 0 and 1 — both at-or-below the stored marker
     val before = sp.read.parquet(s"$path/assign").count()
-    val q2 = graft.streaming.CorpusIngest.graphIngest(sdf, emb, "vec_id",
+    val q2 = graft.streaming.CorpusIngest.graphIngest(sdf, "vec_id",
       "embedding", 64, GraphAnn.DefaultDegree, path)()
     q2.processAllAvailable(); q2.stop()
     assert(sp.read.parquet(s"$path/assign").count() == before)
@@ -566,11 +566,11 @@ class CorpusIngestSpec extends SparkTestBase {
       try { stream.addData(del); q.processAllAvailable() } finally q.stop()
     }
     runTakedown(sdf => graft.streaming.CorpusIngest.annDeletes(
-      sdf, emb, "vec_id", "embedding", 64, annA, Some(pqFlat))())
+      sdf, "vec_id", "embedding", 64, annA, Some(pqFlat))())
     runTakedown(sdf => graft.streaming.CorpusIngest.annDeletes(
-      sdf, emb, "vec_id", "embedding", 64, annB, Some(ivfComp))())
+      sdf, "vec_id", "embedding", 64, annB, Some(ivfComp))())
     runTakedown(sdf => graft.streaming.CorpusIngest.graphDeletes(
-      sdf, emb, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, graphPath)())
+      sdf, "vec_id", "embedding", 64, GraphAnn.DefaultDegree, graphPath)())
 
     // every tier equals its reduced-corpus rebuild
     val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
@@ -617,7 +617,7 @@ class CorpusIngestSpec extends SparkTestBase {
     val sidecarBefore = sp.read.parquet(s"$pqFlat/tombstones").count()
     val annBefore = sp.read.parquet(annA).count()
     runTakedown(sdf => graft.streaming.CorpusIngest.annDeletes(
-      sdf, emb, "vec_id", "embedding", 64, annA, Some(pqFlat))())
+      sdf, "vec_id", "embedding", 64, annA, Some(pqFlat))())
     assert(sp.read.parquet(s"$pqFlat/tombstones").count() == sidecarBefore,
       "replayed takedown epoch re-appended tombstones")
     assert(sp.read.parquet(annA).count() == annBefore,

@@ -72,11 +72,10 @@ class IndexDurabilitySpec extends SparkTestBase {
       emb.where(pmod(col("vec_id"), lit(2)) === 0), "vec_id", "embedding", 64, ivf)
     (0 until 3).foreach { b =>
       AnnIndex.appendToMaterialized(
-        emb.where(pmod(col("vec_id"), lit(6)) === 2 * b + 1), emb,
-        "vec_id", "embedding", 64, ivf)
+        emb.where(pmod(col("vec_id"), lit(6)) === 2 * b + 1), "vec_id", "embedding", 64, ivf)
     }
     AnnIndex.deleteFromMaterialized(
-      emb.where(col("vec_id") === 3), emb, "vec_id", "embedding", 64, ivf)
+      emb.where(col("vec_id") === 3), "vec_id", "embedding", 64, ivf)
     AnnIndex.compactBuckets(spark, ivf, maxFilesPerBucket = 1)
     val got = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, ivf)
       .probeTopK(qvec(7), 10, nprobe = 4)
@@ -87,7 +86,7 @@ class IndexDurabilitySpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSeq
     assert(got == want, "file:-scheme IVF store diverged from batch build")
 
-    // graph tier: spec marker (readSpec), manifest writes and the shared
+    // graph tier: the assign/ store header, manifest writes and the shared
     // compactTable listing all resolve through the scheme
     val g = fsPath("graft_fs_graph")
     GraphAnn.materialize(
@@ -95,11 +94,10 @@ class IndexDurabilitySpec extends SparkTestBase {
       stride = 64, degree = 4, g)
     (0 until 3).foreach { b =>
       GraphAnn.appendToMaterialized(
-        emb.where(pmod(col("vec_id"), lit(6)) === 2 * b + 1), emb,
-        "vec_id", "embedding", 64, 4, g)
+        emb.where(pmod(col("vec_id"), lit(6)) === 2 * b + 1), "vec_id", "embedding", 64, 4, g)
     }
     GraphAnn.deleteFromMaterialized(
-      emb.where(col("vec_id") === 5), emb, "vec_id", "embedding", 64, 4, g)
+      emb.where(col("vec_id") === 5), "vec_id", "embedding", 64, 4, g)
     GraphAnn.compact(spark, g, maxFilesPerBucket = 1)
     val gGot = GraphAnn.fromMaterialized(spark, g, 64, 4)
     val gWant = GraphAnn.buildEdges(
@@ -181,7 +179,7 @@ class IndexDurabilitySpec extends SparkTestBase {
     GraphAnn.materialize(evens, "vec_id", "embedding", 64,
       GraphAnn.DefaultDegree, path)
     val nonCentroidEvens = evens.where(pmod(col("vec_id"), lit(64)) =!= 0)
-    GraphAnn.deleteFromMaterialized(nonCentroidEvens, emb,
+    GraphAnn.deleteFromMaterialized(nonCentroidEvens,
       "vec_id", "embedding", 64, GraphAnn.DefaultDegree, path)
     // drained: no member-edge buckets remain on disk
     assert(IndexFiles.listSubdirs(spark, s"$path/edges", "__bucket=").isEmpty,
@@ -192,7 +190,7 @@ class IndexDurabilitySpec extends SparkTestBase {
     assert(drained.where(col("src") =!= col("dst")).count() >= 0)
     // regrow from a fresh batch
     val odds = emb.where(pmod(col("vec_id"), lit(2)) === 1)
-    GraphAnn.appendToMaterialized(odds, emb, "vec_id", "embedding", 64,
+    GraphAnn.appendToMaterialized(odds, "vec_id", "embedding", 64,
       GraphAnn.DefaultDegree, path)
     val want = GraphAnn.buildEdges(
       emb.where(pmod(col("vec_id"), lit(64)) === 0 ||

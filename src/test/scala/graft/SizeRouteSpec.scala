@@ -153,8 +153,8 @@ class SizeRouteSpec extends SparkTestBase {
       val n = table.listFiles().filter(f => !f.getName.matches("[._].*")).map(_.length).sum
       Fixture(n.toInt, () => {
         val p = materialized()
-        AnnIndex.appendToMaterialized(frame(_ >= 30), corpus, "id", "v", 5, p)
-        AnnIndex.deleteFromMaterialized(frame(i => i % 5 == 3), corpus, "id", "v", 5, p)
+        AnnIndex.appendToMaterialized(frame(_ >= 30), "id", "v", 5, p)
+        AnnIndex.deleteFromMaterialized(frame(i => i % 5 == 3), "id", "v", 5, p)
         val idx = AnnIndex.fromMaterialized(corpus, "id", "v", 5, p)
         val stored = sp.read.parquet(p).select(col("id"), col("__centroid").cast("long"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -177,7 +177,7 @@ class SizeRouteSpec extends SparkTestBase {
         val p = graft.util.TempDirs.create("route_delete")
         AnnIndex.materialize(corpus, "id", "v", 5, p)
         val (_, jobs) = JobCount(sp.sparkContext)(AnnIndex.deleteFromMaterialized(
-          corpus.where(col("id").isin(gone: _*)), corpus, "id", "v", 5, p))
+          corpus.where(col("id").isin(gone: _*)), "id", "v", 5, p))
         Run(sp.read.parquet(p).select(col("id"), col("__centroid").cast("long"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet, jobs)
       })

@@ -98,10 +98,10 @@ class StreamedPartitionSpec extends SparkTestBase {
     }
     epoch(emb.where(pmod(col("vec_id"), lit(2)) === 1))(sdf =>
       graft.streaming.CorpusIngest.annIngest(
-        sdf, emb, "vec_id", "embedding", 64, p)())
+        sdf, "vec_id", "embedding", 64, p)())
     epoch(emb.where(pmod(col("vec_id"), lit(4)) === 3))(sdf =>
       graft.streaming.CorpusIngest.annDeletes(
-        sdf, emb, "vec_id", "embedding", 64, p)())
+        sdf, "vec_id", "embedding", 64, p)())
     val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
     val qvec = emb.where(col("vec_id") === 1).select(col("embedding"))
       .head().getSeq[Float](0).map(_.toDouble).toArray

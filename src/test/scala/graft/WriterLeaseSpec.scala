@@ -50,7 +50,6 @@ class WriterLeaseSpec extends SparkTestBase {
       "op=spec-foreign jvm=elsewhere\n")
     val e1 = intercept[IllegalStateException] {
       AnnIndex.appendToMaterialized(batch,
-        all.where(pmod(col("vec_id"), lit(4)) =!= 1),
         "vec_id", "embedding", 64, ivf)
     }
     assert(e1.getMessage.contains("writer lease"))
@@ -60,7 +59,6 @@ class WriterLeaseSpec extends SparkTestBase {
     IndexFiles.breakWriterLease(s, ivf)
     // recovered: the mutation now runs, and the lock is gone afterwards
     AnnIndex.appendToMaterialized(batch,
-      all.where(pmod(col("vec_id"), lit(4)) =!= 1),
       "vec_id", "embedding", 64, ivf)
     assert(IndexFiles.writerLeaseHolder(s, ivf).isEmpty)
 
@@ -85,7 +83,6 @@ class WriterLeaseSpec extends SparkTestBase {
     IndexFiles.writeString(s, g + "/" + IndexFiles.LockName, "op=x\n")
     intercept[IllegalStateException] {
       GraphAnn.appendToMaterialized(batch,
-        all.where(pmod(col("vec_id"), lit(4)) =!= 1),
         "vec_id", "embedding", 64, 4, g)
     }
     intercept[IllegalStateException] { GraphAnn.compact(s, g) }

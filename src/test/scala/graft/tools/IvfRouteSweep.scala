@@ -102,7 +102,7 @@ object IvfRouteSweep {
         for ((route, bound) <- order) SizeRoute.withBounds(SizeRoute.IvfCentroidBytes -> bound) {
           val batch = vectors(spark, next until next + 40, dim, next).localCheckpoint()
           next += 40
-          val (_, ms, jobs) = timed(AnnIndex.appendToMaterialized(batch, corpus, "id",
+          val (_, ms, jobs) = timed(AnnIndex.appendToMaterialized(batch, "id",
             "embedding", 1, path))
           if (rep > 0) appends :+= ((route, ms, jobs))
         }
@@ -133,7 +133,7 @@ object IvfRouteSweep {
           val gone = live.slice(used, used + size)
           used += size
           val batch = corpus.where(col("id").isin(gone: _*)).localCheckpoint()
-          val (_, ms, jobs) = timed(AnnIndex.deleteFromMaterialized(batch, corpus, "id",
+          val (_, ms, jobs) = timed(AnnIndex.deleteFromMaterialized(batch, "id",
             "embedding", stride, path))
           if (rep > 0) rows :+= ((route, ms, jobs))
         }

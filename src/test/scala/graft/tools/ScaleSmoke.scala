@@ -867,14 +867,14 @@ object ScaleSmoke {
           "vec_id", "embedding", 64, inc)
         timed("ann_inc_half", k, nVec) {
           graft.ops.AnnIndex.appendToMaterialized(narrow.where(pmod(col("vec_id"), lit(2)) === 1),
-            narrow, "vec_id", "embedding", 64, inc)
+            "vec_id", "embedding", 64, inc)
           spark.read.parquet(inc).count()
         }
         val del = graft.util.TempDirs.create(s"scale_ann_del_$k")
         graft.ops.AnnIndex.materialize(narrow, "vec_id", "embedding", 64, del)
         timed("ann_del_qtr", k, nVec) {
           graft.ops.AnnIndex.deleteFromMaterialized(narrow.where(pmod(col("vec_id"), lit(4)) === 3),
-            narrow, "vec_id", "embedding", 64, del)
+            "vec_id", "embedding", 64, del)
           spark.read.parquet(del).count()
         }
       }
@@ -945,8 +945,8 @@ object ScaleSmoke {
         val batch = emb.where(pmod(col("vec_id"), lit(389)) === 7).limit(200)
           .select((lit(900000001L) + col("vec_id") * lit(64)).as("vec_id"),
             col("embedding"))
-        graft.ops.GraphAnn.appendToMaterialized(batch, emb,
-          "vec_id", "embedding", 64, graft.ops.GraphAnn.DefaultDegree, gpath)
+        graft.ops.GraphAnn.appendToMaterialized(batch, "vec_id", "embedding", 64,
+          graft.ops.GraphAnn.DefaultDegree, gpath)
         200L
       }
       // incremental graph DELETE: a FIXED 200-vector batch removed from
@@ -959,8 +959,8 @@ object ScaleSmoke {
       timed("graph_delete", k, nVec) {
         val batch = emb.where(pmod(col("vec_id"), lit(389)) === 11)
           .where(pmod(col("vec_id"), lit(64)) =!= 0).limit(200)
-        graft.ops.GraphAnn.deleteFromMaterialized(batch, emb,
-          "vec_id", "embedding", 64, graft.ops.GraphAnn.DefaultDegree, gpath)
+        graft.ops.GraphAnn.deleteFromMaterialized(batch, "vec_id", "embedding", 64,
+          graft.ops.GraphAnn.DefaultDegree, gpath)
         200L
       }
       // flat-PQ tombstone DELETE: a FIXED 200-id batch tombstoned against
