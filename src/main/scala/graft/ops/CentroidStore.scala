@@ -146,14 +146,19 @@ private[graft] object CentroidStore {
 
     lazy val centroids: Centroids = load()
 
-    /** Every bucket (a full listing when executed). */
-    def all: DataFrame = spark.read.schema(schema).parquet(path)
+    /** The id column: the stored schema's first. */
+    def idCol: String = schema.head.name
 
-    /** The named buckets, listed from the manifest and read with the
-      * stored schema: no schema inference, no listing job.
+    /** Every live row (a full listing when executed), pending writes
+      * included ([[IndexManifests.readLive]]).
+      */
+    def all: DataFrame = IndexManifests.readLive(spark, path, "__centroid", idCol, None, Some(schema))
+
+    /** The live rows of the named buckets, listed from the manifest and
+      * read with the stored schema: no schema inference, no listing job.
       */
     def buckets(ids: Seq[Long]): DataFrame =
-      IndexManifests.readBuckets(spark, path, "__centroid", ids, Some(schema))
+      IndexManifests.readLive(spark, path, "__centroid", idCol, Some(ids), Some(schema))
   }
 
   /** A store's self-description lives in `_graft_ivf/` (the `_` hides it
@@ -192,6 +197,19 @@ private[graft] object CentroidStore {
         when(parts(1) =!= "null", split(parts(1), ",").cast(ArrayType(elem))).as("__cvec"))
     }
 
+    /** The geometry and bucket schema a store's header names. */
+    def header(spark: SparkSession, path: String): (Seq[(String, Int)], StructType) = {
+      val dir = s"$path/$Dir"
+      val lines = IndexFiles.readStringOpt(spark, s"$dir/header").getOrElse(
+        throw new IllegalArgumentException(s"no centroid table at $dir: the store was " +
+          "written before stores carried their centroids — re-materialize it"))
+        .split("\n").toSeq
+      require(lines.headOption.contains("# graft-ivf 1"), s"$dir/header is not a store header")
+      val (schemaLine, geo) = lines.tail.partition(_.startsWith("# schema "))
+      (geo.map(_.stripPrefix("# ").split(" ") match { case Array(k, n) => k -> n.toInt }),
+        DataType.fromJson(schemaLine.head.stripPrefix("# schema ")).asInstanceOf[StructType])
+    }
+
     /** Read the header and check its geometry against `geometry`; the
       * centroid table is held when within the bound: parsed from a local
       * relation, so collected with no job.
@@ -199,17 +217,10 @@ private[graft] object CentroidStore {
     def open(spark: SparkSession, path: String, vecCol: String,
         geometry: Seq[(String, Int)], verb: String): Store = {
       val dir = s"$path/$Dir"
-      val header = IndexFiles.readStringOpt(spark, s"$dir/header").getOrElse(
-        throw new IllegalArgumentException(s"no centroid table at $dir: the store was " +
-          "written before stores carried their centroids — re-materialize it"))
-        .split("\n").toSeq
-      require(header.headOption.contains("# graft-ivf 1"), s"$dir/header is not a store header")
-      val (schemaLine, geo) = header.tail.partition(_.startsWith("# schema "))
-      val stored = geo.map(_.stripPrefix("# ").split(" ") match { case Array(k, n) => k -> n.toInt })
+      val (stored, schema) = header(spark, path)
       def named(g: Seq[(String, Int)]) = g.map { case (k, n) => s"$k $n" }.mkString(", ")
       require(stored == geometry,
         s"store at $path was materialized with ${named(stored)}, $verb with ${named(geometry)}")
-      val schema = DataType.fromJson(schemaLine.head.stripPrefix("# schema ")).asInstanceOf[StructType]
       val elem = schema(vecCol).dataType.asInstanceOf[ArrayType].elementType
       val fs = IndexFiles.fs(spark, dir)
       val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/centroids")).toSeq

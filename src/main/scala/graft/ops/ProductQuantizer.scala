@@ -512,10 +512,14 @@ object ProductQuantizer {
     // record must come from the same generation (see unfoldedTombstoneFiles)
     val codesDir = resolveCodesDir(spark, path)
     val stored = spark.read.parquet(codesDir)
-    val codes = tombstones(spark, path, codesDir) match {
-      case Some(ts) => stored.join(broadcast(ts), Seq("__id"), "left_anti")
-      case None => stored
-    }
+    val codes =
+      // the IVF-PQ layout: buckets ∪ pending delta rows − tombstones
+      if (stored.columns.contains("__centroid"))
+        IndexManifests.readLive(spark, codesDir, "__centroid", "__id", None, None)
+      else tombstones(spark, path, codesDir) match {
+        case Some(ts) => stored.join(broadcast(ts), Seq("__id"), "left_anti")
+        case None => stored
+      }
     (spec, (spark.read.parquet(s"$path/codebooks"), codes))
   }
 
@@ -624,8 +628,9 @@ object ProductQuantizer {
     * the companion IVF store at `ivfPath` ([[AnnIndex.storedAssignment]] —
     * the rule `AnnIndex.materialize` files rows by, so the code table and
     * the float store stay bucket-consistent by construction). Only the
-    * batch's rows write ([[IndexManifests.appendBuckets]]: one file per
-    * touched bucket directory, manifest refreshed).
+    * batch's rows write, through the IVF store's batch-sized path
+    * ([[IndexManifests.appendRows]]: one delta file, or the bucket
+    * directories past [[SizeRoute.PendingRows]]).
     */
   def appendToIvfPq(batch: DataFrame, idCol: String, vecCol: String,
       ivfPath: String, stride: Int, path: String,
@@ -644,10 +649,11 @@ object ProductQuantizer {
     require(batch.where(pmod(col(idCol), lit(stride)) === 0).isEmpty,
       s"batch contains IVF centroid-level ids ($idCol divisible by " +
         s"$stride) — re-materialize instead")
-    IndexManifests.appendBuckets(encode(batch, idCol, vecCol, cb, spec)
-      .join(AnnIndex.storedAssignment(batch, idCol, vecCol, stride, ivfPath)
-        .select(col(idCol).cast("long").as("__id"), col("__centroid")), Seq("__id")),
-      s"$path/codes", "__centroid")
+    IndexManifests.appendRows(batch, idCol, s"$path/codes", "__centroid", "__id", None) { b =>
+      encode(b, idCol, vecCol, cb, spec)
+        .join(AnnIndex.storedAssignment(b, idCol, vecCol, stride, ivfPath)
+          .select(col(idCol).cast("long").as("__id"), col("__centroid")), Seq("__id"))
+    }
   }
 
   /** Batch DELETE from a [[materialize]]d or [[materializeIvfPq]]'d index —
@@ -662,9 +668,10 @@ object ProductQuantizer {
     * caller passes the deleted rows' IVF `assignment` (any
     * `(idCol, __centroid)` frame covering the batch — e.g. the companion
     * index read back BEFORE its own delete; prefer [[deleteFromIvfPq]],
-    * which replays the assignment rule instead of trusting a frame) and
-    * only the touched bucket partitions rewrite (partition-pruned read +
-    * dynamic overwrite + an explicit drop of emptied directories). The
+    * which replays the assignment rule instead of trusting a frame), and
+    * the deleted `(id, bucket)` pairs become tombstones in the code
+    * table's manifest, folded into the touched buckets later or past
+    * [[SizeRoute.PendingRows]] ([[IndexManifests.deleteRows]]). The
     * assignment must COVER every deleted id — validated, because the
     * documented footgun (the companion index read back AFTER its own
     * delete) no longer contains the ids and would silently turn the
@@ -761,18 +768,21 @@ object ProductQuantizer {
     */
   /** Layout-routed compaction — the one maintenance entrypoint streaming
     * loops call without knowing the store's shape: the bucket-partitioned
-    * IVF-PQ code table compacts per over-fragmented bucket via the shared
-    * [[IndexManifests.compactTable]] (dynamic partition overwrite, in
-    * place), the flat table via [[compactCodes]] (generation swap).
-    * `maxFiles` is per bucket for the former, table-total for the latter.
+    * IVF-PQ code table folds its pending appends and deletes
+    * ([[IndexManifests.fold]]) and compacts per over-fragmented bucket via
+    * the shared [[IndexManifests.compactTable]] (dynamic partition
+    * overwrite, in place), the flat table via [[compactCodes]] (generation
+    * swap). `maxFiles` is per bucket for the former, table-total for the
+    * latter. True when anything was rewritten.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       maxFiles: Int = 16, targetBytes: Long = 128L << 20): Boolean =
     IndexFiles.withWriterLease(spark, path, "pq-compact") {
-      if (layoutIsIvfPq(spark, path))
+      if (layoutIsIvfPq(spark, path)) {
+        val folded = IndexManifests.fold(spark, s"$path/codes", "__centroid", "__id", None)
         IndexManifests.compactTable(spark, s"$path/codes", "__centroid",
-          maxFiles, targetBytes).nonEmpty
-      else compactCodes(spark, path, maxFiles, targetBytes)
+          maxFiles, targetBytes).nonEmpty || folded
+      } else compactCodes(spark, path, maxFiles, targetBytes)
     }
 
   def compactCodes(spark: org.apache.spark.sql.SparkSession, path: String,

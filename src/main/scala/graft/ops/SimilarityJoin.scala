@@ -658,10 +658,10 @@ object AnnIndex {
     * self-description is written first ([[Store]]: the centroid table,
     * written by Spark, and a header naming the stride and the bucket
     * schema); the store is then opened as every later open, append and
-    * delete opens it, and `df` is appended to it as one batch. Each bucket
-    * is one directory holding one file ([[IndexManifests.appendBuckets]]), so
-    * `stride` doubles as the file-granularity knob. Ids must be unique:
-    * each input row is one stored row.
+    * delete opens it, and `df` is written straight into its bucket
+    * directories, one file per bucket ([[IndexManifests.appendBuckets]]),
+    * so `stride` doubles as the file-granularity knob; a fresh store has
+    * nothing pending. Ids must be unique: each input row is one stored row.
     */
   def materialize(df: DataFrame, idCol: String, vecCol: String,
       stride: Int, path: String): Unit = {
@@ -674,7 +674,7 @@ object AnnIndex {
     // fail before any bucket is written: a store of NULL buckets
     if (s.bytes == 0) IndexFiles.deleteRecursive(spark, path)
     require(s.bytes > 0, s"no centroids: no $idCol divisible by stride $stride")
-    append(s, df, idCol, vecCol, path)
+    IndexManifests.appendBuckets(assignedTo(df, idCol, vecCol, s.centroids), path, "__centroid")
   }
 
   /** Open a [[materialize]]d index from its path: the store's header and
@@ -691,35 +691,37 @@ object AnnIndex {
   }
 
   /** Append a NEW vector batch to a [[materialize]]d index: the batch is
-    * assigned against the store's centroid table and appended to the
-    * affected bucket directories, one file each
-    * ([[IndexManifests.appendBuckets]]). The assigned corpus is never
-    * re-read or rewritten, and probes see old + new immediately. Appended
-    * vectors never become centroids (the standard IVF contract);
-    * re-materialize to re-balance after heavy growth.
+    * assigned against the store's centroid table and, when it fits the
+    * [[SizeRoute.PendingRows]] bound beside what is pending, written as one
+    * delta file that the manifest lists; no bucket directory is read or
+    * written ([[IndexManifests.appendRows]]). A re-inserted deleted id
+    * folds the pending writes first, and a larger batch is appended to its
+    * bucket directories. Probes see old + new immediately. Appended vectors
+    * never become centroids (the standard IVF contract); re-materialize to
+    * re-balance after heavy growth.
     */
   def appendToMaterialized(batch: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): Unit =
       IndexFiles.withWriterLease(batch.sparkSession, path, "ann-append") {
-    append(open(batch.sparkSession, path, vecCol, stride, "appending"),
-      batch, idCol, vecCol, path)
+    val s = open(batch.sparkSession, path, vecCol, stride, "appending")
+    IndexManifests.appendRows(batch.select(col(idCol), col(vecCol)), idCol, path, "__centroid",
+      idCol, Some(s.schema))(assignedTo(_, idCol, vecCol, s.centroids))
   }
-
-  private def append(s: Store, batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit =
-    IndexManifests.appendBuckets(assignedTo(batch, idCol, vecCol, s.centroids), path, "__centroid")
 
   /** Batch DELETE from a [[materialize]]d index — the removal half of the
     * maintenance trio (append grows, compact re-files, this removes;
     * takedowns and dedup removals otherwise force a re-materialize).
     * EXACT, and trivially so for IVF: the index stores only assigned rows,
-    * so deletion = rewriting the touched bucket partitions without the
-    * deleted ids — row-identical to materializing over the reduced corpus.
-    * The batch's buckets are recovered by REPLAYING the assignment against
-    * the stored centroid table, and [[IndexManifests.deleteRows]] rewrites
-    * only the touched buckets. Deleting centroid-level ids is refused: it
-    * changes bucket geometry — re-materialize instead. Single-writer, like
-    * every materialized-index mutation.
+    * so a delete removes the deleted ids' rows and nothing else —
+    * row-identical to materializing over the reduced corpus. The batch's
+    * buckets are recovered by REPLAYING the assignment against the stored
+    * centroid table in the one job that collects the `(id, bucket)` pairs;
+    * [[IndexManifests.deleteRows]] records them as tombstones that every
+    * read filters and the next fold applies, or, past
+    * [[SizeRoute.PendingRows]], folds them into the touched buckets at
+    * once. Deleting centroid-level ids is refused: it changes bucket
+    * geometry — re-materialize instead. Single-writer, like every
+    * materialized-index mutation.
     */
   def deleteFromMaterialized(batch: DataFrame, idCol: String,
       vecCol: String, stride: Int, path: String): Unit =
@@ -733,12 +735,13 @@ object AnnIndex {
         "deleting centroids changes the bucket geometry — re-materialize instead")
   }
 
-  /** Compact a [[materialize]]d index's over-fragmented buckets — the
-    * maintenance half of [[appendToMaterialized]], which grows each
-    * affected bucket directory by one file per ingest batch forever
-    * (the small-files risk SCALING.md flags: at 100 TB a hot bucket
-    * appended every 5 minutes is ~300 files/day, and probe-time scan
-    * planning degrades with file count, not data size).
+  /** Fold a [[materialize]]d index's pending appends and deletes into its
+    * buckets ([[IndexManifests.fold]]), then compact its over-fragmented
+    * buckets — the maintenance half of [[appendToMaterialized]], whose
+    * folds and large batches grow each affected bucket directory by one
+    * file forever (the small-files risk SCALING.md flags: at 100 TB a hot
+    * bucket appended every 5 minutes is ~300 files/day, and probe-time
+    * scan planning degrades with file count, not data size).
     *
     * Buckets whose parquet file count exceeds `maxFilesPerBucket` are
     * rewritten into ~`targetBytes` files; everything else keeps its
@@ -760,6 +763,8 @@ object AnnIndex {
   def compactBuckets(spark: SparkSession, path: String,
       maxFilesPerBucket: Int = 8, targetBytes: Long = 128L << 20): Seq[Long] =
     IndexFiles.withWriterLease(spark, path, "ann-compact") {
+      val schema = Store.header(spark, path)._2
+      IndexManifests.fold(spark, path, "__centroid", schema.head.name, Some(schema))
       IndexManifests.compactTable(spark, path, "__centroid",
         maxFilesPerBucket, targetBytes)
     }

@@ -100,22 +100,42 @@ private[graft] object SizeRoute {
 
   /** Deleted ids up to which a bucket-table delete
     * ([[IndexManifests.deleteRows]]: the IVF store and the IVF-PQ code
-    * table) collects its `(id, bucket)` pairs in the job that pins them and
-    * filters the touched buckets by the ids as one sorted array in the plan;
-    * above it, the touched buckets come from the pin in a job of their own
-    * and the rewrite anti-joins the pin. The driver route ran as fast or
-    * faster at every measured size (`graft.tools.IvfRouteSweep deletes`,
-    * `plans/r24/ivf_store_ab.md` §7: 100 to 8,000 ids against 64,000 and
-    * 96,000 64-dim vectors, where rewriting the touched buckets dominates
-    * both), so the bound is a memory bound: 65,536 pairs are about 5 MB of
-    * collected rows on the driver and a 512 KB id array in each rewrite
-    * task.
+    * table) collects its `(id, bucket)` pairs in the job that pins them;
+    * they then become tombstones ([[PendingRows]]), or fold into the
+    * touched buckets as one sorted id array in the plan. Above it, the
+    * touched buckets come from the pin in a job of their own and the
+    * rewrite anti-joins the pin. The driver route ran as fast or faster at
+    * every measured size when both rewrote buckets
+    * (`graft.tools.IvfRouteSweep deletes`, `plans/r24/ivf_store_ab.md` §7:
+    * 100 to 8,000 ids against 64,000 and 96,000 64-dim vectors), so the
+    * bound is a memory bound: 65,536 pairs are about 5 MB of collected rows
+    * on the driver and a 512 KB id array in each rewrite task.
     */
   val DeleteIds = Bound("delete-ids", 1 << 16)
 
+  /** Pending delta rows plus tombstones up to which a bucket table (the
+    * IVF store and the IVF-PQ code table) keeps a batch's writes in its
+    * manifest ([[IndexManifests.appendRows]], [[IndexManifests.deleteRows]]):
+    * an append is then one delta file and a delete a manifest publish, and
+    * every read adds the delta files of its buckets and filters the
+    * tombstoned ids. Past it, the pending writes fold into the buckets
+    * ([[IndexManifests.fold]]); the number of delta files is capped apart
+    * from it, by Spark's parallel-listing threshold. The bound is set from
+    * a sweep on 64,000 64-dim vectors in 500 buckets
+    * (`graft.tools.IvfRouteSweep pending`, `plans/r26/ivf_delta_ab.md` §2):
+    * a fresh open plus probe stayed one job and went 145 → 167 → 208 ms at
+    * 278, 1,073 and 3,180 pending rows (6, 22 and 64 delta files of
+    * ingest-sized epochs), then 390 ms and two jobs at 6,360 (128 files);
+    * a fold took 4.7 s for 1,000 appended rows and 500 tombstones and
+    * 6.1 s for 4,000 and 2,000, so the larger bound folds four times the
+    * writes for 1.3× the wall. A delete of 1,000 ids is then one tombstone
+    * publish.
+    */
+  val PendingRows = Bound("pending-rows", 4096)
+
   val Registry: Seq[Bound] =
     Seq(GraphLabelEdges, PageRankRows, EmbedAllPairsRows, BpeWords,
-      GraphProbeQueries, IngestBatchBytes, IvfCentroidBytes, DeleteIds)
+      GraphProbeQueries, IngestBatchBytes, IvfCentroidBytes, DeleteIds, PendingRows)
 
   private val forced = new DynamicVariable(Map.empty[Bound, Int])
 

@@ -364,8 +364,8 @@ object CorpusIngest {
 
   /** One vector micro-batch into the materialized ANN stores: append to
     * the IVF index at `annPath` ([[AnnIndex.appendToMaterialized]] — the
-    * batch assigns against the centroid table that store holds, only
-    * affected bucket directories grow) and, when present, encode against
+    * batch assigns against the centroid table that store holds and lands
+    * as one delta file its manifest lists) and, when present, encode against
     * the STORED codebooks into the PQ codes at `pqPath`
     * ([[ProductQuantizer.appendToMaterialized]]). Pure batch function;
     * epoch-guarded per store so a replayed epoch cannot double-append.
@@ -414,12 +414,15 @@ object CorpusIngest {
     * vectors never become centroids (the standard IVF contract;
     * re-materialize to re-balance after heavy growth).
     *
-    * `compactEvery > 0` folds the small-files maintenance into the loop:
-    * after every `compactEvery`-th absorbed epoch,
-    * [[AnnIndex.compactBuckets]] rewrites the buckets the appends
-    * fragmented past `maxFilesPerBucket` (a no-op listing otherwise).
-    * Running it inside foreachBatch keeps the single-writer contract —
-    * compaction and appends never race, with no external scheduler.
+    * `compactEvery > 0` folds the maintenance into the loop: after every
+    * `compactEvery`-th absorbed epoch, [[AnnIndex.compactBuckets]] folds
+    * the delta files and tombstones the epochs left pending into the
+    * buckets, then rewrites the buckets fragmented past
+    * `maxFilesPerBucket` (a manifest read and a listing when there is
+    * nothing to do). Without it the stores fold on their own once
+    * [[graft.ops.SizeRoute.PendingRows]] is passed. Running it inside
+    * foreachBatch keeps the single-writer contract — compaction and
+    * appends never race, with no external scheduler.
     */
   def annIngest(newVectors: DataFrame, idCol: String,
       vecCol: String, stride: Int, annPath: String,
@@ -460,9 +463,9 @@ object CorpusIngest {
     * delete twin of [[appendVectorEpoch]]: the batch's rows (ids AND
     * vectors — the assignment is REPLAYED against the centroid table the
     * IVF store holds, never trusted from a caller frame) leave the IVF
-    * index at `annPath` ([[AnnIndex.deleteFromMaterialized]] — touched
-    * bucket partitions only) and, when present, the PQ store at `pqPath`
-    * (layout-routed: bucket-pruned rewrite for IVF-PQ, tombstone sidecar
+    * index at `annPath` ([[AnnIndex.deleteFromMaterialized]] — tombstones
+    * in the store's manifest) and, when present, the PQ store at `pqPath`
+    * (layout-routed: manifest tombstones for IVF-PQ, the tombstone sidecar
     * for flat). Pure batch function; epoch-guarded per store so a replayed
     * epoch is a no-op. Returns the stores that actually absorbed this
     * epoch. `base` is unread, as in [[appendVectorEpoch]], and stays in

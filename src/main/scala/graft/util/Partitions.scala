@@ -28,6 +28,10 @@ object Partitions {
     // unconditional repartition would shuffle every micro-batch even when
     // the source already feeds all cores.
     if (df.isStreaming) return df
+    // rows already on the driver are not a file layout: a projection over
+    // them is evaluated where they are
+    if (df.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) return df
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }

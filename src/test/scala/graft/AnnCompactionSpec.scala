@@ -35,9 +35,13 @@ class AnnCompactionSpec extends SparkTestBase {
     // base = even ids; five append batches of odd ids fragment the buckets
     AnnIndex.materialize(
       emb.where(pmod(col("vec_id"), lit(2)) === 0), "vec_id", "embedding", 64, path)
-    (0 until 5).foreach { b =>
-      AnnIndex.appendToMaterialized(
-        emb.where(pmod(col("vec_id"), lit(10)) === 2 * b + 1), "vec_id", "embedding", 64, path)
+    // with no room for pending rows every append lands in its bucket
+    // directories, one file each
+    graft.ops.SizeRoute.withBounds(graft.ops.SizeRoute.PendingRows -> 0) {
+      (0 until 5).foreach { b =>
+        AnnIndex.appendToMaterialized(
+          emb.where(pmod(col("vec_id"), lit(10)) === 2 * b + 1), "vec_id", "embedding", 64, path)
+      }
     }
     val before = bucketFiles(path)
     assert(before.values.exists(_.length > 2), "fixture failed to fragment any bucket")

@@ -93,17 +93,14 @@ class AnnIndexSpec extends SparkTestBase {
     AnnIndex.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(4)) === 3),
       "vec_id", "embedding", 64, path)
     val reduced = emb.where(pmod(col("vec_id"), lit(4)) =!= 3)
-    // the stored artifact is row-identical to a reduced-corpus build:
-    // same (id, bucket) set, no deleted id survives
-    val stored = spark.read.parquet(path)
-      .select(col("vec_id"), col("__centroid").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the live store is row-identical to a reduced-corpus build: same
+    // (id, bucket) set, no deleted id survives
     val redPath = java.nio.file.Files.createTempDirectory("ann_red_test").toString
     AnnIndex.materialize(reduced, "vec_id", "embedding", 64, redPath)
     val want = spark.read.parquet(redPath)
       .select(col("vec_id"), col("__centroid").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(stored == want)
+    assert(AnnIndexSpec.liveAssignment(spark, path) == want)
     // and probes over the deleted artifact match the reduced build
     val del = AnnIndex.fromMaterialized(reduced, "vec_id", "embedding", 64, path)
     val full = AnnIndex.fromMaterialized(reduced, "vec_id", "embedding", 64, redPath)
@@ -119,8 +116,15 @@ class AnnIndexSpec extends SparkTestBase {
       AnnIndex.deleteFromMaterialized(emb.where(col("vec_id") === 128),
         "vec_id", "embedding", 64, path)
     }
+    // folded, the stored artifact itself is row-identical to the
+    // reduced-corpus build
+    AnnIndex.compactBuckets(spark, path)
+    val stored = spark.read.parquet(path)
+      .select(col("vec_id"), col("__centroid").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(stored == want)
     // the IVF store's bucket manifest tracks the directory truth through
-    // materialize + delete (IndexManifests, shared with the graph tier)
+    // materialize + delete + fold (IndexManifests, shared with the graph tier)
     val manifest = java.nio.file.Files.readString(
         java.nio.file.Paths.get(path, "_graft_buckets"))
       .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
@@ -221,20 +225,27 @@ class AnnIndexSpec extends SparkTestBase {
     val (_, append) = JobCount(spark.sparkContext) {
       AnnIndex.appendToMaterialized(app, "vec_id", "embedding", 64, path)
     }
-    assert(append <= 3, s"a 40-row append ran $append jobs")
+    assert(append <= 2, s"a 40-row append ran $append jobs")
     val del = emb.where(pmod(col("vec_id"), lit(4)) === 3).orderBy("vec_id").limit(20)
       .localCheckpoint()
     val (_, delete) = JobCount(spark.sparkContext) {
       AnnIndex.deleteFromMaterialized(del, "vec_id", "embedding", 64, path)
     }
-    assert(delete <= 5, s"a 20-row delete ran $delete jobs")
+    assert(delete <= 2, s"a 20-row delete ran $delete jobs")
+    // with both pending, a reopened and a held-open probe are still one job
+    val (_, pendingJobs) = JobCount(spark.sparkContext) {
+      AnnIndex.fromMaterialized(base, "vec_id", "embedding", 64, path).probeTopK(q, 10).collect()
+    }
+    assert(pendingJobs == 1, s"reopened-store probe with pending writes ran $pendingJobs jobs")
+    val (_, pendingHeld) = JobCount(spark.sparkContext)(held.probeTopK(q5, 10).collect())
+    assert(pendingHeld == 1, s"held-open probe with pending writes ran $pendingHeld jobs")
     // and the maintained store is the one a fresh materialize builds
     val live = emb.where(col("vec_id") < 400 || pmod(col("vec_id"), lit(2)) === 0)
       .union(app)
       .join(del.select("vec_id"), Seq("vec_id"), "left_anti")
     val fresh = tmp("ann_jobs_fresh")
     AnnIndex.materialize(live, "vec_id", "embedding", 64, fresh)
-    assert(storedAssignment(path) == storedAssignment(fresh))
+    assert(AnnIndexSpec.liveAssignment(spark, path) == storedAssignment(fresh))
   }
 
   test("above the size bounds: a store built, maintained and probed through Spark equals the held route") {
@@ -250,7 +261,7 @@ class AnnIndexSpec extends SparkTestBase {
         AnnIndex.deleteFromMaterialized(gone, "vec_id", "embedding", 32, path)
         val idx = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 32, path)
         val (_, jobs) = JobCount(spark.sparkContext)(idx.probeTopK(qs.head, 10).collect())
-        (storedAssignment(path), qs.map(probed(idx, _)), jobs)
+        (AnnIndexSpec.liveAssignment(spark, path, 32), qs.map(probed(idx, _)), jobs)
       }
     }
     val (heldRows, heldProbes, heldJobs) = run()
@@ -368,10 +379,107 @@ class AnnIndexSpec extends SparkTestBase {
       assert(running.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES)) == serial)
     } finally pool.shutdown()
   }
+
+  private def manifest(table: String): graft.ops.IndexManifests.Manifest =
+    graft.ops.IndexManifests.read(spark, table).get
+
+  test("with a delta and tombstones pending, every read path equals a store materialized over the survivors") {
+    import graft.ops.ProductQuantizer
+    val spec = ProductQuantizer.PqSpec(m = 8, dsub = 8, stride = 16)
+    val base = emb.where(col("vec_id") < 300)
+    // appended ids are neither centroids (64) nor codebook entries (16)
+    val added = emb.where(col("vec_id") >= 300 && pmod(col("vec_id"), lit(16)) =!= 0)
+    // deletes hit stored rows and rows still in the delta
+    val gone = emb.where(pmod(col("vec_id"), lit(4)) === 3 && col("vec_id") < 360)
+    val ivf = tmp("ann_pending_ivf")
+    val comp = tmp("ann_pending_pq")
+    AnnIndex.materialize(base, "vec_id", "embedding", 64, ivf)
+    ProductQuantizer.materializeIvfPq(base, "vec_id", "embedding", spark.read.parquet(ivf), spec, comp)
+    for (half <- Seq(added.where(col("vec_id") < 400), added.where(col("vec_id") >= 400))) {
+      AnnIndex.appendToMaterialized(half, "vec_id", "embedding", 64, ivf)
+      ProductQuantizer.appendToIvfPq(half, "vec_id", "embedding", ivf, 64, comp)
+    }
+    AnnIndex.deleteFromMaterialized(gone, "vec_id", "embedding", 64, ivf)
+    ProductQuantizer.deleteFromIvfPq(gone, "vec_id", "embedding", ivf, 64, comp)
+    for (t <- Seq(ivf, s"$comp/codes")) {
+      val m = manifest(t)
+      assert(m.delta.size == 2 && m.tombs.nonEmpty && !m.folding, s"$t: $m")
+    }
+    val survivors = base.union(added).join(gone.select("vec_id"), Seq("vec_id"), "left_anti")
+    val ivfFresh = tmp("ann_pending_ivf_fresh")
+    val compFresh = tmp("ann_pending_pq_fresh")
+    AnnIndex.materialize(survivors, "vec_id", "embedding", 64, ivfFresh)
+    ProductQuantizer.materializeIvfPq(survivors, "vec_id", "embedding",
+      spark.read.parquet(ivfFresh), spec, compFresh)
+    val pending = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, ivf)
+    val fresh = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, ivfFresh)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+    val qids = Seq(3L, 301L, 333L, 402L, 77L)
+    for (q <- qids.map(qvec); nprobe <- Seq(2, 8)) {
+      assert(rows(pending.probeTopK(q, 10, nprobe)) == rows(fresh.probeTopK(q, 10, nprobe)))
+      assert(rows(ProductQuantizer.probeIvfPqTopK(pending, "vec_id", "embedding", comp, q, 10, nprobe)) ==
+        rows(ProductQuantizer.probeIvfPqTopK(fresh, "vec_id", "embedding", compFresh, q, 10, nprobe)))
+    }
+    for (q <- qids.map(qvec))
+      assert(rows(pending.bruteForceTopK(q, 10)) == rows(fresh.bruteForceTopK(q, 10)))
+    val queries = emb.where(col("vec_id").isin(qids: _*))
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    assert(rows(pending.probeTopKBatch(queries, "qid", "qvec", 10)).toSet ==
+      rows(fresh.probeTopKBatch(queries, "qid", "qvec", 10)).toSet)
+    assert(rows(pending.recallAtK(queries, "qid", "qvec", 10)).toSet ==
+      rows(fresh.recallAtK(queries, "qid", "qvec", 10)).toSet)
+    assert(AnnIndexSpec.liveAssignment(spark, ivf) == storedAssignment(ivfFresh))
+    assert(ProductQuantizerSpec.liveCodes(spark, comp) == ProductQuantizerSpec.liveCodes(spark, compFresh))
+  }
+
+  test("pending edge cases: a delete from the delta, a revive, an empty delete, and a fold equal to a rebuild") {
+    val path = tmp("ann_pending_edges")
+    def live(ids: Long*) = emb.where(col("vec_id").isin(ids: _*))
+    AnnIndex.materialize(emb.where(col("vec_id") < 250), "vec_id", "embedding", 64, path)
+    val batch = emb.where(col("vec_id") >= 250 && col("vec_id") < 300 && pmod(col("vec_id"), lit(64)) =!= 0)
+    AnnIndex.appendToMaterialized(batch, "vec_id", "embedding", 64, path)
+    // an id still in the delta: its tombstone hides the delta row
+    AnnIndex.deleteFromMaterialized(live(261L), "vec_id", "embedding", 64, path)
+    assert(!AnnIndexSpec.liveAssignment(spark, path).exists(_._1 == 261L))
+    // a stored id deleted and appended again comes back exactly once: the
+    // append folds first, so the old row is gone before the new one lands
+    AnnIndex.deleteFromMaterialized(live(5L), "vec_id", "embedding", 64, path)
+    assert(manifest(path).tombs.exists(_._1 == 5L))
+    AnnIndex.appendToMaterialized(live(5L), "vec_id", "embedding", 64, path)
+    val m = manifest(path)
+    assert(m.tombs.isEmpty && m.delta.size == 1, s"the revive did not fold first: $m")
+    val s = graft.ops.CentroidStore.Store.open(spark, path, "embedding", Seq("stride" -> 64), "reading")
+    assert(s.all.where(col("vec_id") === 5).count() == 1)
+    // an empty delete batch leaves no tombstone state
+    AnnIndex.deleteFromMaterialized(emb.where(lit(false)), "vec_id", "embedding", 64, path)
+    assert(manifest(path) == m)
+    // a fold is row-identical to a rebuild, and leaves nothing pending
+    val survivors = emb.where(col("vec_id") < 300 && col("vec_id") =!= 261 &&
+      (col("vec_id") < 250 || pmod(col("vec_id"), lit(64)) =!= 0))
+    val fresh = tmp("ann_pending_edges_fresh")
+    AnnIndex.materialize(survivors, "vec_id", "embedding", 64, fresh)
+    AnnIndex.compactBuckets(spark, path)
+    assert(storedAssignment(path) == storedAssignment(fresh))
+    assert(spark.read.parquet(path).groupBy("vec_id").count().where(col("count") > 1).isEmpty)
+    assert(manifest(path).settled && !new java.io.File(path, "_graft_delta").exists)
+    // probes afterwards scan bucket directories only
+    val df = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, path).probeTopK(qvec(5), 10)
+    df.collect()
+    val roots = AnnIndexSpec.scanRoots(df)
+    assert(roots.nonEmpty && roots.forall(_.startsWith("__centroid=")), roots)
+  }
 }
 
 object AnnIndexSpec {
-  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
+  /** The live `(vec_id, bucket)` rows of the IVF store at `path`: its
+    * buckets, its pending delta rows and tombstones applied.
+    */
+  def liveAssignment(spark: SparkSession, path: String, stride: Int = 64): Set[(Long, Long)] =
+    graft.ops.CentroidStore.Store.open(spark, path, "embedding", Seq("stride" -> stride), "reading")
+      .all.select(col("vec_id"), col("__centroid").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   /** Names of the directories the file scans of `df`'s executed plan list. */
   def scanRoots(df: DataFrame): Seq[String] = {
@@ -619,9 +727,13 @@ class ProductQuantizerSpec extends SparkTestBase {
           col("__centroid").cast("long"))
         .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+    // the live code table (tombstones pending) equals the rebuild; folded,
+    // so does the stored one
+    assert(ProductQuantizerSpec.liveCodes(spark, comp) == bucketedCodesOf(compRed))
+    ProductQuantizer.compact(spark, comp)
     assert(bucketedCodesOf(comp) == bucketedCodesOf(compRed))
     // the IVF-PQ code table's bucket manifest tracks the directory truth
-    // through materializeIvfPq + delete
+    // through materializeIvfPq + delete + fold
     val manifest = java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"$comp/codes", "_graft_buckets"))
       .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
@@ -658,7 +770,7 @@ class ProductQuantizerSpec extends SparkTestBase {
       spark.read.parquet(ivfHalf), spec, comp)
     ProductQuantizer.appendToIvfPq(odds, "vec_id", "embedding",
       ivfPath = ivfHalf, stride = 64, path = comp)
-    assert(bucketedCodesOf(comp) == bucketedCodesOf(compFull),
+    assert(ProductQuantizerSpec.liveCodes(spark, comp) == bucketedCodesOf(compFull),
       "replayed append must equal the full-corpus build")
     // DELETE via the replayed assignment (no trusted frame anywhere)
     ProductQuantizer.deleteFromIvfPq(
@@ -670,8 +782,11 @@ class ProductQuantizerSpec extends SparkTestBase {
     val compRed = java.nio.file.Files.createTempDirectory("pq_rp_compr").toString
     ProductQuantizer.materializeIvfPq(reduced, "vec_id", "embedding",
       spark.read.parquet(ivfRed), spec, compRed)
-    assert(bucketedCodesOf(comp) == bucketedCodesOf(compRed),
+    assert(ProductQuantizerSpec.liveCodes(spark, comp) == bucketedCodesOf(compRed),
       "replayed delete must equal the reduced-corpus build")
+    ProductQuantizer.compact(spark, comp)
+    assert(bucketedCodesOf(comp) == bucketedCodesOf(compRed),
+      "the folded code table must equal the reduced-corpus build")
     // appending codebook-entry or centroid ids is refused (frozen sets)
     intercept[IllegalArgumentException] {
       ProductQuantizer.appendToIvfPq(emb.where(col("vec_id") === 16),
@@ -824,6 +939,20 @@ class ProductQuantizerSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSet
     assert(pruned.intersect(bruteIds(qvec(3), 10).toSet).size >= 6,
       s"IVF-PQ recall too low: $pruned")
+  }
+}
+
+
+object ProductQuantizerSpec {
+  import org.apache.spark.sql.SparkSession
+
+  /** The live code rows of the IVF-PQ store at `p`, as every probe reads
+    * them: buckets, pending delta rows and tombstones applied.
+    */
+  def liveCodes(spark: SparkSession, p: String): Set[(Long, Int, Long, Long)] = {
+    val (_, (_, codes)) = graft.ops.ProductQuantizer.fromMaterialized(spark, p)
+    codes.select(col("__id"), col("__m"), col("__code"), col("__centroid").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
   }
 }
 

@@ -484,7 +484,7 @@ class CorpusIngestSpec extends SparkTestBase {
           col("__centroid").cast("long"))
         .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    assert(bucketed(compPath) == bucketed(fullComp))
+    assert(ProductQuantizerSpec.liveCodes(sp, compPath) == bucketed(fullComp))
   }
 
   test("streaming GRAPH maintenance: streamed epochs == batch build; replay is a no-op") {
@@ -579,8 +579,8 @@ class CorpusIngestSpec extends SparkTestBase {
     def ivfRows(p: String): Set[(Long, Long)] =
       sp.read.parquet(p).select(col("vec_id"), col("__centroid").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(ivfRows(annA) == ivfRows(annRed), "IVF store A diverged")
-    assert(ivfRows(annB) == ivfRows(annRed), "IVF store B diverged")
+    assert(AnnIndexSpec.liveAssignment(sp, annA) == ivfRows(annRed), "IVF store A diverged")
+    assert(AnnIndexSpec.liveAssignment(sp, annB) == ivfRows(annRed), "IVF store B diverged")
 
     val pqRed = tmp("sdel_pqRed")
     ProductQuantizer.materialize(reduced, "vec_id", "embedding", spec, pqRed)
@@ -599,7 +599,7 @@ class CorpusIngestSpec extends SparkTestBase {
         .select(col("__id"), col("__m"), col("__code"),
           col("__centroid").cast("long"))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    assert(bucketedCodes(ivfComp) == bucketedCodes(compRed),
+    assert(ProductQuantizerSpec.liveCodes(sp, ivfComp) == bucketedCodes(compRed),
       "IVF-PQ store diverged")
 
     val graphRed = tmp("sdel_graphRed")
@@ -615,12 +615,12 @@ class CorpusIngestSpec extends SparkTestBase {
     // epoch 0 — at-or-below every stored takedown marker, so nothing moves
     // (a flat-PQ replay would otherwise re-append sidecar rows)
     val sidecarBefore = sp.read.parquet(s"$pqFlat/tombstones").count()
-    val annBefore = sp.read.parquet(annA).count()
+    val annBefore = (AnnIndexSpec.liveAssignment(sp, annA), graft.ops.IndexManifests.read(sp, annA))
     runTakedown(sdf => graft.streaming.CorpusIngest.annDeletes(
       sdf, "vec_id", "embedding", 64, annA, Some(pqFlat))())
     assert(sp.read.parquet(s"$pqFlat/tombstones").count() == sidecarBefore,
       "replayed takedown epoch re-appended tombstones")
-    assert(sp.read.parquet(annA).count() == annBefore,
+    assert((AnnIndexSpec.liveAssignment(sp, annA), graft.ops.IndexManifests.read(sp, annA)) == annBefore,
       "replayed takedown epoch changed the IVF store")
   }
 

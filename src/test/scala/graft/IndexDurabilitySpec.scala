@@ -232,4 +232,42 @@ class IndexDurabilitySpec extends SparkTestBase {
       ProductQuantizer.fromMaterialized(spark, path, Some(spec))
     }
   }
+  test("IVF pending writes on an object store: an unpublished delta file is ignored then swept, an interrupted fold neither duplicates nor loses a row") {
+    import graft.ops.IndexManifests
+    spark.sparkContext.hadoopConfiguration.set("fs.graftmock.impl",
+      classOf[graft.tools.MockObjectStoreFs].getName)
+    val ivf = "graftmock:" + graft.util.TempDirs.create("graft_mock_delta")
+    AnnIndex.materialize(emb.where(col("vec_id") < 300), "vec_id", "embedding", 64, ivf)
+    AnnIndex.appendToMaterialized(emb.where(col("vec_id") >= 300 && col("vec_id") < 400 &&
+      pmod(col("vec_id"), lit(64)) =!= 0), "vec_id", "embedding", 64, ivf)
+    def live(): Seq[Long] =
+      graft.ops.CentroidStore.Store.open(spark, ivf, "embedding", Seq("stride" -> 64), "reading")
+        .all.select(col("vec_id").cast("long")).collect().map(_.getLong(0)).toSeq.sorted
+    def probe(): Seq[Long] = AnnIndex.fromMaterialized(emb, "vec_id", "embedding", 64, ivf)
+      .probeTopK(qvec(7), 10, nprobe = 8).collect().map(_.getLong(0)).toSeq
+    val before = (live(), probe())
+    // a writer that died between its delta-file write and the manifest
+    // publish leaves an unlisted file: reads keep the previous epoch
+    emb.where(col("vec_id") >= 400).withColumn("__centroid", lit(0L)).coalesce(1)
+      .write.parquet(s"$ivf/${IndexManifests.DeltaDir}/orphan")
+    assert((live(), probe()) == before, "an unpublished delta file changed reads")
+    AnnIndex.deleteFromMaterialized(emb.where(pmod(col("vec_id"), lit(4)) === 3 && col("vec_id") < 360),
+      "vec_id", "embedding", 64, ivf)
+    val want = before._1.filterNot(id => id % 4 == 3 && id < 360)
+    assert(live() == want)
+    // a fold that dies after its bucket writes, before its final publish
+    IndexManifests.interruptFoldForTest.set(true)
+    try intercept[IllegalStateException](AnnIndex.compactBuckets(spark, ivf))
+    finally IndexManifests.interruptFoldForTest.set(false)
+    assert(IndexManifests.read(spark, ivf).exists(_.folding))
+    assert(live() == want, "an interrupted fold duplicated or lost rows")
+    val torn = probe()
+    // the next fold completes it and sweeps the unlisted file
+    AnnIndex.compactBuckets(spark, ivf)
+    assert(IndexManifests.read(spark, ivf).exists(_.settled))
+    assert(!IndexFiles.exists(spark, s"$ivf/${IndexManifests.DeltaDir}"))
+    val stored = spark.read.parquet(ivf).select(col("vec_id").cast("long")).collect().map(_.getLong(0)).toSeq
+    assert(stored.sorted == want, "the completed fold duplicated or lost rows")
+    assert(probe() == torn)
+  }
 }

@@ -156,8 +156,7 @@ class SizeRouteSpec extends SparkTestBase {
         AnnIndex.appendToMaterialized(frame(_ >= 30), "id", "v", 5, p)
         AnnIndex.deleteFromMaterialized(frame(i => i % 5 == 3), "id", "v", 5, p)
         val idx = AnnIndex.fromMaterialized(corpus, "id", "v", 5, p)
-        val stored = sp.read.parquet(p).select(col("id"), col("__centroid").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val stored = live(p)
         val probes = queries.map(q =>
           idx.probeTopK(q, 5, 2).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
         val (_, jobs) = JobCount(sp.sparkContext)(idx.probeTopK(queries.head, 5, 2).collect())
@@ -178,10 +177,35 @@ class SizeRouteSpec extends SparkTestBase {
         AnnIndex.materialize(corpus, "id", "v", 5, p)
         val (_, jobs) = JobCount(sp.sparkContext)(AnnIndex.deleteFromMaterialized(
           corpus.where(col("id").isin(gone: _*)), "id", "v", 5, p))
-        Run(sp.read.parquet(p).select(col("id"), col("__centroid").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet, jobs)
+        Run(live(p), jobs)
+      })
+    },
+    SizeRoute.PendingRows -> { seed =>
+      val sp = spark
+      import sp.implicits._
+      val rnd = new scala.util.Random(seed)
+      def vec = Seq.fill(4)(rnd.nextFloat() * 2f - 1f)
+      val corpus = sp.sparkContext.parallelize((0L until 40L).map(_ -> vec), 2).toDF("id", "v")
+      val added = (100L until 100L + 2 + rnd.nextInt(8)).map(_ -> vec)
+      val q = vec.map(_.toDouble).toArray
+      // the route measures the batch's rows against an empty store; within
+      // the bound the batch stays a delta file listed by the manifest
+      Fixture(added.size, () => {
+        val p = graft.util.TempDirs.create("route_pending")
+        AnnIndex.materialize(corpus, "id", "v", 5, p)
+        AnnIndex.appendToMaterialized(sp.sparkContext.parallelize(added, 2).toDF("id", "v"),
+          "id", "v", 5, p)
+        val probe = AnnIndex.fromMaterialized(corpus, "id", "v", 5, p).probeTopK(q, 5, 2)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        Run((live(p), probe), new java.io.File(p, "_graft_delta").isDirectory)
       })
     })
+
+  /** The live `(id, bucket)` rows of the 4-dim IVF store at `p`. */
+  private def live(p: String): Set[(Long, Long)] =
+    graft.ops.CentroidStore.Store.open(spark, p, "v", Seq("stride" -> 5), "reading").all
+      .select(col("id"), col("__centroid").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("collectWithin: a many-partition frame over its bound falls back; at it, every row comes back") {
     val sp = spark

@@ -114,7 +114,8 @@ class StreamedPartitionSpec extends SparkTestBase {
     // before the partitioned write, refresh the manifest, copy the
     // store's centroid files
     val p8 = graft.util.TempDirs.create("streamed_part_ann8")
-    s.read.parquet(p).repartition(8)
+    graft.ops.CentroidStore.Store.open(s, p, "embedding", Seq("stride" -> 64), "reading")
+      .all.repartition(8)
       .write.mode("overwrite").partitionBy("__centroid").parquet(p8)
     graft.ops.IndexManifests.write(s, p8, "__centroid")
     val fs = graft.ops.IndexFiles.fs(s, p)

@@ -89,6 +89,30 @@ class WriterLeaseSpec extends SparkTestBase {
     IndexFiles.breakWriterLease(s, g)
   }
 
+  test("a foreign lock blocks the IVF store's append, delete and fold while writes are pending") {
+    val s = spark
+    val ivf = freshStore("graft_lease_ivf_pending")
+    AnnIndex.materialize(emb.where(col("vec_id") < 300), "vec_id", "embedding", 64, ivf)
+    val batch = emb.where(col("vec_id") >= 300 && pmod(col("vec_id"), lit(64)) =!= 0)
+    AnnIndex.appendToMaterialized(batch, "vec_id", "embedding", 64, ivf)
+    val pending = graft.ops.IndexManifests.read(s, ivf)
+    assert(pending.exists(_.delta.nonEmpty))
+    IndexFiles.writeString(s, ivf + "/" + IndexFiles.LockName, "op=spec-foreign\n")
+    val gone = emb.where(pmod(col("vec_id"), lit(4)) === 3)
+    for (op <- Seq[() => Any](
+        () => AnnIndex.appendToMaterialized(emb.where(col("vec_id") === 1), "vec_id", "embedding", 64, ivf),
+        () => AnnIndex.deleteFromMaterialized(gone, "vec_id", "embedding", 64, ivf),
+        () => AnnIndex.compactBuckets(s, ivf))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("spec-foreign"), e.getMessage)
+    }
+    assert(graft.ops.IndexManifests.read(s, ivf) == pending, "a blocked writer changed the manifest")
+    IndexFiles.breakWriterLease(s, ivf)
+    AnnIndex.deleteFromMaterialized(gone, "vec_id", "embedding", 64, ivf)
+    AnnIndex.compactBuckets(s, ivf)
+    assert(IndexFiles.writerLeaseHolder(s, ivf).isEmpty)
+  }
+
   test("compound mutations are reentrant: a PQ revive-append (which folds the sidecar via compactCodes) runs under one lease") {
     val s = spark
     val all = emb

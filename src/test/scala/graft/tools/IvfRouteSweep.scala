@@ -20,12 +20,22 @@ import graft.ops.{AnnIndex, SizeRoute}
   * materializes a store of 64-dim vectors (stride 128, untimed) and
   * reports the wall and jobs of `deleteFromMaterialized` through each
   * route: the pairs collected to the driver (bound at `Int.MaxValue`) and
-  * the pinned anti-join (bound 0), each rep on disjoint ids.
+  * the pinned anti-join (bound 0), each rep on disjoint ids and on a store
+  * with nothing pending (an untimed `compactBuckets` folds after each).
   *
   * The route order alternates per rep.
   *
+  * `pending` mode (`SizeRoute.PendingRows`): on a store of 64,000 64-dim
+  * vectors (stride 128, untimed) it grows the pending writes in steps of
+  * 40-vector appends and 20-vector deletes, as ingest epochs write them,
+  * and at each step reports the wall and jobs of a fresh open plus one
+  * probe. Then, for each pending size, it writes that many appended
+  * vectors as 40-vector delta files plus half as many tombstones onto a
+  * fresh store and reports the wall of the fold (`compactBuckets`).
+  *
   * Usage: sbt "Test/runMain graft.tools.IvfRouteSweep centroids [reps] [dim:count,count...]..."
   *        sbt "Test/runMain graft.tools.IvfRouteSweep deletes [reps] [size,size...]"
+  *        sbt "Test/runMain graft.tools.IvfRouteSweep pending [reps] [epochs,epochs...] [rows,rows...]"
   */
 object IvfRouteSweep {
 
@@ -38,6 +48,9 @@ object IvfRouteSweep {
     try args.headOption match {
       case Some("deletes") => deletes(spark, reps,
         args.lift(2).getOrElse("100,1000,10000").split(",").map(_.toInt).toSeq)
+      case Some("pending") => pending(spark, reps,
+        args.lift(2).getOrElse("0,8,32,96").split(",").map(_.toInt).toSeq,
+        args.lift(3).getOrElse("1000,4000,16000").split(",").map(_.toInt).toSeq)
       case _ => centroids(spark, reps,
         (if (args.length > 2) args.drop(2).toSeq else Seq("64:100,400,1600,6400", "768:200,800,1600"))
           .map { s =>
@@ -136,10 +149,76 @@ object IvfRouteSweep {
           val (_, ms, jobs) = timed(AnnIndex.deleteFromMaterialized(batch, "id",
             "embedding", stride, path))
           if (rep > 0) rows :+= ((route, ms, jobs))
+          // each delete starts from a store with nothing pending
+          AnnIndex.compactBuckets(spark, path)
         }
       }
       report(s"delete ids=$size corpus=$n", rows)
       corpus.unpersist()
     }
+  }
+  private def pending(spark: org.apache.spark.sql.SparkSession, reps: Int,
+      epochSteps: Seq[Int], foldRows: Seq[Int]): Unit = {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val stride = 128
+    val n = 64000
+    val corpus = vectors(spark, 0L until n, 64, 7).cache()
+    corpus.count()
+    val live = new scala.util.Random(7).shuffle((0L until n).filter(_ % stride != 0).toVector)
+    def median(xs: Seq[(Double, Int)]) = xs.sortBy(_._1).apply(xs.size / 2)
+    SizeRoute.withBounds(SizeRoute.PendingRows -> Int.MaxValue) {
+      val path = graft.util.TempDirs.create("ivf_pending_sweep")
+      AnnIndex.materialize(corpus, "id", "embedding", stride, path)
+      val q = Array.fill(64)(0.5)
+      var epochs = 0
+      var next = n.toLong
+      var used = 0
+      for (step <- epochSteps) {
+        while (epochs < step) {
+          if (epochs % 3 == 2) {
+            val gone = live.slice(used, used + 20)
+            used += 20
+            AnnIndex.deleteFromMaterialized(corpus.where(col("id").isin(gone: _*)).localCheckpoint(),
+              "id", "embedding", stride, path)
+          } else {
+            AnnIndex.appendToMaterialized(vectors(spark, (next until next + 40).filter(_ % stride != 0),
+              64, next).localCheckpoint(), "id", "embedding", stride, path)
+            next += 40
+          }
+          epochs += 1
+        }
+        val m = graft.ops.IndexManifests.read(spark, path).get
+        val probes = (0 to reps).map { _ =>
+          val (_, ms, jobs) = timed(AnnIndex.fromMaterialized(corpus, "id", "embedding", stride, path)
+            .probeTopK(q, 10, 4).collect())
+          (ms, jobs)
+        }.tail
+        val (ms, jobs) = median(probes)
+        println(f"SWEEP pending epochs=$epochs delta_files=${m.delta.size} pending_rows=${m.pending} " +
+          f"probe_median_ms=$ms%.0f probe_min_ms=${probes.map(_._1).min}%.0f jobs=$jobs")
+      }
+    }
+    for (rows <- foldRows) {
+      val walls = (0 until reps).map { rep =>
+        val path = graft.util.TempDirs.create("ivf_fold_sweep")
+        AnnIndex.materialize(corpus, "id", "embedding", stride, path)
+        SizeRoute.withBounds(SizeRoute.PendingRows -> Int.MaxValue) {
+          var next = (n + rep * rows * 2).toLong
+          for (_ <- 0 until rows / 40) {
+            AnnIndex.appendToMaterialized(vectors(spark, (next until next + 40).filter(_ % stride != 0),
+              64, next).localCheckpoint(), "id", "embedding", stride, path)
+            next += 40
+          }
+          AnnIndex.deleteFromMaterialized(corpus.where(col("id").isin(live.take(rows / 2): _*))
+            .localCheckpoint(), "id", "embedding", stride, path)
+        }
+        val (_, ms, jobs) = timed(AnnIndex.compactBuckets(spark, path))
+        (ms, jobs)
+      }
+      val (ms, jobs) = median(walls)
+      println(f"SWEEP fold appended_rows=$rows tombstones=${rows / 2} median_ms=$ms%.0f " +
+        f"min_ms=${walls.map(_._1).min}%.0f max_ms=${walls.map(_._1).max}%.0f jobs=$jobs")
+    }
+    corpus.unpersist()
   }
 }

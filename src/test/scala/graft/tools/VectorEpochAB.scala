@@ -10,7 +10,9 @@ import graft.streaming.CorpusIngest
   * fresh-read probes (`AnnIndex.fromMaterialized(...).probeTopK`). Vectors
   * are 64-dim floats written as JSONL and read back per epoch, so no batch
   * is a driver-held LocalRelation. Each round materializes a fresh store
-  * (untimed) and records each step's wall and Spark jobs. It uses only the
+  * (untimed) and records each step's wall and Spark jobs; after the last
+  * epoch it times `AnnIndex.compactBuckets` (the fold of whatever the
+  * epochs left pending, then the compaction). It uses only the
   * public API, so the same file runs against an older checkout: an A/B
   * alternates runs of the two checkouts and compares their per-step lines
   * and probe digests. The session runs `local[cores]`, as graftbench does.
@@ -67,14 +69,14 @@ object VectorEpochAB {
       val path = s"$dir/ivf$round"
       AnnIndex.materialize(base, "id", "embedding", Stride, path)
       var hits = Seq.empty[Seq[Long]]
+      def timed[A](step: String)(body: => A): A = {
+        val t0 = System.nanoTime()
+        val (out, jobs) = JobCount(spark.sparkContext)(body)
+        walls :+= ((step, (System.nanoTime() - t0) / 1e6, jobs))
+        out
+      }
       epochs.zipWithIndex.foreach { case (takedown, e) =>
         val batch = read(s"$dir/epoch$e")
-        def timed[A](step: String)(body: => A): A = {
-          val t0 = System.nanoTime()
-          val (out, jobs) = JobCount(spark.sparkContext)(body)
-          walls :+= ((step, (System.nanoTime() - t0) / 1e6, jobs))
-          out
-        }
         if (takedown) timed("delete")(CorpusIngest.deleteVectorEpoch(batch, base, "id",
             "embedding", Stride, path, None, e))
         else timed("append")(CorpusIngest.appendVectorEpoch(batch, base, "id",
@@ -82,6 +84,7 @@ object VectorEpochAB {
         hits = queries.map(q => timed("probe")(AnnIndex.fromMaterialized(base, "id",
           "embedding", Stride, path).probeTopK(q, 10, 4).collect().map(_.getLong(0)).toSeq))
       }
+      timed("fold")(AnnIndex.compactBuckets(spark, path))
       digests += hits.hashCode
       println(s"VECTORS round=$round digest=${hits.hashCode}")
     }
@@ -89,7 +92,7 @@ object VectorEpochAB {
     def at(xs: Seq[Double], q: Double) = {
       val s = xs.sorted; if (s.isEmpty) 0.0 else s(((s.size - 1) * q).round.toInt)
     }
-    for (step <- Seq("append", "delete", "probe")) {
+    for (step <- Seq("append", "delete", "probe", "fold")) {
       val xs = walls.filter(_._1 == step)
       val ms = xs.map(_._2)
       println(f"VECTORS step=$step n=${xs.size} median_ms=${at(ms, 0.5)}%.0f " +
